@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from geohash_dotnet_spark.functions import with_geohash  # noqa: E402
+from geohash_dotnet_spark.functions.exact import MICRO  # noqa: E402
 from geohash_dotnet_spark.functions.native import (  # noqa: E402
     gh_children,
     gh_is_valid,
@@ -193,9 +194,7 @@ from geohash_dotnet_spark.operators.links import (  # noqa: E402
 )
 from geohash_dotnet_spark.operators.text import (  # noqa: E402
     char_entropy_sql_expr,
-    fp6,
     group_quantiles_sql,
-    fp6_sql,
     quality_sql,
     token_stats_sql,
     vocab_topk_sql,
@@ -338,8 +337,8 @@ def q_gh_distance_cells(spark, sf_dir):
                  gh_decode(F.col("gh")).alias("db")))
     return (a.crossJoin(b)
             .select("gh_a", "gh_b",
-                    fp6(haversine_m(F.col("da.lat"), F.col("da.lon"),
-                                    F.col("db.lat"), F.col("db.lon")))
+                    MICRO.round(haversine_m(F.col("da.lat"), F.col("da.lon"),
+                                            F.col("db.lat"), F.col("db.lon")))
                     .alias("dist_m"))
             .orderBy("gh_a", "gh_b"))
 
@@ -439,7 +438,7 @@ def q_circle_join(spark, sf_dir):
                       precision=CIRCLE["precision"], how="left_semi")
     d = haversine_m(F.lit(CIRCLE["lat"]), F.lit(CIRCLE["lon"]),
                     F.col("lat"), F.col("lon"))
-    return (pg.withColumn("dist_m", fp6(d))
+    return (pg.withColumn("dist_m", MICRO.round(d))
             .filter(F.col("dist_m") <= CIRCLE["radius_m"])
             .select("url", "dist_m")
             .orderBy("dist_m", "url"))
@@ -451,7 +450,7 @@ def q_knn(spark, sf_dir):
     out = knn_join(spark, _pages(spark, sf_dir), queries, k=KNN_K,
                    initial_radius_m=500_000.0)
     return (out.select("query_id", "rank", "url",
-                       fp6(F.col("dist_m")).alias("dist_m"))
+                       MICRO.round(F.col("dist_m")).alias("dist_m"))
             .orderBy("query_id", "rank"))
 
 
@@ -463,7 +462,7 @@ def q_knn_table(spark, sf_dir):
     out = knn_join(spark, _pages(spark, sf_dir), queries, k=KNN_TABLE_K,
                    initial_radius_m=500_000.0)
     return (out.select("query_id", "rank", "url",
-                       fp6(F.col("dist_m")).alias("dist_m"))
+                       MICRO.round(F.col("dist_m")).alias("dist_m"))
             .orderBy("query_id", "rank"))
 
 
@@ -846,7 +845,7 @@ def q_tile_quality_dist(spark, sf_dir):
                                    "lat", "lon", 2))
     return (pg.groupBy(F.col("gh").alias("tile"))
             .agg(F.count(F.lit(1)).alias("n_pages"),
-                 fp6(F.percentile(F.col("quality_score"), F.lit(0.5)))
+                 MICRO.round(F.percentile(F.col("quality_score"), F.lit(0.5)))
                  .alias("median_q"),
                  F.min("quality_score").alias("min_q"),
                  F.max("quality_score").alias("max_q"))
@@ -947,7 +946,7 @@ def q_curation_pipeline(spark, sf_dir):
     from geohash_dotnet_spark.operators import (
         exact_dedup, repetition_stats, stratified_sample)
     from geohash_dotnet_spark.operators.text import (
-        fp6, with_quality, with_token_stats)
+        with_quality, with_token_stats)
 
     docs = _docs(spark, sf_dir)
     scored = with_token_stats(with_quality(docs))
@@ -963,13 +962,10 @@ def q_curation_pipeline(spark, sf_dir):
             .filter(F.col("top_ngram_share") <= 0.4)
             .select("doc_id"))
     flt = sampled.join(keep, "doc_id", "left_semi")
-    micro_q = F.floor(F.col("quality_score") * F.lit(1e6)
-                      + F.lit(0.5)).cast("long")
     return (flt.groupBy("lang_pred")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("n_tokens").alias("total_tokens"),
-                 fp6((F.sum(micro_q) / F.count(F.lit(1)) / F.lit(1e6))
-                     .cast("double")).alias("avg_quality"))
+                 MICRO.mean(F.col("quality_score")).alias("avg_quality"))
             .orderBy("lang_pred"))
 
 
@@ -986,11 +982,9 @@ def _curation_pipeline_sql() -> str:
         inner=f"({deduped})", rates=CURATION_RATES,
         strata_col="lang_pred", default_rate=0.5)
     rep = repetition_sql("documents", n=2)
-    avg_q = ("CAST(sum(CAST(floor(quality_score * 1000000.0 + 0.5) AS "
-             "BIGINT)) AS DOUBLE) / count(*) / 1000000.0")
     return (f"SELECT lang_pred, count(*) AS n_docs, "
             f"CAST(sum(n_tokens) AS BIGINT) AS total_tokens, "
-            f"{fp6_sql(avg_q)} AS avg_quality "
+            f"{MICRO.mean_sql('quality_score')} AS avg_quality "
             f"FROM ({sampled}) WHERE doc_id IN "
             f"(SELECT doc_id FROM ({rep}) WHERE top_ngram_share <= 0.4) "
             f"GROUP BY lang_pred ORDER BY lang_pred")
@@ -1063,8 +1057,8 @@ def q_multimodal_features(spark, sf_dir):
            .filter(md5_60bit(F.col("url")) % 50 == 0))
     out = extract_features(synthetic_media(sel), decoder="real")
     return (out.select("url", "media_type", "width", "height",
-                       fp6(F.element_at("features", 1)).alias("f0"),
-                       fp6(F.element_at("features", 2)).alias("f1"))
+                       MICRO.round(F.element_at("features", 1)).alias("f0"),
+                       MICRO.round(F.element_at("features", 2)).alias("f1"))
             .orderBy("url"))
 
 
@@ -1079,11 +1073,9 @@ def q_flagship(spark, sf_dir):
         spatial_join(_pages(spark, sf_dir), cov, precision=2, how="left_semi"))
     # fixed-point integer sum -> order-insensitive, bit-identical average
     # across engines (quality_score is already rounded to 6 dp)
-    q_int = F.floor(F.col("quality_score") * 1e6 + F.lit(0.5)).cast("long")
     return (joined.groupBy(F.substring("gh", 1, 1).alias("tile1"), "lang")
             .agg(F.count(F.lit(1)).alias("n_pages"),
-                 fp6(F.sum(q_int) / F.count(F.lit(1)) / 1e6)
-                 .alias("avg_quality"))
+                 MICRO.mean(F.col("quality_score")).alias("avg_quality"))
             .orderBy("tile1", "lang"))
 
 
@@ -1107,8 +1099,7 @@ def q_events_windowed_tiles(spark, sf_dir):
     return (ev.groupBy(F.window("ts", "1 hour")["start"].alias("window_start"),
                        F.col("gh").alias("tile"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
-                 (F.sum(F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long"))
-                  / F.lit(1e6)).alias("sum_value"),
+                 MICRO.sum(F.col("value")).alias("sum_value"),
                  F.sum(k).alias("sum_k"))
             .orderBy("window_start", "tile", "event_type"))
 
@@ -1119,18 +1110,13 @@ def q_pricing_summary(spark, sf_dir):
     # twin in any session timezone (same reasoning as events query)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    def s6(col):
-        # order-insensitive exact sum: per-row fixed-point -> integer sum
-        return F.sum(F.floor(col * 1e6 + F.lit(0.5)).cast("long")) / F.lit(1e6)
-
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
             .groupBy("l_returnflag", "l_linestatus")
-            .agg(s6(F.col("l_quantity")).alias("sum_qty"),
-                 s6(F.col("l_extendedprice")).alias("sum_base_price"),
-                 s6(disc).alias("sum_disc_price"),
-                 fp6(F.sum(F.floor(F.col("l_quantity") * 1e6 + F.lit(0.5)).cast("long"))
-                     / F.count(F.lit(1)) / F.lit(1e6)).alias("avg_qty"),
+            .agg(MICRO.sum(F.col("l_quantity")).alias("sum_qty"),
+                 MICRO.sum(F.col("l_extendedprice")).alias("sum_base_price"),
+                 MICRO.sum(disc).alias("sum_disc_price"),
+                 MICRO.mean(F.col("l_quantity")).alias("avg_qty"),
                  F.count(F.lit(1)).alias("count_order"))
             .orderBy("l_returnflag", "l_linestatus"))
 
@@ -1145,9 +1131,7 @@ def q_regional_suppliers(spark, sf_dir):
          .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
     return (j.groupBy("r_name")
             .agg(F.count(F.lit(1)).alias("n_suppliers"),
-                 fp6((F.sum(F.floor(F.col("s_acctbal") * 1e6 + F.lit(0.5))
-                            .cast("long")) / F.count(F.lit(1)) / F.lit(1e6))
-                     .cast("double")).alias("avg_acctbal"))
+                 MICRO.mean(F.col("s_acctbal")).alias("avg_acctbal"))
             .orderBy("r_name"))
 
 
@@ -1156,8 +1140,7 @@ def q_top_customers(spark, sf_dir):
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     return (o.join(c, o.o_custkey == c.c_custkey)
             .groupBy("c_custkey", "c_name")
-            .agg((F.sum(F.floor(F.col("o_totalprice") * 1e6 + F.lit(0.5))
-                        .cast("long")) / F.lit(1e6)).alias("total_spend"),
+            .agg(MICRO.sum(F.col("o_totalprice")).alias("total_spend"),
                  F.count(F.lit(1)).alias("n_orders"))
             .orderBy(F.col("total_spend").desc(), F.col("c_custkey"))
             .limit(25))
@@ -1789,7 +1772,7 @@ def q_stay_points(spark, sf_dir):
 def q_trip_stats(spark, sf_dir):
     """Trip segmentation: split each user's event stream at >6h gaps;
     per-trip point count, duration, and exact great-circle path length
-    (integer-millimeter leg quantization so the sum is addition-order
+    (integer-metre leg quantization so the sum is addition-order
     independent)."""
     from geohash_dotnet_spark.functions.native import geocode_from_url
     from geohash_dotnet_spark.operators import trip_stats
@@ -2054,8 +2037,8 @@ def q_link_locality(spark, sf_dir):
     target sibling corpus replicas (every absolute href resolves, so
     the url-keyed corpus self-join — the one scale-bearing exchange —
     is value-checked end-to-end). Band 0 carries the self/intra-site
-    spike; the mean distance per ring is mm-exact (trip_stats
-    discipline) so it hashes identically in DuckDB."""
+    spike; the mean distance per ring sums integer-mm legs
+    (``exact.MILLI``) so it hashes identically in DuckDB."""
     from geohash_dotnet_spark.operators.links import (
         link_locality, with_planted_local_anchors)
 
@@ -2500,7 +2483,7 @@ def oracle_sql() -> dict[str, str]:
             f"'^[0-9bcdefghjkmnpqrstuvwxyzBCDEFGHJKMNPQRSTUVWXYZ]{{1,12}}$') "
             f"AS valid FROM cand ORDER BY candidate, valid",
         "gh_distance_cells":
-            f"SELECT a.gh_a, b.gh_b, {fp6_sql(haversine_sql('a.alat', 'a.alon', 'b.blat', 'b.blon'))} AS dist_m "
+            f"SELECT a.gh_a, b.gh_b, {MICRO.round_sql(haversine_sql('a.alat', 'a.alon', 'b.blat', 'b.blon'))} AS dist_m "
             f"FROM (SELECT gh AS gh_a, {center_lat_sql()} AS alat, "
             f"{center_lng_sql()} AS alon FROM ({dec2d})) a "
             f"CROSS JOIN (SELECT gh AS gh_b, {center_lat_sql()} AS blat, "
@@ -2542,12 +2525,12 @@ def oracle_sql() -> dict[str, str]:
             f"GROUP BY lang ORDER BY lang",
         "circle_join":
             f"SELECT url, dist_m FROM ("
-            f"SELECT url, {fp6_sql(hav_c)} AS dist_m "
+            f"SELECT url, {MICRO.round_sql(hav_c)} AS dist_m "
             f"FROM ({tagged2}) p WHERE gh IN ({circle_cells})) "
             f"WHERE dist_m <= {CIRCLE['radius_m']!r} ORDER BY dist_m, url",
         "knn":
             f"WITH q(query_id, qlat, qlon) AS (VALUES {knn_q}), "
-            f"d AS (SELECT q.query_id, p.url, {fp6_sql(hav)} AS dist_m "
+            f"d AS (SELECT q.query_id, p.url, {MICRO.round_sql(hav)} AS dist_m "
             f"FROM ({pages_sql(REP)}) p CROSS JOIN q) "
             f"SELECT query_id, rank, url, dist_m FROM ("
             f"SELECT *, row_number() OVER (PARTITION BY query_id "
@@ -2555,7 +2538,7 @@ def oracle_sql() -> dict[str, str]:
             f"ORDER BY query_id, rank",
         "knn_table":
             f"WITH q(query_id, qlat, qlon) AS (VALUES {knn_tq}), "
-            f"d AS (SELECT q.query_id, p.url, {fp6_sql(hav)} AS dist_m "
+            f"d AS (SELECT q.query_id, p.url, {MICRO.round_sql(hav)} AS dist_m "
             f"FROM ({pages_sql(REP)}) p CROSS JOIN q) "
             f"SELECT query_id, rank, url, dist_m FROM ("
             f"SELECT *, row_number() OVER (PARTITION BY query_id "
@@ -2581,7 +2564,7 @@ def oracle_sql() -> dict[str, str]:
             f"r AS (SELECT url, name, dist, row_number() OVER "
             f"(PARTITION BY url ORDER BY dist, name) AS rn FROM d) "
             f"SELECT url, CAST(rn AS INT) AS rank, name AS site, "
-            f"{fp6_sql('dist')} AS dist_m "
+            f"{MICRO.round_sql('dist')} AS dist_m "
             f"FROM r WHERE rn <= {KNN_SITES_K} ORDER BY url, rank"))(
             ", ".join(f"('{n}', {la}, {lo})" for n, la, lo in _CITIES)),
         "stay_points":
@@ -2785,8 +2768,7 @@ def oracle_sql() -> dict[str, str]:
         "zonal_stats":
             " UNION ALL ".join(
                 f"SELECT '{z}' AS zone_id, count(*) AS n_points, "
-                f"CAST(sum(CAST(floor(value * 1000000.0e0 + 0.5e0) "
-                f"AS BIGINT)) AS DOUBLE) / 1000000.0e0 AS sum_value "
+                f"{MICRO.sum_sql('value')} AS sum_value "
                 f"FROM (SELECT value, "
                 + geocode_lat_sql("CAST(event_id AS VARCHAR)")
                 + " AS lat, "
@@ -2959,13 +2941,13 @@ def oracle_sql() -> dict[str, str]:
             f"d AS (SELECT url, name, "
             f"{haversine_sql('lat', 'lon', 'clat', 'clon')} AS dist "
             f"FROM pg CROSS JOIN c) "
-            f"SELECT url, name AS site, {fp6_sql('dist')} AS dist_m "
+            f"SELECT url, name AS site, {MICRO.round_sql('dist')} AS dist_m "
             f"FROM d QUALIFY row_number() OVER "
             f"(PARTITION BY url ORDER BY dist, name) = 1 ORDER BY url"))(
             ", ".join(f"('{n}', {la}, {lo})" for n, la, lo in _CITIES)),
         "tile_quality_dist": (
             f"SELECT gh AS tile, CAST(count(*) AS BIGINT) AS n_pages, "
-            f"{fp6_sql('quantile_cont(quality_score, 0.5)')} AS median_q, "
+            f"{MICRO.round_sql('quantile_cont(quality_score, 0.5)')} AS median_q, "
             f"min(quality_score) AS min_q, max(quality_score) AS max_q "
             f"FROM ({quality_sql(inner='(' + tagged2 + ')')}) "
             f"GROUP BY gh ORDER BY tile"),
@@ -2974,8 +2956,7 @@ def oracle_sql() -> dict[str, str]:
         "events_windowed_tiles": (lambda inner: (
             f"SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, "
             f"gh AS tile, event_type, count(*) AS n_events, "
-            f"sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) "
-            f"/ CAST(1000000.0 AS DOUBLE) AS sum_value, "
+            f"{MICRO.sum_sql('value')} AS sum_value, "
             f"CAST(sum(k) AS BIGINT) AS sum_k "
             f"FROM ({tagged_select_sql(inner, 2, keep='ts, event_type, value, k')}) "
             f"GROUP BY 1, 2, 3 ORDER BY window_start, tile, event_type"))(
@@ -3040,32 +3021,30 @@ def oracle_sql() -> dict[str, str]:
                                              max_cluster_size=20),
         "flagship":
             f"SELECT substr(gh, 1, 1) AS tile1, lang, count(*) AS n_pages, "
-            f"{fp6_sql('CAST(sum(CAST(floor(quality_score * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0')} AS avg_quality "
+            f"{MICRO.mean_sql('quality_score')} AS avg_quality "
             f"FROM ({quality_sql(inner='(' + tagged2 + ')')}) "
             f"WHERE gh IN ({rect_cells}) "
             f"GROUP BY 1, 2 ORDER BY tile1, lang",
         "pricing_summary":
             "SELECT l_returnflag, l_linestatus, "
-            "sum(CAST(floor(l_quantity * 1000000.0 + 0.5) AS BIGINT)) / 1000000.0 AS sum_qty, "
-            "sum(CAST(floor(l_extendedprice * 1000000.0 + 0.5) AS BIGINT)) / 1000000.0 AS sum_base_price, "
-            "sum(CAST(floor(l_extendedprice * (1 - l_discount) * 1000000.0 + 0.5) AS BIGINT)) / 1000000.0 AS sum_disc_price, "
-            "floor(sum(CAST(floor(l_quantity * 1000000.0 + 0.5) AS BIGINT)) "
-            "/ count(*) / 1000000.0 * 1000000.0 + 0.5) / 1000000.0 AS avg_qty, "
+            f"{MICRO.sum_sql('l_quantity')} AS sum_qty, "
+            f"{MICRO.sum_sql('l_extendedprice')} AS sum_base_price, "
+            f"{MICRO.sum_sql('l_extendedprice * (1 - l_discount)')} "
+            "AS sum_disc_price, "
+            f"{MICRO.mean_sql('l_quantity')} AS avg_qty, "
             "count(*) AS count_order "
             "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' "
             "GROUP BY l_returnflag, l_linestatus "
             "ORDER BY l_returnflag, l_linestatus",
         "regional_suppliers":
             "SELECT r_name, count(*) AS n_suppliers, "
-            f"{fp6_sql('CAST(sum(CAST(floor(s_acctbal * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0')} "
-            "AS avg_acctbal "
+            f"{MICRO.mean_sql('s_acctbal')} AS avg_acctbal "
             "FROM supplier JOIN nation ON s_nationkey = n_nationkey "
             "JOIN region ON n_regionkey = r_regionkey "
             "GROUP BY r_name ORDER BY r_name",
         "top_customers":
             "SELECT c_custkey, c_name, "
-            "sum(CAST(floor(o_totalprice * 1000000.0 + 0.5) AS BIGINT)) / 1000000.0 "
-            "AS total_spend, "
+            f"{MICRO.sum_sql('o_totalprice')} AS total_spend, "
             "count(*) AS n_orders FROM orders JOIN customer "
             "ON o_custkey = c_custkey GROUP BY c_custkey, c_name "
             "ORDER BY total_spend DESC, c_custkey LIMIT 25",

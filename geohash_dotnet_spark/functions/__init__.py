@@ -19,7 +19,6 @@ from .native import (  # noqa: F401
 from .udfs import (  # noqa: F401
     gh_bbox,
     gh_decode,
-    gh_encode_pd,
     gh_neighbor,
     gh_neighbors,
     point_in_polygon,

@@ -18,19 +18,6 @@ from ..kernels import geohash as GK
 from ..kernels.polygon import parse_wkt, split_antimeridian
 
 
-def gh_encode_pd(lat: Column, lon: Column, precision: int) -> Column:
-    """pandas-UDF geohash encode (Arrow path). Prefer
-    functions.native.with_geohash for the JVM-native hot path; this twin is
-    for call sites that need a Column expression."""
-
-    @pandas_udf("string")
-    def _enc(la: pd.Series, lo: pd.Series) -> pd.Series:
-        return pd.Series(GK.encode(la.to_numpy(np.float64),
-                                   lo.to_numpy(np.float64), precision))
-
-    return _enc(lat, lon)
-
-
 def gh_decode(gh: Column) -> Column:
     """Cell center -> struct<lat:double, lon:double>."""
 

@@ -100,4 +100,4 @@ from .text import (  # noqa: F401
     with_quality,
     with_token_stats,
 )
-from .multimodal import extract_features, frame_sample_plan, synthetic_media  # noqa: F401
+from .multimodal import extract_features, synthetic_media  # noqa: F401

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO, MILLI
+
 __all__ = ["crawl_slots", "crawl_slots_sql",
            "site_footprint", "site_footprint_sql"]
 
@@ -42,12 +44,13 @@ def crawl_slots(df: DataFrame, rate: int = 16, url: str = "url",
     ``[s*rate, (s+1)*rate)`` in (ts, url) order; ``n_urls`` is the
     slot's fill (== rate except the last slot) and ``first_url`` its
     lexicographically first member (a deterministic witness that the
-    ordering, not just the counts, agrees cross-engine).
+    ordering, not just the counts, agrees cross-engine). URLs with a
+    NULL ts rank last, as in the twin's default ORDER BY.
     """
     if rate < 1:
         raise ValueError(f"rate must be >= 1, got {rate}")
     site = F.regexp_extract(F.col(url), site_re, 1)
-    w = Window.partitionBy("site").orderBy(F.col("__t").asc(),
+    w = Window.partitionBy("site").orderBy(F.col("__t").asc_nulls_last(),
                                            F.col("__u").asc())
     ranked = (df.select(site.alias("site"), F.col(url).alias("__u"),
                         F.col(ts).alias("__t"))
@@ -94,10 +97,9 @@ def site_footprint(df: DataFrame, precision: int = 4, url: str = "url",
     Cross-engine determinism: bbox min/max are order-free comparisons
     of pass-through doubles; the centroid sums MICRODEGREE fixed-point
     BIGINTs (exact on any layout / cluster size) before one shared IEEE
-    division tree, fp6-gated; the span is the haversine of the two bbox
-    corners quantized to millimeters (the trip_stats discipline — mm
-    units sit 5+ decimal orders above libm trig wobble on Mm-scale
-    legs).
+    division tree, rounded to ``exact.MICRO``; the span is the haversine
+    of the two bbox corners quantized to millimeters (``exact.MILLI`` —
+    one value per site, never summed).
 
     Scale shape (100 TB): ONE logical site-keyed aggregation.  Catalyst
     plans the exact distinct-cell count as the standard two-level
@@ -113,20 +115,15 @@ def site_footprint(df: DataFrame, precision: int = 4, url: str = "url",
         raise ValueError(f"precision must be in 1..12, got {precision}")
     from ..functions.native import haversine_m, with_geohash
 
-    from .text import fp6
-
     tagged = with_geohash(df, lat, lon, precision, out="__cell")
     site = F.regexp_extract(F.col(url), site_re, 1)
-    udeg = 1_000_000.0
     agg = (tagged
            .select(site.alias("site"), F.col("__cell"),
                    F.col(lat).cast("double").alias("__lat"),
                    F.col(lon).cast("double").alias("__lon"))
            .withColumns({
-               "__lat_u": F.floor(F.col("__lat") * udeg + F.lit(0.5))
-               .cast("long"),
-               "__lon_u": F.floor(F.col("__lon") * udeg + F.lit(0.5))
-               .cast("long")})
+               "__lat_u": MICRO.ticks(F.col("__lat")),
+               "__lon_u": MICRO.ticks(F.col("__lon"))})
            .groupBy("site")
            .agg(F.count(F.lit(1)).alias("n_pages"),
                 F.countDistinct("__cell").alias("n_cells"),
@@ -140,14 +137,13 @@ def site_footprint(df: DataFrame, precision: int = 4, url: str = "url",
                        F.col("max_lat"), F.col("max_lon"))
     return (agg
             .withColumns({
-                "ctr_lat": fp6((F.col("__slat").cast("double")
-                                / F.col("n_pages").cast("double"))
-                               / F.lit(udeg)),
-                "ctr_lon": fp6((F.col("__slon").cast("double")
-                                / F.col("n_pages").cast("double"))
-                               / F.lit(udeg)),
-                "span_mm": F.floor(span * F.lit(1000.0) + F.lit(0.5))
-                .cast("long")})
+                "ctr_lat": MICRO.round(MICRO.real(
+                    F.col("__slat").cast("double")
+                    / F.col("n_pages").cast("double"))),
+                "ctr_lon": MICRO.round(MICRO.real(
+                    F.col("__slon").cast("double")
+                    / F.col("n_pages").cast("double"))),
+                "span_mm": MILLI.ticks(span)})
             .select("site", "n_pages", "n_cells", "min_lat", "max_lat",
                     "min_lon", "max_lon", "ctr_lat", "ctr_lon", "span_mm"))
 
@@ -158,13 +154,11 @@ def site_footprint_sql(tagged_inner: str, url: str = "url",
     must expose url, lat, lon and the geohash column ``gh`` at the
     operator's precision (functions.oracle.pages_tagged_sql)."""
     from ..functions.oracle import haversine_sql
-    from .text import fp6_sql
 
     span = haversine_sql("min_lat", "min_lon", "max_lat", "max_lon")
-    ctr_lat = fp6_sql("(CAST(__slat AS DOUBLE) / CAST(n_pages AS DOUBLE))"
-                      " / 1000000.0")
-    ctr_lon = fp6_sql("(CAST(__slon AS DOUBLE) / CAST(n_pages AS DOUBLE))"
-                      " / 1000000.0")
+    ctr_lat, ctr_lon = (MICRO.round_sql(MICRO.real_sql(
+        f"CAST(__s{c} AS DOUBLE) / CAST(n_pages AS DOUBLE)"))
+        for c in ("lat", "lon"))
     return f"""
 WITH agg AS (
   SELECT regexp_extract({url}, '{site_re}', 1) AS site,
@@ -172,12 +166,12 @@ WITH agg AS (
          CAST(count(DISTINCT gh) AS BIGINT) AS n_cells,
          min(lat) AS min_lat, max(lat) AS max_lat,
          min(lon) AS min_lon, max(lon) AS max_lon,
-         sum(CAST(floor(lat * 1000000.0 + 0.5) AS BIGINT)) AS __slat,
-         sum(CAST(floor(lon * 1000000.0 + 0.5) AS BIGINT)) AS __slon
+         sum({MICRO.ticks_sql('lat')}) AS __slat,
+         sum({MICRO.ticks_sql('lon')}) AS __slon
   FROM ({tagged_inner}) GROUP BY 1
 )
 SELECT site, n_pages, n_cells, min_lat, max_lat, min_lon, max_lon,
        {ctr_lat} AS ctr_lat, {ctr_lon} AS ctr_lon,
-       CAST(floor(({span}) * 1000.0 + 0.5) AS BIGINT) AS span_mm
+       {MILLI.ticks_sql(span)} AS span_mm
 FROM agg
 """

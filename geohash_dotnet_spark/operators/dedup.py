@@ -30,7 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import _tokens, fp6, fp6_sql, with_fingerprint
+from ..functions.exact import MICRO
+from .text import _tokens, with_fingerprint
 
 # 128 fixed odd multipliers/offsets for the MinHash permutation family
 # h_i(x) = (a_i * x + b_i) mod 2^64 (multiply-shift family; uint64 wrap)
@@ -176,7 +177,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     out = (inter
            .join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), on="id_a")
            .join(sizes.withColumnsRenamed({"id": "id_b", "n_sh": "n_b"}), on="id_b")
-           .withColumn("jaccard", fp6(
+           .withColumn("jaccard", MICRO.round(
                (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
                .cast("double")))
            .filter(F.col("jaccard") >= threshold)
@@ -203,7 +204,7 @@ def _jaccard_fp6_sql(sa: str = "sa.n_sh", sb: str = "sb.n_sh",
                      inter: str = "inter") -> str:
     """fp6-quantized Jaccard from intersection + per-side shingle counts
     (shared by the self-join and cross-snapshot oracles)."""
-    return fp6_sql(f"CAST({inter} AS DOUBLE) / ({sa} + {sb} - {inter})")
+    return MICRO.round_sql(f"CAST({inter} AS DOUBLE) / ({sa} + {sb} - {inter})")
 
 
 def ngram_jaccard_sql(inner: str = "documents", id_col: str = "doc_id",
@@ -275,8 +276,8 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
              .filter(F.col("a.id") < F.col("b.id"))
              .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
              .agg(F.count(F.lit(1)).alias("inter")))
-    cont = fp6((F.col("inter")
-                / F.least(F.col("n_a"), F.col("n_b"))).cast("double"))
+    cont = MICRO.round((F.col("inter")
+                        / F.least(F.col("n_a"), F.col("n_b"))).cast("double"))
     return (inter
             .join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}),
                   on="id_a")
@@ -307,7 +308,7 @@ def containment_sql(inner: str = "documents", id_col: str = "doc_id",
                (SELECT count(*) FROM {inner})))) keep USING (shingle)
 )"""
         sh_src = "sh"
-    cont = fp6_sql("CAST(inter AS DOUBLE) / least(sa.n_sh, sb.n_sh)")
+    cont = MICRO.round_sql("CAST(inter AS DOUBLE) / least(sa.n_sh, sb.n_sh)")
     return f"""
 WITH sh0 AS (
   SELECT DISTINCT {id_col} AS id, unnest({shingle}) AS shingle FROM {inner}
@@ -461,7 +462,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (cand.join(sh_a, on="id_a").join(sh_b, on="id_b")
             .withColumn("jaccard",
-                        fp6((inter / union).cast("double")))
+                        MICRO.round((inter / union).cast("double")))
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard"))
 
@@ -502,7 +503,7 @@ def minhash_lsh_pairs_cross(df_new: DataFrame, df_old: DataFrame,
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (cand.join(a, on="id_new").join(b, on="id_old")
-            .withColumn("jaccard", fp6((inter / union).cast("double")))
+            .withColumn("jaccard", MICRO.round((inter / union).cast("double")))
             .filter(F.col("jaccard") >= threshold)
             .select("id_new", "id_old", "jaccard"))
 
@@ -1018,8 +1019,8 @@ def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
                  F.sum(F.when(F.col("ndocs") >= min_docs, F.col("k"))
                        .otherwise(F.lit(0))).alias("n_dup_spans"))
             .select(F.col("id").alias(id_col), "n_spans", "n_dup_spans",
-                    fp6(F.col("n_dup_spans").cast("double")
-                        / F.col("n_spans").cast("double"))
+                    MICRO.round(F.col("n_dup_spans").cast("double")
+                                / F.col("n_spans").cast("double"))
                     .alias("dup_frac")))
 
 
@@ -1027,7 +1028,7 @@ def duplicate_spans_sql(inner: str, id_col: str = "doc_id",
                         text: str = "text", width: int = 15,
                         min_docs: int = 2) -> str:
     """DuckDB oracle twin of :func:`duplicate_spans`."""
-    frac = fp6_sql("CAST(n_dup_spans AS DOUBLE) / CAST(n_spans AS DOUBLE)")
+    frac = MICRO.round_sql("CAST(n_dup_spans AS DOUBLE) / CAST(n_spans AS DOUBLE)")
     return f"""
 WITH t AS (
   SELECT {id_col} AS id,

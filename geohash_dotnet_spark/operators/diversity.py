@@ -10,7 +10,7 @@ Two census-style reductions a geo web-corpus pipeline runs constantly:
 - :func:`distance_bands` — radial histogram around a point: page
   counts per fixed-width great-circle ring. A pure projection plus one
   aggregation; the band id is computed from the FIXED-POINT distance
-  (floor(m * 1e6) integer), so the bucket edge behaves identically in
+  (``exact.MICRO`` ticks of metres), so the bucket edge behaves identically in
   Spark and DuckDB even where libm trig differs in the last ulp only
   after the 6th decimal.
 
@@ -24,9 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from ..functions.native import haversine_m, with_geohash
 from ..functions.oracle import haversine_sql
-from .text import fp6, fp6_sql
 
 __all__ = ["tile_entropy", "tile_entropy_sql",
            "distance_bands", "distance_bands_sql",
@@ -47,8 +47,8 @@ def tile_entropy(df: DataFrame, lat: str = "lat", lon: str = "lon",
                  F.count(F.lit(1)).alias("n_keys"),
                  F.sum(F.col("n").cast("double") * F.log2("n")).alias("__s"))
             .select("tile", "n_pages", "n_keys",
-                    fp6(F.log2("n_pages")
-                        - F.col("__s") / F.col("n_pages").cast("double"))
+                    MICRO.round(F.log2("n_pages")
+                                - F.col("__s") / F.col("n_pages").cast("double"))
                     .alias("entropy")))
 
 
@@ -59,8 +59,8 @@ def tile_entropy_sql(tagged_inner: str, key: str = "lang") -> str:
         f"CAST(count(*) AS BIGINT) AS n FROM ({tagged_inner}) GROUP BY 1, 2) "
         f"SELECT tile, CAST(sum(n) AS BIGINT) AS n_pages, "
         f"CAST(count(*) AS BIGINT) AS n_keys, "
-        + fp6_sql("log2(CAST(sum(n) AS DOUBLE)) - "
-                  "sum(CAST(n AS DOUBLE) * log2(n)) / sum(CAST(n AS DOUBLE))")
+        + MICRO.round_sql("log2(CAST(sum(n) AS DOUBLE)) - "
+                          "sum(CAST(n AS DOUBLE) * log2(n)) / sum(CAST(n AS DOUBLE))")
         + " AS entropy FROM pk GROUP BY tile")
 
 
@@ -77,8 +77,8 @@ def distance_bands(df: DataFrame, center_lat: float, center_lon: float,
                          f"{band_m}/{n_bands}")
     d = haversine_m(F.col(lat).cast("double"), F.col(lon).cast("double"),
                     F.lit(float(center_lat)), F.lit(float(center_lon)))
-    fpd = F.floor(d * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-    band = F.least(F.floor(fpd / F.lit(float(band_m) * 1000000.0)),
+    fpd = MICRO.ticks(d)
+    band = F.least(F.floor(fpd / F.lit(float(band_m * MICRO.scale))),
                    F.lit(int(n_bands)))
     return (df.withColumn("__band", band.cast("int"))
             .groupBy(F.col("__band").alias("band"))
@@ -92,8 +92,8 @@ def distance_bands_sql(inner: str, center_lat: float, center_lon: float,
     """DuckDB twin; ``inner`` must expose lat/lon/url."""
     d = haversine_sql(lat, lon, repr(float(center_lat)),
                       repr(float(center_lon)))
-    fpd = f"CAST(floor(({d}) * 1000000.0 + 0.5) AS BIGINT)"
-    band = (f"CAST(least(floor({fpd} / {float(band_m) * 1000000.0!r}), "
+    fpd = MICRO.ticks_sql(d)
+    band = (f"CAST(least(floor({fpd} / {float(band_m * MICRO.scale)!r}), "
             f"{int(n_bands)}) AS INT)")
     return (f"SELECT {band} AS band, CAST(count(*) AS BIGINT) AS n_pages, "
             f"CAST(count(DISTINCT url) AS BIGINT) AS n_urls "
@@ -152,8 +152,8 @@ def tile_terms(df: DataFrame, text: str = "text", lat: str = "lat",
          .withColumn("c_w", F.sum("c_tw").over(Window.partitionBy("term")))
          .filter(F.col("c_w") >= F.lit(int(min_count)))
          .crossJoin(F.broadcast(tot)))
-    lift = fp6((F.col("c_tw").cast("double") / F.col("n_t").cast("double"))
-               / (F.col("c_w").cast("double") / F.col("__N").cast("double")))
+    lift = MICRO.round((F.col("c_tw").cast("double") / F.col("n_t").cast("double"))
+                       / (F.col("c_w").cast("double") / F.col("__N").cast("double")))
     ranked = (x.withColumn("lift", lift)
               .withColumn("rank", F.row_number().over(
                   Window.partitionBy("tile")
@@ -170,7 +170,7 @@ def tile_terms_sql(tagged_inner: str, text: str = "text", k: int = 5,
     from .lm import _TOKS_SQL_TMPL
 
     toks = _TOKS_SQL_TMPL.format(text=text)
-    lift = fp6_sql(
+    lift = MICRO.round_sql(
         "(CAST(c_tw AS DOUBLE) / CAST(n_t AS DOUBLE))"
         " / (CAST(c_w AS DOUBLE) / CAST(__n AS DOUBLE))")
     return f"""
@@ -242,13 +242,13 @@ def tile_skew(df: DataFrame, lat: str = "lat", lon: str = "lon",
         denom < 0,
         F.raise_error(F.lit("tile_skew: n_tiles*n_pages overflowed BIGINT "
                             "— shard the input"))
-    ).otherwise(fp6(gini_raw))
+    ).otherwise(MICRO.round(gini_raw))
     return agg.select(
         "n_tiles", "n_pages",
         F.col("__top.t").alias("top_tile"),
         (-F.col("__top.nn")).alias("top_n"),
-        fp6((-F.col("__top.nn")).cast("double")
-            / F.col("n_pages").cast("double")).alias("top_share"),
+        MICRO.round((-F.col("__top.nn")).cast("double")
+                    / F.col("n_pages").cast("double")).alias("top_share"),
         gini.alias("gini"))
 
 
@@ -268,10 +268,10 @@ SELECT CAST(count(*) AS BIGINT) AS n_tiles,
        CAST(sum(n) AS BIGINT) AS n_pages,
        (SELECT tile FROM r ORDER BY n DESC, tile ASC LIMIT 1) AS top_tile,
        (SELECT n FROM r ORDER BY n DESC, tile ASC LIMIT 1) AS top_n,
-       """ + fp6_sql(
+       """ + MICRO.round_sql(
         "CAST((SELECT n FROM r ORDER BY n DESC, tile ASC LIMIT 1) AS DOUBLE)"
         " / CAST(sum(n) AS DOUBLE)") + """ AS top_share,
-       """ + fp6_sql(
+       """ + MICRO.round_sql(
         "CAST(2 * sum(rn * n) - (count(*) + 1) * sum(n) AS DOUBLE)"
         " / CAST(count(*) * sum(n) AS DOUBLE)") + """ AS gini
 FROM r

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import DEG4, METRE
 from ..functions.native import with_geohash
 from ..functions.oracle import tagged_select_sql
 
@@ -75,9 +76,6 @@ GROUP BY prev, gh
 # Per-user mobility: centroid + radius of gyration
 # ---------------------------------------------------------------------------
 
-_Q = 10000  # 1e-4 deg quantum (~11 m) — keeps sums-of-squares in BIGINT
-
-
 def user_mobility(df: DataFrame, user: str = "user_id",
                   lat: str = "lat", lon: str = "lon") -> DataFrame:
     """Per-user activity extent: event count, centroid, and radius of
@@ -94,15 +92,15 @@ def user_mobility(df: DataFrame, user: str = "user_id",
     E[x^2] - E[x]^2 form can go epsilon-negative under cancellation;
     both engines clamp at zero before the sqrt.
     """
-    la = F.floor(F.col(lat) * _Q + F.lit(0.5)).cast("long")
-    lo = F.floor(F.col(lon) * _Q + F.lit(0.5)).cast("long")
+    la, lo = DEG4.ticks(F.col(lat)), DEG4.ticks(F.col(lon))
     agg = (df.groupBy(user)
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.sum(la).alias("sl"), F.sum(lo).alias("so"),
                 F.sum(la * la).alias("ssl"),
                 F.sum(lo * lo).alias("sso")))
-    nq = (F.col("n_events") * F.lit(_Q)).cast("double")
-    nqq = (F.col("n_events") * F.lit(_Q * _Q)).cast("double")
+    q = DEG4.scale
+    nq = (F.col("n_events") * F.lit(q)).cast("double")
+    nqq = (F.col("n_events") * F.lit(q * q)).cast("double")
     cl = F.col("sl").cast("double") / nq
     co = F.col("so").cast("double") / nq
     var = ((F.col("ssl").cast("double") / nqq - cl * cl)
@@ -115,8 +113,8 @@ def user_mobility(df: DataFrame, user: str = "user_id",
 def user_mobility_sql(inner: str, user: str = "user_id",
                       lat: str = "lat", lon: str = "lon") -> str:
     """DuckDB oracle twin of :func:`user_mobility`."""
-    la = f"CAST(floor(({lat}) * {_Q} + 0.5e0) AS BIGINT)"
-    lo = f"CAST(floor(({lon}) * {_Q} + 0.5e0) AS BIGINT)"
+    la, lo = DEG4.ticks_sql(lat), DEG4.ticks_sql(lon)
+    q = DEG4.scale
     return f"""
 WITH q AS (
   SELECT {user}, {la} AS la, {lo} AS lo FROM {inner}
@@ -128,15 +126,15 @@ WITH q AS (
   FROM q GROUP BY {user}
 )
 SELECT {user}, n_events,
-       CAST(sl AS DOUBLE) / CAST(n_events * {_Q} AS DOUBLE) AS c_lat,
-       CAST(so AS DOUBLE) / CAST(n_events * {_Q} AS DOUBLE) AS c_lon,
+       CAST(sl AS DOUBLE) / CAST(n_events * {q} AS DOUBLE) AS c_lat,
+       CAST(so AS DOUBLE) / CAST(n_events * {q} AS DOUBLE) AS c_lon,
        sqrt(greatest(
-         ((CAST(ssl AS DOUBLE) / CAST(n_events * {_Q * _Q} AS DOUBLE)
-           - (CAST(sl AS DOUBLE) / CAST(n_events * {_Q} AS DOUBLE))
-             * (CAST(sl AS DOUBLE) / CAST(n_events * {_Q} AS DOUBLE)))
-          + (CAST(sso AS DOUBLE) / CAST(n_events * {_Q * _Q} AS DOUBLE)
-           - (CAST(so AS DOUBLE) / CAST(n_events * {_Q} AS DOUBLE))
-             * (CAST(so AS DOUBLE) / CAST(n_events * {_Q} AS DOUBLE)))),
+         ((CAST(ssl AS DOUBLE) / CAST(n_events * {q * q} AS DOUBLE)
+           - (CAST(sl AS DOUBLE) / CAST(n_events * {q} AS DOUBLE))
+             * (CAST(sl AS DOUBLE) / CAST(n_events * {q} AS DOUBLE)))
+          + (CAST(sso AS DOUBLE) / CAST(n_events * {q * q} AS DOUBLE)
+           - (CAST(so AS DOUBLE) / CAST(n_events * {q} AS DOUBLE))
+             * (CAST(so AS DOUBLE) / CAST(n_events * {q} AS DOUBLE)))),
          0.0e0)) AS rog_deg
 FROM a
 """
@@ -224,13 +222,6 @@ HAVING epoch_us(max({ts})) - epoch_us(min({ts})) >= {int(min_dwell_s) * 1_000_00
 # Trip segmentation: gap-split journeys with exact path length
 # ---------------------------------------------------------------------------
 
-_MM = 1000  # millimeter leg quantum for exact path-length sums
-# (1e-6 m quanta put the floor boundary within the ~1e-9 relative libm
-# trig wobble for 1e7-m legs — one flipped unit observed at sf0.01;
-# millimeter quanta leave ~3 orders of margin while the per-leg
-# rounding stays far below any physical meaning of a great-circle leg)
-
-
 def trip_stats(df: DataFrame, user: str = "user_id", ts: str = "ts",
                lat: str = "lat", lon: str = "lon", gap_s: int = 7200,
                min_points: int = 2,
@@ -241,13 +232,13 @@ def trip_stats(df: DataFrame, user: str = "user_id", ts: str = "ts",
     (sum of consecutive-leg haversines).
 
     Exactness discipline: each leg distance is quantized to integer
-    millimeters BEFORE the per-trip sum (doubles summed in task order
-    are layout-dependent; BIGINT sums are not), so path lengths are
-    bit-identical on any cluster size and in the DuckDB twin — the same
-    fixed-point trick as the windowed tile sums. The quantum is 1e-3 m,
-    not 1e-6: the finer grid sits inside the cross-engine libm trig
-    wobble of long legs and flips floor units.  Shape: one user-keyed
-    exchange shared by the lag and running-sum windows, then a
+    metres (``exact.METRE``) BEFORE the per-trip sum (doubles summed in
+    task order are layout-dependent; BIGINT sums are not). Across
+    engines JVM and C-library trig differ in the last ulps (~1.5e-8 m
+    on 1e7-m legs); a leg that close to a half-metre boundary can still
+    round apart, but whole metres make that 1000 times rarer than the
+    millimetre quantum, which flipped a leg at sf0.01.  Shape: one
+    user-keyed exchange shared by the lag and running-sum windows, then a
     (user, trip) aggregation with map-side partials."""
     order = [F.col(ts).asc()]
     if tiebreak is not None:
@@ -262,22 +253,22 @@ def trip_stats(df: DataFrame, user: str = "user_id", ts: str = "ts",
     from ..functions.native import haversine_m
     leg = haversine_m(F.lag(lat).over(w), F.lag(lon).over(w),
                       F.col(lat), F.col(lon))
-    leg_mm = F.when(new_trip == 1, F.lit(0)).otherwise(
-        F.floor(leg * F.lit(float(_MM)) + F.lit(0.5))).cast("long")
+    leg_m = F.when(new_trip == 1, F.lit(0)).otherwise(
+        METRE.ticks(leg)).cast("long")
     seg = (df.withColumn("__new", new_trip)
-           .withColumn("__leg_mm", leg_mm)
+           .withColumn("__leg_m", leg_m)
            .withColumn("__trip", F.sum("__new").over(
                w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
     out = (seg.groupBy(user, F.col("__trip").alias("trip_idx"))
            .agg(F.count(F.lit(1)).alias("n_points"),
                 F.min(ts).alias("start_ts"), F.max(ts).alias("end_ts"),
-                F.sum("__leg_mm").alias("__mm")))
+                F.sum("__leg_m").alias("__m")))
     dur = (F.unix_micros(F.col("end_ts").cast("timestamp"))
            - F.unix_micros(F.col("start_ts").cast("timestamp")))
     return (out.select(
         user, "trip_idx", "n_points", "start_ts", "end_ts",
         dur.alias("duration_us"),
-        (F.col("__mm").cast("double") / F.lit(float(_MM))).alias("dist_m"))
+        METRE.real(F.col("__m")).alias("dist_m"))
         .filter(F.col("n_points") >= min_points))
 
 
@@ -304,11 +295,11 @@ WITH l AS (
          CASE WHEN pts IS NULL
                    OR epoch_us({ts}) - epoch_us(pts) > {int(gap_s) * 1_000_000}
               THEN CAST(0 AS BIGINT)
-              ELSE CAST(floor({hv} * {_MM}.0 + 0.5) AS BIGINT)
-         END AS leg_mm
+              ELSE {METRE.ticks_sql(hv)}
+         END AS leg_m
   FROM l
 ), r AS (
-  SELECT {user}, {ts}, leg_mm,
+  SELECT {user}, {ts}, leg_m,
          sum(new_trip) OVER (PARTITION BY {user} ORDER BY {order}
                              ROWS UNBOUNDED PRECEDING) AS trip_idx
   FROM s
@@ -316,7 +307,7 @@ WITH l AS (
 SELECT {user}, trip_idx, count(*) AS n_points,
        min({ts}) AS start_ts, max({ts}) AS end_ts,
        epoch_us(max({ts})) - epoch_us(min({ts})) AS duration_us,
-       CAST(sum(leg_mm) AS DOUBLE) / {_MM}.0 AS dist_m
+       {METRE.real_sql('sum(leg_m)')} AS dist_m
 FROM r GROUP BY {user}, trip_idx
 HAVING count(*) >= {min_points}
 """

@@ -36,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from ..functions.udfs import gh_neighbors
-from .text import fp6, fp6_sql
 
 __all__ = ["focal_hotspots", "focal_hotspots_sql",
            "moran_i", "moran_i_sql",
@@ -74,7 +74,7 @@ def focal_hotspots(tiles: DataFrame, cell_col: str = "gh",
     denom = s * F.sqrt(
         (F.col("nt") * F.col("w") - F.col("w") * F.col("w")).cast("double")
         / (F.col("nt") - F.lit(1)))
-    z = fp6(((F.col("wx") - mean * F.col("w")) / denom).cast("double"))
+    z = MICRO.round(((F.col("wx") - mean * F.col("w")) / denom).cast("double"))
     return (j.select(F.col("t").alias(cell_col),
                      F.col("x").alias(value_col),
                      "wx", "w", z.alias("gi_z"))
@@ -144,9 +144,9 @@ def moran_i(tiles: DataFrame, cell_col: str = "gh",
     z = (i_val - e_val) / F.sqrt(var_n)
     return j.select(F.col("nt").alias("n_tiles"),
                     F.col("w_pairs"),
-                    fp6(i_val).alias("moran_i"),
-                    fp6(e_val).alias("e_i"),
-                    fp6(z).alias("z_norm"))
+                    MICRO.round(i_val).alias("moran_i"),
+                    MICRO.round(e_val).alias("e_i"),
+                    MICRO.round(z).alias("z_norm"))
 
 
 def moran_i_sql(tiles_cte: str, pairs_cte: str) -> str:
@@ -187,9 +187,9 @@ edges AS (
          CAST(sum(n * n) AS BIGINT) AS sxx FROM tiles
 )
 SELECT nt AS n_tiles, w_pairs,
-       {fp6_sql(i_val)} AS moran_i,
-       {fp6_sql(e_val)} AS e_i,
-       {fp6_sql(z)} AS z_norm
+       {MICRO.round_sql(i_val)} AS moran_i,
+       {MICRO.round_sql(e_val)} AS e_i,
+       {MICRO.round_sql(z)} AS z_norm
 FROM pair CROSS JOIN deg CROSS JOIN gstats
 """
 
@@ -209,7 +209,7 @@ def focal_hotspots_sql(tiles_cte: str, pairs_cte: str,
     denom = (f"{sdev} * sqrt(CAST(nt * w - w * w AS DOUBLE) "
              f"/ (nt - 1))")
     zraw = f"(CAST(wx AS DOUBLE) - {mean} * w) / ({denom})"
-    z = fp6_sql(zraw)
+    z = MICRO.round_sql(zraw)
     return f"""
 WITH tiles AS ({tiles_cte}), pairs AS ({pairs_cte}),
 focal AS (
@@ -265,9 +265,9 @@ def tile_anomaly(df: DataFrame, lat: str = "lat", lon: str = "lon",
     mean = F.col("s").cast("double") / days
     var = F.col("ss").cast("double") / days - mean * mean
     z = F.when((F.col("days") >= 2) & (var > 0),
-               fp6((F.col("n").cast("double") - mean) / F.sqrt(var)))
+               MICRO.round((F.col("n").cast("double") - mean) / F.sqrt(var)))
     return j.select("tile", "day", "n", "days",
-                    fp6(mean).alias("mean_n"), z.alias("z"))
+                    MICRO.round(mean).alias("mean_n"), z.alias("z"))
 
 
 def tile_anomaly_sql(tagged_inner: str, ts: str = "ts") -> str:
@@ -276,7 +276,7 @@ def tile_anomaly_sql(tagged_inner: str, ts: str = "ts") -> str:
     timestamp column."""
     mean = "CAST(s AS DOUBLE) / CAST(days AS DOUBLE)"
     var = f"CAST(ss AS DOUBLE) / CAST(days AS DOUBLE) - ({mean}) * ({mean})"
-    z = fp6_sql(f"(CAST(n AS DOUBLE) - ({mean})) / sqrt({var})")
+    z = MICRO.round_sql(f"(CAST(n AS DOUBLE) - ({mean})) / sqrt({var})")
     return f"""
 WITH daily AS (
   SELECT gh AS tile, CAST({ts} AS DATE) AS day, count(*) AS n
@@ -287,7 +287,7 @@ WITH daily AS (
 )
 SELECT daily.tile, day, CAST(n AS BIGINT) AS n,
        CAST(days AS BIGINT) AS days,
-       {fp6_sql(mean)} AS mean_n,
+       {MICRO.round_sql(mean)} AS mean_n,
        CASE WHEN days >= 2 AND ({var}) > 0 THEN {z} END AS z
 FROM daily JOIN mom ON daily.tile = mom.tile
 """

@@ -29,7 +29,7 @@ Scale design:
 Cross-engine floats: per-(query, doc) scores are sums of per-term
 contributions; float sums are addition-order dependent, so each
 contribution is quantized to exact integer micro-units
-(floor(x·1e6 + 0.5) as BIGINT) and SUMMED AS INTEGERS — order-free and
+(``exact.MICRO`` ticks, BIGINT) and SUMMED AS INTEGERS — order-free and
 bit-identical in DuckDB. Ranks order by the integer score, so they are
 deterministic too. The per-term contribution itself is one shared IEEE
 expression tree; it contains ``ln`` (the BM25 idf), which is not
@@ -45,8 +45,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from .dedup import md5_60bit, md5_60bit_sql
-from .text import _tokens, fp6, fp6_sql
+from .text import _tokens
 
 __all__ = [
     "build_postings",
@@ -187,9 +188,7 @@ def bm25_topk(df: DataFrame, queries: dict, k: int = 10,
     contrib = F.expr(_CONTRIB.format(
         N=f"CAST({n_docs} AS DOUBLE)", k1=_dbl(k1), b=_dbl(b),
         avgdl=_dbl(avgdl)))
-    scored = tf.withColumn(
-        "c_u", F.floor(contrib * F.lit(1000000.0) + F.lit(0.5))
-        .cast("long"))
+    scored = tf.withColumn("c_u", MICRO.ticks(contrib))
 
     spark = df.sparkSession
     qdf = F.broadcast(spark.createDataFrame(qterms, "qid string, term string"))
@@ -201,8 +200,7 @@ def bm25_topk(df: DataFrame, queries: dict, k: int = 10,
     return (per_doc.withColumn("rank", F.row_number().over(w).cast("long"))
             .filter(F.col("rank") <= int(k))
             .select("qid", "rank", F.col("id").alias(id_col),
-                    (F.col("s_u").cast("double") / F.lit(1000000.0))
-                    .alias("score")))
+                    MICRO.real(F.col("s_u")).alias("score")))
 
 
 def bm25_topk_sql(queries: dict, inner: str = "documents", k: int = 10,
@@ -242,7 +240,7 @@ pairs AS (
   FROM tf
 ), scored AS (
   SELECT q.qid, wd.id,
-         CAST(floor(({contrib}) * 1000000.0 + 0.5) AS BIGINT) AS c_u
+         {MICRO.ticks_sql(contrib)} AS c_u
   FROM wd JOIN q ON q.term = wd.term
 ), per_doc AS (
   SELECT qid, id, CAST(sum(c_u) AS BIGINT) AS s_u
@@ -250,7 +248,7 @@ pairs AS (
 )
 SELECT qid, CAST(row_number() OVER (
          PARTITION BY qid ORDER BY s_u DESC, id) AS BIGINT) AS rank,
-       id AS {id_col}, CAST(s_u AS DOUBLE) / 1000000.0 AS score
+       id AS {id_col}, {MICRO.real_sql('s_u')} AS score
 FROM per_doc QUALIFY rank <= {int(k)}
 """
 
@@ -382,7 +380,7 @@ def doc_keywords(df: DataFrame, id_col: str = "doc_id",
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= int(k))
             .select("id", "term", "tf", "dl", "df",
-                    fp6(F.col("__score")).alias("score"), "rank"))
+                    MICRO.round(F.col("__score")).alias("score"), "rank"))
 
 
 def doc_keywords_sql(inner: str = "documents", id_col: str = "doc_id",
@@ -413,7 +411,7 @@ WITH pairs AS (
                     term ASC) AS rank
   FROM s
 )
-SELECT id, term, tf, dl, df, {fp6_sql('score_raw')} AS score, rank
+SELECT id, term, tf, dl, df, {MICRO.round_sql('score_raw')} AS score, rank
 FROM r WHERE rank <= {int(k)}
 """
 

@@ -14,7 +14,7 @@ Deterministic and engine-portable end to end:
   bit-identical in DuckDB's list_reduce replay; ties break to the
   lowest centroid id via struct-min;
 * update: per-(cluster, component) sums of MICRO-UNIT-QUANTIZED
-  components (floor(x·1e6+0.5) as BIGINT) — integer sums are
+  components (``exact.MICRO`` ticks, BIGINT) — integer sums are
   addition-order free, so new centroids are identical doubles on any
   cluster size, any layout, any engine. Empty clusters keep their
   previous centroid.
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.exact import MICRO
 
 __all__ = ["kmeans_fit", "kmeans_assign", "kmeans_fit_sql"]
 
@@ -60,8 +62,7 @@ def _cluster_stats(assigned: DataFrame, vec_col: str) -> DataFrame:
     """(cid, pos, s_u, n): micro-unit integer component sums + sizes."""
     e = assigned.select("cid", F.posexplode(F.col(vec_col))
                         .alias("pos", "comp"))
-    su = F.floor(F.col("comp").cast("double") * F.lit(1000000.0)
-                 + F.lit(0.5)).cast("long")
+    su = MICRO.ticks(F.col("comp").cast("double"))
     return (e.groupBy("cid", "pos")
             .agg(F.sum(su).alias("s_u"), F.count(F.lit(1)).alias("n")))
 
@@ -88,7 +89,7 @@ def kmeans_fit(df: DataFrame, n_clusters: int = 8, n_iter: int = 2,
         new = {}
         for r in stats.collect():
             new.setdefault(int(r["cid"]), {})[int(r["pos"])] = (
-                float(r["s_u"]) / float(int(r["n"]) * 1000000))
+                float(r["s_u"]) / float(int(r["n"]) * MICRO.scale))
         cents = [(cid,
                   [new[cid][p] for p in range(len(comps))]
                   if cid in new else comps)
@@ -99,7 +100,7 @@ def kmeans_fit(df: DataFrame, n_clusters: int = 8, n_iter: int = 2,
         F.col("pos").cast("long").alias("pos"),
         F.col("n").alias("n_vecs"),
         (F.col("s_u").cast("double")
-         / (F.col("n") * F.lit(1000000)).cast("double")).alias("comp"))
+         / (F.col("n") * F.lit(MICRO.scale)).cast("double")).alias("comp"))
 
 
 def kmeans_fit_sql(inner: str = "embeddings", n_clusters: int = 8,
@@ -113,7 +114,7 @@ def kmeans_fit_sql(inner: str = "embeddings", n_clusters: int = 8,
             "i -> (CAST(v[i] AS DOUBLE) - CAST(c[i] AS DOUBLE)) "
             "* (CAST(v[i] AS DOUBLE) - CAST(c[i] AS DOUBLE))), "
             "(a, b) -> a + b)").format(d=int(dim))
-    comp_expr = "CAST(s_u AS DOUBLE) / CAST(n * 1000000 AS DOUBLE)"
+    comp_expr = f"CAST(s_u AS DOUBLE) / CAST(n * {MICRO.scale} AS DOUBLE)"
     blocks = [f"""
 vecs AS (
   SELECT CAST({id_col} AS BIGINT) AS id, {vec_col} AS v FROM {inner}
@@ -134,8 +135,8 @@ a{it} AS (
   SELECT cid, unnest(range({int(dim)})) AS pos, v FROM a{it}
 ), s{it} AS (
   SELECT cid, pos,
-         CAST(sum(CAST(floor(CAST(v[pos + 1] AS DOUBLE) * 1000000.0e0
-                             + 0.5e0) AS BIGINT)) AS BIGINT) AS s_u,
+         CAST(sum({MICRO.ticks_sql('CAST(v[pos + 1] AS DOUBLE)')})
+              AS BIGINT) AS s_u,
          count(*) AS n
   FROM e{it} GROUP BY cid, pos
 ), cent{it + 1} AS (

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..functions.exact import MICRO
 from ..functions.native import haversine_m, with_geohash
 from ..kernels.circle import cover_circle
 from ..kernels.distance import precision_for_radius
@@ -159,9 +160,8 @@ def nearest_assign(df: DataFrame, sites: list[tuple[str, float, float]],
             F.lit(name).alias("s"))
         for name, slat, slon in sites])
     best = F.array_min(cands)
-    from .text import fp6
     return (df.withColumn(out_site, best["s"])
-            .withColumn(out_dist, fp6(best["d"])))
+            .withColumn(out_dist, MICRO.round(best["d"])))
 
 
 def nearest_sites(df: DataFrame, sites: list[tuple[str, float, float]],
@@ -202,9 +202,8 @@ def nearest_sites(df: DataFrame, sites: list[tuple[str, float, float]],
             F.lit(name).alias("s"))
         for name, slat, slon in sites])
     top = F.slice(F.array_sort(cands), 1, k)
-    from .text import fp6
     ex = df.select("*", F.posexplode(top).alias("__pos", "__hit"))
     return (ex.withColumn(out_rank, (F.col("__pos") + 1).cast("int"))
             .withColumn(out_site, F.col("__hit")["s"])
-            .withColumn(out_dist, fp6(F.col("__hit")["d"]))
+            .withColumn(out_dist, MICRO.round(F.col("__hit")["d"]))
             .drop("__pos", "__hit"))

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO, MILLI
 from .dedup import md5_60bit, md5_60bit_sql
 
 __all__ = ["extract_links", "extract_links_sql",
@@ -407,7 +408,6 @@ def link_locality(df: DataFrame, html: str = "html", url: str = "url",
         raise ValueError(f"band_m/n_bands must be >= 1, got "
                          f"{band_m}/{n_bands}")
     from ..functions.native import haversine_m
-    from .text import fp6
 
     links = F.expr(
         f"regexp_extract_all(decode({html}, 'UTF-8'), '{HREF_RE}', 1)")
@@ -421,18 +421,18 @@ def link_locality(df: DataFrame, html: str = "html", url: str = "url",
                     F.col(lon).alias("__dlon"))
     d = haversine_m(F.col("__slat"), F.col("__slon"),
                     F.col("__dlat"), F.col("__dlon"))
-    fpd = F.floor(d * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-    band = F.least(F.floor(fpd / F.lit(float(band_m) * 1000000.0)),
+    fpd = MICRO.ticks(d)
+    band = F.least(F.floor(fpd / F.lit(float(band_m * MICRO.scale))),
                    F.lit(int(n_bands))).cast("int")
-    mm = F.floor(d * F.lit(1000.0) + F.lit(0.5)).cast("long")
+    mm = MILLI.ticks(d)
     return (src.join(dst, "link")
             .select(band.alias("band"), mm.alias("__mm"), "src_url")
             .groupBy("band")
             .agg(F.count(F.lit(1)).alias("n_links"),
                  F.countDistinct("src_url").alias("n_src_urls"),
-                 fp6((F.sum(F.col("__mm").cast("decimal(38,0)"))
-                      .cast("double") / F.count(F.lit(1)).cast("double"))
-                     / F.lit(1000000.0)).alias("mean_km")))
+                 MICRO.round((F.sum(F.col("__mm").cast("decimal(38,0)"))
+                              .cast("double") / F.count(F.lit(1)).cast("double"))
+                             / F.lit(1000000.0)).alias("mean_km")))
 
 
 def link_locality_sql(pages_html_inner: str, pages_inner: str,
@@ -443,16 +443,15 @@ def link_locality_sql(pages_html_inner: str, pages_inner: str,
     through the explode instead — url -> (lat, lon) is functional, so
     the values agree), same fixed-point band and mm-exact mean."""
     from ..functions.oracle import haversine_sql
-    from .text import fp6_sql
 
     ex = extract_links_sql(pages_html_inner)
     d = haversine_sql("p1.lat", "p1.lon", "p2.lat", "p2.lon")
-    fpd = f"CAST(floor(({d}) * 1000000.0 + 0.5) AS BIGINT)"
-    band = (f"CAST(least(floor({fpd} / {float(band_m) * 1000000.0!r}), "
+    fpd = MICRO.ticks_sql(d)
+    band = (f"CAST(least(floor({fpd} / {float(band_m * MICRO.scale)!r}), "
             f"{int(n_bands)}) AS INT)")
-    mm = f"CAST(floor(({d}) * 1000.0 + 0.5) AS BIGINT)"
-    mean = fp6_sql("(CAST(sum(mm) AS DOUBLE) / CAST(count(*) AS DOUBLE))"
-                   " / 1000000.0")
+    mm = MILLI.ticks_sql(d)
+    mean = MICRO.round_sql("(CAST(sum(mm) AS DOUBLE) / CAST(count(*) AS DOUBLE))"
+                           " / 1000000.0")
     return f"""
 SELECT band, CAST(count(*) AS BIGINT) AS n_links,
        CAST(count(DISTINCT src_url) AS BIGINT) AS n_src_urls,

@@ -22,7 +22,7 @@ corpus-scale exchanges total; AQE's skew handling covers the stopword
 bigram head on the scoring join.
 
 Cross-engine floats: each bigram's log-probability is quantized ONCE
-(in the model — floor(ln(p)·1e6 + 0.5) AS BIGINT) and per-document
+(in the model — ``exact.MICRO`` ticks of ln(p), BIGINT) and per-document
 scores are INTEGER sums of those micro-units, so they are
 addition-order independent and bit-identical in DuckDB. The final
 perplexity exp(−logprob/n) is one shared IEEE tree over the integer
@@ -35,9 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from .dedup import md5_60bit, md5_60bit_sql
 from .index import _dbl
-from .text import _tokens, fp6, fp6_sql
+from .text import _tokens
 
 __all__ = ["bigram_ppl", "bigram_ppl_sql", "collocations",
            "collocations_sql", "hashed_linear_score",
@@ -76,8 +77,7 @@ def bigram_ppl(df: DataFrame, id_col: str = "doc_id",
                / (F.col("c1") + F.expr(_dbl(k)) * F.expr(_dbl(vocab))))
     model = (c2.join(c1, "w1")
              .select("w1", "w2",
-                     F.floor(lp * F.lit(1000000.0) + F.lit(0.5))
-                     .cast("long").alias("lp_u")))
+                     MICRO.ticks(lp).alias("lp_u")))
 
     # Pre-aggregate to (doc, distinct bigram, count) BEFORE the model
     # join: the join then carries one row per distinct bigram per doc
@@ -89,11 +89,11 @@ def bigram_ppl(df: DataFrame, id_col: str = "doc_id",
               .groupBy("id")
               .agg(F.sum("cnt").alias("n_bigrams"),
                    F.sum(F.col("lp_u") * F.col("cnt")).alias("s_u")))
-    logprob = scored["s_u"].cast("double") / F.lit(1000000.0)
+    logprob = MICRO.real(scored["s_u"])
     return scored.select(
         F.col("id").alias(id_col), "n_bigrams",
         logprob.alias("logprob"),
-        fp6(F.exp(-logprob / scored["n_bigrams"].cast("double")))
+        MICRO.round(F.exp(-logprob / scored["n_bigrams"].cast("double")))
         .alias("ppl"))
 
 
@@ -120,9 +120,8 @@ WITH docs AS (
     SELECT w1 AS w FROM c2 UNION SELECT w2 AS w FROM c2)
 ), model AS (
   SELECT c2.w1, c2.w2,
-         CAST(floor(ln((c2.c2 + {kd}) /
-                       (c1.c1 + {kd} * CAST((SELECT v FROM vocab) AS DOUBLE)))
-                    * 1000000.0e0 + 0.5e0) AS BIGINT) AS lp_u
+         {MICRO.ticks_sql(f"ln((c2.c2 + {kd}) / (c1.c1 + {kd} * "
+                          f"CAST((SELECT v FROM vocab) AS DOUBLE)))")} AS lp_u
   FROM c2 JOIN c1 ON c1.w1 = c2.w1
 ), scored AS (
   SELECT bg.id, count(*) AS n_bigrams, CAST(sum(m.lp_u) AS BIGINT) AS s_u
@@ -130,9 +129,9 @@ WITH docs AS (
   GROUP BY bg.id
 )
 SELECT id AS {id_col}, n_bigrams,
-       CAST(s_u AS DOUBLE) / 1000000.0e0 AS logprob,
-       {fp6_sql('exp(-(CAST(s_u AS DOUBLE) / 1000000.0e0) '
-                '/ CAST(n_bigrams AS DOUBLE))')} AS ppl
+       {MICRO.real_sql('s_u')} AS logprob,
+       {MICRO.round_sql(f"exp(-({MICRO.real_sql('s_u')}) "
+                                "/ CAST(n_bigrams AS DOUBLE))")} AS ppl
 FROM scored
 """
 
@@ -172,14 +171,11 @@ def collocations(df: DataFrame, k: int = 50, min_count: int = 5,
     td = F.expr(_dbl(t))
     pmi = F.log((F.col("n") / td)
                 / ((F.col("cl") / td) * (F.col("cr") / td)))
-    pmi_u = F.floor(pmi * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-    return (cand.withColumn("__u", pmi_u)
+    return (cand.withColumn("__u", MICRO.ticks(pmi))
             .orderBy(F.col("__u").desc(), F.col("w1").asc(),
                      F.col("w2").asc())
             .limit(int(k))
-            .select("w1", "w2", "n",
-                    (F.col("__u").cast("double") / F.lit(1000000.0))
-                    .alias("pmi")))
+            .select("w1", "w2", "n", MICRO.real(F.col("__u")).alias("pmi")))
 
 
 def collocations_sql(inner: str = "documents", k: int = 50,
@@ -208,11 +204,11 @@ WITH docs AS (
   SELECT w2, CAST(sum(n) AS BIGINT) AS cr FROM c2 GROUP BY w2
 ), cand AS (
   SELECT c2.w1, c2.w2, c2.n,
-         CAST(floor(({pmi}) * 1000000.0e0 + 0.5e0) AS BIGINT) AS u
+         {MICRO.ticks_sql(pmi)} AS u
   FROM c2 JOIN cl ON cl.w1 = c2.w1 JOIN cr ON cr.w2 = c2.w2
   WHERE c2.n >= {int(min_count)}
 )
-SELECT w1, w2, n, CAST(u AS DOUBLE) / 1000000.0e0 AS pmi
+SELECT w1, w2, n, {MICRO.real_sql('u')} AS pmi
 FROM cand ORDER BY u DESC, w1, w2 LIMIT {int(k)}
 """
 
@@ -276,8 +272,7 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
     lp_c = F.log((F.col("cc").cast("double") + F.expr(kd))
                  / (F.col("ct").cast("double") + F.expr(kd) * F.expr(bd)))
     model = (m.crossJoin(F.broadcast(tot))
-             .select("b", F.floor((lp_t - lp_c) * F.lit(1000000.0)
-                                  + F.lit(0.5)).cast("long").alias("llr_u")))
+             .select("b", MICRO.ticks(lp_t - lp_c).alias("llr_u")))
 
     prof = buckets(corpus).groupBy("id", "b").agg(
         F.count(F.lit(1)).alias("cnt"))
@@ -285,10 +280,10 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
               .groupBy("id")
               .agg(F.sum("cnt").alias("n_tokens"),
                    F.sum(F.col("llr_u") * F.col("cnt")).alias("s_u")))
-    llr = scored["s_u"].cast("double") / F.lit(1000000.0)
+    llr = MICRO.real(scored["s_u"])
     return scored.select(
         F.col("id").alias(id_col), "n_tokens", llr.alias("llr"),
-        fp6(llr / scored["n_tokens"].cast("double")).alias("avg_llr"))
+        MICRO.round(llr / scored["n_tokens"].cast("double")).alias("avg_llr"))
 
 
 def dsir_weights_sql(corpus_inner: str, target_inner: str,
@@ -317,10 +312,10 @@ m AS (
   SELECT CAST(sum(tc) AS BIGINT) AS tt, CAST(sum(cc) AS BIGINT) AS ct
   FROM m
 ), model AS (
-  SELECT b, CAST(floor((
-      ln((CAST(tc AS DOUBLE) + {kd}) / (CAST(tt AS DOUBLE) + {kd} * {bd}))
-    - ln((CAST(cc AS DOUBLE) + {kd}) / (CAST(ct AS DOUBLE) + {kd} * {bd}))
-  ) * 1000000.0e0 + 0.5e0) AS BIGINT) AS llr_u
+  SELECT b, {MICRO.ticks_sql(
+      f"ln((CAST(tc AS DOUBLE) + {kd}) / (CAST(tt AS DOUBLE) + {kd} * {bd}))"
+      f" - ln((CAST(cc AS DOUBLE) + {kd}) / (CAST(ct AS DOUBLE) + {kd} * {bd}))"
+  )} AS llr_u
   FROM m CROSS JOIN tot
 ), prof AS (
   SELECT id, b, count(*) AS cnt FROM cb GROUP BY id, b
@@ -330,9 +325,9 @@ m AS (
   FROM prof JOIN model ON prof.b = model.b GROUP BY id
 )
 SELECT id AS {id_col}, n_tokens,
-       CAST(s_u AS DOUBLE) / 1000000.0e0 AS llr,
-       {fp6_sql('(CAST(s_u AS DOUBLE) / 1000000.0e0) '
-                '/ CAST(n_tokens AS DOUBLE)')} AS avg_llr
+       {MICRO.real_sql('s_u')} AS llr,
+       {MICRO.round_sql(f"({MICRO.real_sql('s_u')}) "
+                                "/ CAST(n_tokens AS DOUBLE)")} AS avg_llr
 FROM scored
 """
 
@@ -396,7 +391,7 @@ def hashed_linear_score(df: DataFrame, id_col: str = "doc_id",
     logit = (F.col("s_milli").cast("double")
              / (F.col("n_feats").cast("double") * F.lit(1000.0)))
     return agg.select(
-        F.col("id").alias(id_col), "n_feats", fp6(logit).alias("logit"),
+        F.col("id").alias(id_col), "n_feats", MICRO.round(logit).alias("logit"),
         F.when(logit >= 0.0, 1).otherwise(0).alias("label"))
 
 
@@ -421,7 +416,7 @@ WITH ex AS (
   FROM ex GROUP BY id
 )
 SELECT id AS {id_col}, n_feats,
-       {fp6_sql('CAST(s_milli AS DOUBLE) / (CAST(n_feats AS DOUBLE) * 1000.0)')}
+       {MICRO.round_sql('CAST(s_milli AS DOUBLE) / (CAST(n_feats AS DOUBLE) * 1000.0)')}
          AS logit,
        CASE WHEN CAST(s_milli AS DOUBLE)
                  / (CAST(n_feats AS DOUBLE) * 1000.0) >= 0.0
@@ -443,10 +438,11 @@ def score_calibration(df: DataFrame, id_col: str = "doc_id",
 
     cal(d) = (# docs in d's group with a strictly lower milli-logit
     bucket) / (group size) — the empirical CDF evaluated at bucket
-    resolution (1e-3 logit).  keep = cal >= 1 - keep_frac (ties at the
-    cut bucket keep together: a whole bucket is in or out, so the kept
-    fraction is >= keep_frac by at most one bucket's mass — the honest
-    histogram-CDF semantics).
+    resolution (1e-3 logit).  keep = 1 when the group mass at or below
+    d's bucket exceeds 1 - keep_frac: ties at the cut bucket keep
+    together (a whole bucket is in or out), so the kept fraction is
+    >= keep_frac, over it by at most one bucket's mass — the honest
+    histogram-CDF semantics.
 
     Scale shape (100 TB): a naive percent_rank() per group is a
     per-group TOTAL SORT of the corpus — one giant domain becomes one
@@ -485,12 +481,12 @@ def score_calibration(df: DataFrame, id_col: str = "doc_id",
            .withColumn("__below", F.coalesce(F.sum("__n").over(wcum),
                                              F.lit(0)))
            .withColumn("__tot", F.sum("__n").over(wg)))
-    cal = fp6(F.col("__below").cast("double") / F.col("__tot").cast("double"))
+    tot = F.col("__tot").cast("double")
+    cal = MICRO.round(F.col("__below").cast("double") / tot)
+    upto = (F.col("__below") + F.col("__n")).cast("double") / tot
     return (scored.join(cdf, [group, "bucket"])
             .withColumn("cal", cal)
-            .withColumn("keep",
-                        F.when(F.col("cal") >= 1.0 - keep_frac, 1)
-                        .otherwise(0))
+            .withColumn("keep", F.when(upto > 1.0 - keep_frac, 1).otherwise(0))
             .select(id_col, group, "logit", "bucket", "cal", "keep"))
 
 
@@ -502,7 +498,7 @@ def score_calibration_sql(inner: str = "documents",
     """DuckDB oracle twin of :func:`score_calibration`."""
     score = hashed_linear_score_sql(inner=inner, id_col=id_col, text=text,
                                     n_buckets=n_buckets)
-    cal = fp6_sql("CAST(__below AS DOUBLE) / CAST(__tot AS DOUBLE)")
+    cal = MICRO.round_sql("CAST(__below AS DOUBLE) / CAST(__tot AS DOUBLE)")
     return f"""
 WITH score AS ({score}
 ), scored AS (
@@ -513,7 +509,7 @@ WITH score AS ({score}
   SELECT {group}, bucket, count(*) AS __n
   FROM scored GROUP BY 1, 2
 ), cdf AS (
-  SELECT {group}, bucket,
+  SELECT {group}, bucket, __n,
          coalesce(sum(__n) OVER (PARTITION BY {group} ORDER BY bucket
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
            AS __below,
@@ -521,6 +517,7 @@ WITH score AS ({score}
   FROM hist
 )
 SELECT s.{id_col}, s.{group}, s.logit, s.bucket, {cal} AS cal,
-       CASE WHEN {cal} >= {1.0 - keep_frac!r} THEN 1 ELSE 0 END AS keep
+       CASE WHEN CAST(__below + __n AS DOUBLE) / CAST(__tot AS DOUBLE)
+                 > {1.0 - keep_frac!r}e0 THEN 1 ELSE 0 END AS keep
 FROM scored s JOIN cdf USING ({group}, bucket)
 """

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from .dedup import md5_60bit
 
 MEDIA_SCHEMA = ("url string, media_type string, payload binary, "
@@ -170,24 +171,12 @@ def extract_features(media_df: DataFrame, decoder: str = "real",
     return media_df.mapInPandas(run, out_schema)
 
 
-def frame_sample_plan(media_df: DataFrame, fps: float = 1.0) -> DataFrame:
-    """Video frame-sampling plan: one row per sampled frame index (video
-    decode itself has no pure-NumPy container here). Demonstrates
-    explode-based fan-out sized by metadata, not payload bytes."""
-    n_frames = F.greatest(
-        F.ceil(F.coalesce(F.col("duration_s"), F.lit(1.0)) * F.lit(fps)),
-        F.lit(1)).cast("int")
-    return media_df.withColumn(
-        "frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1)))
-
-
 def media_features_sql(pages_inner: str, mod: int = 50) -> str:
     """DuckDB oracle for the driver's multimodal query: recompute the
     generator's closed-form features straight from the url hash (the
     Spark side must arrive at the same numbers by actually building and
     parsing the BMP/WAV bytes)."""
     from .dedup import md5_60bit_sql
-    from .text import fp6_sql
 
     h = md5_60bit_sql("url")
     img_mean = (lambda c:
@@ -215,8 +204,8 @@ SELECT url, media_type,
        CASE WHEN media_type = 'image' THEN CAST(w AS INT) END AS width,
        CASE WHEN media_type = 'image' THEN CAST(ht AS INT) END AS height,
        CASE WHEN media_type = 'image'
-            THEN {fp6_sql(img_mean(0))} ELSE {fp6_sql(wav_mean)} END AS f0,
+            THEN {MICRO.round_sql(img_mean(0))} ELSE {MICRO.round_sql(wav_mean)} END AS f0,
        CASE WHEN media_type = 'image'
-            THEN {fp6_sql(img_mean(1))} ELSE {fp6_sql(wav_rms)} END AS f1
+            THEN {MICRO.round_sql(img_mean(1))} ELSE {MICRO.round_sql(wav_rms)} END AS f1
 FROM sel ORDER BY url
 """

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from .dedup import _shingles, md5_60bit, md5_60bit_sql
-from .text import fp6, fp6_sql
 
 __all__ = [
     "contamination_stats",
@@ -102,7 +102,7 @@ def contamination_stats(df: DataFrame, eval_df: DataFrame,
     return (base.join(overlap, "id", "left")
             .withColumn("n_overlap", F.coalesce(F.col("n_overlap"),
                                                 F.lit(0)))
-            .withColumn("contamination", fp6(ratio))
+            .withColumn("contamination", MICRO.round(ratio))
             .withColumn("contaminated",
                         (F.col("contamination") >= F.lit(threshold))
                         .cast("int"))
@@ -141,10 +141,10 @@ WITH evalg AS (
 )
 SELECT sizes.id AS {id_col}, sizes.n_grams,
        COALESCE(ov.n_overlap, 0) AS n_overlap,
-       {fp6_sql(ratio.replace('n_overlap', 'COALESCE(ov.n_overlap, 0)')
-                .replace('n_grams', 'sizes.n_grams'))} AS contamination,
-       CAST({fp6_sql(ratio.replace('n_overlap', 'COALESCE(ov.n_overlap, 0)')
-                     .replace('n_grams', 'sizes.n_grams'))}
+       {MICRO.round_sql(ratio.replace('n_overlap', 'COALESCE(ov.n_overlap, 0)')
+                        .replace('n_grams', 'sizes.n_grams'))} AS contamination,
+       CAST({MICRO.round_sql(ratio.replace('n_overlap', 'COALESCE(ov.n_overlap, 0)')
+                             .replace('n_grams', 'sizes.n_grams'))}
             >= {threshold} AS INT) AS contaminated
 FROM sizes LEFT JOIN ov ON ov.id = sizes.id
 """
@@ -176,7 +176,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
                 - F.size(F.array_distinct(toks))
                 / F.greatest(F.size(toks), F.lit(1))).cast("double")
     base = df.select(F.col(id_col).alias("id"),
-                     fp6(dup_frac).alias("dup_word_frac"))
+                     MICRO.round(dup_frac).alias("dup_word_frac"))
     # sequence(1, 0) in Spark DESCENDS to [1, 0] rather than emitting an
     # empty array, so short docs must be guarded explicitly (same reason
     # _shingles carries its when())
@@ -198,7 +198,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
             .select(F.col("id").alias(id_col), "dup_word_frac",
                     F.coalesce(F.col("n_total_ngrams"), F.lit(0))
                     .alias("n_total_ngrams"),
-                    fp6(F.coalesce(share, F.lit(0.0)))
+                    MICRO.round(F.coalesce(share, F.lit(0.0)))
                     .alias("top_ngram_share")))
 
 
@@ -212,7 +212,7 @@ def repetition_sql(inner: str = "documents", id_col: str = "doc_id",
            f" / greatest(len({toks}), 1)")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id, {fp6_sql(dup)} AS dup_word_frac FROM {inner}
+  SELECT {id_col} AS id, {MICRO.round_sql(dup)} AS dup_word_frac FROM {inner}
 ), pg AS (
   SELECT {id_col} AS id, unnest({grams}) AS gram FROM {inner}
 ), cnts AS (
@@ -222,8 +222,8 @@ WITH base AS (
 )
 SELECT base.id AS {id_col}, base.dup_word_frac,
        CAST(COALESCE(shares.n_total, 0) AS BIGINT) AS n_total_ngrams,
-       {fp6_sql("COALESCE(CAST(shares.top_cnt AS DOUBLE)"
-                " / greatest(shares.n_total, 1), 0.0)")} AS top_ngram_share
+       {MICRO.round_sql("COALESCE(CAST(shares.top_cnt AS DOUBLE)"
+                        " / greatest(shares.n_total, 1), 0.0)")} AS top_ngram_share
 FROM base LEFT JOIN shares ON shares.id = base.id
 """
 
@@ -260,7 +260,7 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
     for stratum, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == stratum, F.lit(float(r))) \
             .otherwise(rate)
-    return (df.withColumn("u", fp6(u.cast("double")))
+    return (df.withColumn("u", MICRO.round(u.cast("double")))
             .filter(u < rate))
 
 
@@ -279,7 +279,7 @@ def stratified_sample_sql(inner: str = "documents",
         f"WHEN '{s}' THEN {float(r)!r}"
         for s, r in sorted((rates or {}).items()))
     rate = f"(CASE {strata_col} {branches} ELSE {float(default_rate)!r} END)"
-    return (f"SELECT {cols}, {fp6_sql(u)} AS u FROM {inner} "
+    return (f"SELECT {cols}, {MICRO.round_sql(u)} AS u FROM {inner} "
             f"WHERE {u} < {rate}")
 
 
@@ -533,7 +533,7 @@ def boilerplate_stats(df: DataFrame, id_col: str = "doc_id",
     return (per_doc.join(per_hot, on="id", how="left")
             .withColumn("n_boiler", F.coalesce(F.col("n_boiler"),
                                                F.lit(0).cast("long")))
-            .withColumn("boiler_frac", fp6(
+            .withColumn("boiler_frac", MICRO.round(
                 (F.col("n_boiler") / F.col("n_shingles")).cast("double")))
             .select(F.col("id").alias(id_col), "n_shingles", "n_boiler",
                     "boiler_frac"))
@@ -563,7 +563,7 @@ WITH sh AS (
 )
 SELECT per_doc.id AS {id_col}, n_shingles,
        CAST(coalesce(n_boiler, 0) AS BIGINT) AS n_boiler,
-       {fp6_sql(frac)} AS boiler_frac
+       {MICRO.round_sql(frac)} AS boiler_frac
 FROM per_doc LEFT JOIN per_hot USING (id)
 """
 
@@ -588,8 +588,8 @@ def mixture_weights(df: DataFrame, domain: str = "domain",
     Engine portability (the exact-integer float discipline used by
     hotspots/time_rollup): the only cross-row float reduction —
     ``sum(c**alpha)`` — would be summation-order-dependent, so it is
-    replaced by a sum of fp6-quantized BIGINTs
-    ``wq = floor(c**alpha * 1e6 + 0.5)``: integer-exact, order-free,
+    replaced by a sum of BIGINT ticks
+    ``wq = exact.MICRO.ticks(c**alpha)``: integer-exact, order-free,
     identical on any engine. The emitted doubles are then ONE IEEE
     expression tree over exact integers, shared verbatim with the
     DuckDB twin. ``alpha=0.5`` (the default) is computed with
@@ -613,8 +613,7 @@ def mixture_weights(df: DataFrame, domain: str = "domain",
     cd = F.col("c").cast("double")
     pw = (F.sqrt(cd) if float(alpha) == 0.5
           else F.pow(cd, F.lit(float(alpha))))
-    qt = counts.withColumn(
-        "__wq", F.floor(pw * F.lit(1e6) + F.lit(0.5)).cast("long"))
+    qt = counts.withColumn("__wq", MICRO.ticks(pw))
     tot = qt.agg(F.sum("__wq").cast("long").alias("__S"),
                  F.sum("c").cast("long").alias("__N"))
     wq, s = F.col("__wq").cast("double"), F.col("__S").cast("double")
@@ -642,7 +641,7 @@ WITH counts AS (
   SELECT {domain}, {mass} AS c FROM {inner} GROUP BY {domain}
 ), qt AS (
   SELECT {domain}, c,
-         CAST(floor({pw} * 1e6 + 0.5) AS BIGINT) AS wq
+         {MICRO.ticks_sql(pw)} AS wq
   FROM counts
 ), tot AS (
   SELECT CAST(sum(wq) AS BIGINT) AS s, CAST(sum(c) AS BIGINT) AS n

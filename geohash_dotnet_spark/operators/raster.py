@@ -60,9 +60,11 @@ def rasterize(df: DataFrame, lat: str = "lat", lon: str = "lon",
     ``row 0`` is the southernmost band, ``col 0`` starts at lon -180;
     cells are ``cell_udeg`` micro-degrees on a side (the last row/col
     may be ragged when ``cell_udeg`` does not divide the span). The
-    north-pole edge (lat exactly 90) clamps into the top row; lon
-    exactly 180 wraps to column 0 (the same physical meridian as
-    -180). Inputs must be valid coordinates (lat in [-90, 90], lon in
+    north-pole edge (lat exactly 90) clamps into the top row. Lon
+    exactly 180 wraps to column 0 (the same physical meridian as -180)
+    only when ``cell_udeg`` divides 360e6; otherwise it lands in the
+    last, ragged column, which the seam adjacency joins to column 0.
+    Inputs must be valid coordinates (lat in [-90, 90], lon in
     [-180, 180] — the pages table guarantees this by construction).
     """
     n_rows, n_cols = _grid_dims(int(cell_udeg))

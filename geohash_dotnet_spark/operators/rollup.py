@@ -12,7 +12,7 @@ the coarser aggregations off a ReusedExchange (plan-asserted in
 tests). At 100 TB the raw scan happens once; everything above it is
 kilobytes-to-megabytes of bucket rows.
 
-Portability: value sums are fixed-point micros (``floor(v*1e6+0.5)``
+Portability: value sums are fixed-point micros (``exact.MICRO`` ticks
 summed as BIGINT) — exact, order-independent, and re-aggregable, so
 "day from hours" is bit-identical to "day from raw events", which is
 exactly what the DuckDB twin (direct GROUP BY per level from the raw
@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
+
 __all__ = ["time_rollup", "time_rollup_sql", "tile_pyramid",
            "tile_pyramid_sql", "tile_freshness", "tile_freshness_sql"]
 
@@ -37,7 +39,7 @@ def time_rollup(df: DataFrame, ts: str = "ts", value: str = "value",
     coarser level aggregated from the finer one. ``levels`` must be
     ordered finest-first and each must be a valid ``date_trunc`` unit
     that nests into the next (minute ⊂ hour ⊂ day ⊂ ...)."""
-    vfp = F.floor(F.col(value) * F.lit(1e6) + F.lit(0.5)).cast("long")
+    vfp = MICRO.ticks(F.col(value))
     cur = (df.groupBy(F.date_trunc(levels[0], F.col(ts)).alias("bucket"))
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum(vfp).alias("sum_value_us")))
@@ -58,7 +60,7 @@ def time_rollup_sql(inner: str, ts: str = "ts", value: str = "value",
                     ) -> str:
     """DuckDB twin: each level aggregated DIRECTLY from the raw rows —
     verifying that rollup-from-finer-level equals rollup-from-raw."""
-    vfp = f"CAST(floor({value} * 1000000.0 + 0.5) AS BIGINT)"
+    vfp = MICRO.ticks_sql(value)
     parts = [
         (f"SELECT '{lv}' AS level, date_trunc('{lv}', {ts}) AS bucket, "
          f"CAST(count(*) AS BIGINT) AS n, "
@@ -160,14 +162,14 @@ def tile_freshness(df: DataFrame, ts: str = "warc_ts", lat: str = "lat",
     e = ((F.col("__ref") - F.unix_micros(F.col(ts))) / F.lit(hl_us)) \
         .cast("long")
     w_fp = (F.when(e >= 60, F.lit(0))
-            .otherwise(F.floor(F.lit(1000000.0) / F.pow(F.lit(2.0), e)))
+            .otherwise(F.floor(F.lit(float(MICRO.scale))
+                               / F.pow(F.lit(2.0), e)))
             .cast("long"))
     return (pg.withColumn("__w", w_fp)
             .groupBy(F.col("__tile").alias("tile"))
             .agg(F.count(F.lit(1)).alias("n_pages"),
                  F.sum("__w").alias("fresh_fp"))
-            .withColumn("freshness",
-                        F.col("fresh_fp").cast("double") / F.lit(1e6)))
+            .withColumn("freshness", MICRO.real(F.col("fresh_fp"))))
 
 
 def tile_freshness_sql(tagged_inner: str, ts: str = "warc_ts",
@@ -183,11 +185,11 @@ def tile_freshness_sql(tagged_inner: str, ts: str = "warc_ts",
     # double->long truncation
     e = f"CAST(trunc({e}) AS BIGINT)"
     w = (f"(CASE WHEN {e} >= 60 THEN 0 ELSE "
-         f"CAST(floor(1000000.0 / power(2.0, {e})) AS BIGINT) END)")
+         f"CAST(floor({MICRO.sql} / power(2.0, {e})) AS BIGINT) END)")
     return f"""
 WITH t AS (SELECT * FROM ({tagged_inner}))
 SELECT gh AS tile, CAST(count(*) AS BIGINT) AS n_pages,
        CAST(sum({w}) AS BIGINT) AS fresh_fp,
-       CAST(sum({w}) AS BIGINT) / 1e6 AS freshness
+       {MICRO.real_sql(f"CAST(sum({w}) AS BIGINT)")} AS freshness
 FROM t GROUP BY gh
 """

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
+
 
 def sessionize(events: DataFrame, user: str = "user_id", ts: str = "ts",
                order_tiebreak: str = "event_id", value: str = "value",
@@ -49,13 +51,12 @@ def sessionize(events: DataFrame, user: str = "user_id", ts: str = "ts",
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     sess = events.withColumn("session_idx",
                              F.sum(is_new).over(cum).cast("long"))
-    micro = F.floor(F.col(value) * F.lit(1e6) + F.lit(0.5)).cast("long")
     return (sess.groupBy(user, "session_idx")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.min(ts).alias("session_start"),
                  F.max(ts).alias("session_end"),
                  (F.max(epoch) - F.min(epoch)).alias("duration_us"),
-                 (F.sum(micro) / F.lit(1e6)).alias("sum_value")))
+                 MICRO.sum(F.col(value)).alias("sum_value")))
 
 
 def sessionize_sql(inner: str = "events", user: str = "user_id",
@@ -81,8 +82,7 @@ WITH flagged AS (
 SELECT {user}, session_idx, count(*) AS n_events,
        min({ts}) AS session_start, max({ts}) AS session_end,
        max(__ep) - min(__ep) AS duration_us,
-       sum(CAST(floor({value} * 1000000.0 + 0.5) AS BIGINT)) / 1000000.0
-           AS sum_value
+       {MICRO.sum_sql(value)} AS sum_value
 FROM sess GROUP BY {user}, session_idx
 ORDER BY {user}, session_idx
 """

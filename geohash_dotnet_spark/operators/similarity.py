@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -40,9 +42,7 @@ def _cosine_fp6(a_expr, b_expr):
     column/column, column/literal, and the DuckDB twins."""
     a = F.transform(a_expr, lambda x: x.cast("double"))
     b = F.transform(b_expr, lambda x: x.cast("double"))
-    cos = _dot(a, b) / (_norm(a) * _norm(b))
-    # exact fixed-point 6dp (cross-engine round() ties differ by 1 ulp)
-    return F.floor(cos * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
+    return MICRO.round(_dot(a, b) / (_norm(a) * _norm(b)))
 
 
 def with_cosine(df: DataFrame, vec_a: str, vec_b: str,
@@ -462,11 +462,11 @@ WHERE {cos} >= {threshold} ORDER BY id_a, id_b
 
 def _cosine_fp6_sql(a: str, b: str) -> str:
     """6-dp fixed-point cosine between two list columns (DuckDB)."""
-    return (f"floor(list_sum(list_transform(list_zip({a}, {b}), "
-            f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-            f"/ (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x))) "
-            f"* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * x)))) "
-            f"* 1000000.0 + 0.5) / 1000000.0")
+    return MICRO.round_sql(
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
+        f"/ (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x))) "
+        f"* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * x))))")
 
 
 def _signature_sql(vec: str, dim: int, n_planes: int) -> str:
@@ -531,12 +531,7 @@ WITH q AS (
   WHERE vec_id IN ({ids})
 ), scored AS (
   SELECT q.q_id, e.vec_id,
-         floor(
-           list_sum(list_transform(list_zip(e.embedding, q.q_vec),
-                                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x)))
-              * sqrt(list_sum(list_transform(q.q_vec, x -> CAST(x AS DOUBLE) * x))))
-           * 1000000.0 + 0.5) / 1000000.0 AS cosine
+         {_cosine_fp6_sql('e.embedding', 'q.q_vec')} AS cosine
   FROM {inner} e CROSS JOIN q
 )
 SELECT q_id, rank, vec_id, cosine FROM (
@@ -553,7 +548,7 @@ SELECT q_id, rank, vec_id, cosine FROM (
 
 def _sqdist_fp6i(a_expr, b_expr):
     """Squared L2 distance between two array expressions as exact
-    integer micro-units (floor(d*1e6 + 0.5) BIGINT) — the same
+    integer micro-units (``exact.MICRO`` ticks, BIGINT) — the same
     one-shared-IEEE-tree + fixed-point discipline as _cosine_fp6, but
     integer-valued so per-subspace distances can be SUMMED order-free
     (float sums are addition-order dependent; integer sums are not)."""
@@ -561,7 +556,7 @@ def _sqdist_fp6i(a_expr, b_expr):
     b = F.transform(b_expr, lambda x: x.cast("double"))
     d = F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                     F.lit(0.0), lambda acc, x: acc + x)
-    return F.floor(d * F.lit(1000000.0) + F.lit(0.5)).cast("long")
+    return MICRO.ticks(d)
 
 
 def _pq_codebook(emb_df: DataFrame, n_sub: int, n_codes: int,
@@ -623,18 +618,20 @@ def pq_topk(emb_df: DataFrame, queries_df: DataFrame, k: int,
     """Asymmetric-distance (ADC) top-k over PQ codes -> (q_id, rank,
     vec_id, adc_fp, adc): completes the ANN family (cosine_topk =
     exact, lsh/ivf = candidate pruning, pq = compressed-domain
-    scoring). Each query precomputes a lookup table of fp6-integer
-    sub-distances to every sub-centroid; a corpus vector's approximate
-    distance is the INTEGER SUM of n_sub table lookups — order-free,
-    so Spark and the DuckDB twin agree bit-for-bit. Rank ascends by
+    scoring). A corpus vector's approximate distance is the INTEGER
+    SUM of n_sub micro-unit sub-distances between the query's
+    sub-vectors and the vector's code centroids — order-free, so Spark
+    and the DuckDB twin agree bit-for-bit. Rank ascends by
     (adc_fp, vec_id).
 
     Scale shape: encoding is a zero-Exchange projection run once and
     stored; the scoring join moves only (id, n_sub codes) — with the
     defaults 16x fewer bytes through the scan+shuffle than raw
-    floats, which IS the PQ win. Queries broadcast (LUTs fold in as
-    literal expressions); the final per-query rank is the same
-    output-bounded window as cosine_topk. Compose with ivf-style list
+    floats, which IS the PQ win. Queries broadcast, but each lookup
+    table is an expression over the query column, re-evaluated per
+    (corpus row, query) pair: ADC's compute win is not realized. The
+    final per-query rank is the same output-bounded window as
+    cosine_topk. Compose with ivf-style list
     pruning when even the code scan must shrink."""
     encoded = pq_encode(emb_df, n_sub, n_codes, vec_col, id_col)
     sub_dim, subs = _pq_codebook(emb_df, n_sub, n_codes, vec_col, id_col)
@@ -657,17 +654,16 @@ def pq_topk(emb_df: DataFrame, queries_df: DataFrame, k: int,
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(q_id, "rank", id_col, "adc_fp",
-                    (F.col("adc_fp").cast("double") / F.lit(1e6))
-                    .alias("adc")))
+                    MICRO.real(F.col("adc_fp")).alias("adc")))
 
 
 def _sqdist_fp6i_sql(a: str, b: str) -> str:
     """DuckDB twin of _sqdist_fp6i (list_sum matches the left fold,
     same contract as _cosine_fp6_sql)."""
-    return (f"CAST(floor(list_sum(list_transform(list_zip({a}, {b}), "
-            f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-            f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)))) "
-            f"* 1000000.0 + 0.5) AS BIGINT)")
+    return MICRO.ticks_sql(
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
+        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))")
 
 
 def pq_topk_sql(k: int, query_ids: list[int], n_sub: int = 4,
@@ -709,7 +705,7 @@ q AS (
   FROM codes co JOIN lut l ON co.m = l.m AND co.cid = l.cid
   GROUP BY l.q_id, co.vec_id
 )
-SELECT q_id, rank, vec_id, adc_fp, CAST(adc_fp AS DOUBLE) / 1e6 AS adc
+SELECT q_id, rank, vec_id, adc_fp, {MICRO.real_sql('adc_fp')} AS adc
 FROM (
   SELECT *, row_number() OVER (PARTITION BY q_id
                                ORDER BY adc_fp ASC, vec_id ASC) AS rank

@@ -13,16 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def fp6(col):
-    """Exact fixed-point 6-dp rounding: floor(x*1e6 + 0.5)/1e6 — floor is
-    exact and identical across Spark and DuckDB (plain round() tie handling
-    differs by 1 ulp between engines)."""
-    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
-def fp6_sql(expr: str) -> str:
-    return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
+from ..functions.exact import MICRO
 
 STOPWORDS = {
     "en": ("the", "a", "and", "of", "to", "in", "is", "on", "for", "with"),
@@ -51,7 +42,7 @@ def with_token_stats(df: DataFrame, text: str = "text") -> DataFrame:
         "n_tokens": F.size(toks),
         "n_bpe_tokens": F.regexp_count(F.col(text), F.lit(BPE_TOKEN_RE)),
         "n_chars_text": F.length(F.col(text)),
-        "avg_token_len": fp6(
+        "avg_token_len": MICRO.round(
             (F.length(F.regexp_replace(F.col(text), r"\s+", ""))
              / F.greatest(F.size(toks), F.lit(1))).cast("double")),
     })
@@ -66,7 +57,7 @@ def token_stats_sql(inner: str = "documents", text: str = "text") -> str:
         f"SELECT *, len({toks}) AS n_tokens, "
         f"CAST({bpe} AS INT) AS n_bpe_tokens, "
         f"length({text}) AS n_chars_text, "
-        f"{fp6_sql(ratio)} AS avg_token_len "
+        f"{MICRO.round_sql(ratio)} AS avg_token_len "
         f"FROM {inner}"
     )
 
@@ -155,9 +146,9 @@ def with_quality(df: DataFrame, text: str = "text") -> DataFrame:
                       F.lit(lang)).otherwise(pred)
     total_hits = sum([hit[l] for l in langs], F.lit(0))
     out = out.withColumns({
-        "stopword_ratio": fp6((total_hits / n).cast("double")),
+        "stopword_ratio": MICRO.round((total_hits / n).cast("double")),
         "lang_pred": pred,
-        "quality_score": fp6(
+        "quality_score": MICRO.round(
             F.least(F.lit(1.0),
                     (total_hits / n) * 2.0
                     + F.least(ntoks / F.lit(400.0), F.lit(0.5))
@@ -185,9 +176,9 @@ def quality_sql(inner: str = "documents", text: str = "text") -> str:
              f"+ least(len({toks}) / 400.0, 0.5))")
     return (
         f"SELECT * EXCLUDE (h_en, h_de, h_es, h_fr, n), "
-        f"{fp6_sql(ratio)} AS stopword_ratio, "
+        f"{MICRO.round_sql(ratio)} AS stopword_ratio, "
         f"{pred} AS lang_pred, "
-        f"{fp6_sql(score)} AS quality_score "
+        f"{MICRO.round_sql(score)} AS quality_score "
         f"FROM (SELECT *, {inner_sel}, greatest(len({toks}), 1) AS n FROM {inner})"
     )
 
@@ -209,6 +200,9 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     is the whole gram list (standard degenerate case).
 
     Returns exploded (id, fp) rows.
+
+    The gram array gets its own projection: read inside the window
+    lambda, it would be rebuilt per window (quadratic per document).
     """
     from .dedup import md5_60bit
 
@@ -219,12 +213,13 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
         F.transform(F.sequence(F.lit(1), n_grams),
                     lambda i: md5_60bit(t.substr(i, F.lit(k))))
     ).otherwise(F.array().cast("array<long>"))
-    n_windows = F.greatest(F.size(grams) - F.lit(w - 1), F.lit(1))
+    g = F.col("__grams")
+    n_windows = F.greatest(F.size(g) - F.lit(w - 1), F.lit(1))
     mins = F.transform(F.sequence(F.lit(1), n_windows),
-                       lambda j: F.array_min(F.slice(grams, j, w)))
+                       lambda j: F.array_min(F.slice(g, j, w)))
     fps = F.array_distinct(F.filter(mins, lambda x: x.isNotNull()))
-    return df.select(F.col(id_col).alias("id"),
-                     F.explode(fps).alias("fp"))
+    return (df.select(F.col(id_col).alias("id"), grams.alias("__grams"))
+            .select("id", F.explode(fps).alias("fp")))
 
 
 def winnow_sql(inner: str = "documents", id_col: str = "doc_id",
@@ -344,7 +339,7 @@ def with_char_entropy(df: DataFrame, text: str = "text",
         p = c.cast("double") / n.cast("double")
         ent = ent + F.when(c > 0, -(p * F.log(p))).otherwise(F.lit(0.0))
     return df.withColumn(
-        out, F.when(n > 0, fp6(ent)).otherwise(F.lit(0.0)))
+        out, F.when(n > 0, MICRO.round(ent)).otherwise(F.lit(0.0)))
 
 
 def char_entropy_sql_expr(text: str = "text") -> str:
@@ -363,7 +358,7 @@ def char_entropy_sql_expr(text: str = "text") -> str:
                      f"ELSE 0.0e0 END)")
     ent = "(((" + terms[0] + " + " + terms[1] + ") + " + terms[2] + ") + " \
         + terms[3] + ")"
-    return (f"CASE WHEN {n} > 0 THEN {fp6_sql(ent)} ELSE 0.0e0 END")
+    return (f"CASE WHEN {n} > 0 THEN {MICRO.round_sql(ent)} ELSE 0.0e0 END")
 
 
 # ---------------------------------------------------------------------------
@@ -395,7 +390,7 @@ def group_quantiles(df: DataFrame, group: str = "lang",
     aggs = [F.count(F.lit(1)).alias("n")]
     for q in qs:
         col = fn(F.col(value).cast("double"), F.lit(q))
-        aggs.append(fp6(col.cast("double"))
+        aggs.append(MICRO.round(col.cast("double"))
                     .alias(f"q_{int(round(q * 100))}"))
     return df.groupBy(group).agg(*aggs)
 
@@ -407,7 +402,7 @@ def group_quantiles_sql(inner: str, group: str = "lang",
     ``quantile_cont`` is the same type-7 linear interpolation as Spark's
     ``percentile``."""
     cols = ", ".join(
-        f"{fp6_sql(f'quantile_cont(CAST({value} AS DOUBLE), {q!r})')} "
+        f"{MICRO.round_sql(f'quantile_cont(CAST({value} AS DOUBLE), {q!r})')} "
         f"AS q_{int(round(q * 100))}" for q in qs)
     return (f"SELECT {group}, count(*) AS n, {cols} "
             f"FROM ({inner}) GROUP BY {group}")

@@ -43,14 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.exact import MICRO
 from ..kernels import cover_polygon
 from ..kernels.polygon import parse_wkt, split_antimeridian
 from .spatial_join import tag_pages
 
 __all__ = ["zonal_stats"]
-
-_Q = 1_000_000  # value micro-units
-
 
 def _zone_member(zones: list[tuple[str, str]]):
     """Vectorized membership test: edge rows get the exact even-odd
@@ -111,8 +109,6 @@ def zonal_stats(df: DataFrame, zones: list[tuple[str, str]],
 
     aggs = [F.count(F.lit(1)).alias("n_points")]
     if value is not None:
-        vq = F.floor(F.col(value).cast("double") * F.lit(float(_Q))
-                     + F.lit(0.5)).cast("long")
-        aggs.append((F.sum(vq).cast("double") / F.lit(float(_Q)))
+        aggs.append(MICRO.sum(F.col(value).cast("double"))
                     .alias("sum_value"))
     return kept.groupBy("zone_id").agg(*aggs)

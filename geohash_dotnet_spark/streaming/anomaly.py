@@ -43,8 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
 from ..functions.native import with_geohash
-from ..operators.text import fp6
 from ._order import (drop_unorderable, sort_and_gate,
                      tiebreak_projection)
 
@@ -157,7 +157,7 @@ def streaming_tile_anomaly(spark: SparkSession, source_dir: str,
     mean = F.col("s").cast("double") / days_d
     var = F.col("ss").cast("double") / days_d - mean * mean
     z = F.when((F.col("days") >= 2) & (var > 0),
-               fp6((F.col("n").cast("double") - mean) / F.sqrt(var)))
+               MICRO.round((F.col("n").cast("double") - mean) / F.sqrt(var)))
     return raw.select("tile", F.date_from_unix_date("day").alias("day"),
-                      "n", "days", fp6(mean).alias("mean_n"),
+                      "n", "days", MICRO.round(mean).alias("mean_n"),
                       z.alias("z"))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import MICRO
+
 
 def streaming_sessions(spark: SparkSession, source_dir: str, schema: str,
                        user: str = "user_id", ts: str = "ts",
@@ -37,7 +39,6 @@ def streaming_sessions(spark: SparkSession, source_dir: str, schema: str,
     """
     stream = spark.readStream.schema(schema).parquet(source_dir)
     epoch = F.unix_micros(F.col(ts).cast("timestamp"))
-    micro = F.floor(F.col(value) * F.lit(1e6) + F.lit(0.5)).cast("long")
     gap_us = int(gap_s) * 1_000_000
     return (stream
             .withWatermark(ts, watermark)
@@ -46,7 +47,7 @@ def streaming_sessions(spark: SparkSession, source_dir: str, schema: str,
                      .alias("win"))
             .agg(F.count(F.lit(1)).alias("n_events"),
                  (F.max(epoch) - F.min(epoch)).alias("duration_us"),
-                 (F.sum(micro) / F.lit(1e6)).alias("sum_value"))
+                 MICRO.sum(F.col(value)).alias("sum_value"))
             .select(F.col(user),
                     F.col("win.start").alias("session_start"),
                     (F.unix_micros(F.col("win.end")) - F.lit(gap_us))

@@ -13,7 +13,7 @@ Each user's final open trip lives in the state store and is never
 emitted by the stream itself; the batch twin, which sees end-of-input,
 does close it. Parity: streaming emissions == batch trips minus each
 user's last trip — asserted row-for-row by the parity test, including
-the per-user trip index and the exact integer-millimeter path length.
+the per-user trip index and the exact integer-metre path length.
 
 Ordering contract (same as streaming flows/stays): within a micro-batch
 rows sort by (event-time, tiebreak); across batches a row at or before
@@ -23,20 +23,20 @@ Exactness: leg distances replicate the batch operator's NATIVE trig
 chain operation-for-operation (radians(lat2-lat1)/2 BEFORE the half,
 asin(min(1, sqrt(a))), x/180*pi radians conversion — mirroring
 functions/native.haversine_m so NumPy and JVM evaluate the same
-expression tree) and are quantized to integer millimeters BEFORE
-summation, the batch twin's own discipline. The equality guarantee is
-therefore probabilistic, not absolute: NumPy's libm and the JVM's Math
-intrinsics differ in the last ulps (~1e-6 m observed on 1e7-m legs),
-so a leg whose true value falls within that wobble of a 0.5 mm floor
-boundary CAN quantize one unit apart across platforms. The mm quantum
-puts the boundary three orders of magnitude above the observed wobble
-(a 1e-6 quantum DID flip a unit at sf0.01 — see operators/flows.py),
+expression tree) and are quantized to integer metres with the batch
+operator's own quantum (``exact.METRE``) BEFORE summation. The
+equality guarantee is therefore probabilistic, not absolute: NumPy's
+libm and the JVM's Math intrinsics differ in the last ulps (~1e-8 m
+on 1e7-m legs), so a leg whose true value falls within that wobble of
+a half-metre floor boundary CAN quantize one unit apart across
+platforms. Whole metres put the boundary ~7 orders of magnitude above
+the wobble (millimetres were not enough — see operators/flows.py),
 which makes a flip vanishingly rare, not impossible; the parity test
-would report it as a one-unit dist_mm diff on an otherwise identical
+would report it as a one-unit dist_m diff on an otherwise identical
 row.
 
 State per user: (trip_idx, start_us, last ts_us, last tiebreak,
-last lat, last lon, n_points, mm) — one row. The update fn is
+last lat, last lon, n_points, dist_m) — one row. The update fn is
 NumPy-vectorized per Arrow batch (sort + shifted-compare + reduceat
 segment sums); no per-row Python.
 """
@@ -46,21 +46,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import METRE
 from ._order import (drop_unorderable, sort_and_gate,
                      tiebreak_projection)
 
 OUT_SCHEMA = ("user string, trip_idx long, n_points long, "
-              "start_us long, end_us long, dist_mm long")
-
-_MM = 1000.0  # millimeter quantum — keep in lockstep with flows._MM
+              "start_us long, end_us long, dist_m long")
 
 
-def _leg_mm(lat1, lon1, lat2, lon2):
-    """Integer-mm haversine legs, mirroring functions/native.haversine_m
+def _leg_m(lat1, lon1, lat2, lon2):
+    """Integer-metre haversine legs, mirroring functions/native.haversine_m
     operation-for-operation (degree subtraction BEFORE the radians
     conversion, x/180*pi like java.lang.Math.toRadians, asin of the
     clamped sqrt) so the streamed sums match the batch JVM sums at the
-    mm quantum (see the module docstring for the cross-libm caveat)."""
+    metre quantum (see the module docstring for the cross-libm caveat)."""
     import numpy as np
 
     from ..kernels.distance import EARTH_RADIUS_M
@@ -74,7 +73,7 @@ def _leg_mm(lat1, lon1, lat2, lon2):
          + np.cos(rad(lat1)) * np.cos(rad(lat2))
          * np.sin(dlng) * np.sin(dlng))
     leg = 2.0 * EARTH_RADIUS_M * np.arcsin(np.minimum(1.0, np.sqrt(a)))
-    return np.floor(leg * _MM + 0.5).astype(np.int64)
+    return METRE.ticks_np(leg)
 
 
 def streaming_trip_stats(spark: SparkSession, source_dir: str,
@@ -109,7 +108,7 @@ def streaming_trip_stats(spark: SparkSession, source_dir: str,
              "n_points": pd.Series(dtype="int64"),
              "start_us": pd.Series(dtype="int64"),
              "end_us": pd.Series(dtype="int64"),
-             "dist_mm": pd.Series(dtype="int64")})
+             "dist_m": pd.Series(dtype="int64")})
 
     def update(key, pdfs, state: "GroupState"):
         import numpy as np
@@ -120,7 +119,7 @@ def streaming_trip_stats(spark: SparkSession, source_dir: str,
             columns=["user", "ts_us", "tb", "lat", "lon"])
         saved = state.get if state.exists else None
         if saved is not None:
-            (s_idx, s_start, s_ts, s_tb, s_lat, s_lon, s_n, s_mm) = saved
+            (s_idx, s_start, s_ts, s_tb, s_lat, s_lon, s_n, s_m) = saved
             pdf = sort_and_gate(pdf, (s_ts, s_tb))
         else:
             pdf = sort_and_gate(pdf, None)
@@ -144,7 +143,7 @@ def streaming_trip_stats(spark: SparkSession, source_dir: str,
         new_trip = (ts_us - prev_ts) > gap_us
         if saved is None:
             new_trip[0] = True
-        legs = _leg_mm(prev_la, prev_lo, la, lo)
+        legs = _leg_m(prev_la, prev_lo, la, lo)
         legs[new_trip] = 0
 
         starts = np.flatnonzero(new_trip)
@@ -154,33 +153,33 @@ def streaming_trip_stats(spark: SparkSession, source_dir: str,
         seg_start_ts = ts_us[starts]
         seg_end_ts = ts_us[ends]
         seg_n = (ends - starts + 1).astype(np.int64)
-        seg_mm = np.add.reduceat(legs, starts).astype(np.int64)
+        seg_m = np.add.reduceat(legs, starts).astype(np.int64)
 
         base_idx = 0  # trip index of the FIRST segment in this batch
-        closed = []   # (idx, n, start, end, mm) tuples, then vectorize
+        closed = []   # (idx, n, start, end, m) tuples, then vectorize
         if saved is not None:
             if not new_trip[0]:
                 # first segment continues the saved open trip
                 base_idx = s_idx
                 seg_start_ts[0] = s_start
                 seg_n[0] += s_n
-                seg_mm[0] += s_mm
+                seg_m[0] += s_m
             else:
                 base_idx = s_idx + 1
-                closed.append((s_idx, s_n, s_start, s_ts, s_mm))
+                closed.append((s_idx, s_n, s_start, s_ts, s_m))
         else:
             base_idx = 1
         n_seg = len(starts)
         for i in range(n_seg - 1):  # bounded by segments, not rows
             closed.append((base_idx + i, int(seg_n[i]),
                            int(seg_start_ts[i]), int(seg_end_ts[i]),
-                           int(seg_mm[i])))
+                           int(seg_m[i])))
 
         last_row = pdf.iloc[-1]
         state.update((int(base_idx + n_seg - 1), int(seg_start_ts[-1]),
                       int(last_row["ts_us"]), tb_conv(last_row["tb"]),
                       float(last_row["lat"]), float(last_row["lon"]),
-                      int(seg_n[-1]), int(seg_mm[-1])))
+                      int(seg_n[-1]), int(seg_m[-1])))
 
         closed = [c for c in closed if c[1] >= min_points]
         if not closed:
@@ -193,7 +192,7 @@ def streaming_trip_stats(spark: SparkSession, source_dir: str,
             "n_points": arr[:, 1],
             "start_us": arr[:, 2],
             "end_us": arr[:, 3],
-            "dist_mm": arr[:, 4],
+            "dist_m": arr[:, 4],
         })
 
     return (proj.groupBy("user")
@@ -202,6 +201,6 @@ def streaming_trip_stats(spark: SparkSession, source_dir: str,
                 outputStructType=OUT_SCHEMA,
                 stateStructType=("trip_idx long, start_us long, ts_us long, "
                                  f"tb {tb_type}, lat double, lon double, "
-                                 "n long, mm long"),
+                                 "n long, dist_m long"),
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout))

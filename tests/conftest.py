@@ -14,6 +14,11 @@ if hasattr(time, "tzset"):
     time.tzset()
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "sf01: DuckDB-twin checks at sf0.1 for the trig-sum keys")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

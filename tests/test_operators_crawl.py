@@ -29,12 +29,23 @@ def test_crawl_slots_orders_by_ts_not_url(spark):
 
 def test_crawl_slots_ts_tie_breaks_url_asc(spark):
     """Colliding timestamps order by url: with rate=1 each url is its
-    own slot, and slot ids follow url order within the tie."""
+    own slot, and slot ids follow url order within the tie. A NULL
+    timestamp ranks last, in Spark and in the DuckDB twin alike."""
+    import duckdb
+
+    from geohash_dotnet_spark.operators.crawl import crawl_slots_sql
+
     t = datetime(2024, 1, 1)
     rows = [(f"https://x.example/s/{u}/0", t) for u in ("b", "a", "c")]
-    out = {r["first_url"].split("/")[-2]: r["slot"]
-           for r in crawl_slots(_frontier(spark, rows), rate=1).collect()}
-    assert out == {"a": 0, "b": 1, "c": 2}
+    rows.append(("https://x.example/s/0/0", None))
+    got = crawl_slots(_frontier(spark, rows), rate=1).collect()
+    out = {r["first_url"].split("/")[-2]: r["slot"] for r in got}
+    assert out == {"a": 0, "b": 1, "c": 2, "0": 3}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE f (url VARCHAR, warc_ts TIMESTAMP)")
+    con.executemany("INSERT INTO f VALUES (?, ?)", rows)
+    twin = con.sql(crawl_slots_sql("SELECT * FROM f", rate=1)).fetchall()
+    assert sorted(twin) == sorted(tuple(r) for r in got)
 
 
 def test_crawl_slots_sites_independent(spark):

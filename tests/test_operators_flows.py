@@ -146,13 +146,13 @@ def test_trip_stats_gap_split_and_length(spark):
     assert len(out) == 1
     t = out[0]
     assert (t["user_id"], t["n_points"], t["duration_us"]) == (1, 2, 1_000_000)
-    # berlin->nyc great-circle is ~6,387 km; mm quantization keeps it exact
+    # berlin->nyc great-circle is ~6,387 km; legs sum in whole metres
     assert abs(t["dist_m"] - 6_387_000) < 10_000
-    assert t["dist_m"] * 1000 == int(t["dist_m"] * 1000)
+    assert t["dist_m"] == int(t["dist_m"])
 
 
 def test_trip_stats_layout_invariant_path_sum(spark):
-    """Integer-mm leg quantization makes path sums bit-identical across
+    """Integer-metre leg quantization makes path sums bit-identical across
     layouts (double sums would be addition-order dependent)."""
     from geohash_dotnet_spark.operators import trip_stats
 

@@ -205,24 +205,29 @@ def test_dsir_model_join_is_broadcast(spark, sf_small):
 def test_score_calibration_is_the_per_group_bucket_ecdf(spark):
     """cal must equal the empirical CDF (strictly-below mass / group
     size) recomputed in pandas from the operator's own (group, bucket)
-    output, per group — and keep must be exactly cal >= 0.5."""
-    import pandas as pd
-
+    output, per group — and keep must be exactly "the mass at or below
+    the bucket exceeds 0.5". Groups: two even-sized ones, an odd-sized
+    one ("odd", 5 docs) and one whose scores all share a bucket
+    ("one", 4 copies of a text)."""
     from geohash_dotnet_spark.operators import score_calibration
 
     rows = [(i, f"doc number {i} with words w{i % 7} v{i % 3} "
                 f"filler{i} tail{i * 13}", f"g{i % 2}")
             for i in range(24)]
+    rows += [(100 + i, f"odd doc {i} " + "w%d " % i * i, "odd")
+             for i in range(5)]
+    rows += [(200 + i, "the same words again", "one") for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     pdf = score_calibration(docs, keep_frac=0.5).toPandas()
-    assert len(pdf) == 24
+    assert len(pdf) == 33
+    assert pdf[pdf.source == "one"]["bucket"].nunique() == 1
     for g, grp in pdf.groupby("source"):
         n = len(grp)
         for _, r in grp.iterrows():
             below = int((grp["bucket"] < r["bucket"]).sum())
-            want = round(below / n * 1e6 + 0.5) // 1 / 1e6  # fp6 floor(x*1e6+0.5)/1e6
+            at_or_below = int((grp["bucket"] <= r["bucket"]).sum())
             assert abs(r["cal"] - below / n) < 2e-6
-            assert r["keep"] == (1 if r["cal"] >= 0.5 else 0)
+            assert r["keep"] == (1 if at_or_below / n > 0.5 else 0)
     # bucketed ECDF keeps at least keep_frac of every group (ties at
     # the cut bucket keep together)
     kept = pdf.groupby("source")["keep"].mean()

@@ -7,9 +7,9 @@ import datetime as dt
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from geohash_dotnet_spark.functions.exact import MICRO
 from geohash_dotnet_spark.functions.native import (geocode_from_url,
                                                    with_geohash)
-from geohash_dotnet_spark.operators.text import fp6
 from geohash_dotnet_spark.streaming.anomaly import streaming_tile_anomaly
 
 SCHEMA = "event_id long, ts timestamp, lat double, lon double"
@@ -55,9 +55,9 @@ def _batch_closed_days(ev):
     mean = F.col("s").cast("double") / days_d
     var = F.col("ss").cast("double") / days_d - mean * mean
     z = F.when((F.col("days") >= 2) & (var > 0),
-               fp6((F.col("n").cast("double") - mean) / F.sqrt(var)))
+               MICRO.round((F.col("n").cast("double") - mean) / F.sqrt(var)))
     rows = cum.select("tile", "day", "n", "days",
-                      fp6(mean).alias("mean_n"), z.alias("z")).collect()
+                      MICRO.round(mean).alias("mean_n"), z.alias("z")).collect()
     return {(r["tile"], r["day"], r["n"], r["days"], r["mean_n"], r["z"])
             for r in rows}
 

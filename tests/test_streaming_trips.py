@@ -1,6 +1,6 @@
 """Streaming trip segmentation (availableNow, offline): closed-trip
 parity with the batch operator — including per-user trip indexes and
-exact integer-millimeter path lengths — plus cross-batch trip
+exact integer-metre path lengths — plus cross-batch trip
 extension and the late-row/replay policy."""
 
 import calendar
@@ -43,8 +43,8 @@ def _us(ts):
     return calendar.timegm(ts.timetuple()) * 1_000_000 + ts.microsecond
 
 
-def _mm(dist_m):
-    return int(math.floor(dist_m * 1000.0 + 0.5))
+def _m(dist_m):
+    return int(math.floor(dist_m + 0.5))
 
 
 def _batch_closed_trips(ev):
@@ -56,13 +56,13 @@ def _batch_closed_trips(ev):
               .filter(F.col("trip_idx") < F.col("__last"))
               .filter(F.col("n_points") >= MIN_POINTS))
     return {(r["user_id"], r["trip_idx"], r["n_points"],
-             _us(r["start_ts"]), _us(r["end_ts"]), _mm(r["dist_m"]))
+             _us(r["start_ts"]), _us(r["end_ts"]), _m(r["dist_m"]))
             for r in closed.collect()}
 
 
 def _got(spark, out):
     return {(int(r["user"]), r["trip_idx"], r["n_points"],
-             r["start_us"], r["end_us"], r["dist_mm"])
+             r["start_us"], r["end_us"], r["dist_m"])
             for r in spark.read.parquet(out).collect()}
 
 
@@ -79,7 +79,7 @@ def test_streaming_trips_match_batch_closed(spark, sf_small, tmp_path):
 
 def test_streaming_trips_extend_across_batches(spark, sf_small, tmp_path):
     """Split the stream at the median event time: trips that STRADDLE
-    the boundary (and their millimeter path sums, which accumulate in
+    the boundary (and their metre path sums, which accumulate in
     state) only come out whole if the open-trip state survives."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _events(spark, sf_small)
@@ -129,10 +129,10 @@ def test_streaming_trips_hand_case(spark, tmp_path):
     got = spark.read.parquet(out).collect()
     assert len(got) == 1
     r = got[0]
-    legs = sum(_mm(float(hav_np(a[0], a[1], b[0], b[1])))
+    legs = sum(_m(float(hav_np(a[0], a[1], b[0], b[1])))
                for a, b in zip(pts[:2], pts[1:3]))
     assert (int(r["user"]), r["trip_idx"], r["n_points"]) == (7, 1, 3)
     assert r["start_us"] == _us(t(0)) and r["end_us"] == _us(t(20))
-    # kernel haversine and the streamed native-order chain agree at mm
-    # scale on these ~1.5 km legs (wobble << 1 mm)
-    assert abs(r["dist_mm"] - legs) <= 1
+    # kernel haversine and the streamed native-order chain agree at
+    # metre scale on these ~1.5 km legs (wobble << 1 m)
+    assert abs(r["dist_m"] - legs) <= 1
