@@ -91,9 +91,11 @@ def decoded_select_sql(inner_sql: str, precision: int, gh_col: str = "gh",
     ``__min_lat/__min_lng/__max_lat/__max_lng`` decoded from a geohash
     string column of fixed length ``precision``.
 
-    Twin of kernels.geohash.bounding_box: the same integer de-interleave
-    and the same double arithmetic (boundaries are exact dyadic doubles),
-    so values are bit-identical to the Spark/pandas-UDF side.
+    Twin of kernels.geohash.bounding_box. Both recover the same integer
+    grid indices: here bit by bit for one fixed precision, there by one
+    de-interleave of the left-aligned 60-bit stream of any length. Every
+    product and boundary is an exact dyadic double, so the bounds are
+    bit-identical to the Spark/pandas-UDF side.
     """
     total = 5 * precision
     n_lat_bits = total // 2

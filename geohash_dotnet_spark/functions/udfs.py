@@ -1,9 +1,11 @@
 """Arrow-vectorized pandas UDFs wrapping the NumPy kernels.
 
 These cover the operations that are awkward as native SQL expressions
-(string -> bit de-interleave, 8-way neighbor re-encode, point-in-polygon
-refine). All are batch-vectorized — no per-row Python
-(BASELINE.json input_hint hard requirement).
+(string -> bit de-interleave, 8-way neighbor offsets, point-in-polygon
+refine). Each Arrow batch goes through whole-array NumPy passes with no
+Python loop over rows; the only per-element work left is the conversion
+to and from Python objects at the Arrow boundary (``to_numpy(object)``,
+``tolist()``).
 """
 
 from __future__ import annotations
@@ -46,15 +48,16 @@ def gh_neighbors(gh: Column) -> Column:
 
     @pandas_udf("array<string>")
     def _nb(s: pd.Series) -> pd.Series:
-        arr = s.to_numpy(object)
-        cols = [GK.neighbor(arr, d) for d in GK.DIRECTIONS]
-        return pd.Series([list(t) for t in zip(*cols)])
+        nb = GK.neighbors(s.to_numpy(object))
+        return pd.Series(np.column_stack(list(nb.values())).tolist())
 
     return _nb(gh)
 
 
 def gh_neighbor(gh: Column, direction: str) -> Column:
-    """Single-direction neighbor (src/Geohasher.cs:151-155)."""
+    """Single-direction neighbor (src/Geohasher.cs:151-155). An unknown
+    ``direction`` raises ValueError here, before any job runs."""
+    GK._offset(direction)
 
     @pandas_udf("string")
     def _nb1(s: pd.Series) -> pd.Series:

@@ -9,13 +9,16 @@ Semantics of ``/root/reference/src/GeohashCompressor.cs:19-99``:
    cascading level-by-level down to ``min_level``;
 4. output ordinally sorted.
 
-This is the driver-side oracle twin of the distributed DataFrame operator
-(operators/compress.py).
+The distributed DataFrame operator (operators/compress.py) runs this kernel
+on each 2-prefix group inside ``compress_cells``; called on a whole cell
+set, it is also that operator's independent oracle in tests.
 """
 
 from __future__ import annotations
 
-from .geohash import MAX_PRECISION, _validate_scalar
+import numpy as np
+
+from .geohash import MAX_PRECISION, _parse_valid
 
 
 def compress(geohashes, min_level: int = 1, max_level: int = 12) -> list[str]:
@@ -26,15 +29,12 @@ def compress(geohashes, min_level: int = 1, max_level: int = 12) -> list[str]:
     if not (min_level <= max_level <= MAX_PRECISION):
         raise ValueError("max_level out of range")
 
-    # 1. normalize: truncate + dedupe + validate
-    input_set: set[str] = set()
-    for h in geohashes:
-        if not h:
-            continue
-        h = h[:max_level]
-        _validate_scalar(h)  # garbage would corrupt the 32-sibling merge
-        input_set.add(h)
-    if not input_set:
+    # 1. normalize: skip empties, truncate, validate (garbage would corrupt
+    #    the 32-sibling merge); np.unique below dedupes
+    cells = np.asarray(list(geohashes), dtype=object)
+    cells = cells[cells.astype(bool)].astype(f"U{max_level}")
+    _parse_valid(cells)
+    if not len(cells):
         return []
 
     # 2. ancestor prune over the ordinal sort: any kept prefix of the current
@@ -42,7 +42,7 @@ def compress(geohashes, min_level: int = 1, max_level: int = 12) -> list[str]:
     by_length: list[list[str]] = [[] for _ in range(max_level + 1)]
     last_kept: str | None = None
     max_depth = 0
-    for h in sorted(input_set):
+    for h in np.unique(cells).tolist():
         if last_kept is not None and len(h) > len(last_kept) and h.startswith(last_kept):
             continue
         last_kept = h

@@ -9,11 +9,14 @@ Semantics match the reference implementation (geohash-dotnet) exactly:
   (``src/Geohasher.cs:213-219``), latitude clamped to ``[-90, 90]``
   (``src/Geohasher.cs:221-223``);
 * decode returns the exact cell center (``src/Geohasher.cs:108-112``);
-* neighbors re-encode ``center + (dLat*height, dLng*width)`` so poleward
-  neighbors bounce and E/W neighbors wrap (``src/Geohasher.cs:203-210``).
+* neighbors move ``(dLat, dLng)`` cells on the integer grid, clamping
+  latitude (the reference's poleward bounce) and wrapping longitude
+  (``src/Geohasher.cs:203-210``).
 
 Everything here is pure NumPy, importable without Spark, and vectorized:
-one call processes a whole column (no per-row Python in the hot path).
+one call processes a whole column with no Python loop over rows or over
+the characters of a row. Every string input goes through one parser,
+``_parse``.
 
 Exactness note: encode uses an integer formulation
 ``i = floor((x - lo) / step)`` followed by a one-round exact fix-up against
@@ -170,80 +173,6 @@ def encode(lat, lng, precision: int = 6) -> np.ndarray:
     return ints_to_str(encode_ints(lat, lng, precision), precision)
 
 
-def _strs_to_byte_matrix(geohashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Validate + convert equal-or-ragged string array to (codes, lengths).
-
-    codes is (n, max_len) int8 of base-32 digit values, -1 padded.
-    Raises ValueError on invalid input (src/Geohasher.cs:225-238).
-    """
-    # atleast_1d: a single geohash string (the reference's Decode(string)
-    # shape, src/Geohasher.cs:108) arrives as a 0-d object array — treat
-    # it as a 1-element batch instead of failing iteration
-    gh = np.atleast_1d(np.asarray(geohashes, dtype=object))
-    lengths = np.fromiter((len(g) if isinstance(g, str) else 0 for g in gh),
-                          dtype=np.int64, count=len(gh))
-    if (lengths == 0).any():
-        raise ValueError("Geohash must not be null or empty.")
-    if (lengths > MAX_PRECISION).any():
-        raise ValueError(f"Geohash length cannot exceed {MAX_PRECISION}.")
-    max_len = int(lengths.max())
-    buf = np.zeros((len(gh), max_len), dtype=np.uint8)
-    for i, g in enumerate(gh):
-        b = g.encode("ascii", errors="replace")
-        buf[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-    codes = _DECODE_MAP[buf]
-    valid_mask = codes >= 0
-    pad_mask = np.arange(max_len)[None, :] >= lengths[:, None]
-    if not (valid_mask | pad_mask).all():
-        raise ValueError("Invalid character in geohash.")
-    codes = np.where(pad_mask, -1, codes)
-    return codes.astype(np.int8), lengths
-
-
-def bounding_box(geohashes) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Exact cell bounds (min_lat, min_lng, max_lat, max_lng), vectorized.
-
-    Reconstructs the bounds from the integer bit path; the boundaries are
-    exact dyadic doubles, identical to the midpoint-halving replay in
-    src/Geohasher.cs:115-144.
-    """
-    codes, lengths = _strs_to_byte_matrix(np.asarray(geohashes, dtype=object))
-    n, max_len = codes.shape
-    lat_i = np.zeros(n, dtype=np.int64)
-    lng_i = np.zeros(n, dtype=np.int64)
-    n_lat_bits = np.zeros(n, dtype=np.int64)
-    n_lng_bits = np.zeros(n, dtype=np.int64)
-
-    # Per-length group processing keeps everything vectorized.
-    for length in np.unique(lengths):
-        sel = lengths == length
-        c = codes[sel, :length].astype(np.int64)
-        total = 5 * int(length)
-        nlon = (total + 1) // 2
-        nlat = total // 2
-        # packed 5p-bit integer
-        packed = np.zeros(sel.sum(), dtype=np.uint64)
-        for j in range(int(length)):
-            packed = (packed << np.uint64(5)) | c[:, j].astype(np.uint64)
-        # de-interleave
-        if total % 2 == 1:
-            lon_bits = _unspread_bits(packed)
-            lat_bits = _unspread_bits(packed >> np.uint64(1))
-        else:
-            lon_bits = _unspread_bits(packed >> np.uint64(1))
-            lat_bits = _unspread_bits(packed)
-        lat_i[sel] = lat_bits.astype(np.int64)
-        lng_i[sel] = lon_bits.astype(np.int64)
-        n_lat_bits[sel] = nlat
-        n_lng_bits[sel] = nlon
-
-    lat_step = 180.0 / np.power(2.0, n_lat_bits)
-    lng_step = 360.0 / np.power(2.0, n_lng_bits)
-    min_lat = -90.0 + lat_i * lat_step
-    min_lng = -180.0 + lng_i * lng_step
-    return min_lat, min_lng, min_lat + lat_step, min_lng + lng_step
-
-
 def _unspread_bits(x: np.ndarray) -> np.ndarray:
     """Inverse of _spread_bits_30: gather even-position bits."""
     x = x.astype(np.uint64) & np.uint64(0x5555555555555555)
@@ -255,40 +184,121 @@ def _unspread_bits(x: np.ndarray) -> np.ndarray:
     return x
 
 
+_WIDTH = MAX_PRECISION + 1  # one char past the limit flags "too long"
+_DIGIT_SHIFTS = np.arange(5 * (MAX_PRECISION - 1), -1, -5, dtype=np.uint64)
+# one unit of a left-aligned 30-bit index, in degrees (exact dyadic doubles)
+_LAT_UNIT = 180.0 / (1 << 30)
+_LNG_UNIT = 360.0 / (1 << 30)
+
+
+def _parse(geohashes):
+    """Parse a batch of geohash strings, ragged and in any case, in
+    whole-array passes: a fixed-width ``U13`` view, one ``_DECODE_MAP``
+    lookup, and the integer de-interleave of src/Geohasher.cs:108-144.
+
+    Returns ``(lat, lng, lengths, ok)``: ``lat``/``lng`` are the cell's
+    int64 grid indices left-aligned to 30 bits (the p12 grid), ``lengths``
+    is 0 for null, empty and non-string entries and 13 for anything
+    longer than 12, and ``ok`` is the validity mask of
+    src/Geohasher.cs:190-199.
+    """
+    gh = np.atleast_1d(np.asarray(geohashes))
+    u = gh.astype(f"U{_WIDTH}")
+    cp = u.view(np.uint32).reshape(-1, _WIDTH)
+    lengths = np.where(cp != 0, np.arange(1, _WIDTH + 1), 0).max(axis=1, initial=0)
+    if gh.dtype.kind != "U":  # None, NaN and other non-strings count as null
+        lengths[(u != gh.astype(object, copy=False)) & (lengths < _WIDTH)] = 0
+    digits = _DECODE_MAP[np.minimum(cp, 255)]
+    bad = (digits < 0) & (np.arange(_WIDTH) < lengths[:, None])
+    ok = (lengths >= 1) & (lengths <= MAX_PRECISION) & ~bad.any(axis=1)
+    packed = np.bitwise_or.reduce(
+        np.maximum(digits[:, :MAX_PRECISION], 0).astype(np.uint64) << _DIGIT_SHIFTS,
+        axis=1)
+    lat = _unspread_bits(packed).astype(np.int64)
+    lng = _unspread_bits(packed >> np.uint64(1)).astype(np.int64)
+    return lat, lng, lengths, ok
+
+
+def _parse_valid(geohashes):
+    """``_parse`` that raises the reference's errors, in its order
+    (src/Geohasher.cs:225-238); returns ``(lat, lng, lengths)``."""
+    lat, lng, lengths, ok = _parse(geohashes)
+    if (lengths == 0).any():
+        raise ValueError("Geohash must not be null or empty.")
+    if (lengths > MAX_PRECISION).any():
+        raise ValueError(f"Geohash length cannot exceed {MAX_PRECISION}.")
+    if not ok.all():
+        raise ValueError("Invalid character in geohash.")
+    return lat, lng, lengths
+
+
+def bounding_box(geohashes) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Exact cell bounds (min_lat, min_lng, max_lat, max_lng), vectorized.
+
+    Dyadic arithmetic on the integer grid indices: every boundary is an
+    exact double, identical to the midpoint-halving replay in
+    src/Geohasher.cs:115-144.
+    """
+    lat, lng, lengths = _parse_valid(geohashes)
+    min_lat = -90.0 + lat * _LAT_UNIT
+    min_lng = -180.0 + lng * _LNG_UNIT
+    return (min_lat, min_lng, min_lat + np.ldexp(180.0, -(5 * lengths // 2)),
+            min_lng + np.ldexp(360.0, -((5 * lengths + 1) // 2)))
+
+
 def decode(geohashes) -> tuple[np.ndarray, np.ndarray]:
     """Cell centers (lat, lng) — src/Geohasher.cs:108-112."""
     min_lat, min_lng, max_lat, max_lng = bounding_box(geohashes)
     return (min_lat + max_lat) * 0.5, (min_lng + max_lng) * 0.5
 
 
+def _offset(direction: str) -> tuple[int, int]:
+    """(dLat, dLng) of a direction name; ValueError names the accepted ones."""
+    try:
+        return _OFFSETS[direction.lower()]
+    except (AttributeError, KeyError):
+        raise ValueError(f"Unknown direction {direction!r}; expected one of "
+                         f"{', '.join(_OFFSETS)}.") from None
+
+
+def _shifted(geohashes, offsets) -> np.ndarray:
+    """(n, k) object array: each cell moved by each (dLat, dLng) cell step.
+
+    Latitude clamps at the poles (the reference's bounce: its re-encoded
+    centre clamps back into the edge row) and longitude wraps mod
+    2^bits across the antimeridian (src/Geohasher.cs:203-210).
+    """
+    lat, lng, lengths = _parse_valid(geohashes)
+    d_lat, d_lng = np.asarray(offsets, dtype=np.int64).reshape(-1, 2).T
+    lat_shift = (30 - 5 * lengths // 2)[:, None]
+    lng_shift = (30 - (5 * lengths + 1) // 2)[:, None]
+    lat_i = np.clip((lat[:, None] >> lat_shift) + d_lat, 0,
+                    (1 << (30 - lat_shift)) - 1) << lat_shift
+    lng_i = (((lng[:, None] >> lng_shift) + d_lng)
+             & ((1 << (30 - lng_shift)) - 1)) << lng_shift
+    packed = (_spread_bits_30(lng_i) << np.uint64(1)) | _spread_bits_30(lat_i)
+    out = ints_to_str(packed.ravel(), MAX_PRECISION)
+    # cut each p12 string back to its source length
+    chars = out.view(np.uint32).reshape(-1, MAX_PRECISION)
+    chars[np.arange(MAX_PRECISION) >= np.repeat(lengths, len(d_lat))[:, None]] = 0
+    return out.astype(object).reshape(packed.shape)
+
+
 def neighbor(geohashes, direction: str) -> np.ndarray:
-    """Neighbor in one direction; pole bounce + antimeridian wrap
-    via re-encode (src/Geohasher.cs:203-210)."""
-    d_lat, d_lng = _OFFSETS[direction.lower()]
-    # atleast_1d: accept a single geohash string like the reference's
-    # GetNeighbour(string) (src/Geohasher.cs:203)
-    gh = np.atleast_1d(np.asarray(geohashes, dtype=object))
-    min_lat, min_lng, max_lat, max_lng = bounding_box(gh)
-    height = max_lat - min_lat
-    width = max_lng - min_lng
-    c_lat = (min_lat + max_lat) * 0.5 + d_lat * height
-    c_lng = (min_lng + max_lng) * 0.5 + d_lng * width
-    lengths = np.fromiter((len(g) for g in gh), dtype=np.int64, count=len(gh))
-    out = np.empty(len(gh), dtype=object)
-    for length in np.unique(lengths):
-        sel = lengths == length
-        out[sel] = encode(c_lat[sel], c_lng[sel], int(length))
-    return out
+    """Neighbor in one direction, with pole bounce and antimeridian wrap
+    (src/Geohasher.cs:151-155)."""
+    return _shifted(geohashes, _offset(direction))[:, 0]
 
 
 def neighbors(geohashes) -> dict[str, np.ndarray]:
     """All 8 neighbors keyed by direction (src/Geohasher.cs:158-165)."""
-    return {d: neighbor(geohashes, d) for d in DIRECTIONS}
+    out = _shifted(geohashes, [_OFFSETS[d] for d in DIRECTIONS])
+    return {d: out[:, k] for k, d in enumerate(DIRECTIONS)}
 
 
 def children(geohash: str) -> list[str]:
     """All 32 child cells in base-32 order (src/Geohasher.cs:168-178)."""
-    _validate_scalar(geohash)
+    _parse_valid(geohash)
     if len(geohash) >= MAX_PRECISION:
         raise ValueError(f"Cannot generate subhashes for precision {MAX_PRECISION}.")
     return [geohash + c for c in BASE32]
@@ -296,7 +306,7 @@ def children(geohash: str) -> list[str]:
 
 def parent(geohash: str) -> str:
     """Drop the last char (src/Geohasher.cs:181-187)."""
-    _validate_scalar(geohash)
+    _parse_valid(geohash)
     if len(geohash) <= 1:
         raise ValueError("Cannot get parent of a precision-1 geohash.")
     return geohash[:-1]
@@ -305,22 +315,4 @@ def parent(geohash: str) -> str:
 def is_valid(geohashes) -> np.ndarray:
     """Length 1-12 and all chars base-32 (case-insensitive)
     (src/Geohasher.cs:190-199)."""
-    gh = np.asarray(geohashes, dtype=object)
-    out = np.zeros(len(gh), dtype=bool)
-    for i, g in enumerate(gh):
-        if not isinstance(g, str) or not (1 <= len(g) <= MAX_PRECISION):
-            continue
-        b = g.encode("ascii", errors="replace")
-        codes = _DECODE_MAP[np.frombuffer(b, dtype=np.uint8)]
-        out[i] = len(b) == len(g) and (codes >= 0).all()
-    return out
-
-
-def _validate_scalar(geohash: str) -> None:
-    if not geohash:
-        raise ValueError("Geohash must not be null or empty.")
-    if len(geohash) > MAX_PRECISION:
-        raise ValueError(f"Geohash length cannot exceed {MAX_PRECISION}.")
-    for i, c in enumerate(geohash):
-        if ord(c) >= 128 or _DECODE_MAP[ord(c)] < 0:
-            raise ValueError(f"Invalid character '{c}' at position {i}.")
+    return _parse(geohashes)[3]

@@ -2,9 +2,8 @@
 
 The classic xy2d bit state machine (public-domain Wikipedia reference
 form) over whole arrays: ~10 NumPy ops per bit plane instead of a
-per-row loop. Exact int64 throughout — bit-identical to the JVM fold
-expression in operators/layout.py and the DuckDB chained-subquery twin
-(all three are value-checked against each other in tests).
+per-row loop. Exact int64 throughout — bit-identical to the DuckDB
+chained-subquery twin in operators/layout.py (value-checked in tests).
 """
 
 from __future__ import annotations

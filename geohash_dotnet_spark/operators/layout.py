@@ -14,9 +14,8 @@ geohash-prefix layout (DataBricks Z-ORDER / Delta liquid clustering
 rationale; here with the curve one better).
 
 Everything is exact integer bit arithmetic (the classic xy2d state
-machine), so the vectorized NumPy kernel (the default execution
-path), the JVM fold expression (the Python-free option) and the
-DuckDB chained-subquery twin all match bit-for-bit — cross-checked in
+machine), so the vectorized NumPy kernel behind the Arrow UDF and the
+DuckDB chained-subquery twin match bit-for-bit — cross-checked in
 tests.
 
 Scale notes: the index is a pure projection (zero shuffles, zero
@@ -33,9 +32,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.native import (_grid_index_col, clamp_latitude,
-                                normalize_longitude)
 from ..functions.oracle import clamp_lat_sql, grid_index_sql, normalize_lon_sql
+from ..kernels.geohash import _grid_index, clamp_latitude, normalize_longitude
+from ..kernels.hilbert import xy2d
 
 __all__ = ["with_hilbert", "hilbert_shards", "hilbert_select_sql",
            "hilbert_shards_sql", "hilbert_ranges_for_bbox",
@@ -44,8 +43,7 @@ __all__ = ["with_hilbert", "hilbert_shards", "hilbert_select_sql",
 
 
 def with_hilbert(df: DataFrame, lat: str = "lat", lon: str = "lon",
-                 order: int = 8, out: str = "hd",
-                 method: str = "arrow") -> DataFrame:
+                 order: int = 8, out: str = "hd") -> DataFrame:
     """Add the Hilbert index ``out`` (long, in [0, 4^order)) of each
     point on the 2^order x 2^order grid.
 
@@ -53,80 +51,34 @@ def with_hilbert(df: DataFrame, lat: str = "lat", lon: str = "lon",
     digit, rotate/reflect the frame (Hilbert 1891; the bit formulation
     follows the public-domain Wikipedia reference implementation).
 
-    ``method`` picks the execution strategy — both are exact int64 and
-    bit-identical (cross-checked in tests):
+    Runs the vectorized NumPy kernel (kernels/hilbert.py) behind an Arrow
+    pandas UDF: ~10 array ops per bit plane, exact int64, the same
+    execution class as the decode/bbox/neighbors UDFs. The DuckDB twin
+    (``hilbert_select_sql``) is the reference it is checked against.
 
-    - ``"arrow"`` (default): vectorized NumPy kernel
-      (kernels/hilbert.py) behind an Arrow pandas UDF — ~10 array ops
-      per bit plane, the fast path (~3.4x the fold at 5M rows); the
-      same execution class as the decode/bbox/neighbors UDFs.
-    - ``"expr"``: a single JVM ``aggregate()`` fold over a
-      struct(x, y, d) accumulator — zero Python anywhere, ONE
-      expression of size O(order); slower (the lambda body is
-      interpreted per row) but keeps separate-JVM executors free of
-      Python workers.
-
-    Why neither is a staged per-iteration projection (the
-    with_geohash trick): each xy2d step references the previous x and
-    y several times, so when CollapseProject inlines the stages — and
+    Why not a staged per-iteration projection (the with_geohash
+    trick): each xy2d step references the previous x and y several
+    times, so when CollapseProject inlines the stages — and
     PushDownPredicate ALWAYS substitutes filter predicates through
     Projects — the tree grows ~5x per bit plane, ~5^order nodes: at
-    order 8 a ~400k-node predicate that OOMs the optimizer. Both
-    surviving forms are single opaque-ish expressions, so every
-    downstream reference to ``out`` stays linear.
+    order 8 a ~400k-node predicate that OOMs the optimizer. The UDF is
+    one opaque expression, so every downstream reference to ``out``
+    stays linear.
     """
     if not (1 <= order <= 16):
         raise ValueError(f"order must be in [1, 16], got {order}")
-    if method not in ("arrow", "expr"):
-        raise ValueError(f"method must be 'arrow' or 'expr', got {method}")
     n = 1 << order
 
-    if method == "arrow":
-        from ..kernels.geohash import _grid_index
-        from ..kernels.geohash import clamp_latitude as k_clamp
-        from ..kernels.geohash import normalize_longitude as k_norm
-        from ..kernels.hilbert import xy2d
-
-        @pandas_udf("long")
-        def _hd(la: pd.Series, lo: pd.Series) -> pd.Series:
-            lav = k_clamp(la.to_numpy(dtype=np.float64))
-            lov = k_norm(lo.to_numpy(dtype=np.float64))
-            yi = _grid_index(lav, -90.0, 180.0 / n, n)
-            xi = _grid_index(lov, -180.0, 360.0 / n, n)
-            return pd.Series(xy2d(order, xi, yi))
-
-        return df.withColumn(out, _hd(F.col(lat).cast("double"),
-                                      F.col(lon).cast("double")))
-
-    x0 = _grid_index_col(normalize_longitude(F.col(lon).cast("double")),
-                         -180.0, 360.0 / n, n)
-    y0 = _grid_index_col(clamp_latitude(F.col(lat).cast("double")),
+    @pandas_udf("long")
+    def _hd(la: pd.Series, lo: pd.Series) -> pd.Series:
+        yi = _grid_index(clamp_latitude(la.to_numpy(dtype=np.float64)),
                          -90.0, 180.0 / n, n)
-    # s = 2^i looked up from a literal array (shift functions need a
-    # Python-int bit count, but i is a lambda variable); bit i of v is
-    # the portable (v % 2s) >= s test — longs stay longs throughout
-    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(order)])
+        xi = _grid_index(normalize_longitude(lo.to_numpy(dtype=np.float64)),
+                         -180.0, 360.0 / n, n)
+        return pd.Series(xy2d(order, xi, yi))
 
-    def step(acc, i):
-        s = F.element_at(powers, (i + F.lit(1)).cast("int"))
-        ax, ay, ad = acc["x"], acc["y"], acc["d"]
-        rx = F.when(ax % (s * 2) >= s, F.lit(1)).otherwise(F.lit(0))
-        ry = F.when(ay % (s * 2) >= s, F.lit(1)).otherwise(F.lit(0))
-        d2 = ad + s * s * ((rx * F.lit(3)).bitwiseXOR(ry)).cast("long")
-        # rot: if ry==0 { if rx==1 reflect both; swap x,y }
-        fx = F.when(rx == F.lit(1), F.lit(n - 1) - ax).otherwise(ax)
-        fy = F.when(rx == F.lit(1), F.lit(n - 1) - ay).otherwise(ay)
-        return F.struct(
-            F.when(ry == F.lit(0), fy).otherwise(ax).alias("x"),
-            F.when(ry == F.lit(0), fx).otherwise(ay).alias("y"),
-            d2.alias("d"))
-
-    fold = F.aggregate(
-        F.sequence(F.lit(order - 1), F.lit(0), F.lit(-1)),
-        F.struct(x0.alias("x"), y0.alias("y"),
-                 F.lit(0).cast("long").alias("d")),
-        step)
-    return df.withColumn(out, fold["d"])
+    return df.withColumn(out, _hd(F.col(lat).cast("double"),
+                                  F.col(lon).cast("double")))
 
 
 def hilbert_shards(df: DataFrame, lat: str = "lat", lon: str = "lon",
@@ -211,9 +163,7 @@ def hilbert_shards_sql(inner_sql: str, order: int = 8, lat: str = "lat",
 
 def _xy2d_scalar(n: int, x: int, y: int) -> int:
     """Driver-side scalar wrapper over the ONE xy2d implementation
-    (kernels/hilbert.py) — no third copy of the state machine."""
-    from ..kernels.hilbert import xy2d
-
+    (kernels/hilbert.py) — no separate scalar copy of the state machine."""
     return int(xy2d(n.bit_length() - 1,
                     np.asarray([x], dtype=np.int64),
                     np.asarray([y], dtype=np.int64))[0])
@@ -242,10 +192,6 @@ def hilbert_ranges_for_bbox(min_lat: float, min_lon: float,
     (kernels/polygon.py:split_antimeridian) like every other covering
     operator in this engine.
     """
-    import numpy as np
-
-    from ..kernels.geohash import _grid_index, clamp_latitude
-
     if not (min_lat <= max_lat and min_lon <= max_lon):
         raise ValueError("bbox must satisfy min <= max on both axes")
     if min_lon < -180.0 or max_lon > 180.0:

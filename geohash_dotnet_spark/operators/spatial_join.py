@@ -32,21 +32,19 @@ def tag_pages(pages_df: DataFrame, precision: int, lat: str = "lat",
 
 
 def spatial_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
-                 how: str = "inner", use_broadcast: bool = True,
-                 gh_col: str = "gh") -> DataFrame:
+                 how: str = "inner", gh_col: str = "gh") -> DataFrame:
     """Equi-join pages to exploded coverage sets on the cell id.
 
     ``coverage_df``: (shape id column(s), cell string) — from
     cover_polygons / cover_circles or a precomputed covering.
-    ``how='left_semi'`` gives the pure containment filter.
+    ``how='left_semi'`` gives the pure containment filter. The covering
+    is always broadcast: coverage sets are query-side small.
     """
     tagged = pages_df if gh_col in pages_df.columns else \
         tag_pages(pages_df, precision, out=gh_col)
     cov = coverage_df.withColumnRenamed("cell", gh_col) \
         if "cell" in coverage_df.columns else coverage_df
-    if use_broadcast:
-        cov = F.broadcast(cov)
-    return tagged.join(cov, on=gh_col, how=how)
+    return tagged.join(F.broadcast(cov), on=gh_col, how=how)
 
 
 def spatial_join_refined(pages_df: DataFrame, polygon_id: str, wkt: str,

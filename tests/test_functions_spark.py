@@ -12,6 +12,7 @@ from geohash_dotnet_spark.functions import (
     gh_children,
     gh_decode,
     gh_is_valid,
+    gh_neighbor,
     gh_neighbors,
     gh_parent,
     haversine_m,
@@ -92,6 +93,14 @@ def test_udf_decode_bbox_neighbors(spark):
         assert r["nb"] == want_nb
         if len(gh[i]) > 1:
             assert r["parent"] == gh[i][:-1]
+
+
+def test_gh_neighbor_rejects_unknown_direction_at_call_time(spark):
+    # raised when the Column is built, before any job (or executor) runs
+    with pytest.raises(ValueError, match="Unknown direction 'up'"):
+        gh_neighbor(F.col("gh"), "up")
+    with pytest.raises(ValueError, match="Unknown direction 'up'"):
+        GK.neighbor(["dr5"], "up")
 
 
 def test_gh_children_native(spark):

@@ -36,12 +36,10 @@ def _grid_df(spark, order: int):
 def test_matches_reference_and_is_a_bijection(spark):
     order, n = 3, 8
     ref = {(x, y): _xy2d(n, x, y) for x in range(n) for y in range(n)}
-    for method in ("arrow", "expr"):
-        got = {(r["x"], r["y"]): r["hd"]
-               for r in with_hilbert(_grid_df(spark, order), order=order,
-                                     method=method).collect()}
-        assert got == ref, f"method={method}"
-        assert sorted(got.values()) == list(range(n * n))
+    got = {(r["x"], r["y"]): r["hd"]
+           for r in with_hilbert(_grid_df(spark, order), order=order).collect()}
+    assert got == ref
+    assert sorted(got.values()) == list(range(n * n))
 
 
 def test_consecutive_cells_are_edge_adjacent(spark):
@@ -105,19 +103,6 @@ def test_index_default_is_arrow_single_scan(spark):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
     assert plan.count("Scan parquet") == 1  # matches "FileScan parquet" too
-
-
-def test_index_expr_method_is_python_free(spark):
-    """method='expr': zero Python anywhere in the plan (the option for
-    Python-worker-free executors), same values as arrow (bijection
-    test covers value equality)."""
-    spark.catalog.clearCache()
-    out = (with_hilbert(pages(spark, SF), order=8, method="expr")
-           .groupBy("hd").count())
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert plan.count("Scan parquet") == 1
 
 
 def test_bbox_ranges_cover_exactly(spark):
