@@ -1583,9 +1583,9 @@ def q_phrase_search(spark, sf_dir):
 def q_zonal_stats(spark, sf_dir):
     """Zonal statistics (raster<->vector): per-zone event counts + exact
     micro-unit value sums via the interior/boundary covering split —
-    contains-cells skip geometry entirely; only the boundary-band
-    sliver pays the vectorized even-odd test. One broadcast join, the
-    point table never shuffles. The DuckDB oracle is the INDEPENDENT
+    contains-cells skip geometry; only the boundary band pays the exact
+    even-odd test, a JVM expression over the cell's band segments. One
+    broadcast join, no Python UDF. The DuckDB oracle is the INDEPENDENT
     exact-bounds membership test, so the split's exactness is
     value-gated."""
     from geohash_dotnet_spark.functions.native import geocode_from_url

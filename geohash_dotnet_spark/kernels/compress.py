@@ -9,9 +9,13 @@ Semantics of ``/root/reference/src/GeohashCompressor.cs:19-99``:
    cascading level-by-level down to ``min_level``;
 4. output ordinally sorted.
 
-The distributed DataFrame operator (operators/compress.py) runs this kernel
-on each 2-prefix group inside ``compress_cells``; called on a whole cell
-set, it is also that operator's independent oracle in tests.
+The output is canonical (the maximal cells among the input and the cells
+of length >= ``min_level`` the input fully covers), so
+compress(A ∪ B) == compress(compress(A) ∪ compress(B)). The distributed
+DataFrame operator (operators/compress.py) leans on that: it runs this
+kernel once per 2-prefix group, then again per 1-prefix group over that
+output; called on a whole cell set, the kernel is also that operator's
+independent oracle in tests.
 """
 
 from __future__ import annotations

@@ -1,31 +1,32 @@
 """Distributed covering-set compression (semantics of
 /root/reference/src/GeohashCompressor.cs:19-99).
 
-Single-job formulation. Geohash compression has a locality property: a
-merge of 32 siblings into a parent of length >= 2 never crosses a
-2-character-prefix boundary (all 32 children share their first two
-chars), and ancestor/descendant pruning for ancestors of length >= 2 is
-likewise prefix-2-local. So the whole cascade decomposes into:
+Two grouped kernel passes, no joins. The compressed covering is
+canonical — the maximal cells among the input cells and the cells of
+length >= min_level that the input fully covers — so compression is a
+mergeable set operation: compress(A ∪ B) == compress(compress(A) ∪
+compress(B)). Geohash compression is also prefix-local: every merge into
+a parent of length >= 2, and every prune by an ancestor of length >= 2,
+stays inside one 2-character prefix; a length-1 ancestor and a 32 -> 1
+merge stay inside one 1-character prefix. So:
 
-1. truncate to max_level (substring) + distinct              [native]
-2. prune descendants of length-1/2 ancestors (the only cross-prefix
-   interaction) — two anti-joins against the tiny (<= 32 + 1024 cells
-   per group) short-ancestor sets                            [native]
-3. per-(group, 2-prefix) compression with the golden-tested NumPy/pure
-   kernel via applyInPandas — one shuffle, no iteration      [Arrow]
-4. if min_level == 1: one relational post-pass merging any 2-prefix
-   groups that fully collapsed (32 complete length-2 cells -> their
-   length-1 parent)                                          [native]
+1. truncate to max_level (substring), drop empty and null cells [native]
+2. per-(group, 2-prefix) kernel compression with min_level
+   max(min_level, 2) — dedupe, validation, prefix-local prune and merge
+                                                                [Arrow]
+3. the same kernel pass over that output per (group, 1-prefix) with
+   min_level — length-1 ancestors and 32 -> 1 merges              [Arrow]
 
 One Spark job at action time — no per-level driver loop, no collect(),
-no cache() — so the operator composes inside larger pipelines. The
-kernel (kernels/compress.py) stays the independent oracle; equivalence
-is asserted in tests/test_operators_spark.py.
+no cache(), and no subtree consumed twice, so Catalyst plans each pass
+once and the operator composes inside larger pipelines. The kernel
+(kernels/compress.py) stays the independent oracle; equivalence is
+asserted in tests/test_operators_spark.py.
 
-Scale shape: the shuffle is keyed by (group, 2-prefix) — up to 1024
-prefix partitions per group; each task compresses one prefix's cells in
-memory (O(n log n)); a precision-p covering holds at most 32^(p-2)
-cells per 2-prefix, and real coverings are far sparser.
+Scale shape: pass 2 shuffles only pass 1's output; each task compresses
+one prefix's cells in memory (O(n log n)). Pass 1 has up to 1024 prefix
+groups per group key, pass 2 up to 32, each holding one 1-prefix's
+already-compressed cells.
 """
 
 from __future__ import annotations
@@ -52,57 +53,22 @@ def compress_cells(cells_df: DataFrame, min_level: int = 1,
         raise ValueError("max_level out of range")
     g = group_cols or []
 
-    # 1. truncate + dedupe
     cells = (cells_df
              .select(*g, F.substring(F.col(cell_col), 1, max_level).alias("cell"))
-             .filter(F.length("cell") >= 1)
-             .distinct())
+             .filter(F.length("cell") >= 1))
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}"
+         for f in cells.schema.fields if f.name in g] + ["cell string"])
 
-    # 2. cross-prefix ancestor prune: a length-1/2 ancestor kills every
-    #    longer descendant (which lives in a different 2-prefix group).
-    #    Ancestors of length >= 2 are prefix-local -> handled by the kernel.
-    for alen in (1, 2):
-        anc = (cells.filter(F.length("cell") == alen)
-               .select(*[F.col(c).alias(f"__g_{c}") for c in g],
-                       F.col("cell").alias("__anc")))
-        cond = (F.substring(cells["cell"], 1, alen) == anc["__anc"]) \
-            & (F.length(cells["cell"]) > alen)
-        for c in g:
-            cond = cond & (cells[c] == anc[f"__g_{c}"])
-        cells = cells.join(anc, on=cond, how="left_anti")
+    def kernel_pass(df: DataFrame, prefix: int, level: int) -> DataFrame:
+        def _compress_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            res = pd.DataFrame({"cell": kcompress(
+                pdf["cell"], min_level=level, max_level=max_level)})
+            for c in g:
+                res[c] = pdf[c].iloc[0]
+            return res[[*g, "cell"]]
 
-    # 3. per-(group, 2-prefix) kernel compression; merges into parents of
-    #    length >= 2 all happen here (one applyInPandas shuffle)
-    eff_min = max(min_level, 2)
-    schema_fields = [f"`{f.name}` {f.dataType.simpleString()}"
-                     for f in cells.schema.fields if f.name in g]
-    out_schema = ", ".join(schema_fields + ["cell string"])
+        return (df.groupBy(*g, F.substring("cell", 1, prefix))
+                .applyInPandas(_compress_group, out_schema))
 
-    def _compress_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = kcompress(pdf["cell"].tolist(), min_level=eff_min,
-                        max_level=max_level)
-        res = pd.DataFrame({"cell": out})
-        for c in g:
-            res[c] = pdf[c].iloc[0]
-        return res[[*g, "cell"]]
-
-    grouped = (cells.withColumn("__pfx", F.substring("cell", 1, 2))
-               .groupBy(*g, "__pfx")
-               .applyInPandas(_compress_group, out_schema))
-
-    if min_level > 1:
-        return grouped
-
-    # 4. cross-prefix cascade residue: 32 complete length-2 cells -> length-1
-    #    parent (the only merge the per-prefix kernel cannot see)
-    l2 = (grouped.filter(F.length("cell") == 2)
-          .withColumn("__parent", F.substring("cell", 1, 1)))
-    full = (l2.groupBy(*g, "__parent")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") == 32)
-            .select(*g, "__parent"))
-    keep = (grouped.withColumn("__parent", F.substring("cell", 1, 1))
-            .join(full, on=[*g, "__parent"], how="left_anti")
-            .select(*g, "cell"))
-    merged = full.select(*g, F.col("__parent").alias("cell"))
-    return keep.unionByName(merged)
+    return kernel_pass(kernel_pass(cells, 2, max(min_level, 2)), 1, min_level)

@@ -8,22 +8,29 @@ expressed Spark-first with the interior/boundary covering split:
   ``contains`` cells (fully inside — membership is decided by the cell
   id alone) and ``intersects``−``contains`` cells (boundary — points
   there need the exact even-odd test). Zones are query-side small
-  (like cover_polygons' input), so the (zone, cell, is_edge) table is
-  a broadcast.
+  (like cover_polygons' input), so the (zone, cell, is_edge, parts)
+  table is a broadcast, built once per query as one pandas frame.
+* Each boundary row carries its band segments: per antimeridian part,
+  the non-horizontal ring segments (all rings, holes included) whose
+  latitude span meets the cell's latitude band. No other segment can
+  satisfy the crossing rule ``(y1 > y) != (y2 > y)`` for a point in the
+  cell; the top and bottom grid rows widen the band to ±inf, so an
+  out-of-range latitude gets the whole-ring answer. Longitude is not
+  filtered (that would need a rounding argument).
 * ONE broadcast hash join tags every point with its zone candidates —
   the point table is never shuffled, and a point in a cell shared by
   overlapping zones joins once per zone (correct multi-zone
   membership).
-* Only boundary-cell rows pay geometry: a single vectorized pandas
-  UDF dispatches on zone_id against the polygon dict (parsed ONCE on
-  the driver and shipped to executors inside the UDF closure — zones
-  are query-side small, so the pickled geometry is broadcast-sized) —
-  interior rows short-circuit on the ``is_edge`` flag. At a
-  sane precision the boundary band is the O(perimeter/area) sliver of
-  the data, so the exact test touches a vanishing fraction of points
-  while the result stays EXACT polygon membership (the covering
-  over-approximates; contains-cells under-approximate; their split is
-  what makes skipping the test sound).
+* Membership is a JVM expression, no Python UDF: interior rows pass on
+  ``is_edge``; boundary rows run the even-odd test as ``exists`` over
+  the parts of an ``aggregate`` XOR over the band segments, in the
+  IEEE operation order of ``functions.udfs._points_inside``, so every
+  decision is bit-identical to it. At a sane precision the boundary
+  band is the O(perimeter/area) sliver of the data, so the exact test
+  touches a vanishing fraction of points while the result stays EXACT
+  polygon membership (the covering over-approximates; contains-cells
+  under-approximate; their split is what makes skipping the test
+  sound).
 * The final per-zone aggregation is partial-agged map-side; value
   sums are micro-unit-quantized BIGINTs (the user_mobility/sessions
   fixed-point discipline), so sums are addition-order independent —
@@ -31,8 +38,9 @@ expressed Spark-first with the interior/boundary covering split:
 
 Scale: zones×cells bounded by the query; corpus cost = one tag
 projection + one broadcast join + one partial agg. Precision trades
-broadcast size against the boundary-band fraction — exactly the
-RadiusHasher auto-precision trade, chosen by the caller.
+broadcast size (cells, and band segments per boundary cell) against the
+boundary-band fraction — exactly the RadiusHasher auto-precision trade,
+chosen by the caller.
 """
 
 from __future__ import annotations
@@ -41,74 +49,86 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.exact import MICRO
-from ..kernels import cover_polygon
+from ..kernels import bounding_box, cover_polygon
 from ..kernels.polygon import parse_wkt, split_antimeridian
 from .spatial_join import tag_pages
 
 __all__ = ["zonal_stats"]
 
-def _zone_member(zones: list[tuple[str, str]]):
-    """Vectorized membership test: edge rows get the exact even-odd
-    point-in-polygon against the driver-parsed polygon dict carried
-    in the UDF closure;
-    interior rows pass on the flag WITHOUT touching geometry (the
-    is_edge mask gates the NumPy work inside the batch, so the exact
-    test provably runs only on the boundary-band sliver)."""
-    from ..functions.udfs import _points_inside
+_COVERING = ("zone_id string, gh string, is_edge boolean, parts "
+             "array<array<struct<x1:double,y1:double,x2:double,y2:double>>>")
 
-    parsed = {str(zid): [p for poly in parse_wkt(wkt)
-                         for p in split_antimeridian(poly)]
-              for zid, wkt in zones}
 
-    @pandas_udf("boolean")
-    def _member(zid: pd.Series, la: pd.Series, lo: pd.Series,
-                is_edge: pd.Series) -> pd.Series:
-        edge = is_edge.to_numpy(dtype=bool)
-        out = ~edge  # interior cells: membership decided by cell id
-        if edge.any():
-            x = lo.to_numpy(np.float64)
-            y = la.to_numpy(np.float64)
-            for z in zid[edge].unique():
-                m = edge & (zid == z).to_numpy()
-                inside = np.zeros(int(m.sum()), dtype=bool)
-                for rings in parsed[str(z)]:
-                    inside |= _points_inside(rings, x[m], y[m])
-                out[m] = inside
-        return pd.Series(out)
+def _segments(rings: list[np.ndarray]) -> np.ndarray:
+    """(E, 4) x1, y1, x2, y2 of a part's non-horizontal ring segments."""
+    seg = np.concatenate([np.hstack([r[:-1], r[1:]]) for r in rings])
+    return seg[seg[:, 1] != seg[:, 3]]
 
-    return _member
+
+def _covering(zone_id: str, wkt: str, precision: int) -> pd.DataFrame:
+    """One zone's covering rows; boundary rows carry their band segments."""
+    inner = cover_polygon(wkt, precision, "contains")
+    edge = np.setdiff1d(cover_polygon(wkt, precision, "intersects"), inner)
+    lat0, _, lat1, _ = bounding_box(edge)
+    lat0[lat0 == -90.0] = -np.inf
+    lat1[lat1 == 90.0] = np.inf
+    parts = [_segments(p) for poly in parse_wkt(wkt)
+             for p in split_antimeridian(poly)]
+    lo_hi = [(np.minimum(s[:, 1], s[:, 3]), np.maximum(s[:, 1], s[:, 3]))
+             for s in parts]
+    bands, row = np.unique(np.stack([lat0, lat1], axis=1), axis=0,
+                           return_inverse=True)
+    band_parts = [[list(map(tuple, s[(lo <= b1) & (hi > b0)].tolist()))
+                   for s, (lo, hi) in zip(parts, lo_hi)]
+                  for b0, b1 in bands]
+    return pd.DataFrame({
+        "zone_id": zone_id,
+        "gh": np.concatenate([inner, edge]),
+        "is_edge": np.arange(len(inner) + len(edge)) >= len(inner),
+        "parts": [[]] * len(inner) + [band_parts[i] for i in row.ravel()],
+    })
 
 
 def zonal_stats(df: DataFrame, zones: list[tuple[str, str]],
                 precision: int, lat: str = "lat", lon: str = "lon",
                 value: str | None = None) -> DataFrame:
     """Per-zone point count (and exact micro-unit value sum) over
-    polygon zones. ``zones`` is [(zone_id, wkt)]; a point inside k
-    overlapping zones counts once in each. Output: (zone_id, n_points
-    [, sum_value]) — zones containing no points emit no row."""
+    polygon zones. ``zones`` is [(zone_id, wkt)] with distinct ids; a
+    point inside k overlapping zones counts once in each. Output:
+    (zone_id, n_points [, sum_value]) — zones containing no points emit
+    no row."""
     if not zones:
         raise ValueError("zones must be non-empty")
-    spark = df.sparkSession
-    rows = []
-    for zid, wkt in zones:
-        inner = set(cover_polygon(wkt, precision, "contains").tolist())
-        outer = cover_polygon(wkt, precision, "intersects").tolist()
-        rows += [(str(zid), c, False) for c in sorted(inner)]
-        rows += [(str(zid), c, True) for c in outer if c not in inner]
-    cov = spark.createDataFrame(
-        rows, "zone_id string, gh string, is_edge boolean")
+    ids = pd.Series([str(zid) for zid, _ in zones])
+    if ids.duplicated().any():
+        raise ValueError(
+            f"duplicate zone_id {ids[ids.duplicated()].iloc[0]!r}; "
+            "zone ids must be distinct")
+    cov = df.sparkSession.createDataFrame(
+        pd.concat([_covering(zid, wkt, precision)
+                   for zid, (_, wkt) in zip(ids, zones)], ignore_index=True),
+        _COVERING)
 
-    tagged = tag_pages(df, precision, lat=lat, lon=lon)
-    j = tagged.join(F.broadcast(cov), on="gh")
-    member = _zone_member(zones)
-    kept = j.filter(member(F.col("zone_id"), F.col(lat), F.col(lon),
-                           F.col("is_edge")))
+    x, y = F.col(lon).cast("double"), F.col(lat).cast("double")
 
-    aggs = [F.count(F.lit(1)).alias("n_points")]
+    def _cross(acc, s):
+        return acc != (((s.y1 > y) != (s.y2 > y))
+                       & (x < s.x1 + (y - s.y1) * (s.x2 - s.x1) / (s.y2 - s.y1)))
+
+    member = ~F.col("is_edge") | F.exists(
+        "parts", lambda p: F.aggregate(p, F.lit(False), _cross))
+    # membership gates the aggregates rather than a Filter, which Catalyst
+    # would fold into the join condition
+    joined = (tag_pages(df, precision, lat=lat, lon=lon)
+              .join(F.broadcast(cov), on="gh")
+              .withColumn("__member", member))
+
+    aggs = [F.count_if("__member").alias("n_points")]
     if value is not None:
-        aggs.append(MICRO.sum(F.col(value).cast("double"))
+        aggs.append(MICRO.sum(F.when(F.col("__member"),
+                                     F.col(value).cast("double")))
                     .alias("sum_value"))
-    return kept.groupBy("zone_id").agg(*aggs)
+    return (joined.groupBy("zone_id").agg(*aggs)
+            .filter(F.col("n_points") > 0))

@@ -1,0 +1,125 @@
+"""Query-side cell algebra: ``compress_cells`` (two grouped kernel passes)
+and ``zonal_stats`` (JVM boundary membership) against their exact
+references, and the plan shapes that keep both to one pass."""
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from geohash_dotnet_spark.functions.udfs import point_in_polygon
+from geohash_dotnet_spark.kernels import children as kchildren
+from geohash_dotnet_spark.kernels import compress as kcompress
+from geohash_dotnet_spark.kernels import cover_polygon, encode, parse_wkt
+from geohash_dotnet_spark.operators import compress_cells, zonal_stats
+
+SCHEMA = "pt_id long, lat double, lon double, v double"
+
+# vertex latitudes 45.0, 50.625 and 39.375 lie on p3 and p4 row edges
+HOLE = ("POLYGON((0 40, 22 41, 18 56, 1 54, 0 40), "
+        "(5 45, 15 45, 10 50.625, 5 45))")
+MULTI = ("MULTIPOLYGON(((30 30, 40 31, 35 39.375, 30 30)), "
+         "((42 30, 50 30, 50 36, 42 30)))")
+ANTI = "POLYGON((170 -10, -172 -12, -168 5, 175 8, 170 -10))"
+ZONES = [("hole", HOLE), ("multi", MULTI), ("anti", ANTI)]
+
+
+def _executed(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+# ---------------------------------------------------------------------------
+# compress_cells
+# ---------------------------------------------------------------------------
+
+def _cases():
+    rng = np.random.default_rng(11)
+    rand = encode(rng.uniform(-90, 90, 2000), rng.uniform(-180, 180, 2000),
+                  4).tolist()
+    return [
+        ["9", "9q", "9qz", "dr"],                        # 1-prefix ancestor
+        [g for c in kchildren("y") for g in kchildren(c)],   # cascade to "y"
+        [g for c in kchildren("tdn") for g in kchildren(c)],  # to "tdn"
+        rand + kchildren("tdnu2") + ["b", "bc1"],
+    ]
+
+
+@pytest.mark.parametrize("min_level", [1, 2, 3])
+def test_two_pass_compress_matches_kernel(spark, min_level):
+    for i, cells in enumerate(_cases()):
+        df = spark.createDataFrame([(c,) for c in cells], "cell string")
+        got = sorted(r["cell"] for r in
+                     compress_cells(df, min_level=min_level).collect())
+        assert got == kcompress(cells, min_level=min_level), f"case {i}"
+
+
+@pytest.mark.parametrize("min_level", [1, 2, 3])
+def test_two_pass_compress_grouped_matches_kernel(spark, min_level):
+    cases = _cases()
+    rows = [(gid, c) for gid, cells in enumerate(cases) for c in cells]
+    df = spark.createDataFrame(rows, "gid int, cell string")
+    got = {r["gid"]: r["cells"] for r in
+           compress_cells(df, min_level=min_level, group_cols=["gid"])
+           .groupBy("gid").agg(F.sort_array(F.collect_list("cell"))
+                               .alias("cells")).collect()}
+    assert got == {gid: kcompress(cells, min_level=min_level)
+                   for gid, cells in enumerate(cases)}
+
+
+@pytest.mark.parametrize("group_cols", [None, ["gid"]])
+def test_compress_cells_is_two_kernel_passes_without_joins(spark, group_cols):
+    df = spark.createDataFrame([(0, "9q"), (1, "dr")], "gid int, cell string")
+    plan = _executed(compress_cells(df, group_cols=group_cols))
+    assert plan.count("FlatMapGroupsInPandas") == 2, plan
+    assert "Join" not in plan, plan
+
+
+# ---------------------------------------------------------------------------
+# zonal_stats
+# ---------------------------------------------------------------------------
+
+def _lattice(wkt, n=36):
+    """Points on a lattice over the zone's bbox (plus margin) that also
+    takes every vertex latitude and longitude."""
+    xy = np.concatenate([r for poly in parse_wkt(wkt) for r in poly])
+    x = np.where(xy[:, 0] < 0, xy[:, 0] + 360.0, xy[:, 0])  # unwrap ±180
+    lats = np.union1d(np.linspace(xy[:, 1].min() - 1, xy[:, 1].max() + 1, n),
+                      xy[:, 1])
+    lons = np.union1d(np.linspace(x.min() - 1, x.max() + 1, n), x)
+    lons = np.where(lons >= 180.0, lons - 360.0, lons)
+    return [(float(a), float(o)) for a in lats for o in lons]
+
+
+def _points(spark):
+    pts = [p for _, wkt in ZONES for p in _lattice(wkt)]
+    return spark.createDataFrame(
+        [(i, la, lo, i % 7 / 4) for i, (la, lo) in enumerate(pts)], SCHEMA)
+
+
+@pytest.mark.parametrize("precision", [3, 4])
+def test_zonal_matches_bruteforce_pip(spark, precision):
+    """Hole, MULTIPOLYGON and antimeridian zones, lattice points on vertex
+    latitudes: every count and value sum equals the even-odd brute force."""
+    df = _points(spark)
+    got = {r["zone_id"]: (r["n_points"], r["sum_value"]) for r in
+           zonal_stats(df, ZONES, precision, value="v").collect()}
+    want = {z: tuple(df.filter(point_in_polygon(F.col("lat"), F.col("lon"), wkt))
+                     .agg(F.count(F.lit(1)), F.sum("v")).first())
+            for z, wkt in ZONES}
+    assert min(n for n, _ in want.values()) > 50
+    assert got == want
+    for _, wkt in ZONES:  # both membership paths are under test
+        inner = set(cover_polygon(wkt, precision, "contains"))
+        assert inner and set(cover_polygon(wkt, precision, "intersects")) - inner
+
+
+def test_zonal_membership_is_python_free(spark):
+    df = _points(spark)
+    plan = _executed(zonal_stats(df, ZONES, 3))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "BroadcastHashJoin" in plan
+
+
+def test_zonal_rejects_duplicate_zone_id(spark):
+    df = spark.createDataFrame([(1, 50.0, 10.0, 1.0)], SCHEMA)
+    with pytest.raises(ValueError, match="'hole'"):
+        zonal_stats(df, [("hole", HOLE), ("multi", MULTI), ("hole", ANTI)], 3)
