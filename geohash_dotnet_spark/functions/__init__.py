@@ -6,14 +6,12 @@ correctness gate.
 """
 
 from .native import (  # noqa: F401
-    clamp_latitude,
     geocode_from_url,
     gh_children,
     gh_is_valid,
     gh_parent,
     gh_truncate,
     haversine_m,
-    normalize_longitude,
     with_geohash,
 )
 from .udfs import (  # noqa: F401

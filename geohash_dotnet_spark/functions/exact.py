@@ -8,8 +8,10 @@ in both engines, where ``round()`` breaks ties differently between them.
 
 Each :class:`Quantum` renders that rule as a Spark Column, as a DuckDB
 SQL fragment with DOUBLE literals (a bare ``0.5`` is a DECIMAL there),
-and as a NumPy array for the streaming state functions, so a quantum
-changes here and its twins follow.
+as Spark SQL text for the text-rendered builders (the same tree as the
+Column, with ``D`` DOUBLE literals for the same reason), and as a NumPy
+array for the streaming state functions, so a quantum changes here and
+its twins follow.
 """
 
 from __future__ import annotations
@@ -25,7 +27,8 @@ class Quantum:
     """Ticks of ``1 / scale``. ``ticks`` rounds a real to its BIGINT
     tick, ``real`` scales ticks back to a double, ``round`` does both;
     ``sum`` and ``mean`` are the order-free group aggregates (``mean``
-    rounded back onto the grid). The ``_sql`` forms are the twins."""
+    rounded back onto the grid). The ``_sql`` forms are the DuckDB twins;
+    ``round_spark_sql`` is ``round`` as Spark SQL text."""
 
     def __init__(self, scale: int):
         self.scale = int(scale)
@@ -42,6 +45,10 @@ class Quantum:
 
     def round(self, x: Column) -> Column:
         return F.floor(x * self._lit() + F.lit(0.5)) / self._lit()
+
+    def round_spark_sql(self, x: str) -> str:
+        """``x`` is one term (a call or CAST): it is not parenthesized."""
+        return f"floor({x} * {self.scale}.0D + 0.5D) / {self.scale}.0D"
 
     def sum(self, x: Column) -> Column:
         return self.real(F.sum(self.ticks(x)))

@@ -8,14 +8,32 @@ provably identical to the reference's midpoint-halving loop
 (/root/reference/src/Geohasher.cs:76-102); cross-checked against the NumPy
 kernel in tests/test_functions_spark.py.
 
-Built as *staged selects* (``with_geohash``) so each intermediate is an
-attribute reference, keeping the Catalyst expression tree small.
+The hot-path builders (``with_geohash``, ``geocode_from_url``) are text
+renderers: each stage is Spark SQL text, rendered in pure Python, memoized
+on its arguments (only strings, never JVM objects) and handed to the JVM
+in one call. Built one ``Column`` call at a time, the same tree cost
+py4j round trips per node, over five thousand for a p12 encode, and
+building a query took longer than running it. The parsed tree is the one
+those calls built, so plans and codegen are unchanged. Floats are DOUBLE
+literals (``repr`` + ``D``; a bare ``0.5`` is a DECIMAL in Spark SQL) and
+column names are backtick-quoted. Precedence and left associativity, not
+parentheses, shape the text: a new JVM parses nested parentheses slowly
+(a fully parenthesized p12 grid-index stage took 0.7 s, unparenthesized
+about 0.3 s, on a 4-core VM), and every cold start pays for it.
+
+``with_geohash`` runs as *staged selects* (clamp/normalize, grid index,
+base-32 ``concat``) so each intermediate is an attribute reference,
+keeping the Catalyst expression tree small.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..kernels.geohash import _check_precision
 
 BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _VALID_RE = "^[0-9bcdefghjkmnpqrstuvwxyzBCDEFGHJKMNPQRSTUVWXYZ]{1,12}$"
@@ -23,76 +41,85 @@ _VALID_RE = "^[0-9bcdefghjkmnpqrstuvwxyzBCDEFGHJKMNPQRSTUVWXYZ]{1,12}$"
 EARTH_RADIUS_M = 6_371_008.8
 
 
-def normalize_longitude(lng: Column) -> Column:
-    """Wrap into [-180, 180) (src/Geohasher.cs:213-219)."""
-    return F.pmod(lng + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)
+def sql_name(name: str) -> str:
+    """A column name as a Spark SQL identifier (backticks, escaped)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def clamp_latitude(lat: Column) -> Column:
-    return F.greatest(F.least(lat, F.lit(90.0)), F.lit(-90.0))
+def sql_double(x: float) -> str:
+    """A Spark SQL DOUBLE literal that round-trips ``x`` exactly; negative
+    values are parenthesized so they can follow a binary minus."""
+    lit = f"{float(x)!r}D"
+    return f"({lit})" if x < 0 else lit
 
 
-def _grid_index_col(x: Column, lo: float, step: float, n: int) -> Column:
+def _grid_index_sql(x: str, lo: float, step: float, n: int) -> str:
     """Exact grid index with dyadic-boundary fix-up (kernel _grid_index twin)."""
-    i0 = F.least(
-        F.greatest(F.floor((x - F.lit(lo)) / F.lit(step)).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    i1 = i0 - F.when(x < F.lit(lo) + i0 * F.lit(step), F.lit(1)).otherwise(F.lit(0))
-    i2 = i1 + F.when(
-        (i1 < F.lit(n - 1)) & (x >= F.lit(lo) + (i1 + F.lit(1)) * F.lit(step)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    return F.least(F.greatest(i2, F.lit(0)), F.lit(n - 1))
+    lo, step = sql_double(lo), sql_double(step)
+    i0 = f"least(greatest(CAST(floor(({x} - {lo}) / {step}) AS BIGINT), 0), {n - 1})"
+    i1 = f"{i0} - CASE WHEN {x} < {lo} + {i0} * {step} THEN 1 ELSE 0 END"
+    i2 = (f"{i1} + CASE WHEN {i1} < {n - 1} AND {x} >= {lo} + ({i1} + 1) * {step} "
+          f"THEN 1 ELSE 0 END")
+    return f"least(greatest({i2}, 0), {n - 1})"
 
 
-def _char_from_bits(lat_i: Column, lng_i: Column, precision: int, c: int,
-                    n_lat_bits: int, n_lng_bits: int) -> Column:
-    """Base-32 char c (0-indexed from the left) of the geohash.
+@lru_cache(maxsize=256)
+def _encode_stages(lat: str, lon: str, precision: int) -> tuple:
+    """Spark SQL text of the three encode stages: (name, text) pairs of the
+    ``__gh_lat``/``__gh_lon`` and ``__gh_lat_i``/``__gh_lng_i``
+    temporaries, then the geohash ``concat``.
 
-    Stream bit j (0 = MSB): even j -> lon bit (n_lng_bits-1 - j//2),
-    odd j -> lat bit (n_lat_bits-1 - (j-1)//2) — lon-first interleave
-    (src/Geohasher.cs:76-94).
+    Stream bit j (0 = MSB) of the geohash: even j -> lon bit
+    (n_lng_bits-1 - j//2), odd j -> lat bit (n_lat_bits-1 - (j-1)//2) —
+    lon-first interleave (src/Geohasher.cs:76-94); five bits per base-32
+    character, looked up with a 1-based ``substr`` of the alphabet.
     """
-    digit = F.lit(0)
-    for k in range(5):
-        j = 5 * c + k
-        if j % 2 == 0:
-            src, bit = lng_i, n_lng_bits - 1 - j // 2
-        else:
-            src, bit = lat_i, n_lat_bits - 1 - (j - 1) // 2
-        digit = digit + F.shiftright(src, bit).bitwiseAND(F.lit(1)) * F.lit(1 << (4 - k))
-    return _b32_char(digit)
+    total = 5 * precision
+    n_lat_bits = total // 2
+    n_lng_bits = (total + 1) // 2
+    # clamp latitude, wrap longitude into [-180, 180) (src/Geohasher.cs:213-219)
+    normalized = (
+        ("__gh_lat", f"greatest(least(CAST({sql_name(lat)} AS DOUBLE), 90.0D), "
+                     f"-90.0D)"),
+        ("__gh_lon", f"pmod(CAST({sql_name(lon)} AS DOUBLE) + 180.0D, 360.0D) "
+                     f"- 180.0D"),
+    )
+    indexed = (
+        ("__gh_lat_i", _grid_index_sql("`__gh_lat`", -90.0,
+                                       180.0 / (1 << n_lat_bits), 1 << n_lat_bits)),
+        ("__gh_lng_i", _grid_index_sql("`__gh_lon`", -180.0,
+                                       360.0 / (1 << n_lng_bits), 1 << n_lng_bits)),
+    )
+    chars = []
+    for c in range(precision):
+        digit = "0"
+        for k in range(5):
+            j = 5 * c + k
+            if j % 2 == 0:
+                src, bit = "`__gh_lng_i`", n_lng_bits - 1 - j // 2
+            else:
+                src, bit = "`__gh_lat_i`", n_lat_bits - 1 - (j - 1) // 2
+            digit += f" + (shiftright({src}, {bit}) & 1) * {1 << (4 - k)}"
+        chars.append(f"substr('{BASE32}', CAST({digit} + 1 AS INT), 1)")
+    return normalized, indexed, "concat(" + ", ".join(chars) + ")"
 
 
-def _b32_char(digit: Column) -> Column:
-    # substr(alphabet, digit+1, 1) — 1-based, same in Spark and DuckDB
-    return F.substr(F.lit(BASE32), (digit + F.lit(1)).cast("int"), F.lit(1))
+def exprs(stage) -> dict:
+    """(name, Spark SQL text) pairs as the ``withColumns`` argument."""
+    return {name: F.expr(text) for name, text in stage}
 
 
 def with_geohash(df: DataFrame, lat: str, lon: str, precision: int,
                  out: str = "gh") -> DataFrame:
-    """Add a geohash column computed fully JVM-side (staged selects)."""
-    total = 5 * precision
-    n_lat_bits = total // 2
-    n_lng_bits = (total + 1) // 2
-    lat_step = 180.0 / (1 << n_lat_bits)
-    lng_step = 360.0 / (1 << n_lng_bits)
+    """Add a geohash column computed fully JVM-side (staged selects).
 
-    t_lat, t_lon, t_lat_i, t_lng_i = "__gh_lat", "__gh_lon", "__gh_lat_i", "__gh_lng_i"
-    staged = df.withColumns({
-        t_lat: clamp_latitude(F.col(lat).cast("double")),
-        t_lon: normalize_longitude(F.col(lon).cast("double")),
-    }).withColumns({
-        t_lat_i: _grid_index_col(F.col(t_lat), -90.0, lat_step, 1 << n_lat_bits),
-        t_lng_i: _grid_index_col(F.col(t_lon), -180.0, lng_step, 1 << n_lng_bits),
-    })
-    chars = [
-        _char_from_bits(F.col(t_lat_i), F.col(t_lng_i), precision, c,
-                        n_lat_bits, n_lng_bits)
-        for c in range(precision)
-    ]
-    return staged.withColumn(out, F.concat(*chars)).drop(t_lat, t_lon, t_lat_i, t_lng_i)
+    An existing ``out`` column is replaced in place (``withColumn``).
+    """
+    _check_precision(precision)
+    normalized, indexed, concat = _encode_stages(lat, lon, int(precision))
+    staged = df.withColumns(exprs(normalized)).withColumns(exprs(indexed))
+    temporaries = [name for name, _ in normalized + indexed]
+    return staged.withColumn(out, F.expr(concat)).drop(*temporaries)
 
 
 def gh_parent(gh: Column) -> Column:
@@ -126,6 +153,17 @@ def haversine_m(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Colum
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
 
 
+@lru_cache(maxsize=256)
+def geocode_sql(url: str) -> tuple[str, str]:
+    """Spark SQL text of ``geocode_from_url``'s (lat, lon) for a url column."""
+    def coord(first: int, span: float) -> str:
+        h = (f"CAST(conv(substring(md5({sql_name(url)}), {first}, 8), 16, 10) "
+             f"AS BIGINT)")
+        return (f"({h} + 0.5D) / 4294967296.0D * {sql_double(span)} "
+                f"- {sql_double(span / 2)}")
+    return coord(1, 180.0), coord(9, 360.0)
+
+
 def geocode_from_url(df: DataFrame, url: str = "url",
                      lat_out: str = "lat", lon_out: str = "lon") -> DataFrame:
     """Deterministic geocode: lat/lon from md5(url) (reproducible across
@@ -133,10 +171,4 @@ def geocode_from_url(df: DataFrame, url: str = "url",
 
     Bit-identical to the DuckDB oracle twin in functions/oracle.py.
     """
-    h = F.md5(F.col(url))
-    h1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return df.withColumns({
-        lat_out: (h1 + F.lit(0.5)) / F.lit(4294967296.0) * F.lit(180.0) - F.lit(90.0),
-        lon_out: (h2 + F.lit(0.5)) / F.lit(4294967296.0) * F.lit(360.0) - F.lit(180.0),
-    })
+    return df.withColumns(exprs(zip((lat_out, lon_out), geocode_sql(url))))

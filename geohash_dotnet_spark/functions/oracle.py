@@ -32,7 +32,7 @@ def normalize_lon_sql(x: str) -> str:
 
 
 def grid_index_sql(x: str, lo: float, step: float, n: int) -> str:
-    """Exact grid index with dyadic fix-up (twin of native._grid_index_col).
+    """Exact grid index with dyadic fix-up (twin of native._grid_index_sql).
 
     ``x`` must be a simple column reference (it is repeated several times).
     """
@@ -44,7 +44,8 @@ def grid_index_sql(x: str, lo: float, step: float, n: int) -> str:
 
 
 def gh_char_sql(lat_i: str, lng_i: str, precision: int, c: int) -> str:
-    """Base-32 char c from grid-index columns (twin of native._char_from_bits)."""
+    """Base-32 char c from grid-index columns (twin of a character of
+    native._encode_stages)."""
     total = 5 * precision
     n_lat_bits = total // 2
     n_lng_bits = (total + 1) // 2

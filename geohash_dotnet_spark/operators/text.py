@@ -10,10 +10,13 @@ values, not just row counts.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exact import MICRO
+from ..functions.native import exprs, sql_name
 
 STOPWORDS = {
     "en": ("the", "a", "and", "of", "to", "in", "is", "on", "for", "with"),
@@ -77,13 +80,13 @@ def with_quality(df: DataFrame, text: str = "text") -> DataFrame:
     64-bit accumulator (12-bit lanes per language at bits 0/12/24/36,
     token count at bits 48+). Per-token cost is two O(1) guards plus one
     hash-set membership test: a length bound (every stopword is short)
-    and a single ``isin`` over the union of all stopwords — the union has
+    and a single ``IN`` over the union of all stopwords — the union has
     > 10 distinct items so Catalyst's OptimizeIn rewrites it to an InSet
-    hash lookup, unlike four per-language 10-item ``In`` chains which
+    hash lookup, unlike four per-language 10-item ``IN`` chains which
     stay linear scans. Only actual stopword hits pay the map lookup that
     resolves the packed per-language lane weights (a word appearing in
     several languages carries the sum of its lane bits). Measured 1.7x
-    faster than four per-language ``isin`` chains at 5M rows, values
+    faster than four per-language ``IN`` chains at 5M rows, values
     bit-identical. Overflow safety (round-1 ADVICE): the packed path is
     taken only when ``octet_length(text) <= 8190`` — an O(1) byte-count
     test that bounds the token count (hence every lane) at 4095, making
@@ -91,13 +94,30 @@ def with_quality(df: DataFrame, text: str = "text") -> DataFrame:
     path (one ``filter`` traversal per language + a ``size`` recount)
     via per-row CASE, so values are identical at any document size — a
     giant document is slower, never wrong.
-    """
-    langs = list(STOPWORDS)
-    toks = _tokens(F.col(text))
-    zero = F.lit(0).cast("long")
-    lane_cap = (1 << 12) - 1  # 4095
 
+    Both stages (the packed accumulator, then the lane extracts and
+    scores) are Spark SQL text rendered once per ``text`` column and
+    handed to the JVM in one call each, like functions/native.py; built
+    as ``Column`` calls the hit expressions, repeated inside the argmax,
+    cost about two thousand py4j round trips per query.
+    """
+    packed, scores = _quality_stages(text)
+    out = df.withColumn("__q_packed", F.expr(packed))
+    return out.withColumns(exprs(scores)).drop("__q_packed")
+
+
+@lru_cache(maxsize=64)
+def _quality_stages(text: str) -> tuple:
+    """Spark SQL text of with_quality's two stages for one text column:
+    the packed accumulator, then (name, text) pairs of the scores."""
+    langs = list(STOPWORDS)
+    t = sql_name(text)
+    toks = f"split(trim(lower({t})), '\\\\s+', -1)"
+    lane_cap = (1 << 12) - 1  # 4095
     max_sw_len = max(len(w) for ws in STOPWORDS.values() for w in ws)
+
+    def words(ws) -> str:
+        return ", ".join(f"'{w}'" for w in ws)
 
     # word -> summed packed lane weight (words shared across languages get
     # the sum of their lanes, so per-language counts stay exact)
@@ -106,55 +126,44 @@ def with_quality(df: DataFrame, text: str = "text") -> DataFrame:
         for w in STOPWORDS[lang]:
             weights[w] = weights.get(w, 0) + (1 << (12 * i))
     all_words = sorted(weights)
-    map_items = []
-    for w in all_words:
-        map_items += [F.lit(w), F.lit(weights[w]).cast("long")]
-    weight_map = F.create_map(*map_items)
+    weight_map = "map(" + ", ".join(
+        f"'{w}', {weights[w]}L" for w in all_words) + ")"
 
-    def merge(acc, x):
-        # token count in bits 48+; the length guard and the single union
-        # InSet test let non-stopword tokens (the common case) skip the
-        # lane-weight map lookup entirely
-        return acc + F.lit(1 << 48).cast("long") + \
-            F.when((F.length(x) <= max_sw_len) & x.isin(*all_words),
-                   F.coalesce(F.try_element_at(weight_map, x), zero)
-                   ).otherwise(zero)
-
+    # token count in bits 48+; the length guard and the single union
+    # InSet test let non-stopword tokens (the common case) skip the
+    # lane-weight map lookup entirely. The lambda's (x, y) is (accumulator,
+    # token), the names pyspark gives them, so EXPLAIN output reads the same.
+    # Precedence, not parentheses, shapes the text (see functions/native.py).
+    merge = (f"x + {1 << 48}L + CASE WHEN length(y) <= {max_sw_len} "
+             f"AND y IN ({words(all_words)}) "
+             f"THEN coalesce(try_element_at({weight_map}, y), 0L) ELSE 0L END")
     # <= 8190 bytes => <= 8190 chars => <= 4095 whitespace-separated
     # tokens => no 12-bit lane (nor the count field) can ever carry.
     # octet_length is O(1) — no extra tokenization anywhere on this path.
-    fast = F.octet_length(F.col(text)) <= F.lit(8190)
-    out = df.withColumn(
-        "__q_packed",
-        F.when(fast, F.aggregate(toks, zero, merge)).otherwise(zero))
+    fast = f"octet_length({t}) <= 8190"
+    packed = (f"CASE WHEN {fast} THEN aggregate({toks}, 0L, (x, y) -> {merge}) "
+              f"ELSE 0L END")
 
-    def hit_col(i: int, lang: str):
-        packed_lane = F.shiftright(F.col("__q_packed"), 12 * i) \
-            .bitwiseAND(F.lit(lane_cap).cast("long"))
-        slow = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS[lang])))
-        return F.when(fast, packed_lane).otherwise(slow.cast("long"))
+    def hit(i: int, lang: str) -> str:
+        slow = f"size(filter({toks}, x -> x IN ({words(STOPWORDS[lang])})))"
+        return (f"CASE WHEN {fast} THEN shiftright(`__q_packed`, {12 * i}) "
+                f"& {lane_cap}L ELSE CAST({slow} AS BIGINT) END")
 
-    hit = {l: hit_col(i, l) for i, l in enumerate(langs)}
-    ntoks = F.when(fast, F.shiftright(F.col("__q_packed"), 48)) \
-        .otherwise(F.size(toks).cast("long"))
-    n = F.greatest(ntoks, F.lit(1))
-    best = F.greatest(*[hit[l] for l in langs])
+    hits = [hit(i, lang) for i, lang in enumerate(langs)]
+    ntoks = (f"CASE WHEN {fast} THEN shiftright(`__q_packed`, 48) "
+             f"ELSE CAST(size({toks}) AS BIGINT) END")
+    best = "greatest(" + ", ".join(hits) + ")"
     # first language (in STOPWORDS order) achieving the max wins ties
-    pred = F.lit("und")
-    for lang in reversed(langs):
-        pred = F.when((hit[lang] == best) & (best > 0),
-                      F.lit(lang)).otherwise(pred)
-    total_hits = sum([hit[l] for l in langs], F.lit(0))
-    out = out.withColumns({
-        "stopword_ratio": MICRO.round((total_hits / n).cast("double")),
-        "lang_pred": pred,
-        "quality_score": MICRO.round(
-            F.least(F.lit(1.0),
-                    (total_hits / n) * 2.0
-                    + F.least(ntoks / F.lit(400.0), F.lit(0.5))
-                    ).cast("double")),
-    })
-    return out.drop("__q_packed", "__q_n")
+    pred = "'und'"
+    for lang, h in reversed(list(zip(langs, hits))):
+        pred = f"CASE WHEN {h} = {best} AND {best} > 0 THEN '{lang}' ELSE {pred} END"
+    ratio = f"({' + '.join(['0'] + hits)}) / greatest({ntoks}, 1)"
+    score = f"least(1.0D, {ratio} * 2.0D + least({ntoks} / 400.0D, 0.5D))"
+    return packed, (
+        ("stopword_ratio", MICRO.round_spark_sql(f"CAST({ratio} AS DOUBLE)")),
+        ("lang_pred", pred),
+        ("quality_score", MICRO.round_spark_sql(f"CAST({score} AS DOUBLE)")),
+    )
 
 
 def quality_sql(inner: str = "documents", text: str = "text") -> str:

@@ -1,7 +1,10 @@
 """Recommended SparkSession configuration for this engine.
 
 The JVM-native geohash encode is a deliberately wide expression tree
-(grid-index fix-ups + 5 bit-extracts per character); under Spark's
+(grid-index fix-ups + 5 bit-extracts per character). It is rendered as
+Spark SQL text and parsed by the JVM in one call per stage
+(functions/native.py), but the tree, and so the generated code, is as
+wide as if built one Column at a time. Under Spark's
 default whole-stage-codegen settings a precision-12 encode embedded in
 an aggregate can exceed the JVM's 64 KB method limit, making codegen
 fail (noisy ERROR log) and fall back to interpreted evaluation.

@@ -19,9 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import geocode_from_url
+from ..functions.native import exprs, geocode_sql
 
 URL_PREFIX = "https://crawl.example/"
+
+# Spark SQL text of the derived columns
+_URL = (f"concat('{URL_PREFIX}', `source`, '/', CAST(`doc_id` AS STRING), "
+        f"'/', CAST(`rep` AS STRING))")
+_WARC_TS = ("to_timestamp('2024-01-01 00:00:00') "
+            "+ make_dt_interval(`doc_id` % 365, `rep` % 24, 0, 0BD)")
+_HTML = "encode(concat('<html><body>', `text`, '</body></html>'), 'utf-8')"
 
 
 def pages(spark: SparkSession, sf_dir: str, replicate: int = 1,
@@ -29,8 +36,14 @@ def pages(spark: SparkSession, sf_dir: str, replicate: int = 1,
     """Build the pages table at a scale factor directory.
 
     ``replicate`` fans each document out into N distinct pages (distinct
-    urls, same text) — the deterministic scale knob for throughput runs.
+    urls, same text) — the deterministic scale knob for throughput runs;
+    it must be at least 1.
+
+    Each stage (rep, url/warc_ts[/html], geocode) is Spark SQL text handed
+    to the JVM in one call, like functions/native.py.
     """
+    if replicate < 1:
+        raise ValueError(f"replicate must be at least 1, got {replicate}.")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if replicate > 1:
         # documents is a single small file -> one input partition; spread it
@@ -41,29 +54,17 @@ def pages(spark: SparkSession, sf_dir: str, replicate: int = 1,
         # a whole one (long tails dominate single-wave schedules).
         n_part = max(4 * spark.sparkContext.defaultParallelism, 8)
         docs = docs.repartition(n_part).withColumn(
-            "rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))))
+            "rep", F.expr(f"explode(sequence(0, {replicate - 1}))"))
     else:
-        docs = docs.withColumn("rep", F.lit(0))
+        docs = docs.withColumn("rep", F.expr("0"))
 
-    out = docs.withColumn(
-        "url",
-        F.concat(F.lit(URL_PREFIX), F.col("source"), F.lit("/"),
-                 F.col("doc_id").cast("string"), F.lit("/"),
-                 F.col("rep").cast("string")),
-    ).withColumn(
-        "warc_ts",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-        + F.make_dt_interval(days=F.col("doc_id") % 365,
-                             hours=F.col("rep") % 24),
-    )
+    stage = [("url", _URL), ("warc_ts", _WARC_TS)]
     if with_html:
-        out = out.withColumn(
-            "html",
-            F.encode(F.concat(F.lit("<html><body>"), F.col("text"),
-                              F.lit("</body></html>")), "utf-8"),
-        )
-    out = geocode_from_url(out, "url")
-    cols = ["url", "warc_ts", "text", "lang", "doc_id", "rep", "lat", "lon"]
+        stage.append(("html", _HTML))
+    out = docs.withColumns(exprs(stage))
+    # geocode_from_url and the final projection in one select
+    lat, lon = geocode_sql("url")
+    cols = ["url", "warc_ts", "text", "lang", "doc_id", "rep"]
     if with_html:
         cols.insert(2, "html")
-    return out.select(*cols)
+    return out.selectExpr(*cols, f"{lat} AS lat", f"{lon} AS lon")

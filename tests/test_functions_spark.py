@@ -21,6 +21,7 @@ from geohash_dotnet_spark.functions import (
 from geohash_dotnet_spark.functions.oracle import pages_tagged_sql
 from geohash_dotnet_spark.kernels import geohash as GK
 from geohash_dotnet_spark.kernels import haversine_m as k_haversine
+from geohash_dotnet_spark.operators.spatial_join import spatial_join, tag_pages
 from geohash_dotnet_spark.sources.pages import pages
 
 GOLDENS = [(0.0, 0.0), (40.7128, -74.0060), (89.99999999, 0.0),
@@ -38,12 +39,49 @@ def points_df(spark):
     return df, lat, lon
 
 
-@pytest.mark.parametrize("p", [1, 5, 7, 12])
+@pytest.mark.parametrize("p", range(1, 13))
 def test_native_encode_equals_kernel(spark, points_df, p):
     df, lat, lon = points_df
     got = np.array([r.gh for r in with_geohash(df, "lat", "lon", p).collect()])
     want = GK.encode(lat, lon, p)
     assert (got == want).all()
+
+
+@pytest.mark.parametrize("p", [0, 13, -1])
+def test_encode_rejects_out_of_range_precision(spark, points_df, p):
+    # raised when the DataFrame is built, with the kernel's message
+    df, _, _ = points_df
+    msg = f"Precision must be between 1 and 12, got {p}."
+    with pytest.raises(ValueError, match=msg):
+        GK.encode([0.0], [0.0], p)
+    with pytest.raises(ValueError, match=msg):
+        with_geohash(df, "lat", "lon", p)
+    with pytest.raises(ValueError, match=msg):
+        tag_pages(df, p)
+    cov = spark.createDataFrame([("s",)], "cell string")
+    with pytest.raises(ValueError, match=msg):
+        spatial_join(df, cov, precision=p)
+
+
+@pytest.mark.parametrize("out", ["gh", "lat", "z"])
+def test_encode_replaces_existing_out_in_place(spark, points_df, out):
+    """An existing ``out`` column keeps its position (``withColumn``
+    semantics) and no ``__gh_*`` temporary leaks into the schema."""
+    df, lat, lon = points_df
+    wide = df.select(F.lit("old").alias("gh"), "lat",
+                     F.lit(1).alias("z"), "lon")
+    got = with_geohash(wide, "lat", "lon", 5, out=out)
+    want = wide.withColumn(out, F.lit(""))
+    assert got.columns == want.columns
+    assert got.schema == want.schema
+    cells = np.array([r[out] for r in got.collect()])
+    assert (cells == GK.encode(lat, lon, 5)).all()
+
+
+def test_pages_rejects_replicate_below_one(spark, sf_small):
+    for bad in (0, -3):
+        with pytest.raises(ValueError, match="replicate must be at least 1"):
+            pages(spark, sf_small, replicate=bad)
 
 
 def test_native_encode_is_udf_free(spark, points_df):

@@ -431,6 +431,37 @@ def test_quality_no_lane_overflow(spark):
     assert out[5]["stopword_ratio"] == 1.0 and out[5]["lang_pred"] == "es"
 
 
+def test_quality_fast_and_slow_paths_match_duckdb_twin(spark):
+    """The packed fast path (<= 8190 bytes) and the per-language slow path
+    (longer documents) give the same scores for the same token mix, and
+    both equal the DuckDB twin ``quality_sql`` value for value."""
+    import duckdb
+
+    from geohash_dotnet_spark.operators import with_quality
+    from geohash_dotnet_spark.operators.text import quality_sql
+
+    unit = "The der el le la und x Mit 42 los pour "  # 39 bytes, 11 tokens
+    docs = pd.DataFrame({
+        "doc_id": [1, 2, 3, 4],
+        "text": [unit * 204,       # 7956 B -> packed fast path
+                 unit * 300,       # 11700 B -> exact slow path
+                 "le la de " * 1000 + "der",  # 9003 B, slow path, fr
+                 "zzz"],
+    })
+    assert len(docs.text[0].encode()) <= 8190 < len(docs.text[1].encode())
+    cols = ["doc_id", "stopword_ratio", "lang_pred", "quality_score"]
+    got = (with_quality(spark.createDataFrame(docs)).select(*cols)
+           .toPandas().sort_values("doc_id").reset_index(drop=True))
+    con = duckdb.connect()
+    con.register("docs", docs)
+    want = con.sql(f"SELECT {', '.join(cols)} FROM ({quality_sql('docs')}) "
+                   f"ORDER BY doc_id").df()
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    fast, slow = got.iloc[0], got.iloc[1]
+    assert fast[cols[1:]].tolist() == slow[cols[1:]].tolist()
+    assert slow.lang_pred == "de"
+
+
 def test_cosine_topk_and_lsh(spark, sf_med):
     emb = spark.read.parquet(f"{sf_med}/embeddings.parquet").cache()
     queries = (emb.filter(F.col("vec_id") < 3)
