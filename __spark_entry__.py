@@ -772,9 +772,9 @@ def q_events_range(spark, sf_dir):
 
 def q_events_time_rollup(spark, sf_dir):
     """Hypertable-style rollup ladder: minute/hour/day event aggregates
-    where hour re-aggregates minutes and day re-aggregates hours — one
-    raw scan, exchange-reused; fixed-point sums keep re-aggregation
-    bit-identical to direct aggregation (the oracle's form)."""
+    from one raw scan to minutes and ONE level-exploded aggregation;
+    fixed-point sums keep re-aggregation bit-identical to direct
+    aggregation (the oracle's form)."""
     from geohash_dotnet_spark.operators import time_rollup
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -1819,8 +1819,8 @@ def q_classifier_scores(spark, sf_dir):
 def q_adaptive_cells(spark, sf_dir):
     """Quadtree-style adaptive refinement: split geohash cells denser
     than the threshold into children until every emitted cell holds a
-    bounded population (skew-adaptive tiling; frontier-cascade plan,
-    corpus scanned once)."""
+    bounded population (skew-adaptive tiling; one corpus scan, then one
+    level-exploded aggregation counts every level)."""
     from geohash_dotnet_spark.operators.adaptive import adaptive_cells
 
     return adaptive_cells(_pages(spark, sf_dir), base_precision=1,
@@ -1870,9 +1870,9 @@ def q_distance_bands(spark, sf_dir):
 
 def q_tile_pyramid(spark, sf_dir):
     """Web-map tile pyramid: quadkey page counts at every zoom 0..6,
-    each level rolled up from the finer one (exchange-reuse ladder, one
-    corpus scan); the oracle computes every zoom DIRECTLY from raw rows
-    so the quadkey prefix-nesting property is itself value-checked."""
+    rolled up from zoom 6 in one level-exploded aggregation (one corpus
+    scan); the oracle computes every zoom DIRECTLY from raw rows so the
+    quadkey prefix-nesting property is itself value-checked."""
     from geohash_dotnet_spark.operators.rollup import tile_pyramid
 
     return tile_pyramid(_pages(spark, sf_dir), max_z=6)

@@ -229,8 +229,8 @@ def main() -> None:
           lambda: hilbert_shards(pg, order=8, n_shards=64).collect())
 
     # q12 (added r5; headline estimator untouched): adaptive quadtree
-    # refinement to p4 — one corpus agg + the reused-exchange ladder +
-    # broadcast frontier cascade
+    # refinement to p4 — one corpus agg + one level-exploded
+    # aggregation over p1..p4 prefixes and a parent-count window
     from geohash_dotnet_spark.operators.adaptive import adaptive_cells
     timed("q12_adaptive_cells_p4",
           lambda: adaptive_cells(pg, base_precision=1, max_precision=4,

@@ -77,6 +77,6 @@ class Quantum:
 
 
 MICRO = Quantum(1_000_000)  # 6-dp values, value sums, micro-degrees
-MILLI = Quantum(1_000)      # millimetres (site spans, link distances)
+MILLI = Quantum(1_000)      # millimetres (site spans)
 DEG4 = Quantum(10_000)      # 1e-4 degree (~11 m) grid; squares fit BIGINT
-METRE = Quantum(1)          # whole metres for summed great-circle legs
+METRE = Quantum(1)          # whole metres: summed trip and link legs

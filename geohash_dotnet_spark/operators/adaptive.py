@@ -10,20 +10,15 @@ renders, per-tile models) is balanced by construction — the same idea
 as geohash-dotnet's auto-precision RadiusHasher (src/RadiusHasher.cs),
 applied to a population histogram instead of a radius.
 
-Spark plan (scale story):
-- ONE corpus aggregation at ``max_precision`` builds the leaf-count
-  table — the only operator that ever touches the corpus. Everything
-  after runs on aggregated cell tables (≤ min(N, 32^max_precision)
-  rows).
-- Coarser-level counts re-aggregate the leaf table finest-first
-  (the rollup-ladder shape from operators/rollup.py — Catalyst reuses
-  the leaf Exchange across levels).
-- Refinement is a frontier cascade: level k candidates are the level-k
-  cells whose parent SPLIT at k-1. The split frontier is broadcast:
-  every split cell holds > ``threshold`` points, so by pigeonhole
-  |frontier| <= N / threshold (at 10^12 pages and threshold 10^6
-  that is <= 10^6 rows) — the broadcast is bounded by the caller's
-  threshold, not by the corpus.
+Spark plan (scale story): ONE corpus aggregation at ``max_precision``
+builds the leaf-count table — the only operator that ever touches the
+corpus. Every level is a pure function of the leaf key (level-k cell =
+length-k prefix), so each leaf row is exploded into its
+``base_precision..max_precision`` prefixes and ONE ``groupBy(level,
+cell)`` counts every level at once; the parent's count is a window sum
+over ``(level, parent prefix)``. The plan has three Exchanges whatever
+the depth, and every stage after the first runs on aggregated cell
+tables (<= (max - base + 1) * min(N, 32^max_precision) rows).
 
 Emission rule (what the output MEANS): a cell is emitted at the
 smallest level >= ``base_precision`` where its population is <=
@@ -33,16 +28,20 @@ threshold). Emitted cells partition the populated space: every point
 lies in exactly one emitted cell, so ``sum(n_pages)`` equals the
 corpus row count (asserted in tests).
 
-The DuckDB twin verifies with a DIFFERENT algorithm: per max-precision
-leaf cell it picks the emission ancestor in closed form (the smallest
-ancestor level whose count fits — valid because ancestor counts are
-monotone non-increasing in depth), then de-duplicates. Cascade vs
-closed form agreeing is the check.
+Because ancestor counts never increase with depth, a cell is emitted
+exactly when it fits (or sits at ``max_precision``) and its parent
+does not fit (or it sits at ``base_precision``).
+
+The DuckDB twin verifies with a DIFFERENT formulation: per
+max-precision leaf cell it picks the emission ancestor (the smallest
+ancestor level whose count fits) through one join per level, then
+de-duplicates. Per-cell rule vs per-leaf ancestor pick agreeing is the
+check.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.native import with_geohash
@@ -65,37 +64,18 @@ def adaptive_cells(df: DataFrame, lat: str = "lat", lon: str = "lon",
 
     pg = with_geohash(df, lat, lon, max_precision, out="__gh")
     leaf = pg.groupBy("__gh").agg(F.count(F.lit(1)).alias("n"))
-
-    # count ladder, finest-first so each level re-aggregates the previous
-    # (leaf Exchange reused; the corpus is scanned exactly once)
-    levels = {max_precision: leaf.select(F.col("__gh").alias("cell"), "n")}
-    for k in range(max_precision - 1, base_precision - 1, -1):
-        levels[k] = (levels[k + 1]
-                     .groupBy(F.substring("cell", 1, k).alias("cell"))
-                     .agg(F.sum("n").alias("n")))
-
-    thr = F.lit(int(threshold)).cast("long")
-
-    def _emit(d: DataFrame, k: int) -> DataFrame:
-        return d.select("cell", F.lit(k).cast("int").alias("level"),
-                        F.col("n").cast("long").alias("n_pages"))
-
-    cur = levels[base_precision]
-    if base_precision == max_precision:
-        return _emit(cur, base_precision)
-    out = _emit(cur.filter(F.col("n") <= thr), base_precision)
-    frontier = cur.filter(F.col("n") > thr).select("cell")
-    for k in range(base_precision + 1, max_precision + 1):
-        cand = levels[k].join(
-            F.broadcast(frontier.select(F.col("cell").alias("__p"))),
-            F.substring("cell", 1, k - 1) == F.col("__p"),
-            "left_semi")
-        if k == max_precision:
-            out = out.unionByName(_emit(cand, k))
-        else:
-            out = out.unionByName(_emit(cand.filter(F.col("n") <= thr), k))
-            frontier = cand.filter(F.col("n") > thr).select("cell")
-    return out
+    levels = F.sequence(F.lit(base_precision), F.lit(max_precision))
+    counts = (leaf.select("__gh", "n", F.explode(levels).alias("level"))
+              .groupBy("level", F.expr("substr(__gh, 1, level)").alias("cell"))
+              .agg(F.sum("n").alias("n_pages")))
+    parent_n = F.sum("n_pages").over(Window.partitionBy(
+        "level", F.expr("substr(cell, 1, level - 1)")))
+    thr = F.lit(int(threshold))
+    lv = F.col("level")
+    return (counts.withColumn("__parent_n", parent_n)
+            .filter(((F.col("n_pages") <= thr) | (lv == max_precision))
+                    & ((lv == base_precision) | (F.col("__parent_n") > thr)))
+            .select("cell", "level", "n_pages"))
 
 
 def adaptive_cells_sql(tagged_max_sql: str, base_precision: int = 1,

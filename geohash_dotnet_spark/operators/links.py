@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import MICRO, MILLI
+from ..functions.exact import METRE, MICRO
 from .dedup import md5_60bit, md5_60bit_sql
 
 __all__ = ["extract_links", "extract_links_sql",
@@ -389,10 +389,10 @@ def link_locality(df: DataFrame, html: str = "html", url: str = "url",
     Cross-engine determinism: the band id buckets the micro-meter
     fixed-point distance (the distance_bands discipline — band edges
     are 6 decimal orders above libm trig wobble), while the per-band
-    MEAN distance sums MILLIMETER-quantized legs (the trip_stats
-    discipline: floor units at 1e-3 m sit above the wobble of long
-    legs) into an exact decimal(38,0)/HUGEINT before one shared IEEE
-    division tree — bit-identical on any layout, any cluster size.
+    MEAN distance sums whole-metre legs (``exact.METRE``, the trip_stats
+    discipline: sub-metre ticks sit within reach of the cross-engine
+    trig wobble) into an exact decimal(38,0)/HUGEINT before one shared
+    IEEE division tree — bit-identical on any layout, any cluster size.
 
     Scale shape (100 TB design point): extraction is a pure codegen
     projection (the html payload dies in the scan stage — only
@@ -424,15 +424,15 @@ def link_locality(df: DataFrame, html: str = "html", url: str = "url",
     fpd = MICRO.ticks(d)
     band = F.least(F.floor(fpd / F.lit(float(band_m * MICRO.scale))),
                    F.lit(int(n_bands))).cast("int")
-    mm = MILLI.ticks(d)
     return (src.join(dst, "link")
-            .select(band.alias("band"), mm.alias("__mm"), "src_url")
+            .select(band.alias("band"), METRE.ticks(d).alias("__m"),
+                    "src_url")
             .groupBy("band")
             .agg(F.count(F.lit(1)).alias("n_links"),
                  F.countDistinct("src_url").alias("n_src_urls"),
-                 MICRO.round((F.sum(F.col("__mm").cast("decimal(38,0)"))
+                 MICRO.round((F.sum(F.col("__m").cast("decimal(38,0)"))
                               .cast("double") / F.count(F.lit(1)).cast("double"))
-                             / F.lit(1000000.0)).alias("mean_km")))
+                             / F.lit(1000.0)).alias("mean_km")))
 
 
 def link_locality_sql(pages_html_inner: str, pages_inner: str,
@@ -441,7 +441,7 @@ def link_locality_sql(pages_html_inner: str, pages_inner: str,
     ``html_s``, two url-equality joins against the pages table for the
     source/target coordinates (the Spark side carries source coords
     through the explode instead — url -> (lat, lon) is functional, so
-    the values agree), same fixed-point band and mm-exact mean."""
+    the values agree), same fixed-point band and whole-metre mean."""
     from ..functions.oracle import haversine_sql
 
     ex = extract_links_sql(pages_html_inner)
@@ -449,15 +449,14 @@ def link_locality_sql(pages_html_inner: str, pages_inner: str,
     fpd = MICRO.ticks_sql(d)
     band = (f"CAST(least(floor({fpd} / {float(band_m * MICRO.scale)!r}), "
             f"{int(n_bands)}) AS INT)")
-    mm = MILLI.ticks_sql(d)
-    mean = MICRO.round_sql("(CAST(sum(mm) AS DOUBLE) / CAST(count(*) AS DOUBLE))"
-                           " / 1000000.0")
+    mean = MICRO.round_sql("(CAST(sum(m) AS DOUBLE) / CAST(count(*) AS DOUBLE))"
+                           " / 1000.0")
     return f"""
 SELECT band, CAST(count(*) AS BIGINT) AS n_links,
        CAST(count(DISTINCT src_url) AS BIGINT) AS n_src_urls,
        {mean} AS mean_km
 FROM (
-  SELECT {band} AS band, {mm} AS mm, e.url AS src_url
+  SELECT {band} AS band, {METRE.ticks_sql(d)} AS m, e.url AS src_url
   FROM ({ex}) e
   JOIN ({pages_inner}) p1 ON e.url = p1.url
   JOIN ({pages_inner}) p2 ON e.link = p2.url

@@ -22,8 +22,10 @@ only the BELOW-k cells of the level beneath — each such cell holds
 < k rows' worth of count, and there are at most 32× fewer cells per
 level, so the ladder's data volume shrinks geometrically; the union
 output is assembled without any driver loop state, collect(), or
-cache. This mirrors time_rollup's aggregate-from-the-finer-level
-discipline (rollup.py), with a filter splitting each rung.
+cache. Unlike time_rollup, tile_pyramid and adaptive_cells (ONE
+level-exploded aggregation; each level a function of the leaf key),
+the residual at level L depends on which cells were emitted at level
+L+1, so it has no closed form and each rung reads the one beneath it.
 
 Counts are exact BIGINTs end to end — bit-identical on any layout,
 any cluster size, and in the DuckDB unrolled-CTE replay.

@@ -1,20 +1,18 @@
-"""Hypertable-style continuous rollup: one time-series aggregated at a
-ladder of granularities (minute -> hour -> day), each coarser level
-computed FROM the next finer level, never from the raw events.
+"""Hypertable-style continuous rollup: one time series aggregated at a
+ladder of granularities (minute -> hour -> day), every level from ONE
+finest-level aggregate, never from the raw events again.
 
-The TimescaleDB continuous-aggregate idea expressed as DataFrame
-algebra: the minute aggregate is the only operator that touches the
-corpus; the hour level re-aggregates |minutes| rows and the day level
-|hours| rows. Catalyst's exchange-reuse then makes the sharing
-physical: the three union branches contain an identical minute-level
-Exchange subtree, so the executed plan scans the source ONCE and wires
-the coarser aggregations off a ReusedExchange (plan-asserted in
-tests). At 100 TB the raw scan happens once; everything above it is
-kilobytes-to-megabytes of bucket rows.
+The TimescaleDB continuous-aggregate idea as DataFrame algebra: the
+finest-level aggregate is the only operator that touches the corpus.
+Each coarser bucket is a pure function of the finest one, so every
+finest-level row explodes into one (level, bucket) pair per level and
+ONE ``groupBy(level, bucket)`` aggregates all levels — two Exchanges
+at any depth (plan-asserted in tests), and only bucket rows cross the
+second. :func:`tile_pyramid` is the same shape over quadkey prefixes.
 
 Portability: value sums are fixed-point micros (``exact.MICRO`` ticks
 summed as BIGINT) — exact, order-independent, and re-aggregable, so
-"day from hours" is bit-identical to "day from raw events", which is
+"day from minutes" is bit-identical to "day from raw events", which is
 exactly what the DuckDB twin (direct GROUP BY per level from the raw
 table) verifies.
 """
@@ -32,34 +30,55 @@ __all__ = ["time_rollup", "time_rollup_sql", "tile_pyramid",
            "tile_pyramid_sql", "tile_freshness", "tile_freshness_sql"]
 
 
+_UNITS = ("microsecond", "millisecond", "second", "minute", "hour", "day",
+          "week", "month", "quarter", "year")  # date_trunc, finest first
+
+
+def _check_levels(levels: Sequence[str]) -> None:
+    """Raise unless ``levels`` is a non-empty ladder of ``_UNITS``, each
+    strictly coarser than the one before and nested in it (a unit nests
+    in every later one, except that weeks straddle months and years)."""
+    if not levels:
+        raise ValueError("levels is empty: name at least one date_trunc unit")
+    prev = None
+    for lv in levels:
+        u = str(lv).lower()
+        if u not in _UNITS:
+            raise ValueError(f"level {lv!r} is not a date_trunc unit "
+                             f"({', '.join(_UNITS)})")
+        if prev and (prev == "week" or _UNITS.index(u) <= _UNITS.index(prev)):
+            raise ValueError(f"level {lv!r} is not strictly coarser than "
+                             f"{prev!r} and nested in it")
+        prev = u
+
+
 def time_rollup(df: DataFrame, ts: str = "ts", value: str = "value",
                 levels: Sequence[str] = ("minute", "hour", "day"),
                 ) -> DataFrame:
-    """Rollup ladder -> (level, bucket, n, sum_value_us) with each
-    coarser level aggregated from the finer one. ``levels`` must be
-    ordered finest-first and each must be a valid ``date_trunc`` unit
-    that nests into the next (minute ⊂ hour ⊂ day ⊂ ...)."""
-    vfp = MICRO.ticks(F.col(value))
-    cur = (df.groupBy(F.date_trunc(levels[0], F.col(ts)).alias("bucket"))
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(vfp).alias("sum_value_us")))
-    out = cur.select(F.lit(levels[0]).alias("level"), "bucket", "n",
-                     "sum_value_us")
-    for lv in levels[1:]:
-        cur = (cur.groupBy(F.date_trunc(lv, F.col("bucket")).alias("bucket"))
-               .agg(F.sum("n").alias("n"),
-                    F.sum("sum_value_us").alias("sum_value_us")))
-        out = out.unionByName(
-            cur.select(F.lit(lv).alias("level"), "bucket", "n",
-                       "sum_value_us"))
-    return out
+    """Rollup ladder -> (level, bucket, n, sum_value_us) from one
+    aggregation at ``levels[0]`` and one level-exploded aggregation.
+    ``levels`` are ``date_trunc`` units, finest first, each nesting
+    into the next (minute ⊂ hour ⊂ day ⊂ ...); else ValueError."""
+    _check_levels(levels)
+    leaf = (df.groupBy(F.date_trunc(levels[0], F.col(ts)).alias("bucket"))
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(MICRO.ticks(F.col(value))).alias("sum_value_us")))
+    lv = F.explode(F.array(*[
+        F.struct(F.lit(u).alias("level"),
+                 F.date_trunc(u, F.col("bucket")).alias("bucket"))
+        for u in levels]))
+    return (leaf.select(lv.alias("__lv"), "n", "sum_value_us")
+            .groupBy("__lv.level", "__lv.bucket")
+            .agg(F.sum("n").alias("n"),
+                 F.sum("sum_value_us").alias("sum_value_us")))
 
 
 def time_rollup_sql(inner: str, ts: str = "ts", value: str = "value",
                     levels: Sequence[str] = ("minute", "hour", "day"),
                     ) -> str:
     """DuckDB twin: each level aggregated DIRECTLY from the raw rows —
-    verifying that rollup-from-finer-level equals rollup-from-raw."""
+    verifying that rollup-from-the-finest-level equals rollup-from-raw."""
+    _check_levels(levels)
     vfp = MICRO.ticks_sql(value)
     parts = [
         (f"SELECT '{lv}' AS level, date_trunc('{lv}', {ts}) AS bucket, "
@@ -74,9 +93,9 @@ def time_rollup_sql(inner: str, ts: str = "ts", value: str = "value",
 def tile_pyramid(df, lat: str = "lat", lon: str = "lon",
                  max_z: int = 8) -> DataFrame:
     """Web-map tile pyramid: page counts per quadkey at EVERY zoom
-    0..max_z, each coarser zoom aggregated from the next finer one
-    (the spatial analogue of :func:`time_rollup` — same exchange-reuse
-    ladder, corpus scanned once).
+    0..max_z, from one quadkey count at ``max_z`` exploded into its
+    prefixes and aggregated once per (zoom, prefix) — the spatial
+    analogue of :func:`time_rollup`; two Exchanges at any ``max_z``.
 
     Valid because quadkeys nest dyadically: the zoom-z quadkey is the
     length-z prefix of the zoom-max_z quadkey (tile_x floors a scaled
@@ -93,17 +112,12 @@ def tile_pyramid(df, lat: str = "lat", lon: str = "lon",
 
     if not (1 <= max_z <= 20):
         raise ValueError(f"max_z must be in [1, 20], got {max_z}")
-    t = with_tiles(df, lat, lon, z=max_z)
-    cur = t.groupBy("quadkey").agg(F.count(F.lit(1)).alias("n_pages"))
-    out = cur.select(F.lit(max_z).cast("int").alias("z"), "quadkey",
-                     "n_pages")
-    for z in range(max_z - 1, -1, -1):
-        cur = (cur.groupBy(F.substring("quadkey", 1, z).alias("quadkey"))
-               .agg(F.sum("n_pages").alias("n_pages")))
-        out = out.unionByName(
-            cur.select(F.lit(z).cast("int").alias("z"), "quadkey",
-                       "n_pages"))
-    return out
+    leaf = (with_tiles(df, lat, lon, z=max_z).groupBy("quadkey")
+            .agg(F.count(F.lit(1)).alias("n")))
+    zs = F.explode(F.sequence(F.lit(0), F.lit(max_z))).alias("z")
+    return (leaf.select("quadkey", "n", zs)
+            .groupBy("z", F.expr("substr(quadkey, 1, z)").alias("quadkey"))
+            .agg(F.sum("n").alias("n_pages")))
 
 
 def tile_pyramid_sql(inner: str, lat: str = "lat", lon: str = "lon",

@@ -1,8 +1,10 @@
 """Adaptive quadtree cell refinement (operators/adaptive.py)."""
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from geohash_dotnet_spark.functions.oracle import pages_tagged_sql
 from geohash_dotnet_spark.operators.adaptive import (adaptive_cells,
                                                      adaptive_cells_sql)
 from geohash_dotnet_spark.sources.pages import pages
@@ -87,16 +89,38 @@ def test_validation():
         adaptive_cells(None, threshold=0)
 
 
-def test_single_corpus_scan_via_exchange_reuse(spark):
-    """Every ladder level and every emission branch hangs off the SAME
-    max-precision leaf aggregation: AQE must wire all but one branch to
-    a ReusedExchange, so the corpus is scanned once, not once per
-    level."""
+@pytest.mark.parametrize("base,mx,thr",
+                         [(1, 5, 1), (2, 6, 3), (3, 3, 5), (1, 4, 8)])
+def test_matches_duckdb_twin_deep_and_offset(spark, pg, base, mx, thr):
+    """Deep, offset and single-level ladders equal the twin's per-leaf
+    ancestor pick, and the emitted cells still partition the corpus."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{SF}/documents.parquet'")
+    got = sorted(tuple(r) for r in adaptive_cells(
+        pg, base_precision=base, max_precision=mx, threshold=thr).collect())
+    exp = sorted(con.execute(adaptive_cells_sql(
+        pages_tagged_sql(mx), base_precision=base, max_precision=mx,
+        threshold=thr)).fetchall())
+    assert got == exp
+    assert sum(r[2] for r in got) == pg.count()
+
+
+def test_exchange_count_independent_of_depth(spark):
+    """One leaf aggregation, one level-exploded aggregation and the
+    parent-count window: the final plan has the same (at most three)
+    Exchanges at max 3 and max 5, no per-level branch (Union,
+    ReusedExchange, broadcast frontier), and scans the corpus once."""
     spark.catalog.clearCache()  # cached-pages substitution hides the scan
-    out = adaptive_cells(pages(spark, SF), threshold=8, base_precision=1,
-                         max_precision=3)
-    out.collect()  # AQE finalizes on execution
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("Initial Plan")[0]
-    assert final.count("ReusedExchange") >= 2
-    assert final.count("Scan parquet") == 1  # matches "FileScan parquet" too
+    counts = []
+    for mx in (3, 5):
+        out = adaptive_cells(pages(spark, SF), threshold=8,
+                             base_precision=1, max_precision=mx)
+        out.collect()  # AQE finalizes on execution
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("Initial Plan")[0]
+        for node in ("ReusedExchange", "BroadcastExchange", "Union"):
+            assert node not in final
+        assert final.count("Scan parquet") == 1  # matches "FileScan parquet"
+        counts.append(final.count("Exchange hashpartitioning"))
+    assert counts[0] == counts[1] <= 3

@@ -2,10 +2,16 @@
 
 from datetime import datetime, timedelta
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from geohash_dotnet_spark.functions.oracle import pages_sql
 from geohash_dotnet_spark.operators import time_rollup
+from geohash_dotnet_spark.operators.rollup import (tile_pyramid,
+                                                   tile_pyramid_sql,
+                                                   time_rollup_sql)
+from geohash_dotnet_spark.sources.pages import pages
 
 
 def _ts(s):
@@ -39,17 +45,60 @@ def test_rollup_known_values(rolled):
     assert levels == {"minute": 4, "hour": 3, "day": 2}
 
 
-def test_rollup_reuses_exchanges_single_scan(spark, sf_small):
-    """Each coarser level must read the finer level's exchange, not the
-    source: final plan = ONE FileScan + a ReusedExchange per extra
-    level."""
+def _final_plan(df):
+    df.collect()  # AQE finalizes the plan on execution
+    return df._jdf.queryExecution().executedPlan().toString().split(
+        "Initial Plan")[0]
+
+
+def _exchanges_single_scan(final):
+    """Exchange count of a one-scan plan with no per-level branches."""
+    for node in ("ReusedExchange", "BroadcastExchange", "Union"):
+        assert node not in final
+    assert final.count("Scan parquet") == 1  # matches "FileScan parquet"
+    return final.count("Exchange hashpartitioning")
+
+
+def test_rollup_exchange_count_independent_of_levels(spark, sf_small):
+    """The finest-level aggregation plus ONE level-exploded aggregation:
+    the same (at most two) Exchanges for 2 and 4 levels, one scan."""
     ev = spark.read.parquet(f"{sf_small}/events.parquet")
-    r = time_rollup(ev)
-    r.collect()  # AQE finalizes the plan on execution
-    plan = r._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("Initial Plan")[0]
-    assert final.count("ReusedExchange") == 2
-    assert final.count("Scan parquet") + final.count("FileScan") <= 2
+    n2, n4 = (_exchanges_single_scan(_final_plan(time_rollup(ev, levels=lv)))
+              for lv in (("minute", "hour"),
+                         ("minute", "hour", "day", "month")))
+    assert n2 == n4 <= 2
+
+
+@pytest.mark.parametrize("levels,bad", [
+    ((), "empty"),
+    (("hour", "minute"), "'minute'"),      # finer after coarser
+    (("minute", "minute"), "'minute'"),    # not strictly coarser
+    (("minute", "bogus"), "'bogus'"),      # not a date_trunc unit
+    (("day", "week", "month"), "'month'"),  # weeks straddle months
+])
+def test_rollup_rejects_bad_levels(levels, bad):
+    """Both twins refuse a ladder whose levels do not nest, naming the
+    offending unit, before touching the input."""
+    with pytest.raises(ValueError, match=bad):
+        time_rollup(None, levels=levels)
+    with pytest.raises(ValueError, match=bad):
+        time_rollup_sql("SELECT 1", levels=levels)
+
+
+def test_rollup_matches_duckdb_twin_six_levels(spark, sf_small):
+    """second..year from one second-level aggregate equals the twin's
+    direct GROUP BY per level; every level accounts for every event."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    levels = ("second", "minute", "hour", "day", "month", "year")
+    ev = spark.read.parquet(f"{sf_small}/events.parquet")
+    got = sorted(tuple(r) for r in time_rollup(ev, levels=levels).collect())
+    exp = sorted(duckdb.connect().execute(time_rollup_sql(
+        f"SELECT ts, value FROM '{sf_small}/events.parquet'",
+        levels=levels)).fetchall())
+    assert got == exp
+    n = ev.count()
+    for lv in levels:
+        assert sum(r[2] for r in got if r[0] == lv) == n
 
 
 def test_tile_pyramid_known_values(spark):
@@ -89,17 +138,28 @@ def test_tile_pyramid_matches_direct_assignment(spark, sf_small):
         assert {k: v for k, v in out.items() if k[0] == z} == direct
 
 
-def test_tile_pyramid_reuses_exchanges_single_scan(spark, sf_small):
-    from geohash_dotnet_spark.operators.rollup import tile_pyramid
-    from geohash_dotnet_spark.sources.pages import pages
+@pytest.mark.parametrize("max_z", [1, 8])
+def test_tile_pyramid_matches_duckdb_twin(spark, sf_small, max_z):
+    """Prefix rollup equals the twin's direct per-zoom assignment, and
+    every zoom accounts for every page."""
+    pg = pages(spark, sf_small)
+    got = sorted(tuple(r) for r in tile_pyramid(pg, max_z=max_z).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{sf_small}/documents.parquet'")
+    exp = sorted(con.execute(tile_pyramid_sql(pages_sql(), max_z=max_z))
+                 .fetchall())
+    assert got == exp
+    n = pg.count()
+    for z in range(max_z + 1):
+        assert sum(r[2] for r in got if r[0] == z) == n
 
+
+def test_tile_pyramid_exchange_count_independent_of_zoom(spark, sf_small):
     spark.catalog.clearCache()
-    r = tile_pyramid(pages(spark, sf_small), max_z=4)
-    r.collect()
-    plan = r._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("Initial Plan")[0]
-    assert final.count("ReusedExchange") >= 3  # zooms 3..0 reuse below
-    assert final.count("Scan parquet") == 1
+    n2, n6 = (_exchanges_single_scan(_final_plan(
+        tile_pyramid(pages(spark, sf_small), max_z=z))) for z in (2, 6))
+    assert n2 == n6 <= 2
 
 
 def test_tile_pyramid_validation():
