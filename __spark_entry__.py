@@ -24,8 +24,12 @@ from pyspark.sql import functions as F  # noqa: E402
 from geohash_dotnet_spark.functions import with_geohash  # noqa: E402
 from geohash_dotnet_spark.functions.exact import MICRO  # noqa: E402
 from geohash_dotnet_spark.functions.native import (  # noqa: E402
+    gh_bbox,
     gh_children,
+    gh_decode,
     gh_is_valid,
+    gh_neighbor,
+    gh_neighbors,
     haversine_m,
 )
 from geohash_dotnet_spark.functions.oracle import (  # noqa: E402
@@ -39,12 +43,6 @@ from geohash_dotnet_spark.functions.oracle import (  # noqa: E402
     pages_sql,
     pages_tagged_sql,
     tagged_select_sql,
-)
-from geohash_dotnet_spark.functions.udfs import (  # noqa: E402
-    gh_bbox,
-    gh_decode,
-    gh_neighbor,
-    gh_neighbors,
 )
 from geohash_dotnet_spark.kernels import compress as kcompress  # noqa: E402
 from geohash_dotnet_spark.kernels import cover_circle, cover_polygon  # noqa: E402

@@ -1,25 +1,23 @@
 """gh_* Spark column-function family.
 
-Native (JVM, whole-stage codegen) where expressible; Arrow pandas UDFs
-otherwise. ``oracle`` holds the DuckDB SQL twins used by the driver's
-correctness gate.
+Native (JVM, whole-stage codegen); the point-in-polygon refine is an
+Arrow pandas UDF. ``oracle`` holds the DuckDB SQL twins that the
+correctness checks compare against.
 """
 
 from .native import (  # noqa: F401
     geocode_from_url,
+    gh_bbox,
     gh_children,
+    gh_decode,
     gh_is_valid,
+    gh_neighbor,
+    gh_neighbors,
     gh_parent,
     gh_truncate,
     haversine_m,
     with_geohash,
 )
-from .udfs import (  # noqa: F401
-    gh_bbox,
-    gh_decode,
-    gh_neighbor,
-    gh_neighbors,
-    point_in_polygon,
-)
+from .udfs import point_in_polygon  # noqa: F401
 from . import oracle  # noqa: F401
 from . import precision  # noqa: F401

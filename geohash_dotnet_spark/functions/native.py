@@ -24,6 +24,18 @@ about 0.3 s, on a 4-core VM), and every cold start pays for it.
 ``with_geohash`` runs as *staged selects* (clamp/normalize, grid index,
 base-32 ``concat``) so each intermediate is an attribute reference,
 keeping the Catalyst expression tree small.
+
+The cell functions (``gh_decode``, ``gh_bbox``, ``gh_neighbor(s)``) and
+``operators/compress.py`` are rendered from one packed cell key
+(``cell_key_sql``: the left-aligned 60-bit lon-first interleave, the S2
+``CellId`` layout without its sentinel bit): ``conv`` reads a cell as a
+base-32 number, its base-4 digits de-interleave into the grid indices,
+neighbours are carry arithmetic on the key, and ``cell_sql`` renders a
+key back to base 32. They match kernels/geohash.py bit for bit, raise
+its error messages and run no Python: a pandas UDF is one Python task
+per partition, and each task pays PySpark's per-task
+``importlib.invalidate_caches()`` (0.26 s a call in a worker on a 4-core
+VM), more than the arithmetic costs.
 """
 
 from __future__ import annotations
@@ -33,10 +45,11 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.geohash import _check_precision
+from ..kernels.geohash import DIRECTIONS, PARSE_ERRORS, _check_precision, _offset
 
 BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-_VALID_RE = "^[0-9bcdefghjkmnpqrstuvwxyzBCDEFGHJKMNPQRSTUVWXYZ]{1,12}$"
+# \z, not $: a Java regex $ also matches before a final line terminator
+_VALID_RE = "^[0-9bcdefghjkmnpqrstuvwxyzBCDEFGHJKMNPQRSTUVWXYZ]{1,12}\\z"
 
 EARTH_RADIUS_M = 6_371_008.8
 
@@ -120,6 +133,149 @@ def with_geohash(df: DataFrame, lat: str, lon: str, precision: int,
     staged = df.withColumns(exprs(normalized)).withColumns(exprs(indexed))
     temporaries = [name for name, _ in normalized + indexed]
     return staged.withColumn(out, F.expr(concat)).drop(*temporaries)
+
+
+# ---------------------------------------------------------------------------
+# packed cell key: the left-aligned 60-bit lon-first interleave
+# ---------------------------------------------------------------------------
+
+# conv()'s base-32 digits: it reads them in either case and writes them
+# in upper case. ``translate`` maps both cases of a cell's characters to
+# them, as ``lower`` would first cost a cold ICU load (about 2 s)
+_CONV32 = "0123456789abcdefghijklmnopqrstuv"
+_CELL_CHARS = BASE32 + BASE32[10:].upper()
+_CELL_DIGITS = _CONV32 + _CONV32[10:]
+_BAD_CHAR_RE = "[^0-9b-hjkmnp-zB-HJKMNP-Z]"
+# latitude and longitude bit positions of a key, and its 60 bits
+_LAT_BITS = 0x0555555555555555
+_LNG_BITS = 0x0AAAAAAAAAAAAAAA
+_KEY_BITS = (1 << 60) - 1
+_LAT_UNIT = sql_double(180.0 / (1 << 30))
+_LNG_UNIT = sql_double(360.0 / (1 << 30))
+
+
+def cell_key_sql(g: str) -> str:
+    """Packed key of a cell ``g``: its 5 bits a character, left-aligned
+    to 60 bits, so a cell of length L is the key interval
+    ``[key, key + 2^(5(12-L)))``.
+
+    For a ``g`` the kernel rejects, the key raises the kernel's
+    ``PARSE_ERRORS``, in the kernel's order: it is a CASE that is 0 or
+    an error, plus the key of the characters. Every cell function reads
+    ``g``'s characters only through this key, and nothing else it does
+    raises on any string, so a rejected cell yields the kernel's error
+    and no output. The CASE is an addend, not a branch around the key:
+    Catalyst shares subexpressions only outside conditional branches."""
+    null, too_long, bad_char = PARSE_ERRORS
+    return (f"CASE WHEN {g} IS NULL OR {g} = '' THEN raise_error('{null}') "
+            f"WHEN length({g}) > 12 THEN raise_error('{too_long}') "
+            f"WHEN {g} RLIKE '{_BAD_CHAR_RE}' THEN raise_error('{bad_char}') "
+            f"ELSE 0L END + CAST(conv(translate(rpad({g}, 12, '0'), "
+            f"'{_CELL_CHARS}', '{_CELL_DIGITS}'), 32, 10) AS BIGINT)")
+
+
+def cell_sql(key: str, length: str) -> str:
+    """The base-32 cell of ``length`` characters at a packed key."""
+    return (f"substr(translate(lpad(conv({key}, 10, 32), 12, '0'), "
+            f"'{_CONV32.upper()}', '{BASE32}'), 1, {length})")
+
+
+def _bounds_sql(g: str) -> tuple[str, str, str, str]:
+    """(min_lat, min_lng, max_lat, max_lng): the kernel's dyadic
+    ``bounding_box`` arithmetic, term for term, on the left-aligned
+    30-bit grid indices. In the key's base-4 digits each digit is one
+    (lon, lat) bit pair; ``translate`` keeps one bit of each."""
+    quads = f"conv({cell_key_sql(g)}, 10, 4)"
+    lat, lng = (f"CAST(conv(translate({quads}, '0123', '{keep}'), 2, 10) AS BIGINT)"
+                for keep in ("0101", "0011"))
+    min_lat = f"-90.0D + {lat} * {_LAT_UNIT}"
+    min_lng = f"-180.0D + {lng} * {_LNG_UNIT}"
+    return (min_lat, min_lng,
+            f"{min_lat} + 180.0D / shiftleft(1L, shiftright(5 * length({g}), 1))",
+            f"{min_lng} + 360.0D / shiftleft(1L, shiftright(5 * length({g}) + 1, 1))")
+
+
+def _neighbor_key_sql(g: str, d_lat: int, d_lng: int) -> str:
+    """Key of the cell ``d_lat`` rows and ``d_lng`` columns from ``g``,
+    by carry arithmetic on the interleaved key (kernel ``_shifted``):
+    latitude clamps at the poles, longitude wraps across the
+    antimeridian. ``u`` and ``v`` are the cell's lowest latitude and
+    longitude bits; setting the other axis' bits to 1 carries an add
+    past them, clearing them borrows a subtract through them."""
+    key, n = cell_key_sql(g), f"5 * least(length({g}), 12)"
+    u = f"shiftleft(1L, 60 - 2 * shiftright({n}, 1))"
+    v = f"shiftleft(1L, 61 - 2 * shiftright({n} + 1, 1))"
+    lat = {0: f"{key} & {_LAT_BITS}",
+           # a carry out of the top row saturates back to the top row
+           1: f"least(({key} | {_LNG_BITS}) + {u}, {_KEY_BITS}) & {_LAT_BITS} & -{u}",
+           -1: f"greatest(({key} & {_LAT_BITS}) - {u}, 0) & {_LAT_BITS}"}[d_lat]
+    lng = {0: f"{key} & {_LNG_BITS}",
+           1: f"({key} | {_LAT_BITS}) + {v} & {_LNG_BITS}",
+           -1: f"({key} & {_LNG_BITS}) - {v} & {_LNG_BITS}"}[d_lng]
+    return f"{lat} | {lng}"
+
+
+@lru_cache(maxsize=256)
+def _decode_sql(g: str) -> str:
+    min_lat, min_lng, max_lat, max_lng = _bounds_sql(g)
+    return (f"named_struct('lat', ({min_lat} + ({max_lat})) * 0.5D, "
+            f"'lon', ({min_lng} + ({max_lng})) * 0.5D)")
+
+
+@lru_cache(maxsize=256)
+def _bbox_sql(g: str) -> str:
+    names = ("min_lat", "min_lng", "max_lat", "max_lng")
+    return "named_struct(" + ", ".join(
+        f"'{n}', {b}" for n, b in zip(names, _bounds_sql(g))) + ")"
+
+
+@lru_cache(maxsize=256)
+def _neighbor_sql(g: str, d_lat: int, d_lng: int) -> str:
+    return cell_sql(_neighbor_key_sql(g, d_lat, d_lng), f"length({g})")
+
+
+@lru_cache(maxsize=256)
+def _neighbors_sql(g: str) -> str:
+    return "array(" + ", ".join(
+        _neighbor_sql(g, *_offset(d)) for d in DIRECTIONS) + ")"
+
+
+def _cell_column(render, gh: Column) -> Column:
+    """The cell function ``render`` (Spark SQL text of a cell expression)
+    applied to ``gh``. A column reference goes into the text, which runs
+    under whole-stage codegen, where Catalyst computes the key and grid
+    indices that the outputs share once per row. Any other expression is
+    bound to a lambda parameter, which Spark evaluates interpreted."""
+    node = gh._jc.node()
+    if node.getClass().getSimpleName() == "UnresolvedAttribute":
+        parts = node.nameParts().mkString("\0").split("\0")
+        return F.expr(render(".".join(map(sql_name, parts))))
+    return F.call_function("transform", F.array(gh),
+                           F.expr(f"__gh -> {render('__gh')}"))[0]
+
+
+def gh_decode(gh: Column) -> Column:
+    """Cell center -> struct<lat:double, lon:double>
+    (src/Geohasher.cs:108-112)."""
+    return _cell_column(_decode_sql, gh)
+
+
+def gh_bbox(gh: Column) -> Column:
+    """Exact cell bounds -> struct<min_lat,min_lng,max_lat,max_lng>."""
+    return _cell_column(_bbox_sql, gh)
+
+
+def gh_neighbors(gh: Column) -> Column:
+    """All 8 neighbors as array<string> in N,NE,E,SE,S,SW,W,NW order
+    (src/Geohasher.cs:158-165)."""
+    return _cell_column(_neighbors_sql, gh)
+
+
+def gh_neighbor(gh: Column, direction: str) -> Column:
+    """Single-direction neighbor (src/Geohasher.cs:151-155). An unknown
+    ``direction`` raises ValueError here, before any job runs."""
+    d_lat, d_lng = _offset(direction)
+    return _cell_column(lambda g: _neighbor_sql(g, d_lat, d_lng), gh)
 
 
 def gh_parent(gh: Column) -> Column:

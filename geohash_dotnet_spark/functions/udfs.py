@@ -1,11 +1,13 @@
-"""Arrow-vectorized pandas UDFs wrapping the NumPy kernels.
+"""The point-in-polygon refine as an Arrow-vectorized pandas UDF.
 
-These cover the operations that are awkward as native SQL expressions
-(string -> bit de-interleave, 8-way neighbor offsets, point-in-polygon
-refine). Each Arrow batch goes through whole-array NumPy passes with no
-Python loop over rows; the only per-element work left is the conversion
-to and from Python objects at the Arrow boundary (``to_numpy(object)``,
-``tolist()``).
+The cell functions (decode, bbox, neighbours) are JVM expressions over
+the packed cell key in functions/native.py: a pandas UDF is one Python
+task per partition, and each such task pays a fixed worker cost
+(PySpark's per-task ``importlib.invalidate_caches()`` re-reads the
+pyspark zip) that costs more than the cell arithmetic. This refine
+stays in Python: each Arrow batch goes through the whole-array NumPy
+even-odd test below, with no Python loop over rows. zonal_stats runs
+the same test, in the same IEEE operation order, as a JVM expression.
 """
 
 from __future__ import annotations
@@ -13,57 +15,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..kernels import geohash as GK
 from ..kernels.polygon import parse_wkt, split_antimeridian
-
-
-def gh_decode(gh: Column) -> Column:
-    """Cell center -> struct<lat:double, lon:double>."""
-
-    @pandas_udf("lat double, lon double")
-    def _dec(s: pd.Series) -> pd.DataFrame:
-        lat, lon = GK.decode(s.to_numpy(object))
-        return pd.DataFrame({"lat": lat, "lon": lon})
-
-    return _dec(gh)
-
-
-def gh_bbox(gh: Column) -> Column:
-    """Exact cell bounds -> struct<min_lat,min_lng,max_lat,max_lng>."""
-
-    @pandas_udf("min_lat double, min_lng double, max_lat double, max_lng double")
-    def _bbox(s: pd.Series) -> pd.DataFrame:
-        a, b, c, d = GK.bounding_box(s.to_numpy(object))
-        return pd.DataFrame({"min_lat": a, "min_lng": b, "max_lat": c, "max_lng": d})
-
-    return _bbox(gh)
-
-
-def gh_neighbors(gh: Column) -> Column:
-    """All 8 neighbors as array<string> in N,NE,E,SE,S,SW,W,NW order
-    (src/Geohasher.cs:158-165)."""
-
-    @pandas_udf("array<string>")
-    def _nb(s: pd.Series) -> pd.Series:
-        nb = GK.neighbors(s.to_numpy(object))
-        return pd.Series(np.column_stack(list(nb.values())).tolist())
-
-    return _nb(gh)
-
-
-def gh_neighbor(gh: Column, direction: str) -> Column:
-    """Single-direction neighbor (src/Geohasher.cs:151-155). An unknown
-    ``direction`` raises ValueError here, before any job runs."""
-    GK._offset(direction)
-
-    @pandas_udf("string")
-    def _nb1(s: pd.Series) -> pd.Series:
-        return pd.Series(GK.neighbor(s.to_numpy(object), direction))
-
-    return _nb1(gh)
 
 
 def point_in_polygon(lat: Column, lon: Column, wkt: str) -> Column:

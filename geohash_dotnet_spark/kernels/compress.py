@@ -2,19 +2,18 @@
 
 Semantics of ``/root/reference/src/GeohashCompressor.cs:19-99``:
 
-1. truncate hashes longer than ``max_level``, dedupe, validate;
+1. truncate hashes longer than ``max_level``, validate, lowercase, dedupe;
 2. prune descendants of present ancestors (single pass over the
    ordinally-sorted list);
 3. bottom-up: any parent with all 32 children present replaces them,
    cascading level-by-level down to ``min_level``;
-4. output ordinally sorted.
+4. output lowercase, ordinally sorted.
 
 The output is canonical (the maximal cells among the input and the cells
 of length >= ``min_level`` the input fully covers), so
 compress(A ∪ B) == compress(compress(A) ∪ compress(B)). The distributed
-DataFrame operator (operators/compress.py) leans on that: it runs this
-kernel once per 2-prefix group, then again per 1-prefix group over that
-output; called on a whole cell set, the kernel is also that operator's
+DataFrame operator (operators/compress.py) computes the same covering
+with JVM window passes over packed cell keys; this kernel is its
 independent oracle in tests.
 """
 
@@ -34,12 +33,14 @@ def compress(geohashes, min_level: int = 1, max_level: int = 12) -> list[str]:
         raise ValueError("max_level out of range")
 
     # 1. normalize: skip empties, truncate, validate (garbage would corrupt
-    #    the 32-sibling merge); np.unique below dedupes
+    #    the 32-sibling merge), lowercase so np.unique below dedupes case
+    #    variants of one cell
     cells = np.asarray(list(geohashes), dtype=object)
     cells = cells[cells.astype(bool)].astype(f"U{max_level}")
     _parse_valid(cells)
     if not len(cells):
         return []
+    cells = np.char.lower(cells)
 
     # 2. ancestor prune over the ordinal sort: any kept prefix of the current
     #    element is exactly the last kept element

@@ -219,16 +219,23 @@ def _parse(geohashes):
     return lat, lng, lengths, ok
 
 
+# the reference's three cell-string errors, in the order it checks them
+# (src/Geohasher.cs:225-238); functions/native.py raises the same text
+PARSE_ERRORS = ("Geohash must not be null or empty.",
+                f"Geohash length cannot exceed {MAX_PRECISION}.",
+                "Invalid character in geohash.")
+
+
 def _parse_valid(geohashes):
-    """``_parse`` that raises the reference's errors, in its order
-    (src/Geohasher.cs:225-238); returns ``(lat, lng, lengths)``."""
+    """``_parse`` that raises ``PARSE_ERRORS`` in order; returns
+    ``(lat, lng, lengths)``."""
     lat, lng, lengths, ok = _parse(geohashes)
     if (lengths == 0).any():
-        raise ValueError("Geohash must not be null or empty.")
+        raise ValueError(PARSE_ERRORS[0])
     if (lengths > MAX_PRECISION).any():
-        raise ValueError(f"Geohash length cannot exceed {MAX_PRECISION}.")
+        raise ValueError(PARSE_ERRORS[1])
     if not ok.all():
-        raise ValueError("Invalid character in geohash.")
+        raise ValueError(PARSE_ERRORS[2])
     return lat, lng, lengths
 
 

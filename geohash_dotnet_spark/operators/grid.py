@@ -20,7 +20,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..functions.native import gh_bbox, with_geohash
 from ..kernels.geohash import MAX_PRECISION, lat_lng_steps
 
 
@@ -52,8 +52,6 @@ def cells_to_wkt(df: DataFrame, cell_col: str = "cell",
     cover_polygons (vector -> raster); together they round-trip a tiling:
     cover(cells_to_wkt(c), len(c), intersects) ∋ c (tested).
     """
-    from ..functions.udfs import gh_bbox
-
     b = gh_bbox(F.col(cell_col))
     df = df.withColumn("__b", b)
     p = {k: F.col(f"__b.{k}").cast("string")

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exact import MICRO
-from ..functions.udfs import gh_neighbors
+from ..functions.native import gh_neighbors
 
 __all__ = ["focal_hotspots", "focal_hotspots_sql",
            "moran_i", "moran_i_sql",

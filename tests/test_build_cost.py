@@ -1,13 +1,18 @@
 """Driver-side build cost: the hot-path builders hand each stage to the
 JVM as Spark SQL text, so building a query takes a handful of py4j round
-trips that does not grow with the geohash precision or the number of
-quality-score subexpressions."""
+trips that does not grow with the geohash precision, the number of
+quality-score subexpressions, the cell functions' outputs or the steps
+of compress_cells and zonal membership."""
 
 import contextlib
 
 import pytest
 
-from geohash_dotnet_spark.functions.native import with_geohash
+from pyspark.sql import functions as F
+
+from geohash_dotnet_spark.functions.native import (gh_decode, gh_neighbors,
+                                                   with_geohash)
+from geohash_dotnet_spark.operators import compress_cells, zonal_stats
 from geohash_dotnet_spark.operators.text import with_quality
 from geohash_dotnet_spark.sources.pages import pages
 
@@ -58,3 +63,26 @@ def test_quality_build_round_trips_bounded(spark, pg):
 @pytest.mark.parametrize("replicate", [1, 20])
 def test_pages_build_round_trips_bounded(spark, sf_small, replicate):
     assert _count(spark, lambda: pages(spark, sf_small, replicate)) <= 64
+
+
+@pytest.mark.parametrize("fn", [gh_decode, gh_neighbors])
+def test_cell_function_build_round_trips_bounded(spark, pg, fn):
+    cells = with_geohash(pg, "lat", "lon", 5)
+    assert _count(spark, lambda: cells.select(fn(F.col("gh")))) <= 40
+
+
+@pytest.mark.parametrize("group_cols", [None, ["lang"]])
+def test_compress_build_round_trips_bounded(spark, pg, group_cols):
+    """One text select list per step: the count grows with the group
+    columns named in each list, not with the step's expressions."""
+    cells = with_geohash(pg, "lat", "lon", 5)
+    assert _count(spark, lambda: compress_cells(
+        cells, cell_col="gh", group_cols=group_cols)) <= 256
+
+
+def test_zonal_build_round_trips_bounded(spark, pg):
+    """Most of these build the broadcast covering from pandas; the
+    membership is one parse (one py4j call a node made it 581)."""
+    zones = [("a", "POLYGON((0 40, 22 41, 18 56, 1 54, 0 40))"),
+             ("b", "POLYGON((170 -10, -172 -12, -168 5, 175 8, 170 -10))")]
+    assert _count(spark, lambda: zonal_stats(pg, zones, 3)) <= 200

@@ -1,11 +1,14 @@
-"""Query-side cell algebra: ``compress_cells`` (two grouped kernel passes)
-and ``zonal_stats`` (JVM boundary membership) against their exact
-references, and the plan shapes that keep both to one pass."""
+"""Query-side cell algebra: ``compress_cells`` (window passes over packed
+cell keys), the cell functions and ``zonal_stats`` (JVM boundary
+membership) against their exact references, and the plan shapes that
+keep them Python-free and to one pass."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from geohash_dotnet_spark.functions import (gh_bbox, gh_decode, gh_neighbor,
+                                            gh_neighbors)
 from geohash_dotnet_spark.functions.udfs import point_in_polygon
 from geohash_dotnet_spark.kernels import children as kchildren
 from geohash_dotnet_spark.kernels import compress as kcompress
@@ -37,6 +40,7 @@ def _cases():
                   4).tolist()
     return [
         ["9", "9q", "9qz", "dr"],                        # 1-prefix ancestor
+        ["dr5", "dr5", "dr5r", "DR5", "9Q", "9q", "9QZ"],  # duplicates, case
         [g for c in kchildren("y") for g in kchildren(c)],   # cascade to "y"
         [g for c in kchildren("tdn") for g in kchildren(c)],  # to "tdn"
         rand + kchildren("tdnu2") + ["b", "bc1"],
@@ -50,6 +54,20 @@ def test_two_pass_compress_matches_kernel(spark, min_level):
         got = sorted(r["cell"] for r in
                      compress_cells(df, min_level=min_level).collect())
         assert got == kcompress(cells, min_level=min_level), f"case {i}"
+
+
+@pytest.mark.parametrize("max_level", [1, 2])
+def test_compress_truncates_to_max_level(spark, max_level):
+    cells = ["9q", "9R", "9qz", "dr5", "d"]
+    df = spark.createDataFrame([(c,) for c in cells], "cell string")
+    got = sorted(r["cell"] for r in
+                 compress_cells(df, max_level=max_level).collect())
+    assert got == kcompress(cells, max_level=max_level)
+
+
+def test_kernel_compress_lowercases_case_variants():
+    assert kcompress(["9Q", "9q", "9QZ"]) == ["9q"]
+    assert kcompress(["DR5", "dr5r"], min_level=3) == ["dr5"]
 
 
 @pytest.mark.parametrize("min_level", [1, 2, 3])
@@ -66,11 +84,23 @@ def test_two_pass_compress_grouped_matches_kernel(spark, min_level):
 
 
 @pytest.mark.parametrize("group_cols", [None, ["gid"]])
-def test_compress_cells_is_two_kernel_passes_without_joins(spark, group_cols):
+def test_compress_cells_is_window_passes_without_python_or_joins(
+        spark, group_cols):
+    """One shuffle per (group, 2-prefix) window, one per (group,
+    1-prefix) window; no Python node, no join."""
     df = spark.createDataFrame([(0, "9q"), (1, "dr")], "gid int, cell string")
     plan = _executed(compress_cells(df, group_cols=group_cols))
-    assert plan.count("FlatMapGroupsInPandas") == 2, plan
-    assert "Join" not in plan, plan
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "Join"):
+        assert node not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+def test_cell_functions_are_python_free(spark):
+    df = spark.createDataFrame([("dr5reg",)], "cell string")
+    c = F.col("cell")
+    for col in (gh_decode(c), gh_bbox(c), gh_neighbors(c), gh_neighbor(c, "n")):
+        plan = _executed(df.select(col))
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 # ---------------------------------------------------------------------------

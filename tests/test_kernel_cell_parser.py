@@ -1,5 +1,7 @@
 """The one cell-string parser behind decode, bounding_box, neighbors,
-is_valid and compress, checked against slow per-cell oracles.
+is_valid and compress, checked against slow per-cell oracles; and the
+JVM cell functions (functions/native.py, the packed-key renderer)
+checked against those kernels on the same corpus.
 
 The oracles are the algorithms the kernels used before they shared a
 parser: a per-cell bit de-interleave for the bounds, and re-encoding the
@@ -9,7 +11,11 @@ centre moved by one cell height/width for a neighbour
 
 import numpy as np
 import pytest
+from pyspark.errors import PySparkException
+from pyspark.sql import functions as F
 
+from geohash_dotnet_spark.functions import (gh_bbox, gh_decode, gh_is_valid,
+                                            gh_neighbor, gh_neighbors)
 from geohash_dotnet_spark.kernels import compress
 from geohash_dotnet_spark.kernels import geohash as K
 
@@ -126,3 +132,50 @@ def test_non_strings_are_null():
 def test_unknown_direction_names_the_accepted_ones():
     with pytest.raises(ValueError, match="Unknown direction 'up'.*northeast"):
         K.neighbor(["dr5"], "up")
+
+
+# ---------------------------------------------------------------------------
+# JVM cell functions against the kernels
+# ---------------------------------------------------------------------------
+
+def test_jvm_cell_functions_match_kernel(spark, ragged_cells):
+    """Decode, bbox, all 8 neighbours and gh_neighbor per direction on
+    the ragged corpus (poles: bounce; +-180 columns: wrap; uppercase),
+    through a column reference and through any other expression."""
+    df = spark.createDataFrame([(g,) for g in ragged_cells.tolist()], "g string")
+    c = F.col("g")
+    rows = df.select(
+        "g", gh_decode(c).alias("d"), gh_bbox(c).alias("b"),
+        gh_neighbors(c).alias("nb"),
+        gh_neighbors(F.concat(c, F.lit(""))).alias("nb_expr"),
+        *[gh_neighbor(c, d).alias(d) for d in K.DIRECTIONS]).collect()
+    cells = np.array([r["g"] for r in rows], dtype=object)
+    lat, lng = K.decode(cells)
+    assert np.array_equal(lat, [r["d"]["lat"] for r in rows])
+    assert np.array_equal(lng, [r["d"]["lon"] for r in rows])
+    assert np.array_equal(np.column_stack(K.bounding_box(cells)),
+                          [tuple(r["b"]) for r in rows])
+    want = K.neighbors(cells)
+    table = np.column_stack([want[d] for d in K.DIRECTIONS]).tolist()
+    assert [r["nb"] for r in rows] == table
+    assert [r["nb_expr"] for r in rows] == table
+    for d in K.DIRECTIONS:
+        assert [r[d] for r in rows] == want[d].tolist()
+
+
+@pytest.mark.parametrize("bad,message", BAD_INPUTS + [
+    ("dr5a" + "0" * 9, TOO_LONG)])  # the kernel checks length first
+def test_jvm_cell_functions_raise_kernel_errors(spark, bad, message):
+    df = spark.createDataFrame([("dr5reg",), (bad,)], "g string")
+    for fn in (gh_decode, gh_bbox, gh_neighbors, lambda c: gh_neighbor(c, "n")):
+        with pytest.raises(PySparkException, match=message):
+            df.select(fn(F.col("g"))).collect()
+
+
+def test_jvm_is_valid_matches_kernel(spark, ragged_cells):
+    """Including a trailing newline, which a Java regex ``$`` accepts."""
+    cells = ragged_cells.tolist()[:50] + [
+        "dr5\n", "dr5\r\n", "", "0123456789bcd", "dr5a", "a?b", "dr5é"]
+    df = spark.createDataFrame([(g,) for g in cells], "g string")
+    got = [r[0] for r in df.select(gh_is_valid(F.col("g"))).collect()]
+    assert got == K.is_valid(np.array(cells, dtype=object)).tolist()

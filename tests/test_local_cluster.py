@@ -42,15 +42,21 @@ assert len(rows) > 0
 assert out.columns == ["tile1", "lang", "n_pages", "avg_quality"]
 assert sum(r["n_pages"] for r in rows) > 0
 
-from geohash_dotnet_spark.functions.udfs import gh_decode
+from geohash_dotnet_spark.functions import gh_decode
+from geohash_dotnet_spark.functions.udfs import point_in_polygon
 from geohash_dotnet_spark.operators import cover_polygons
-cov = cover_polygons(
-    spark, [("box", "POLYGON((10 50, 15 50, 15 53, 10 53, 10 50))", 4,
-             "intersects")])
+box = "POLYGON((10 50, 15 50, 15 53, 10 53, 10 50))"
+# cover_polygons' mapInPandas and point_in_polygon's pandas UDF run
+# package code in the executors' Python workers
+cov = cover_polygons(spark, [("box", box, 4, "intersects")])
 assert cov.count() > 0
 dec = cov.withColumn("d", gh_decode(F.col("cell")))
-r = dec.agg(F.min("d.lat"), F.max("d.lat")).collect()[0]
+west = "POLYGON((10 50, 12.5 50, 12.5 53, 10 53, 10 50))"
+r = dec.agg(F.min("d.lat"), F.max("d.lat"),
+            F.count_if(point_in_polygon(F.col("d.lat"), F.col("d.lon"), west)),
+            F.count(F.lit(1))).collect()[0]
 assert 49.0 < r[0] < 54.0 and 49.0 < r[1] < 54.0
+assert 0 < r[2] < r[3], r
 spark.stop()
 print("CLUSTER_SMOKE_OK")
 """
@@ -87,14 +93,14 @@ spark.sparkContext.setLogLevel("ERROR")
 # package from this shipped zip (no PYTHONPATH on the executor side)
 spark.sparkContext.addPyFile(zip_path)
 
-from geohash_dotnet_spark.functions.udfs import gh_decode
+from geohash_dotnet_spark.functions.udfs import point_in_polygon
 from geohash_dotnet_spark.sources.pages import pages
 pg = pages(spark, "/root/testdata/sf0.001")
-from geohash_dotnet_spark.functions import with_geohash
-dec = (with_geohash(pg, "lat", "lon", 5)
-       .withColumn("d", gh_decode(F.col("gh"))))   # Arrow UDF -> needs
-r = dec.agg(F.count("d.lat"), F.min("d.lat")).collect()[0]  # executor import
-assert r[0] == 500 and -90.0 <= r[1] <= 90.0, r
+# a pandas UDF: the executors' Python workers import the package
+inside = point_in_polygon(F.col("lat"), F.col("lon"),
+                          "POLYGON((-90 -60, 90 -60, 90 60, -90 60, -90 -60))")
+r = pg.agg(F.count(F.lit(1)), F.count_if(inside)).collect()[0]
+assert r[0] == 500 and 0 < r[1] < 500, r
 spark.stop()
 print("PYFILES_SMOKE_OK")
 """
@@ -102,7 +108,7 @@ print("PYFILES_SMOKE_OK")
 
 def test_pyfiles_zip_ships_package_to_executors():
     """spark-submit --py-files analogue: the package zip added via
-    addPyFile must satisfy executor-side imports for Arrow UDF kernels
+    addPyFile must satisfy executor-side imports for the pandas UDF
     with NO PYTHONPATH reaching the executor Python workers."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
