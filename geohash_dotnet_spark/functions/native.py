@@ -45,7 +45,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.geohash import DIRECTIONS, PARSE_ERRORS, _check_precision, _offset
+from ..kernels.geohash import (DIRECTIONS, NAN_ERROR, PARSE_ERRORS, _check_precision,
+                               _offset)
 
 BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 # \z, not $: a Java regex $ also matches before a final line terminator
@@ -90,12 +91,18 @@ def _encode_stages(lat: str, lon: str, precision: int) -> tuple:
     total = 5 * precision
     n_lat_bits = total // 2
     n_lng_bits = (total + 1) // 2
-    # clamp latitude, wrap longitude into [-180, 180) (src/Geohasher.cs:213-219)
+    # clamp latitude, wrap longitude in C# order (src/Geohasher.cs:213-219:
+    # truncating %, then + 360 only below zero); NaN raises the kernel's
+    # error
+    lat_d, lon_d = (f"CAST({sql_name(c)} AS DOUBLE)" for c in (lat, lon))
+    nan = f"raise_error('{NAN_ERROR}')"
+    r = f"({lon_d} + 180.0D) % 360.0D"
     normalized = (
-        ("__gh_lat", f"greatest(least(CAST({sql_name(lat)} AS DOUBLE), 90.0D), "
-                     f"-90.0D)"),
-        ("__gh_lon", f"pmod(CAST({sql_name(lon)} AS DOUBLE) + 180.0D, 360.0D) "
-                     f"- 180.0D"),
+        ("__gh_lat", f"CASE WHEN isnan({lat_d}) THEN {nan} "
+                     f"ELSE greatest(least({lat_d}, 90.0D), -90.0D) END"),
+        ("__gh_lon", f"CASE WHEN isnan({lon_d}) THEN {nan} "
+                     f"WHEN {r} < 0.0D THEN {r} + 360.0D - 180.0D "
+                     f"ELSE {r} - 180.0D END"),
     )
     indexed = (
         ("__gh_lat_i", _grid_index_sql("`__gh_lat`", -90.0,
@@ -114,7 +121,13 @@ def _encode_stages(lat: str, lon: str, precision: int) -> tuple:
                 src, bit = "`__gh_lat_i`", n_lat_bits - 1 - (j - 1) // 2
             digit += f" + (shiftright({src}, {bit}) & 1) * {1 << (4 - k)}"
         chars.append(f"substr('{BASE32}', CAST({digit} + 1 AS INT), 1)")
-    return normalized, indexed, "concat(" + ", ".join(chars) + ")"
+    # a NULL coordinate has no cell. The guard sits on the inputs, not on
+    # the indices (least/greatest would skip a NULL): a filter or join
+    # on the cell then pushes down as this condition alone, while a
+    # nullable index would inline every stage into the pushed filter
+    concat = "concat(" + ", ".join(chars) + ")"
+    return (normalized, indexed,
+            f"CASE WHEN {lat_d} IS NOT NULL AND {lon_d} IS NOT NULL THEN {concat} END")
 
 
 def exprs(stage) -> dict:
@@ -133,6 +146,18 @@ def with_geohash(df: DataFrame, lat: str, lon: str, precision: int,
     staged = df.withColumns(exprs(normalized)).withColumns(exprs(indexed))
     temporaries = [name for name, _ in normalized + indexed]
     return staged.withColumn(out, F.expr(concat)).drop(*temporaries)
+
+
+def with_geohash_key(df: DataFrame, lat: str, lon: str, precision: int,
+                     out: str = "gh") -> DataFrame:
+    """``with_geohash`` for the key of streaming state: rows with no cell
+    (a NULL coordinate) are dropped and ``out`` stays non-nullable. Spark
+    refuses to resume a checkpoint whose state key changed nullability,
+    and ``out`` was non-nullable when NULL coordinates still got a cell."""
+    g = with_geohash(df, lat, lon, precision, out).filter(F.col(out).isNotNull())
+    # the optimizer pushes the filter below the encode, which leaves the
+    # column nullable; the coalesce never takes its ''
+    return g.withColumn(out, F.coalesce(F.col(out), F.lit("")))
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,8 @@ geohash formulation, so cells/tiles/join rows match bit-for-bit.
 
 from __future__ import annotations
 
+from ..kernels.geohash import NAN_ERROR
+
 BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
@@ -27,8 +29,12 @@ def clamp_lat_sql(x: str) -> str:
 
 
 def normalize_lon_sql(x: str) -> str:
-    # positive-safe mod into [-180, 180)
-    return f"(((CAST({x} AS DOUBLE) + 180.0) % 360.0 + 360.0) % 360.0 - 180.0)"
+    """Longitude wrap in the kernel's C# order: truncating ``%``, then 360
+    added only to a negative remainder (kernels.geohash.normalize_longitude).
+    Adding 360 to every remainder would round a longitude one ulp below a
+    cell edge onto the edge."""
+    r = f"(CAST({x} AS DOUBLE) + 180.0) % 360.0"
+    return f"CASE WHEN {r} < 0.0 THEN {r} + 360.0 - 180.0 ELSE {r} - 180.0 END"
 
 
 def grid_index_sql(x: str, lo: float, step: float, n: int) -> str:
@@ -62,8 +68,10 @@ def gh_char_sql(lat_i: str, lng_i: str, precision: int, c: int) -> str:
 
 
 def gh_concat_sql(lat_i: str, lng_i: str, precision: int) -> str:
-    chars = [gh_char_sql(lat_i, lng_i, precision, c) for c in range(precision)]
-    return "concat(" + ", ".join(chars) + ")"
+    """The cell string; NULL when an index is (``||`` propagates NULL,
+    DuckDB's ``concat`` skips it)."""
+    return " || ".join(gh_char_sql(lat_i, lng_i, precision, c)
+                       for c in range(precision))
 
 
 def tagged_select_sql(inner_sql: str, precision: int, lat: str = "lat",
@@ -76,11 +84,19 @@ def tagged_select_sql(inner_sql: str, precision: int, lat: str = "lat",
     n_lng_bits = (total + 1) // 2
     lat_step = 180.0 / (1 << n_lat_bits)
     lng_step = 360.0 / (1 << n_lng_bits)
-    norm = (f"SELECT {keep}, {clamp_lat_sql(lat)} AS __lat_n, "
-            f"{normalize_lon_sql(lon)} AS __lon_n FROM ({inner_sql})")
-    idx = (f"SELECT {keep}, "
-           f"{grid_index_sql('__lat_n', -90.0, lat_step, 1 << n_lat_bits)} AS __lat_i, "
-           f"{grid_index_sql('__lon_n', -180.0, lng_step, 1 << n_lng_bits)} AS __lng_i "
+    # NaN raises the kernel's error; NULL stays NULL through every stage
+    # (greatest/least would skip it, so the index is guarded)
+    lat_d = f"CAST({lat} AS DOUBLE)"
+    nan = f"error('{NAN_ERROR}')"
+    norm = (f"SELECT {keep}, CASE WHEN isnan({lat_d}) THEN {nan} "
+            f"WHEN {lat_d} > 90.0 THEN 90.0 WHEN {lat_d} < -90.0 THEN -90.0 "
+            f"ELSE {lat_d} END AS __lat_n, "
+            f"CASE WHEN isnan(CAST({lon} AS DOUBLE)) THEN {nan} "
+            f"ELSE {normalize_lon_sql(lon)} END AS __lon_n FROM ({inner_sql})")
+    idx = (f"SELECT {keep}, CASE WHEN __lat_n IS NOT NULL THEN "
+           f"{grid_index_sql('__lat_n', -90.0, lat_step, 1 << n_lat_bits)} END AS __lat_i, "
+           f"CASE WHEN __lon_n IS NOT NULL THEN "
+           f"{grid_index_sql('__lon_n', -180.0, lng_step, 1 << n_lng_bits)} END AS __lng_i "
            f"FROM ({norm})")
     return (f"SELECT {keep}, {gh_concat_sql('__lat_i', '__lng_i', precision)} AS {out} "
             f"FROM ({idx})")

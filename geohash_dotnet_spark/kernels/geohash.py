@@ -60,16 +60,22 @@ _OFFSETS.update({
 })
 
 
-def normalize_longitude(lng):
-    """Wrap longitude into [-180, 180). -185 -> 175, 185 -> -175.
+# raised for a NaN coordinate by encode and by both SQL encoders
+# (functions/native.py, functions/oracle.py)
+NAN_ERROR = "Coordinates must not be NaN."
 
-    Mirrors src/Geohasher.cs:213-219 (C# ``%`` is truncating remainder,
-    hence the explicit negative fix-up there; ``np.mod`` already flooring).
+
+def normalize_longitude(lng):
+    """Wrap longitude into [-180, 180]. -185 -> 175, 185 -> -175.
+
+    Mirrors src/Geohasher.cs:213-219: C# ``%`` truncates, then 360 is
+    added to a negative remainder (``np.mod`` does both). That sum rounds,
+    so a longitude at most half an ulp of 360 below -180 (such as
+    -180.00000000000003) wraps to 180.0, which encodes in the last cell.
+    ``functions.native`` and ``functions.oracle`` render the same order.
     """
     lng = np.asarray(lng, dtype=np.float64)
-    out = np.mod(lng + 180.0, 360.0)
-    # np.mod(x, 360) is in [0, 360); C# logic lands in the same range.
-    return out - 180.0
+    return np.mod(lng + 180.0, 360.0) - 180.0
 
 
 def clamp_latitude(lat):
@@ -134,7 +140,7 @@ def encode_ints(lat, lng, precision: int = 6) -> np.ndarray:
     lat = np.atleast_1d(np.asarray(lat, dtype=np.float64))
     lng = np.atleast_1d(np.asarray(lng, dtype=np.float64))
     if np.isnan(lat).any() or np.isnan(lng).any():
-        raise ValueError("Coordinates must not be NaN.")
+        raise ValueError(NAN_ERROR)
 
     lat = clamp_latitude(lat)
     lng = normalize_longitude(lng)

@@ -8,7 +8,6 @@ from .coverage import (  # noqa: F401
 )
 from .compress import compress_cells  # noqa: F401
 from .spatial_join import (  # noqa: F401
-    auto_salted_join,
     rect_overlap_join,
     salted_join,
     spatial_join,

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..functions.native import sql_name, with_geohash
 from ..functions.udfs import point_in_polygon
 
 
@@ -29,6 +29,22 @@ def tag_pages(pages_df: DataFrame, precision: int, lat: str = "lat",
               lon: str = "lon", out: str = "gh") -> DataFrame:
     """Key a point table by its geohash cell (JVM-native encode)."""
     return with_geohash(pages_df, lat, lon, precision, out)
+
+
+def cell_join(tagged: DataFrame, cov: DataFrame, how: str = "inner",
+              gh_col: str = "gh") -> DataFrame:
+    """``tagged.join(broadcast(cov), on=gh_col, how=how)`` for ``how`` in
+    inner, left, left_semi and left_anti, keyed on the cell with NULL as
+    ''; the cell keeps its place among ``tagged``'s columns. A NULL cell
+    matches no covering cell either way, but on the nullable cell the
+    optimizer infers an ``isnotnull`` filter and pushes it down through
+    every encode stage, which doubled the flagship's planning time
+    (0.07 -> 0.14 s on a 4-core VM)."""
+    key = "__cell_key"
+    return (tagged.withColumn(key, F.expr(f"coalesce({sql_name(gh_col)}, '')"))
+            .join(F.broadcast(cov.withColumnRenamed(gh_col, key)),
+                  on=key, how=how)
+            .drop(key))
 
 
 def spatial_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
@@ -44,7 +60,9 @@ def spatial_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
         tag_pages(pages_df, precision, out=gh_col)
     cov = coverage_df.withColumnRenamed("cell", gh_col) \
         if "cell" in coverage_df.columns else coverage_df
-    return tagged.join(F.broadcast(cov), on=gh_col, how=how)
+    out = cell_join(tagged, cov, how, gh_col)
+    # the USING-join column order: the cell first
+    return out.select(gh_col, *[c for c in out.columns if c != gh_col])
 
 
 def spatial_join_refined(pages_df: DataFrame, polygon_id: str, wkt: str,
@@ -81,37 +99,6 @@ def salted_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
         "__salt", F.col("__salt").cast("int"))
     out = tagged.join(cov, on=[gh_col, "__salt"], how="inner")
     return out.drop("__salt")
-
-
-def auto_salted_join(pages_df: DataFrame, coverage_df: DataFrame,
-                     precision: int, hot_factor: float = 4.0,
-                     salt: int = 16, gh_col: str = "gh") -> DataFrame:
-    """Adaptive skew handling for the *shuffle* join regime (coverage too
-    large to broadcast): a cheap count pre-pass finds hot cells (page
-    count > hot_factor x mean), which join salted; the cold remainder
-    joins un-salted. Row counts are identical to the plain join.
-
-    This is the SURVEY §4.3 pre-pass + selective-salting design: salting
-    everything multiplies the coverage x``salt`` for no benefit on the
-    long tail; salting nothing leaves one reducer owning a dense urban
-    tile at 100TB scale.
-    """
-    tagged = pages_df if gh_col in pages_df.columns else \
-        tag_pages(pages_df, precision, out=gh_col)
-    cov = coverage_df.withColumnRenamed("cell", gh_col) \
-        if "cell" in coverage_df.columns else coverage_df
-
-    counts = tagged.groupBy(gh_col).agg(F.count(F.lit(1)).alias("__n"))
-    mean = counts.agg(F.avg("__n")).collect()[0][0] or 0.0
-    hot = counts.filter(F.col("__n") > hot_factor * mean).select(gh_col)
-
-    hot_cov = cov.join(F.broadcast(hot), on=gh_col, how="left_semi")
-    cold_cov = cov.join(F.broadcast(hot), on=gh_col, how="left_anti")
-
-    cold_out = tagged.join(cold_cov, on=gh_col, how="inner")
-    hot_out = salted_join(tagged, hot_cov.withColumnRenamed(gh_col, "cell"),
-                          precision, salt=salt, gh_col=gh_col)
-    return cold_out.unionByName(hot_out)
 
 
 def tile_stats(pages_df: DataFrame, precision: int, prefix_len: int | None = None,

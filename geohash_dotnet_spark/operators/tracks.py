@@ -200,7 +200,7 @@ def corridor_join(points: DataFrame, segments: list[tuple],
     refines. The point table never shuffles; segment geometry rides
     the broadcast rows, so the refine needs no second join.
     """
-    from .spatial_join import tag_pages
+    from .spatial_join import cell_join, tag_pages
 
     spark = points.sparkSession
     cand = _corridor_candidates(segments, precision, radius_deg)
@@ -215,7 +215,7 @@ def corridor_join(points: DataFrame, segments: list[tuple],
         "seg_id string, gh string, y1 double, x1 double, "
         "y2 double, x2 double")
     tagged = tag_pages(points, precision, lat=lat, lon=lon)
-    j = tagged.join(F.broadcast(cov), on="gh")
+    j = cell_join(tagged, cov)
     dist = F.expr(_seg_dist_expr(lon, lat, "x1", "y1", "x2", "y2", "D"))
     return (j.withColumn("dist_deg", dist)
             .filter(F.col("dist_deg") <= F.lit(float(radius_deg)))

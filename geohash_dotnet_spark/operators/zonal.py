@@ -58,7 +58,7 @@ from ..functions.exact import MICRO
 from ..functions.native import sql_name
 from ..kernels import bounding_box, cover_polygon
 from ..kernels.polygon import parse_wkt, split_antimeridian
-from .spatial_join import tag_pages
+from .spatial_join import cell_join, tag_pages
 
 __all__ = ["zonal_stats"]
 
@@ -130,8 +130,7 @@ def zonal_stats(df: DataFrame, zones: list[tuple[str, str]],
 
     # membership gates the aggregates rather than a Filter, which Catalyst
     # would fold into the join condition
-    joined = (tag_pages(df, precision, lat=lat, lon=lon)
-              .join(F.broadcast(cov), on="gh")
+    joined = (cell_join(tag_pages(df, precision, lat=lat, lon=lon), cov)
               .withColumn("__member", F.expr(_member_sql(lat, lon))))
 
     aggs = [F.count_if("__member").alias("n_points")]

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..functions.native import with_geohash_key
 
 __all__ = ["streaming_copresence_pairs"]
 
@@ -60,7 +60,7 @@ def streaming_copresence_pairs(spark: SparkSession, source_dir: str,
     if max_cell_users < 2:
         raise ValueError("max_cell_users must be >= 2 (pairs need 2)")
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    tagged = with_geohash(stream, "lat", "lon", precision, out="tile")
+    tagged = with_geohash_key(stream, "lat", "lon", precision, out="tile")
     occ = (tagged
            .withWatermark(ts, watermark)
            .groupBy(F.window(F.col(ts), f"{int(bucket_s)} seconds")

@@ -1,24 +1,12 @@
 """Streaming OD tile flows: movement transitions over a live event
 stream.
 
-The streaming twin of ``operators/flows.tile_flows``: the batch form
-lag-windows each user's full history; a live pipeline must emit a
+The streaming twin of ``operators/flows.tile_flows``: one
 (from_tile, to_tile) transition the moment a user's next event lands in
-a different cell, holding ONLY the user's last seen position — O(1)
-state per user, the canonical ``applyInPandasWithState`` shape.
-
-Ordering contract: within a micro-batch rows are sorted by (event-time,
-tiebreak) before transitions are derived, so any in-batch disorder is
-repaired; ACROSS batches a row older than the user's saved position is
-LATE (its true successor has already been emitted) and is dropped — the
-same decision Spark's own watermarked stateful operators make, applied
-per user. Feed the stream in event-time order (or within one batch) and
-the transition multiset equals the batch operator's exactly — asserted
-by the parity test.
-
-State per user: (last ts_us, last tiebreak, last tile) — one row.
-Inside the update fn everything is NumPy-vectorized per Arrow batch
-(sort + shifted-compare); no per-row Python.
+a different cell, holding only the user's last event (ts_us, tb, tile)
+as state. Ordering and state follow ``_order.ordered_fold``; every
+transition is proven at its own event, so the transition multiset
+equals the batch operator's.
 
 Checkpoint compatibility: the state struct's ``tb`` field takes the
 tiebreak column's native type (long/double/string), so a checkpoint
@@ -35,11 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.native import with_geohash
-from ._order import (drop_unorderable, sort_and_gate,
-                     tiebreak_projection)
+from ._order import changed, ordered_fold
 
 OUT_SCHEMA = ("user string, from_tile string, to_tile string, "
               "move_ts_us long")
+
+
+def _fold(runs):
+    """Each closed run yields the move into its successor."""
+    tile = runs.first("tile")
+    return ({"from_tile": tile[:-1], "to_tile": tile[1:],
+             "move_ts_us": runs.first("ts_us")[1:]}, {})
 
 
 def streaming_tile_flows(spark: SparkSession, source_dir: str, schema: str,
@@ -50,70 +44,13 @@ def streaming_tile_flows(spark: SparkSession, source_dir: str, schema: str,
     """Per-user cell-transition stream: one output row per move, with
     O(1) state per user. Aggregating the output by (from_tile, to_tile)
     reproduces the batch OD matrix (n_moves = count, n_users =
-    countDistinct user) when events arrive in event-time order.
-
-    The tile tag and the (ts, tiebreak) projection run JVM-side before
-    the stateful operator, so Python only ever sees four narrow
-    columns."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    countDistinct user) when events arrive in event-time order."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    g = with_geohash(stream, lat, lon, precision)
-    # native-type tiebreak: integral ids order numerically, matching the
-    # batch window's ORDER BY (string-cast would put '10' before '9')
-    tb_col, tb_type, tb_conv = tiebreak_projection(g, tiebreak)
-    # NTZ-safe: unix_micros rejects TIMESTAMP_NTZ (cast is a no-op for
-    # plain TIMESTAMP; pin the session timezone for NTZ sources)
-    proj = g.select(F.col(user).cast("string").alias("user"),
-                    F.unix_micros(F.col(ts).cast("timestamp"))
-                    .alias("ts_us"),
-                    tb_col,
-                    F.col("gh").alias("tile"))
-    proj = drop_unorderable(proj, tb_type)
-
-    def update(key, pdfs, state: "GroupState"):
-        import numpy as np
-        import pandas as pd
-
-        parts = list(pdfs)
-        pdf = pd.concat(parts) if parts else pd.DataFrame(
-            columns=["user", "ts_us", "tb", "tile"])
-        prev_tile = None
-        pos = None
-        if state.exists:
-            lts, ltb, ltile = state.get
-            prev_tile = ltile
-            pos = (lts, ltb)
-        pdf = sort_and_gate(pdf, pos)
-        if len(pdf) == 0:
-            yield pd.DataFrame(
-                {"user": pd.Series(dtype=object),
-                 "from_tile": pd.Series(dtype=object),
-                 "to_tile": pd.Series(dtype=object),
-                 "move_ts_us": pd.Series(dtype="int64")})
-            return
-        tiles = pdf["tile"].to_numpy(dtype=object)
-        head = tiles[0] if prev_tile is None else prev_tile
-        prev = np.concatenate(([head], tiles[:-1]))
-        moved = prev != tiles
-        out = pd.DataFrame({
-            "user": np.repeat(key[0], int(moved.sum())),
-            "from_tile": prev[moved],
-            "to_tile": tiles[moved],
-            "move_ts_us": pdf["ts_us"].to_numpy()[moved],
-        })
-        last = pdf.iloc[-1]
-        state.update((int(last["ts_us"]), tb_conv(last["tb"]),
-                      str(last["tile"])))
-        yield out
-
-    return (proj.groupBy("user")
-            .applyInPandasWithState(
-                update,
-                outputStructType=OUT_SCHEMA,
-                stateStructType=f"ts_us long, tb {tb_type}, tile string",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    return ordered_fold(
+        with_geohash(stream, lat, lon, precision),
+        F.col(user).cast("string"), ts, tiebreak, {"tile": F.col("gh")},
+        "ts_us long, tb {tb}, tile string", OUT_SCHEMA, changed("tile"),
+        _fold)
 
 
 def flows_from_transitions(transitions: DataFrame) -> DataFrame:

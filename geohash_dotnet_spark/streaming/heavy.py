@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..functions.native import with_geohash_key
 
 OUT_SCHEMA = ("tile string, key string, cnt_est long, err long, "
               "n_total long, seq long")
@@ -59,7 +59,7 @@ def streaming_tile_heavy_hitters(spark: SparkSession, source_dir: str,
         raise ValueError(f"capacity must be >= 1, got {capacity}")
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    g = with_geohash(stream, lat, lon, precision)
+    g = with_geohash_key(stream, lat, lon, precision)
     # NULL keys are excluded from the sketch AND from n_total (filtered
     # JVM-side, stated contract): pandas groupby would silently drop
     # them from counts while still inflating n_total, corrupting the

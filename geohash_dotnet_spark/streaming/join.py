@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import geocode_from_url, with_geohash
+from ..functions.native import geocode_from_url, with_geohash_key
 
 
 def streaming_tile_activity_join(spark: SparkSession, pages_dir: str,
@@ -32,13 +32,13 @@ def streaming_tile_activity_join(spark: SparkSession, pages_dir: str,
     sides watermarked so buffered state ages out."""
     pg = (spark.readStream.schema(pages_schema).parquet(pages_dir)
           .withWatermark("warc_ts", watermark))
-    pg = with_geohash(pg, "lat", "lon", precision, out="tile")
+    pg = with_geohash_key(pg, "lat", "lon", precision, out="tile")
 
     ev = (spark.readStream.schema(events_schema).parquet(events_dir)
           .withColumn("__uid", F.col("user_id").cast("string")))
     ev = geocode_from_url(ev, url="__uid", lat_out="e_lat",
                           lon_out="e_lon")
-    ev = (with_geohash(ev, "e_lat", "e_lon", precision, out="e_tile")
+    ev = (with_geohash_key(ev, "e_lat", "e_lon", precision, out="e_tile")
           .withWatermark("ts", watermark))
 
     cond = ((F.col("tile") == F.col("e_tile"))

@@ -1,30 +1,10 @@
 """Streaming stay-point detection: live dwell/visit mining.
 
-The streaming twin of ``operators/flows.stay_points``: the batch form
-groups each user's full history into maximal same-cell runs; a live
-pipeline must emit a stay the moment the user MOVES to a different cell
-(the run is then provably closed), holding only the current open run —
-O(1) state per user, the same ``applyInPandasWithState`` shape as
-streaming OD flows.
-
-Emission contract (append-mode streaming semantics, stated honestly):
-a stay is emitted when its run CLOSES — i.e. when a later event of the
-same user lands in a different cell. Each user's final, still-open run
-lives in the state store and is never emitted by the stream itself (no
-event can close it); the batch twin, which sees end-of-input, DOES
-close it. Parity is therefore: streaming emissions == batch runs minus
-each user's last run — exactly what the parity test asserts. A
-production pipeline drains open runs with a timeout (GroupStateTimeout)
-or a final batch pass; both are policy, not operator semantics.
-
-Ordering contract (same as streaming flows): within a micro-batch rows
-sort by (event-time, tiebreak); across batches a row at or before the
-user's saved position is LATE and dropped. Fed in event-time order the
-closed-run multiset equals the batch operator's exactly.
-
-State per user: (cell, enter_ts_us, last ts_us, last tiebreak,
-n_points) — one row. The update fn is NumPy-vectorized per Arrow batch
-(sort + shifted-compare + reduceat segment stats); no per-row Python.
+The streaming twin of ``operators/flows.stay_points``: a stay is a
+maximal run of a user's events in one cell, emitted the moment the user
+moves to a different cell. Ordering, emission and state follow
+``_order.ordered_fold``; parity: streaming emissions == batch runs minus
+each user's last run, filtered by the same thresholds.
 """
 
 from __future__ import annotations
@@ -33,8 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.native import with_geohash
-from ._order import (drop_unorderable, sort_and_gate,
-                     tiebreak_projection)
+from ._order import changed, ordered_fold
 
 OUT_SCHEMA = ("user string, cell string, enter_ts_us long, "
               "exit_ts_us long, n_points long")
@@ -47,106 +26,23 @@ def streaming_stay_points(spark: SparkSession, source_dir: str,
                           precision: int = 3, min_dwell_s: int = 0,
                           min_points: int = 2) -> DataFrame:
     """Closed stay-point stream: one output row per qualifying run the
-    moment a different-cell event closes it; O(1) state per user. The
-    tile tag and the (ts, tiebreak) projection run JVM-side, so Python
-    only ever sees four narrow columns."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    moment a different-cell event closes it. State per user: the last
+    event (ts_us, tb, cell) and the open run's (enter_us, n)."""
     min_dwell_us = int(min_dwell_s) * 1_000_000
+
+    def fold(runs):
+        enter = runs.first(runs.seeded("enter_us", runs.rows["ts_us"]))
+        exit_ = runs.last("ts_us")
+        n = runs.sum(runs.seeded("n", 1))
+        ok = ((exit_ - enter)[:-1] >= min_dwell_us) & (n[:-1] >= min_points)
+        return ({"cell": runs.first("cell")[:-1][ok],
+                 "enter_ts_us": enter[:-1][ok], "exit_ts_us": exit_[:-1][ok],
+                 "n_points": n[:-1][ok]},
+                {"enter_us": enter[-1], "n": n[-1]})
+
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    g = with_geohash(stream, lat, lon, precision)
-    # native-type tiebreak: integral ids order numerically, matching the
-    # batch window's ORDER BY (string-cast would put '10' before '9')
-    tb_col, tb_type, tb_conv = tiebreak_projection(g, tiebreak)
-    proj = g.select(F.col(user).cast("string").alias("user"),
-                    F.unix_micros(F.col(ts).cast("timestamp"))
-                    .alias("ts_us"),
-                    tb_col,
-                    F.col("gh").alias("tile"))
-    proj = drop_unorderable(proj, tb_type)
-
-    def _empty_out():
-        import pandas as pd
-
-        return pd.DataFrame(
-            {"user": pd.Series(dtype=object),
-             "cell": pd.Series(dtype=object),
-             "enter_ts_us": pd.Series(dtype="int64"),
-             "exit_ts_us": pd.Series(dtype="int64"),
-             "n_points": pd.Series(dtype="int64")})
-
-    def update(key, pdfs, state: "GroupState"):
-        import numpy as np
-        import pandas as pd
-
-        parts = list(pdfs)
-        pdf = pd.concat(parts) if parts else pd.DataFrame(
-            columns=["user", "ts_us", "tb", "tile"])
-        saved = state.get if state.exists else None
-        if saved is not None:
-            s_cell, s_enter, s_ts, s_tb, s_n = saved
-            pdf = sort_and_gate(pdf, (s_ts, s_tb))
-        else:
-            pdf = sort_and_gate(pdf, None)
-        if len(pdf) == 0:
-            yield _empty_out()
-            return
-
-        tiles = pdf["tile"].to_numpy(dtype=object)
-        ts_us = pdf["ts_us"].to_numpy(dtype=np.int64)
-        new_run = np.ones(len(tiles), dtype=bool)
-        new_run[1:] = tiles[1:] != tiles[:-1]
-        starts = np.flatnonzero(new_run)
-        ends = np.concatenate((starts[1:], [len(tiles)])) - 1
-        cells = tiles[starts]
-        enters = ts_us[starts]
-        exits = ts_us[ends]
-        counts = (ends - starts + 1).astype(np.int64)
-
-        closed_cells, closed_enters, closed_exits, closed_counts = \
-            [], [], [], []
-        if saved is not None:
-            if cells[0] == s_cell:
-                # the open run continues into this batch
-                enters[0] = s_enter
-                counts[0] += s_n
-            else:
-                # a different cell closes the saved run as-is
-                closed_cells.append(s_cell)
-                closed_enters.append(s_enter)
-                closed_exits.append(s_ts)
-                closed_counts.append(s_n)
-        # every run except the batch's last is closed by its successor
-        closed_cells.extend(cells[:-1])
-        closed_enters.extend(enters[:-1])
-        closed_exits.extend(exits[:-1])
-        closed_counts.extend(counts[:-1])
-
-        last = pdf.iloc[-1]
-        state.update((str(cells[-1]), int(enters[-1]),
-                      int(last["ts_us"]), tb_conv(last["tb"]),
-                      int(counts[-1])))
-
-        if not closed_cells:
-            yield _empty_out()
-            return
-        ce = np.asarray(closed_enters, dtype=np.int64)
-        cx = np.asarray(closed_exits, dtype=np.int64)
-        cn = np.asarray(closed_counts, dtype=np.int64)
-        ok = ((cx - ce) >= min_dwell_us) & (cn >= min_points)
-        yield pd.DataFrame({
-            "user": np.repeat(key[0], int(ok.sum())),
-            "cell": np.asarray(closed_cells, dtype=object)[ok],
-            "enter_ts_us": ce[ok],
-            "exit_ts_us": cx[ok],
-            "n_points": cn[ok],
-        })
-
-    return (proj.groupBy("user")
-            .applyInPandasWithState(
-                update,
-                outputStructType=OUT_SCHEMA,
-                stateStructType=("cell string, enter_us long, ts_us long, "
-                                 f"tb {tb_type}, n long"),
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    return ordered_fold(
+        with_geohash(stream, lat, lon, precision),
+        F.col(user).cast("string"), ts, tiebreak, {"cell": F.col("gh")},
+        "cell string, enter_us long, ts_us long, tb {tb}, n long",
+        OUT_SCHEMA, changed("cell"), fold)

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..functions.native import with_geohash_key
 
 
 def streaming_tile_counts(spark: SparkSession, source_dir: str, schema: str,
@@ -26,7 +26,7 @@ def streaming_tile_counts(spark: SparkSession, source_dir: str, schema: str,
     (watermark / window) * live tiles.
     """
     stream = (spark.readStream.schema(schema).parquet(source_dir))
-    tagged = with_geohash(stream, "lat", "lon", precision, out="gh")
+    tagged = with_geohash_key(stream, "lat", "lon", precision)
     return (tagged
             .withWatermark(ts_col, watermark)
             .groupBy(F.window(F.col(ts_col), window).alias("win"),
@@ -52,7 +52,7 @@ def stateful_tile_totals(spark: SparkSession, source_dir: str, schema: str,
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    tagged = with_geohash(stream, "lat", "lon", precision, out="gh")
+    tagged = with_geohash_key(stream, "lat", "lon", precision)
 
     def update(key, pdfs, state: "GroupState"):
         import pandas as pd

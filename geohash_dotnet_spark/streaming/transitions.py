@@ -1,47 +1,37 @@
 """Streaming geofence transitions: live enter/exit alerts.
 
-Composes the two streaming primitives this package already ships — the
-stateless stream-static fence membership join (``streaming/geofence``)
-and the per-user saved-position state machine (``streaming/flows``) —
-into the alert a geofence product actually raises: one row the moment a
-user CROSSES the fence boundary, in either direction.
+One row the moment a user CROSSES the fence boundary, in either
+direction. The fence covering set (cells from cover_polygon/compress)
+is a static DataFrame broadcast into every micro-batch, so membership is
+one boolean column before the stateful fold and the state per user is
+the last event (ts_us, tb, inside): O(1) in both stream length and
+fence complexity. Ordering and state follow ``_order.ordered_fold``.
 
-Unlike stays/trips/anomaly there is NO open-run caveat: a transition is
-proven by the event that lands on the other side of the boundary, so
-every transition is emitted at its own event and parity with the batch
-lag-window twin is FULL equality (asserted by the parity test, not
-"minus the last open run").
-
-Shape: the fence covering set (cells from cover_polygon/compress — the
-reference's own geofence recipe, /root/reference/README.md:58-86) is a
-static DataFrame broadcast into every micro-batch; membership becomes
-one boolean column BEFORE the stateful operator, so state per user is
-three scalars (last ts_us, last tiebreak, inside-flag) — O(1) in both
-stream length and fence complexity. The update fn is the flows
-shifted-compare, NumPy-vectorized per Arrow batch.
-
-Ordering contract (shared via ``_order``): within a micro-batch rows
-sort by (event-time, tiebreak); across batches a row at or before the
-user's saved position is LATE and dropped; rows with no position under
-that order (NULL ts/tiebreak, NaN double tiebreak) are dropped
-JVM-side.
-
+A transition is proven by the event on the other side of the boundary,
+so every transition is emitted at its own event and parity with the
+batch lag-window twin is FULL equality, not "minus the last open run".
 Each user's FIRST event sets the membership baseline and emits nothing
-(the batch twin's lag is NULL there) — an alerting deployment that
-wants "currently inside" at start-up seeds the state by replaying one
-historical event per user.
+(the batch twin's lag is NULL there).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.native import with_geohash
-from ._order import (drop_unorderable, sort_and_gate,
-                     tiebreak_projection)
+from ._order import changed, ordered_fold
 
 OUT_SCHEMA = "user string, event_ts_us long, kind string"
+
+
+def _fold(runs):
+    """Each run after the first starts at a crossing."""
+    inside = runs.first("inside")[1:]
+    return ({"event_ts_us": runs.first("ts_us")[1:],
+             "kind": np.where(inside == 1, "enter", "exit").astype(object)},
+            {})
 
 
 def streaming_geofence_transitions(
@@ -55,61 +45,14 @@ def streaming_geofence_transitions(
     ``fence_cells`` must expose a ``gh`` column at ``precision`` (the
     covering set; membership is cell-granular, the covering's own
     contract)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     stream = spark.readStream.schema(schema).parquet(source_dir)
     g = with_geohash(stream, lat, lon, precision)
-    tb_col, tb_type, tb_conv = tiebreak_projection(g, tiebreak)
     fence = F.broadcast(
         fence_cells.select(F.col("gh").alias("__fence_gh")).distinct()
         .withColumn("__in", F.lit(1)))
     j = g.join(fence, g["gh"] == fence["__fence_gh"], "left")
-    proj = j.select(F.col(user).cast("string").alias("user"),
-                    F.unix_micros(F.col(ts).cast("timestamp"))
-                    .alias("ts_us"),
-                    tb_col,
-                    F.coalesce(F.col("__in"), F.lit(0)).alias("inside"))
-    proj = drop_unorderable(proj, tb_type)
-
-    def update(key, pdfs, state: "GroupState"):
-        import numpy as np
-        import pandas as pd
-
-        parts = list(pdfs)
-        pdf = pd.concat(parts) if parts else pd.DataFrame(
-            columns=["user", "ts_us", "tb", "inside"])
-        prev_in = None
-        pos = None
-        if state.exists:
-            lts, ltb, lin = state.get
-            prev_in = lin
-            pos = (lts, ltb)
-        pdf = sort_and_gate(pdf, pos)
-        if len(pdf) == 0:
-            yield pd.DataFrame(
-                {"user": pd.Series(dtype=object),
-                 "event_ts_us": pd.Series(dtype="int64"),
-                 "kind": pd.Series(dtype=object)})
-            return
-        ins = pdf["inside"].to_numpy(dtype=np.int64)
-        head = ins[0] if prev_in is None else prev_in
-        prev = np.concatenate(([head], ins[:-1]))
-        crossed = prev != ins
-        out = pd.DataFrame({
-            "user": np.repeat(key[0], int(crossed.sum())),
-            "event_ts_us": pdf["ts_us"].to_numpy()[crossed],
-            "kind": np.where(ins[crossed] == 1, "enter", "exit")
-            .astype(object),
-        })
-        last = pdf.iloc[-1]
-        state.update((int(last["ts_us"]), tb_conv(last["tb"]),
-                      int(ins[-1])))
-        yield out
-
-    return (proj.groupBy("user")
-            .applyInPandasWithState(
-                update,
-                outputStructType=OUT_SCHEMA,
-                stateStructType=f"ts_us long, tb {tb_type}, inside int",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    return ordered_fold(
+        j, F.col(user).cast("string"), ts, tiebreak,
+        {"inside": F.coalesce(F.col("__in"), F.lit(0))},
+        "ts_us long, tb {tb}, inside int", OUT_SCHEMA, changed("inside"),
+        _fold)

@@ -18,7 +18,7 @@ from geohash_dotnet_spark.functions import (
     haversine_m,
     with_geohash,
 )
-from geohash_dotnet_spark.functions.oracle import pages_tagged_sql
+from geohash_dotnet_spark.functions.oracle import pages_tagged_sql, tagged_select_sql
 from geohash_dotnet_spark.kernels import geohash as GK
 from geohash_dotnet_spark.kernels import haversine_m as k_haversine
 from geohash_dotnet_spark.operators.spatial_join import spatial_join, tag_pages
@@ -71,7 +71,8 @@ def test_encode_replaces_existing_out_in_place(spark, points_df, out):
     wide = df.select(F.lit("old").alias("gh"), "lat",
                      F.lit(1).alias("z"), "lon")
     got = with_geohash(wide, "lat", "lon", 5, out=out)
-    want = wide.withColumn(out, F.lit(""))
+    # nullable: a NULL coordinate gives a NULL cell
+    want = wide.withColumn(out, F.lit(None).cast("string"))
     assert got.columns == want.columns
     assert got.schema == want.schema
     cells = np.array([r[out] for r in got.collect()])
@@ -111,6 +112,65 @@ def test_duckdb_twin_identical(spark, sf_med):
         assert (s.gh.values == d.gh.values).all()
         assert (s.lat.values == d.lat.values).all()   # bit-identical
         assert (s.lon.values == d.lon.values).all()
+
+
+def _duckdb_cells(pdf, p):
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    return con.sql(f"SELECT gh FROM ({tagged_select_sql('SELECT * FROM pts', p)}) "
+                   f"ORDER BY i").df().gh.values
+
+
+def test_encode_edge_longitudes_agree_in_three_engines(spark):
+    """Every longitude cell edge at p1, and a sample at p5 and p12, with
+    its two ulp neighbours, plus the neighbours of -180 and 180: the
+    kernel, Spark and DuckDB all wrap in C# order (a remainder below zero
+    gets 360, rounding included) and pick the same cell."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    edges = [-180.0 + k * 45.0 for k in range(9)]
+    for bits in (13, 30):
+        n = 1 << bits
+        edges += list(-180.0 + rng.integers(0, n + 1, 64) * (360.0 / n))
+    lon = np.concatenate([edges, np.nextafter(edges, -np.inf),
+                          np.nextafter(edges, np.inf)])
+    lat = np.resize([0.0, 10.0, -45.0], lon.size)
+    pdf = pd.DataFrame({"i": np.arange(lon.size), "lat": lat, "lon": lon})
+    df = spark.createDataFrame(pdf)
+    for p in (1, 5, 12):
+        df = with_geohash(df, "lat", "lon", p, out=f"g{p}")
+    rows = df.orderBy("i").collect()
+    for p in (1, 5, 12):
+        want = GK.encode(lat, lon, p)
+        assert [r[f"g{p}"] for r in rows] == list(want)
+        assert list(_duckdb_cells(pdf, p)) == list(want)
+
+
+def test_encode_null_gives_null_cell_and_nan_raises(spark):
+    """A NULL coordinate has no cell in either SQL engine (greatest/least
+    would skip it and tag a real cell); NaN raises the kernel's error."""
+    import pandas as pd
+
+    rows = [(0, None, None), (1, 10.0, None), (2, None, 10.0), (3, 10.0, 10.0)]
+    df = spark.createDataFrame(rows, "i long, lat double, lon double")
+    pdf = pd.DataFrame(rows, columns=["i", "lat", "lon"])
+    want = [None, None, None, GK.encode([10.0], [10.0], 5)[0]]
+    got = with_geohash(df, "lat", "lon", 5).orderBy("i").collect()
+    assert [r.gh for r in got] == want
+    assert [None if g is None else g for g in _duckdb_cells(pdf, 5)] == want
+    msg = "Coordinates must not be NaN."
+    with pytest.raises(ValueError, match=msg):
+        GK.encode([float("nan")], [10.0], 5)
+    for nan in ((float("nan"), 10.0), (10.0, float("nan"))):
+        bad = spark.createDataFrame([nan], "lat double, lon double")
+        with pytest.raises(Exception, match=msg):
+            with_geohash(bad, "lat", "lon", 5).collect()
+        # a pandas NaN reaches DuckDB as NULL, so the NaN is a SQL literal
+        sql = tagged_select_sql(f"SELECT '{nan[0]}'::DOUBLE AS lat, "
+                                f"'{nan[1]}'::DOUBLE AS lon", 5)
+        with pytest.raises(duckdb.Error, match=msg):
+            duckdb.sql(sql).fetchall()
 
 
 def test_udf_decode_bbox_neighbors(spark):

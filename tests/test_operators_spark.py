@@ -614,25 +614,6 @@ def test_srp_signature_vectorized_twin(spark, sf_med):
     assert diff == 0
 
 
-def test_auto_salted_join_row_invariance(spark, sf_small):
-    """Adaptive salting (hot-cell pre-pass) must return exactly the rows
-    of the plain join — skew handling cannot change results."""
-    from geohash_dotnet_spark.operators import auto_salted_join, spatial_join
-
-    pg = pages(spark, sf_small, replicate=4)
-    cells = cover_polygon(
-        "POLYGON((-85 -60, 85 -60, 85 60, -85 60, -85 -60))", 2, "intersects")
-    cov = spark.createDataFrame([(c,) for c in cells], "cell string")
-
-    plain = spatial_join(pg, cov, precision=2).select("url", "gh")
-    # low hot_factor forces a real hot/cold split of the coverage
-    adaptive = auto_salted_join(pg, cov, precision=2, hot_factor=1.0,
-                                salt=4).select("url", "gh")
-    assert plain.count() == adaptive.count()
-    assert plain.exceptAll(adaptive).count() == 0
-    assert adaptive.exceptAll(plain).count() == 0
-
-
 def test_cells_to_wkt_roundtrip(spark):
     """raster->vector->raster: covering a cell's own WKT box at the same
     precision with 'intersects' must include the cell (and its box
