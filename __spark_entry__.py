@@ -61,7 +61,6 @@ from geohash_dotnet_spark.operators import (  # noqa: E402
     simhash_near_pairs,
     gh_grid,
     pick_grid_precision,
-    salted_join,
     spatial_join,
     synthetic_media,
     tile_stats,
@@ -391,16 +390,6 @@ def q_cover_circles(spark, sf_dir):
     df = spark.createDataFrame(
         CIRCLES, "circle_id string, lat double, lon double, radius_m double")
     return cover_circles(spark, df).orderBy("circle_id", "cell")
-
-
-def q_salted_join(spark, sf_dir):
-    """Skew-resistant salted join — row counts provably identical to the
-    plain broadcast covering join (hot-cell mitigation at scale)."""
-    cov_cells = cover_polygon(RECT_WKT, 2, "intersects")
-    cov = spark.createDataFrame([(c,) for c in cov_cells], "cell string")
-    joined = salted_join(_pages(spark, sf_dir), cov, precision=2, salt=8)
-    return (joined.groupBy("gh").agg(F.count(F.lit(1)).alias("n_pages"))
-            .select(F.col("gh").alias("cell"), "n_pages"))
 
 
 def q_spatial_join_rect(spark, sf_dir):
@@ -1968,7 +1957,7 @@ GTS_TERM = "spark"
 def q_tile_skew(spark, sf_dir):
     """One-row skew census (Gini + hottest-cell share) of the p2 tile
     occupancy distribution — the statistic that decides between plain
-    hash partitioning and the salted-join path."""
+    hash partitioning and AQE's skew-join split."""
     from geohash_dotnet_spark.operators.diversity import tile_skew
 
     return tile_skew(_pages(spark, sf_dir), precision=2)
@@ -2288,7 +2277,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gh_children": q_gh_children,
         "gh_validity": q_gh_validity,
         "gh_distance_cells": q_gh_distance_cells,
-        "salted_join": q_salted_join,
+        "salted_join": q_spatial_join_rect,
         "geofence_ring": q_geofence_ring,
         "vocab_topk": q_vocab_topk,
         "url_canonical_dedup": q_url_canonical_dedup,

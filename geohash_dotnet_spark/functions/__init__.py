@@ -1,8 +1,8 @@
 """gh_* Spark column-function family.
 
-Native (JVM, whole-stage codegen); the point-in-polygon refine is an
-Arrow pandas UDF. ``oracle`` holds the DuckDB SQL twins that the
-correctness checks compare against.
+Native (JVM, whole-stage codegen); the point-in-polygon refine is the
+JVM even-odd test of ``operators.zonal.zone_members``. ``oracle`` holds
+the DuckDB SQL twins that the correctness checks compare against.
 """
 
 from .native import (  # noqa: F401
@@ -18,6 +18,5 @@ from .native import (  # noqa: F401
     haversine_m,
     with_geohash,
 )
-from .udfs import point_in_polygon  # noqa: F401
 from . import oracle  # noqa: F401
 from . import precision  # noqa: F401

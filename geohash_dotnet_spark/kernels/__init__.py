@@ -31,5 +31,6 @@ from .polygon import (  # noqa: F401
     cover_polygon,
     parse_wkt,
     part_grid_range,
+    points_inside,
     split_antimeridian,
 )

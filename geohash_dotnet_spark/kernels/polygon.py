@@ -294,6 +294,25 @@ def _centers_inside(rings, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
     return inside
 
 
+def points_inside(wkt: str, lat, lon) -> np.ndarray:
+    """Even-odd membership of each point in the WKT polygon, per
+    antimeridian part: the brute-force reference of the JVM refine
+    (``operators/zonal.py``), in its IEEE operation order."""
+    x = np.asarray(lon, dtype=np.float64)
+    y = np.asarray(lat, dtype=np.float64)
+    inside = np.zeros(x.shape[0], dtype=bool)
+    for poly in parse_wkt(wkt):
+        for rings in split_antimeridian(poly):
+            part = np.zeros(x.shape[0], dtype=bool)
+            for ring in rings:
+                for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+                    if y1 != y2:
+                        part ^= (((y1 > y) != (y2 > y))
+                                 & (x < x1 + (y - y1) * (x2 - x1) / (y2 - y1)))
+            inside |= part
+    return inside
+
+
 _BATCH_SUBGRID = 6       # max subgrid side for the batched edge path
 _EDGE_BATCH = 16_384     # edges per broadcast chunk (~40 MB of temporaries)
 

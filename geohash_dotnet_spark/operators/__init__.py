@@ -9,7 +9,6 @@ from .coverage import (  # noqa: F401
 from .compress import compress_cells  # noqa: F401
 from .spatial_join import (  # noqa: F401
     rect_overlap_join,
-    salted_join,
     spatial_join,
     spatial_join_refined,
     tag_pages,

@@ -201,7 +201,7 @@ def tile_skew(df: DataFrame, lat: str = "lat", lon: str = "lon",
     (n_tiles, n_pages, top_tile, top_n, top_share, gini): the Gini
     coefficient and hottest-cell share of pages-per-tile — the numbers
     that DECIDE the engine's own physical plan (a high top_share says
-    the spatial join needs the salted path / AQE skew split; gini ~ 0
+    a shuffled join needs AQE's skew split; gini ~ 0
     says plain hash partitioning is already balanced). Run it at the
     bucketing precision before choosing a layout.
 

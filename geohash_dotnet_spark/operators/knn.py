@@ -36,6 +36,7 @@ from ..functions.exact import MICRO
 from ..functions.native import haversine_m, with_geohash
 from ..kernels.circle import cover_circle
 from ..kernels.distance import precision_for_radius
+from .spatial_join import cell_join
 
 
 def knn_join(spark: SparkSession, points_df: DataFrame, queries: pd.DataFrame,
@@ -100,8 +101,9 @@ def knn_join(spark: SparkSession, points_df: DataFrame, queries: pd.DataFrame,
                     "__ghr": cells}))
             cov = spark.createDataFrame(pd.concat(cov_rows, ignore_index=True))
 
-        cand = (tagged.withColumn("__ghr", F.substring(gh_col, 1, p))
-                .join(F.broadcast(cov), on="__ghr", how="inner")
+        cand = (cell_join(tagged.withColumn("__ghr",
+                                            F.substring(gh_col, 1, p)),
+                          cov, gh_col="__ghr")
                 .withColumn("dist_m",
                             haversine_m(F.col("q_lat"), F.col("q_lon"),
                                         F.col(lat), F.col(lon))))

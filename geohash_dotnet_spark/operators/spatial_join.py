@@ -6,14 +6,11 @@ then refine with the exact predicate. Here:
 
     pages -> with_geohash(p) -> JOIN coverage(shape_id, cell) -> [refine]
 
-Physical strategy:
-* coverage sets are query-side small -> ``broadcast()`` hash join, no
-  shuffle of the pages table at all;
-* optional *prefix join* at a coarser precision via substring (partition
-  pruning analogue of src/PolygonHasher.cs:96-104 grid arithmetic);
-* skewed fact keys (dense urban tiles) -> ``salted_join``: replicate
-  coverage rows S ways, append a deterministic per-row salt to the fact key
-  (result rows provably invariant — verified in tests).
+Every join on a covering cell in the engine goes through ``cell_join``:
+coverage sets are query-side small, so the covering is broadcast and the
+pages table is never shuffled, and the join key is the cell made
+non-nullable. The polygon refine is ``zonal.zone_members``' JVM even-odd
+test, shared with ``zonal_stats``.
 """
 
 from __future__ import annotations
@@ -22,7 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.native import sql_name, with_geohash
-from ..functions.udfs import point_in_polygon
+
+_HOWS = ("inner", "left", "left_semi", "left_anti")
 
 
 def tag_pages(pages_df: DataFrame, precision: int, lat: str = "lat",
@@ -39,7 +37,10 @@ def cell_join(tagged: DataFrame, cov: DataFrame, how: str = "inner",
     matches no covering cell either way, but on the nullable cell the
     optimizer infers an ``isnotnull`` filter and pushes it down through
     every encode stage, which doubled the flagship's planning time
-    (0.07 -> 0.14 s on a 4-core VM)."""
+    (0.07 -> 0.14 s on a 4-core VM). A right or full join would drop the
+    key of a covering cell that no row matches, so it is refused."""
+    if how not in _HOWS:
+        raise ValueError(f"how must be one of {', '.join(_HOWS)}; got {how!r}")
     key = "__cell_key"
     return (tagged.withColumn(key, F.expr(f"coalesce({sql_name(gh_col)}, '')"))
             .join(F.broadcast(cov.withColumnRenamed(gh_col, key)),
@@ -53,8 +54,8 @@ def spatial_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
 
     ``coverage_df``: (shape id column(s), cell string) — from
     cover_polygons / cover_circles or a precomputed covering.
-    ``how='left_semi'`` gives the pure containment filter. The covering
-    is always broadcast: coverage sets are query-side small.
+    ``how='left_semi'`` gives the pure containment filter; ``how`` takes
+    the values ``cell_join`` takes.
     """
     tagged = pages_df if gh_col in pages_df.columns else \
         tag_pages(pages_df, precision, out=gh_col)
@@ -65,40 +66,21 @@ def spatial_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
     return out.select(gh_col, *[c for c in out.columns if c != gh_col])
 
 
-def spatial_join_refined(pages_df: DataFrame, polygon_id: str, wkt: str,
-                         coverage_df: DataFrame, precision: int,
+def spatial_join_refined(pages_df: DataFrame, wkt: str, precision: int,
                          lat: str = "lat", lon: str = "lon") -> DataFrame:
-    """Coverage join + exact point-in-polygon refine.
+    """The pages exactly inside the WKT polygon (even-odd, holes and
+    antimeridian parts included), with their cell ``gh`` first.
 
-    With an ``intersects`` covering this yields exact polygon membership:
-    the covering over-approximates, the vectorized even-odd refine keeps
-    only true interior points (README.md:62-72 recipe).
+    The polygon's covering at ``precision`` is joined as ``zonal_stats``
+    joins a zone: points in ``contains`` cells pass on the cell id alone,
+    points in boundary cells run the JVM even-odd test
+    (README.md:62-72 recipe).
     """
-    cov = coverage_df.filter(F.col("polygon_id") == polygon_id) \
-        .select("cell") if "polygon_id" in coverage_df.columns else coverage_df
-    joined = spatial_join(pages_df, cov, precision, how="left_semi")
-    return joined.filter(point_in_polygon(F.col(lat), F.col(lon), wkt))
+    from .zonal import zone_members
 
-
-def salted_join(pages_df: DataFrame, coverage_df: DataFrame, precision: int,
-                salt: int = 8, gh_col: str = "gh") -> DataFrame:
-    """Skew-resistant variant for hot cells: coverage replicated x``salt``,
-    fact rows salted deterministically by a hash of the row identity.
-
-    Join-row counts are identical to the unsalted join (each fact row
-    matches exactly one salted coverage replica).
-    """
-    tagged = pages_df if gh_col in pages_df.columns else \
-        tag_pages(pages_df, precision, out=gh_col)
-    first = tagged.columns[0]
-    tagged = tagged.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(first)), F.lit(salt)).cast("int"))
-    cov = coverage_df.withColumnRenamed("cell", gh_col)
-    cov = cov.withColumn("__salt", F.explode(
-        F.sequence(F.lit(0), F.lit(salt - 1)))).withColumn(
-        "__salt", F.col("__salt").cast("int"))
-    out = tagged.join(cov, on=[gh_col, "__salt"], how="inner")
-    return out.drop("__salt")
+    joined = zone_members(pages_df, [("", wkt)], precision, lat, lon)
+    return joined.filter(F.col("__member")).select(
+        "gh", *[c for c in pages_df.columns if c != "gh"])
 
 
 def tile_stats(pages_df: DataFrame, precision: int, prefix_len: int | None = None,

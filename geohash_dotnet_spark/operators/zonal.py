@@ -20,11 +20,12 @@ expressed Spark-first with the interior/boundary covering split:
 * ONE broadcast hash join tags every point with its zone candidates —
   the point table is never shuffled, and a point in a cell shared by
   overlapping zones joins once per zone (correct multi-zone
-  membership).
+  membership). ``zone_members`` is that join plus the membership test
+  below; ``spatial_join.spatial_join_refined`` is it for one zone.
 * Membership is a JVM expression, no Python UDF: interior rows pass on
   ``is_edge``; boundary rows run the even-odd test as ``exists`` over
   the parts of an ``aggregate`` XOR over the band segments, in the
-  IEEE operation order of ``functions.udfs._points_inside``, so every
+  IEEE operation order of ``kernels.polygon.points_inside``, so every
   decision is bit-identical to it. It is rendered as one Spark SQL
   text, parsed by the JVM in one call (built one ``Column`` call at a
   time it cost 581 py4j round trips). At a sane precision the boundary
@@ -100,7 +101,7 @@ def _covering(zone_id: str, wkt: str, precision: int) -> pd.DataFrame:
 def _member_sql(lat: str, lon: str) -> str:
     """Spark SQL text of a joined row's membership: interior rows pass;
     boundary rows XOR the crossing rule over each part's band segments,
-    in the operation order of ``functions.udfs._points_inside``."""
+    in the operation order of ``kernels.polygon.points_inside``."""
     x, y = (f"CAST({sql_name(c)} AS DOUBLE)" for c in (lon, lat))
     cross = (f"(__s.y1 > {y}) != (__s.y2 > {y}) AND {x} < __s.x1 + "
              f"({y} - __s.y1) * (__s.x2 - __s.x1) / (__s.y2 - __s.y1)")
@@ -108,14 +109,13 @@ def _member_sql(lat: str, lon: str) -> str:
             f"(__acc, __s) -> __acc != ({cross})))")
 
 
-def zonal_stats(df: DataFrame, zones: list[tuple[str, str]],
-                precision: int, lat: str = "lat", lon: str = "lon",
-                value: str | None = None) -> DataFrame:
-    """Per-zone point count (and exact micro-unit value sum) over
-    polygon zones. ``zones`` is [(zone_id, wkt)] with distinct ids; a
-    point inside k overlapping zones counts once in each. Output:
-    (zone_id, n_points [, sum_value]) — zones containing no points emit
-    no row."""
+def zone_members(df: DataFrame, zones: list[tuple[str, str]],
+                 precision: int, lat: str = "lat", lon: str = "lon"
+                 ) -> DataFrame:
+    """``df`` tagged with its cell ``gh`` and joined to the covering of
+    each zone its cell meets (``zone_id``, ``is_edge``, ``parts``), with
+    ``__member`` its exact even-odd membership of that zone. ``zones``
+    is [(zone_id, wkt)] with distinct ids."""
     if not zones:
         raise ValueError("zones must be non-empty")
     ids = pd.Series([str(zid) for zid, _ in zones])
@@ -127,12 +127,21 @@ def zonal_stats(df: DataFrame, zones: list[tuple[str, str]],
         pd.concat([_covering(zid, wkt, precision)
                    for zid, (_, wkt) in zip(ids, zones)], ignore_index=True),
         _COVERING)
+    return (cell_join(tag_pages(df, precision, lat=lat, lon=lon), cov)
+            .withColumn("__member", F.expr(_member_sql(lat, lon))))
 
+
+def zonal_stats(df: DataFrame, zones: list[tuple[str, str]],
+                precision: int, lat: str = "lat", lon: str = "lon",
+                value: str | None = None) -> DataFrame:
+    """Per-zone point count (and exact micro-unit value sum) over
+    polygon zones. ``zones`` is [(zone_id, wkt)] with distinct ids; a
+    point inside k overlapping zones counts once in each. Output:
+    (zone_id, n_points [, sum_value]) — zones containing no points emit
+    no row."""
     # membership gates the aggregates rather than a Filter, which Catalyst
     # would fold into the join condition
-    joined = (cell_join(tag_pages(df, precision, lat=lat, lon=lon), cov)
-              .withColumn("__member", F.expr(_member_sql(lat, lon))))
-
+    joined = zone_members(df, zones, precision, lat, lon)
     aggs = [F.count_if("__member").alias("n_points")]
     if value is not None:
         aggs.append(MICRO.sum(F.when(F.col("__member"),

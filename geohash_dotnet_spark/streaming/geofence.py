@@ -19,9 +19,8 @@ the batch twin's plan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..operators.spatial_join import cell_join, tag_pages
 
 
 def streaming_geofence(spark: SparkSession, source_dir: str, schema: str,
@@ -31,8 +30,5 @@ def streaming_geofence(spark: SparkSession, source_dir: str, schema: str,
     semi-join against the fence covering cells. Emits the matching rows
     (append mode, stateless)."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    tagged = with_geohash(stream, lat, lon, precision, out="gh")
-    fence = F.broadcast(fence_cells.select(F.col("gh").alias("__fence_gh"))
-                        .distinct())
-    return (tagged.join(fence, tagged["gh"] == fence["__fence_gh"],
-                        "left_semi"))
+    tagged = tag_pages(stream, precision, lat=lat, lon=lon)
+    return cell_join(tagged, fence_cells.select("gh"), "left_semi")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.native import with_geohash_key
 
@@ -94,8 +95,9 @@ def drain_updates(result: DataFrame, checkpoint_dir: str,
 
 
 def run_available_now(result: DataFrame, checkpoint_dir: str,
-                      out_dir: str) -> None:
-    """Drain everything currently available and stop (offline-testable)."""
+                      out_dir: str) -> StreamingQuery:
+    """Drain everything currently available and stop (offline-testable);
+    returns the finished query."""
     q = (result.writeStream
          .format("parquet")
          .option("checkpointLocation", checkpoint_dir)
@@ -104,3 +106,4 @@ def run_available_now(result: DataFrame, checkpoint_dir: str,
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
+    return q

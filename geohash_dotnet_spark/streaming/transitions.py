@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.native import with_geohash
+from ..operators.spatial_join import cell_join, tag_pages
 from ._order import changed, ordered_fold
 
 OUT_SCHEMA = "user string, event_ts_us long, kind string"
@@ -46,11 +46,9 @@ def streaming_geofence_transitions(
     covering set; membership is cell-granular, the covering's own
     contract)."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    g = with_geohash(stream, lat, lon, precision)
-    fence = F.broadcast(
-        fence_cells.select(F.col("gh").alias("__fence_gh")).distinct()
-        .withColumn("__in", F.lit(1)))
-    j = g.join(fence, g["gh"] == fence["__fence_gh"], "left")
+    fence = fence_cells.select("gh").distinct().withColumn("__in", F.lit(1))
+    j = cell_join(tag_pages(stream, precision, lat=lat, lon=lon), fence,
+                  "left")
     return ordered_fold(
         j, F.col(user).cast("string"), ts, tiebreak,
         {"inside": F.coalesce(F.col("__in"), F.lit(0))},

@@ -1,7 +1,8 @@
 """Query-side cell algebra: ``compress_cells`` (window passes over packed
-cell keys), the cell functions and ``zonal_stats`` (JVM boundary
-membership) against their exact references, and the plan shapes that
-keep them Python-free and to one pass."""
+cell keys), the cell functions, and ``zonal_stats`` and
+``spatial_join_refined`` (JVM boundary membership) against their exact
+references, and the plan shapes that keep them Python-free and to one
+pass."""
 
 import numpy as np
 import pytest
@@ -9,13 +10,15 @@ from pyspark.sql import functions as F
 
 from geohash_dotnet_spark.functions import (gh_bbox, gh_decode, gh_neighbor,
                                             gh_neighbors)
-from geohash_dotnet_spark.functions.udfs import point_in_polygon
 from geohash_dotnet_spark.kernels import children as kchildren
 from geohash_dotnet_spark.kernels import compress as kcompress
-from geohash_dotnet_spark.kernels import cover_polygon, encode, parse_wkt
-from geohash_dotnet_spark.operators import compress_cells, zonal_stats
+from geohash_dotnet_spark.kernels import (cover_polygon, encode, parse_wkt,
+                                          points_inside)
+from geohash_dotnet_spark.operators import (compress_cells,
+                                            spatial_join_refined, zonal_stats)
 
 SCHEMA = "pt_id long, lat double, lon double, v double"
+SCHEMA_COLS = ["pt_id", "lat", "lon", "v"]
 
 # vertex latitudes 45.0, 50.625 and 39.375 lie on p3 and p4 row edges
 HOLE = ("POLYGON((0 40, 22 41, 18 56, 1 54, 0 40), "
@@ -132,9 +135,11 @@ def test_zonal_matches_bruteforce_pip(spark, precision):
     df = _points(spark)
     got = {r["zone_id"]: (r["n_points"], r["sum_value"]) for r in
            zonal_stats(df, ZONES, precision, value="v").collect()}
-    want = {z: tuple(df.filter(point_in_polygon(F.col("lat"), F.col("lon"), wkt))
-                     .agg(F.count(F.lit(1)), F.sum("v")).first())
-            for z, wkt in ZONES}
+    pts = df.toPandas()
+    want = {}
+    for z, wkt in ZONES:
+        inside = pts[points_inside(wkt, pts["lat"], pts["lon"])]
+        want[z] = (len(inside), float(inside["v"].sum()))
     assert min(n for n, _ in want.values()) > 50
     assert got == want
     for _, wkt in ZONES:  # both membership paths are under test
@@ -153,3 +158,28 @@ def test_zonal_rejects_duplicate_zone_id(spark):
     df = spark.createDataFrame([(1, 50.0, 10.0, 1.0)], SCHEMA)
     with pytest.raises(ValueError, match="'hole'"):
         zonal_stats(df, [("hole", HOLE), ("multi", MULTI), ("hole", ANTI)], 3)
+
+
+# ---------------------------------------------------------------------------
+# spatial_join_refined
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("precision", [3, 4])
+def test_refined_join_matches_bruteforce_pip(spark, precision):
+    """The same lattice: the pages kept are exactly the even-odd inside
+    points, keyed by their cell."""
+    df = _points(spark)
+    pts = df.toPandas()
+    for _, wkt in ZONES:
+        got = spatial_join_refined(df, wkt, precision).toPandas()
+        inside = pts[points_inside(wkt, pts["lat"], pts["lon"])]
+        assert list(got.columns) == ["gh", *SCHEMA_COLS]
+        assert sorted(got["pt_id"]) == sorted(inside["pt_id"])
+        assert got["gh"].tolist() == encode(
+            got["lat"].to_numpy(), got["lon"].to_numpy(), precision).tolist()
+
+
+def test_refined_join_is_broadcast_and_python_free(spark):
+    plan = _executed(spatial_join_refined(_points(spark), HOLE, 3))
+    assert "BroadcastHashJoin" in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -163,9 +163,10 @@ def test_window_boundary():
         # and hypothesis round-trips (test_kernel_geohash.py), so they
         # are the lowest-risk keys to leave on an r3-green row.
         # NOTE: salted_join / geofence_ring were displaced by
-        # place_profiles / bearing_rose (r5 batch 3): r3-green,
-        # unchanged; salting row-invariance + no-big-side-shuffle plan
-        # shapes are pinned in test_operators_spark / test_plan_shapes,
+        # place_profiles / bearing_rose (r5 batch 3): r3-green;
+        # salted_join now runs the spatial_join_rect query, and the
+        # no-big-side-shuffle plan shapes are pinned in
+        # test_operators_spark / test_plan_shapes,
         # and geofence_ring derives purely from the golden-pinned
         # cover_polygon sets.
         # NOTE: tile_counts_p2 was displaced by link_graph (r5 batch

@@ -1,7 +1,8 @@
 """Multi-executor smoke: the flagship pipeline on ``local-cluster`` mode
 (separate executor JVMs + separate Python workers) — catches closure
-serialization, broadcast distribution, and pandas-UDF issues that
-``local[*]`` (single JVM) can hide. The sandbox stand-in for
+serialization, broadcast distribution, and executor-side Python issues
+(``cover_polygons``' mapInPandas) that ``local[*]`` (single JVM) can
+hide. The sandbox stand-in for
 ``spark-submit --py-files`` on a real multi-executor cluster.
 
 Runs in a subprocess: ``getOrCreate`` inside the pytest process would
@@ -43,20 +44,17 @@ assert out.columns == ["tile1", "lang", "n_pages", "avg_quality"]
 assert sum(r["n_pages"] for r in rows) > 0
 
 from geohash_dotnet_spark.functions import gh_decode
-from geohash_dotnet_spark.functions.udfs import point_in_polygon
+from geohash_dotnet_spark.kernels import cover_polygon
 from geohash_dotnet_spark.operators import cover_polygons
 box = "POLYGON((10 50, 15 50, 15 53, 10 53, 10 50))"
-# cover_polygons' mapInPandas and point_in_polygon's pandas UDF run
-# package code in the executors' Python workers
+# cover_polygons' mapInPandas runs package code in the executors'
+# Python workers
 cov = cover_polygons(spark, [("box", box, 4, "intersects")])
-assert cov.count() > 0
-dec = cov.withColumn("d", gh_decode(F.col("cell")))
-west = "POLYGON((10 50, 12.5 50, 12.5 53, 10 53, 10 50))"
-r = dec.agg(F.min("d.lat"), F.max("d.lat"),
-            F.count_if(point_in_polygon(F.col("d.lat"), F.col("d.lon"), west)),
-            F.count(F.lit(1))).collect()[0]
+cells = sorted(r["cell"] for r in cov.collect())
+assert cells == sorted(cover_polygon(box, 4, "intersects")), len(cells)
+r = (cov.withColumn("d", gh_decode(F.col("cell")))
+     .agg(F.min("d.lat"), F.max("d.lat")).collect()[0])
 assert 49.0 < r[0] < 54.0 and 49.0 < r[1] < 54.0
-assert 0 < r[2] < r[3], r
 spark.stop()
 print("CLUSTER_SMOKE_OK")
 """
@@ -75,7 +73,6 @@ PYFILES_SCRIPT = r"""
 import os, shutil, sys, tempfile
 sys.path.insert(0, {repo!r})          # driver-side import only
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 zip_base = os.path.join(tempfile.mkdtemp(), "ghpkg")
 zip_path = shutil.make_archive(zip_base, "zip", root_dir={repo!r},
@@ -93,14 +90,18 @@ spark.sparkContext.setLogLevel("ERROR")
 # package from this shipped zip (no PYTHONPATH on the executor side)
 spark.sparkContext.addPyFile(zip_path)
 
-from geohash_dotnet_spark.functions.udfs import point_in_polygon
+from geohash_dotnet_spark.kernels import cover_polygon
+from geohash_dotnet_spark.operators import cover_polygons, spatial_join_refined
 from geohash_dotnet_spark.sources.pages import pages
+box = "POLYGON((-90 -60, 90 -60, 90 60, -90 60, -90 -60))"
+# cover_polygons' mapInPandas: the executors' Python workers import the
+# package
+cells = sorted(r["cell"] for r in
+               cover_polygons(spark, [("box", box, 2, "intersects")]).collect())
+assert cells == sorted(cover_polygon(box, 2, "intersects")), len(cells)
 pg = pages(spark, "/root/testdata/sf0.001")
-# a pandas UDF: the executors' Python workers import the package
-inside = point_in_polygon(F.col("lat"), F.col("lon"),
-                          "POLYGON((-90 -60, 90 -60, 90 60, -90 60, -90 -60))")
-r = pg.agg(F.count(F.lit(1)), F.count_if(inside)).collect()[0]
-assert r[0] == 500 and 0 < r[1] < 500, r
+n, inside = pg.count(), spatial_join_refined(pg, box, 2).count()
+assert n == 500 and 0 < inside < 500, (n, inside)
 spark.stop()
 print("PYFILES_SMOKE_OK")
 """
@@ -108,7 +109,7 @@ print("PYFILES_SMOKE_OK")
 
 def test_pyfiles_zip_ships_package_to_executors():
     """spark-submit --py-files analogue: the package zip added via
-    addPyFile must satisfy executor-side imports for the pandas UDF
+    addPyFile must satisfy executor-side imports for the mapInPandas
     with NO PYTHONPATH reaching the executor Python workers."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(

@@ -22,7 +22,6 @@ from geohash_dotnet_spark.operators import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     release_dedup_cache,
-    salted_join,
     simhash_near_pairs,
     spatial_join,
     spatial_join_refined,
@@ -111,7 +110,7 @@ def test_compress_cells_grouped(spark):
 
 
 # ---------------------------------------------------------------------------
-# spatial join + salting invariance + tile stats
+# spatial join + tile stats
 # ---------------------------------------------------------------------------
 
 def test_spatial_join_broadcast_and_salting_invariance(spark, sf_small):
@@ -125,11 +124,20 @@ def test_spatial_join_broadcast_and_salting_invariance(spark, sf_small):
     assert "BroadcastHashJoin" in plan, plan[:2000]
 
     n_plain = plain.count()
-    n_salted = salted_join(pg, cov, precision=3, salt=8).count()
-    assert n_plain == n_salted and n_plain > 0
+    assert n_plain > 0
 
     semi = spatial_join(pg, cov, precision=3, how="left_semi")
     assert semi.count() == n_plain  # coverage cells are distinct
+
+
+@pytest.mark.parametrize("how", ["right", "full", "outer"])
+def test_spatial_join_refuses_unsupported_how(spark, how):
+    """A right or full join would keep a covering cell no page matches
+    as an all-NULL row, its cell id dropped with the temporary key."""
+    pg = spark.createDataFrame([(50.0, 10.0)], "lat double, lon double")
+    cov = spark.createDataFrame([("9q",)], "cell string")
+    with pytest.raises(ValueError, match="inner, left, left_semi, left_anti"):
+        spatial_join(pg, cov, precision=2, how=how)
 
 
 def test_spatial_join_refined_exact(spark, sf_small):
@@ -139,9 +147,7 @@ def test_spatial_join_refined_exact(spark, sf_small):
     # faithfully reproduce.
     wkt = "POLYGON((-85 -60, 0 -60, 85 -60, 85 60, 0 60, -85 60, -85 -60))"
     pg = pages(spark, sf_small, replicate=4)
-    cov = spark.createDataFrame(
-        [(c,) for c in cover_polygon(wkt, 3, "intersects")], "cell string")
-    refined = spatial_join_refined(pg, "p", wkt, cov, precision=3)
+    refined = spatial_join_refined(pg, wkt, precision=3)
     rows = refined.select("lat", "lon").collect()
     assert rows
     for r in rows:

@@ -1,7 +1,6 @@
 """Zonal statistics (operators/zonal.py)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from geohash_dotnet_spark.operators import zonal_stats
 
@@ -28,13 +27,14 @@ def _grid(n=30):
 def test_exact_vs_bruteforce_refine(spark):
     """zonal_stats count == exact point-in-polygon membership count
     (the interior-cell shortcut must not change the answer)."""
-    from geohash_dotnet_spark.functions.udfs import point_in_polygon
+    from geohash_dotnet_spark.kernels import points_inside
 
-    df = spark.createDataFrame(_grid(), SCHEMA)
+    rows = _grid()
+    df = spark.createDataFrame(rows, SCHEMA)
     got = {r["zone_id"]: r["n_points"]
            for r in zonal_stats(df, [("tri", TRI)], precision=3).collect()}
-    want = df.filter(point_in_polygon(F.col("lat"), F.col("lon"),
-                                      TRI)).count()
+    want = int(points_inside(TRI, [r[1] for r in rows],
+                             [r[2] for r in rows]).sum())
     assert want > 50  # the lattice genuinely straddles the triangle
     assert got == {"tri": want}
 

@@ -54,3 +54,22 @@ def test_streaming_geofence_join_is_broadcast(spark, sf_small, tmp_path):
                    F.col("gh") == F.col("__fence_gh"), "left_semi"))
     s = batch._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in s and "SortMergeJoin" not in s
+
+
+def test_streaming_geofence_pushes_no_coordinate_filter(spark, sf_small,
+                                                        tmp_path):
+    """The fence joins on the non-nullable cell key, so the optimizer
+    infers no ``isnotnull`` on the cell and pushes no Filter on the
+    coordinates below the encode of each micro-batch."""
+    import re
+
+    src = str(tmp_path / "src")
+    pages(spark, sf_small, replicate=1).write.parquet(src)
+    fence = spark.createDataFrame([("9q",), ("9r",)], ["gh"])
+    q = run_available_now(streaming_geofence(spark, src, SCHEMA, fence, P),
+                          str(tmp_path / "ckpt"), str(tmp_path / "out"))
+    plan = q._jsq.streamingQuery().lastExecution().optimizedPlan().toString()
+    assert "Join LeftSemi" in plan, plan
+    filters = [line for line in plan.splitlines()
+               if "Filter" in line and re.search(r"\b(lat|lon)#", line)]
+    assert not filters, plan
