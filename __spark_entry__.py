@@ -24,6 +24,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from geohash_dotnet_spark.functions import with_geohash  # noqa: E402
 from geohash_dotnet_spark.functions.exact import MICRO  # noqa: E402
 from geohash_dotnet_spark.functions.native import (  # noqa: E402
+    BASE32,
     gh_bbox,
     gh_children,
     gh_decode,
@@ -33,7 +34,6 @@ from geohash_dotnet_spark.functions.native import (  # noqa: E402
     haversine_m,
 )
 from geohash_dotnet_spark.functions.oracle import (  # noqa: E402
-    BASE32,
     center_lat_sql,
     center_lng_sql,
     decoded_select_sql,
@@ -2367,12 +2367,8 @@ def oracle_sql() -> dict[str, str]:
                       for q, la, lo in KNN_QUERIES)
     knn_tq = ", ".join(f"('{q}', CAST({la!r} AS DOUBLE), CAST({lo!r} AS DOUBLE))"
                        for q, la, lo in KNN_TABLE_QUERIES)
-    hav = ("2.0 * 6371008.8 * asin(least(1.0, sqrt("
-           "sin(radians(p.lat - q.qlat) / 2) * sin(radians(p.lat - q.qlat) / 2) "
-           "+ cos(radians(q.qlat)) * cos(radians(p.lat)) "
-           "* sin(radians(p.lon - q.qlon) / 2) * sin(radians(p.lon - q.qlon) / 2))))")
-    hav_c = hav.replace("q.qlat", repr(CIRCLE["lat"])).replace(
-        "q.qlon", repr(CIRCLE["lon"]))
+    hav = haversine_sql("q.qlat", "q.qlon", "p.lat", "p.lon")
+    hav_c = haversine_sql(repr(CIRCLE["lat"]), repr(CIRCLE["lon"]), "p.lat", "p.lon")
 
     def distinct_cells_sql(precision: int) -> str:
         return (f"SELECT DISTINCT gh FROM ({pages_tagged_sql(precision, REP)})")

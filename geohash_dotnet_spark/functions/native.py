@@ -23,7 +23,8 @@ about 0.3 s, on a 4-core VM), and every cold start pays for it.
 
 ``with_geohash`` runs as *staged selects* (clamp/normalize, grid index,
 base-32 ``concat``) so each intermediate is an attribute reference,
-keeping the Catalyst expression tree small.
+keeping the Catalyst expression tree small. The encode and geocode text is
+rendered once for both engines (``Dialect``); the DuckDB oracle nests it.
 
 The cell functions (``gh_decode``, ``gh_bbox``, ``gh_neighbor(s)``) and
 ``operators/compress.py`` are rendered from one packed cell key
@@ -41,6 +42,7 @@ VM), more than the arithmetic costs.
 from __future__ import annotations
 
 from functools import lru_cache
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,9 +69,41 @@ def sql_double(x: float) -> str:
     return f"({lit})" if x < 0 else lit
 
 
-def _grid_index_sql(x: str, lo: float, step: float, n: int) -> str:
-    """Exact grid index with dyadic-boundary fix-up (kernel _grid_index twin)."""
-    lo, step = sql_double(lo), sql_double(step)
+class Dialect(NamedTuple):
+    """The tokens Spark SQL and DuckDB spell differently in the encode
+    and geocode text; the rest of that text is common to both engines,
+    so the DuckDB oracle (functions/oracle.py) runs Spark's encode."""
+    double: Callable[[float], str]        # a DOUBLE literal
+    shiftright: Callable[[str, int], str]
+    error: str                            # the function that raises
+    hex_bigint: Callable[[str], str]      # a hex digest read as BIGINT
+
+
+SPARK = Dialect(sql_double, lambda x, b: f"shiftright({x}, {b})", "raise_error",
+                lambda h: f"CAST(conv({h}, 16, 10) AS BIGINT)")
+DUCKDB = Dialect(lambda x: f"CAST({float(x)!r} AS DOUBLE)",
+                 lambda x, b: f"({x} >> {b})", "error",
+                 lambda h: f"('0x' || {h})::BIGINT")
+
+
+def _normalized_sql(lat_d: str, lon_d: str, d: Dialect) -> tuple[str, str]:
+    """Clamp latitude, wrap longitude in C# order (src/Geohasher.cs:213-219:
+    truncating %, then + 360 only below zero); NaN raises the kernel's
+    error. ``lat_d``/``lon_d`` are DOUBLE expressions."""
+    nan = f"{d.error}('{NAN_ERROR}')"
+    r = f"({lon_d} + {d.double(180.0)}) % {d.double(360.0)}"
+    return (f"CASE WHEN isnan({lat_d}) THEN {nan} ELSE greatest(least({lat_d}, "
+            f"{d.double(90.0)}), -{d.double(90.0)}) END",
+            f"CASE WHEN isnan({lon_d}) THEN {nan} "
+            f"WHEN {r} < {d.double(0.0)} THEN {r} + {d.double(360.0)} - "
+            f"{d.double(180.0)} ELSE {r} - {d.double(180.0)} END")
+
+
+def _grid_index_sql(x: str, lo: float, span: float, bits: int, d: Dialect) -> str:
+    """Exact index of ``x`` on a grid of 2^bits steps over ``span`` from
+    ``lo``, with dyadic-boundary fix-up (kernel _grid_index twin)."""
+    n = 1 << bits
+    lo, step = d.double(lo), d.double(span / n)
     i0 = f"least(greatest(CAST(floor(({x} - {lo}) / {step}) AS BIGINT), 0), {n - 1})"
     i1 = f"{i0} - CASE WHEN {x} < {lo} + {i0} * {step} THEN 1 ELSE 0 END"
     i2 = (f"{i1} + CASE WHEN {i1} < {n - 1} AND {x} >= {lo} + ({i1} + 1) * {step} "
@@ -77,50 +111,34 @@ def _grid_index_sql(x: str, lo: float, step: float, n: int) -> str:
     return f"least(greatest({i2}, 0), {n - 1})"
 
 
-@lru_cache(maxsize=256)
-def _encode_stages(lat: str, lon: str, precision: int) -> tuple:
-    """Spark SQL text of the three encode stages: (name, text) pairs of the
-    ``__gh_lat``/``__gh_lon`` and ``__gh_lat_i``/``__gh_lng_i``
-    temporaries, then the geohash ``concat``.
-
-    Stream bit j (0 = MSB) of the geohash: even j -> lon bit
-    (n_lng_bits-1 - j//2), odd j -> lat bit (n_lat_bits-1 - (j-1)//2) —
-    lon-first interleave (src/Geohasher.cs:76-94); five bits per base-32
-    character, looked up with a 1-based ``substr`` of the alphabet.
-    """
+def _stream_bits(precision: int) -> list[tuple[bool, int]]:
+    """(is_lon, bit) of each geohash stream bit j (0 = MSB): even j -> lon
+    bit n_lng_bits-1 - j//2, odd j -> lat bit n_lat_bits-1 - j//2 —
+    lon-first interleave (src/Geohasher.cs:76-94)."""
     total = 5 * precision
-    n_lat_bits = total // 2
-    n_lng_bits = (total + 1) // 2
-    # clamp latitude, wrap longitude in C# order (src/Geohasher.cs:213-219:
-    # truncating %, then + 360 only below zero); NaN raises the kernel's
-    # error
-    lat_d, lon_d = (f"CAST({sql_name(c)} AS DOUBLE)" for c in (lat, lon))
-    nan = f"raise_error('{NAN_ERROR}')"
-    r = f"({lon_d} + 180.0D) % 360.0D"
-    normalized = (
-        ("__gh_lat", f"CASE WHEN isnan({lat_d}) THEN {nan} "
-                     f"ELSE greatest(least({lat_d}, 90.0D), -90.0D) END"),
-        ("__gh_lon", f"CASE WHEN isnan({lon_d}) THEN {nan} "
-                     f"WHEN {r} < 0.0D THEN {r} + 360.0D - 180.0D "
-                     f"ELSE {r} - 180.0D END"),
-    )
+    n_bits = {True: (total + 1) // 2, False: total // 2}  # lon gets an odd bit
+    return [(j % 2 == 0, n_bits[j % 2 == 0] - 1 - j // 2) for j in range(total)]
+
+
+def _encode_sql(lat: str, lon: str, precision: int, d: Dialect,
+                ref: Callable[[str], str]) -> tuple:
+    """The three encode stages in dialect ``d``: (name, text) pairs of the
+    ``__gh_lat``/``__gh_lon`` and ``__gh_lat_i``/``__gh_lng_i`` temporaries,
+    then the cell: five stream bits a character, a 1-based ``substr`` of
+    the alphabet. ``ref`` renders a reference to an input or temporary."""
+    lat_d, lon_d = (f"CAST({ref(c)} AS DOUBLE)" for c in (lat, lon))
+    normalized = tuple(zip(("__gh_lat", "__gh_lon"), _normalized_sql(lat_d, lon_d, d)))
     indexed = (
-        ("__gh_lat_i", _grid_index_sql("`__gh_lat`", -90.0,
-                                       180.0 / (1 << n_lat_bits), 1 << n_lat_bits)),
-        ("__gh_lng_i", _grid_index_sql("`__gh_lon`", -180.0,
-                                       360.0 / (1 << n_lng_bits), 1 << n_lng_bits)),
+        ("__gh_lat_i", _grid_index_sql(ref("__gh_lat"), -90.0, 180.0,
+                                       5 * precision // 2, d)),
+        ("__gh_lng_i", _grid_index_sql(ref("__gh_lon"), -180.0, 360.0,
+                                       (5 * precision + 1) // 2, d)),
     )
-    chars = []
-    for c in range(precision):
-        digit = "0"
-        for k in range(5):
-            j = 5 * c + k
-            if j % 2 == 0:
-                src, bit = "`__gh_lng_i`", n_lng_bits - 1 - j // 2
-            else:
-                src, bit = "`__gh_lat_i`", n_lat_bits - 1 - (j - 1) // 2
-            digit += f" + (shiftright({src}, {bit}) & 1) * {1 << (4 - k)}"
-        chars.append(f"substr('{BASE32}', CAST({digit} + 1 AS INT), 1)")
+    terms = [f" + ({d.shiftright(ref('__gh_lng_i' if is_lon else '__gh_lat_i'), bit)}"
+             f" & 1) * {16 >> j % 5}"
+             for j, (is_lon, bit) in enumerate(_stream_bits(precision))]
+    chars = [f"substr('{BASE32}', CAST(0{''.join(terms[c:c + 5])} + 1 AS INT), 1)"
+             for c in range(0, len(terms), 5)]
     # a NULL coordinate has no cell. The guard sits on the inputs, not on
     # the indices (least/greatest would skip a NULL): a filter or join
     # on the cell then pushes down as this condition alone, while a
@@ -128,6 +146,12 @@ def _encode_stages(lat: str, lon: str, precision: int) -> tuple:
     concat = "concat(" + ", ".join(chars) + ")"
     return (normalized, indexed,
             f"CASE WHEN {lat_d} IS NOT NULL AND {lon_d} IS NOT NULL THEN {concat} END")
+
+
+@lru_cache(maxsize=256)
+def _encode_stages(lat: str, lon: str, precision: int) -> tuple:
+    """Spark SQL text of the three encode stages (see ``_encode_sql``)."""
+    return _encode_sql(lat, lon, precision, SPARK, sql_name)
 
 
 def exprs(stage) -> dict:
@@ -334,15 +358,19 @@ def haversine_m(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Colum
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
 
 
+def _geocode_sql(url: str, d: Dialect) -> tuple[str, str]:
+    """(lat, lon) from md5 of the string expression ``url`` in dialect ``d``."""
+    def coord(first: int, span: float) -> str:
+        h = d.hex_bigint(f"substring(md5({url}), {first}, 8)")
+        return (f"({h} + {d.double(0.5)}) / {d.double(4294967296.0)} * "
+                f"{d.double(span)} - {d.double(span / 2)}")
+    return coord(1, 180.0), coord(9, 360.0)
+
+
 @lru_cache(maxsize=256)
 def geocode_sql(url: str) -> tuple[str, str]:
     """Spark SQL text of ``geocode_from_url``'s (lat, lon) for a url column."""
-    def coord(first: int, span: float) -> str:
-        h = (f"CAST(conv(substring(md5({sql_name(url)}), {first}, 8), 16, 10) "
-             f"AS BIGINT)")
-        return (f"({h} + 0.5D) / 4294967296.0D * {sql_double(span)} "
-                f"- {sql_double(span / 2)}")
-    return coord(1, 180.0), coord(9, 360.0)
+    return _geocode_sql(sql_name(url), SPARK)
 
 
 def geocode_from_url(df: DataFrame, url: str = "url",
@@ -350,6 +378,7 @@ def geocode_from_url(df: DataFrame, url: str = "url",
     """Deterministic geocode: lat/lon from md5(url) (reproducible across
     cluster sizes; the north rule's hash-derived coordinates).
 
-    Bit-identical to the DuckDB oracle twin in functions/oracle.py.
+    The DuckDB oracle (functions/oracle.py:geocode_lat_sql) renders the
+    same text.
     """
     return df.withColumns(exprs(zip((lat_out, lon_out), geocode_sql(url))))

@@ -60,8 +60,8 @@ _OFFSETS.update({
 })
 
 
-# raised for a NaN coordinate by encode and by both SQL encoders
-# (functions/native.py, functions/oracle.py)
+# raised for a NaN coordinate by encode and by the SQL encode that
+# functions/native.py:_encode_sql renders for Spark and DuckDB
 NAN_ERROR = "Coordinates must not be NaN."
 
 
@@ -72,7 +72,7 @@ def normalize_longitude(lng):
     added to a negative remainder (``np.mod`` does both). That sum rounds,
     so a longitude at most half an ulp of 360 below -180 (such as
     -180.00000000000003) wraps to 180.0, which encodes in the last cell.
-    ``functions.native`` and ``functions.oracle`` render the same order.
+    ``functions.native._normalized_sql`` renders it for Spark and DuckDB.
     """
     lng = np.asarray(lng, dtype=np.float64)
     return np.mod(lng + 180.0, 360.0) - 180.0

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.oracle import clamp_lat_sql, grid_index_sql, normalize_lon_sql
+from ..functions.native import DUCKDB, _grid_index_sql, _normalized_sql
 from ..kernels.geohash import _grid_index, clamp_latitude, normalize_longitude
 from ..kernels.hilbert import xy2d
 
@@ -52,8 +52,9 @@ def with_hilbert(df: DataFrame, lat: str = "lat", lon: str = "lon",
     follows the public-domain Wikipedia reference implementation).
 
     Runs the vectorized NumPy kernel (kernels/hilbert.py) behind an Arrow
-    pandas UDF: ~10 array ops per bit plane, exact int64, the same
-    execution class as the decode/bbox/neighbors UDFs. The DuckDB twin
+    pandas UDF: ~10 array ops per bit plane, exact int64, a Python task
+    per partition where the cell functions are JVM expressions (see below
+    for why). The DuckDB twin
     (``hilbert_select_sql``) is the reference it is checked against.
 
     Why not a staged per-iteration projection (the with_geohash
@@ -113,17 +114,19 @@ def hilbert_shards(df: DataFrame, lat: str = "lat", lon: str = "lon",
 def hilbert_select_sql(inner_sql: str, order: int = 8, lat: str = "lat",
                        lon: str = "lon", out: str = "hd",
                        keep: str = "*") -> str:
-    """DuckDB twin of :func:`with_hilbert` — same xy2d bit state
-    machine unrolled into chained subqueries."""
+    """DuckDB twin of :func:`with_hilbert` — same xy2d bit state machine
+    unrolled into chained subqueries, over the encode's clamp, wrap and
+    grid index (functions/native.py; NaN raises the encode's error)."""
     n = 1 << order
-    s0 = (f"SELECT {keep}, {clamp_lat_sql(lat)} AS __hlat, "
-          f"{normalize_lon_sql(lon)} AS __hlon FROM ({inner_sql})")
+    lat_n, lon_n = _normalized_sql(f"CAST({lat} AS DOUBLE)",
+                                   f"CAST({lon} AS DOUBLE)", DUCKDB)
+    s0 = f"SELECT {keep}, {lat_n} AS __hlat, {lon_n} AS __hlon FROM ({inner_sql})"
     # every stage emits FRESH column names (suffix = bit plane) so the
     # SELECT-*-chained subqueries never collide
     y0, x0, d0 = f"__hy{order}", f"__hx{order}", f"__hd{order}"
     s1 = (f"SELECT {keep}, "
-          f"{grid_index_sql('__hlat', -90.0, 180.0 / n, n)} AS {y0}, "
-          f"{grid_index_sql('__hlon', -180.0, 360.0 / n, n)} AS {x0}, "
+          f"{_grid_index_sql('__hlat', -90.0, 180.0, order, DUCKDB)} AS {y0}, "
+          f"{_grid_index_sql('__hlon', -180.0, 360.0, order, DUCKDB)} AS {x0}, "
           f"CAST(0 AS BIGINT) AS {d0} FROM ({s0})")
     cur, px, py, pd = s1, x0, y0, d0
     for i in range(order - 1, -1, -1):

@@ -12,8 +12,8 @@ picked up without restarting the query).
 
 At scale: the fence set is cells (thousands), the stream is pages
 (unbounded); the join must be broadcast — a shuffled stream-static join
-would re-partition every micro-batch. Asserted in the parity test via
-the batch twin's plan.
+would re-partition every micro-batch. Asserted on a micro-batch's
+executed plan in tests/test_streaming_geofence.py.
 """
 
 from __future__ import annotations

@@ -122,20 +122,29 @@ def _duckdb_cells(pdf, p):
 
 
 def test_encode_edge_longitudes_agree_in_three_engines(spark):
-    """Every longitude cell edge at p1, and a sample at p5 and p12, with
-    its two ulp neighbours, plus the neighbours of -180 and 180: the
-    kernel, Spark and DuckDB all wrap in C# order (a remainder below zero
-    gets 360, rounding included) and pick the same cell."""
+    """Every longitude and latitude cell edge at p1, and a sample at p5
+    and p12, each with its two ulp neighbours (so the p1 edges give -180
+    and 180, and ±90 with one ulp beyond each pole): the kernel, Spark
+    and DuckDB all wrap in C# order (a remainder below zero gets 360,
+    rounding included), clamp alike and pick the same cell."""
     import pandas as pd
+
+    def with_ulps(edges):
+        return np.concatenate([edges, np.nextafter(edges, -np.inf),
+                               np.nextafter(edges, np.inf)])
 
     rng = np.random.default_rng(5)
     edges = [-180.0 + k * 45.0 for k in range(9)]
     for bits in (13, 30):
         n = 1 << bits
         edges += list(-180.0 + rng.integers(0, n + 1, 64) * (360.0 / n))
-    lon = np.concatenate([edges, np.nextafter(edges, -np.inf),
-                          np.nextafter(edges, np.inf)])
-    lat = np.resize([0.0, 10.0, -45.0], lon.size)
+    lat_edges = [-90.0 + k * 45.0 for k in range(5)]
+    for bits in (12, 30):
+        n = 1 << bits
+        lat_edges += list(-90.0 + rng.integers(0, n + 1, 64) * (180.0 / n))
+    lon_e, lat_e = with_ulps(edges), with_ulps(lat_edges)
+    lat = np.concatenate([np.resize([0.0, 10.0, -45.0], lon_e.size), lat_e])
+    lon = np.concatenate([lon_e, np.resize([0.0, 10.0, -100.0], lat_e.size)])
     pdf = pd.DataFrame({"i": np.arange(lon.size), "lat": lat, "lon": lon})
     df = spark.createDataFrame(pdf)
     for p in (1, 5, 12):
@@ -145,6 +154,17 @@ def test_encode_edge_longitudes_agree_in_three_engines(spark):
         want = GK.encode(lat, lon, p)
         assert [r[f"g{p}"] for r in rows] == list(want)
         assert list(_duckdb_cells(pdf, p)) == list(want)
+
+
+def test_duckdb_twin_adds_only_the_cell_column():
+    """Like ``with_geohash``, the DuckDB twin adds ``out`` and no
+    encode temporary, whatever ``keep`` is."""
+    inner = "SELECT 1.0 AS lat, 2.0 AS lon, 7 AS id"
+    want = GK.encode([1.0], [2.0], 3)[0]
+    for keep, cols in (("*", ["lat", "lon", "id", "gh"]), ("id", ["id", "gh"])):
+        rel = duckdb.sql(tagged_select_sql(inner, 3, keep=keep))
+        assert rel.columns == cols
+        assert rel.fetchall() == [(1.0, 2.0, 7, want)[-len(cols):]]
 
 
 def test_encode_null_gives_null_cell_and_nan_raises(spark):

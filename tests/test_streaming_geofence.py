@@ -38,22 +38,16 @@ def test_streaming_geofence_matches_batch(spark, sf_small, tmp_path):
 
 
 def test_streaming_geofence_join_is_broadcast(spark, sf_small, tmp_path):
-    """The stream side must never shuffle: the same join shape executed
-    in batch mode (identical operator construction) must be a
-    BroadcastHashJoin, never a SortMergeJoin."""
-    from geohash_dotnet_spark.functions.native import with_geohash
-
+    """The stream side must never shuffle: the join each micro-batch of
+    ``streaming_geofence`` runs is a BroadcastHashJoin, never a
+    SortMergeJoin."""
     src = str(tmp_path / "bsrc")
     pages(spark, sf_small, replicate=1).write.parquet(src)
     fence = spark.createDataFrame([("9q",), ("9r",)], ["gh"])
-    batch = (with_geohash(spark.read.parquet(src), "lat", "lon", P,
-                          out="gh")
-             .join(F.broadcast(fence.select(F.col("gh")
-                                            .alias("__fence_gh"))
-                               .distinct()),
-                   F.col("gh") == F.col("__fence_gh"), "left_semi"))
-    s = batch._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in s and "SortMergeJoin" not in s
+    q = run_available_now(streaming_geofence(spark, src, SCHEMA, fence, P),
+                          str(tmp_path / "ckpt"), str(tmp_path / "out"))
+    s = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in s and "SortMergeJoin" not in s, s
 
 
 def test_streaming_geofence_pushes_no_coordinate_filter(spark, sf_small,
