@@ -25,6 +25,7 @@ from geohash_dotnet_spark.functions import with_geohash  # noqa: E402
 from geohash_dotnet_spark.functions.exact import MICRO  # noqa: E402
 from geohash_dotnet_spark.functions.native import (  # noqa: E402
     BASE32,
+    DUCKDB,
     gh_bbox,
     gh_children,
     gh_decode,
@@ -32,6 +33,8 @@ from geohash_dotnet_spark.functions.native import (  # noqa: E402
     gh_neighbor,
     gh_neighbors,
     haversine_m,
+    haversine_sql,
+    sql_double,
 )
 from geohash_dotnet_spark.functions.oracle import (  # noqa: E402
     center_lat_sql,
@@ -39,7 +42,6 @@ from geohash_dotnet_spark.functions.oracle import (  # noqa: E402
     decoded_select_sql,
     geocode_lat_sql,
     geocode_lon_sql,
-    haversine_sql,
     pages_sql,
     pages_tagged_sql,
     tagged_select_sql,
@@ -334,8 +336,7 @@ def q_gh_distance_cells(spark, sf_dir):
                  gh_decode(F.col("gh")).alias("db")))
     return (a.crossJoin(b)
             .select("gh_a", "gh_b",
-                    MICRO.round(haversine_m(F.col("da.lat"), F.col("da.lon"),
-                                            F.col("db.lat"), F.col("db.lon")))
+                    MICRO.round(haversine_m("da.lat", "da.lon", "db.lat", "db.lon"))
                     .alias("dist_m"))
             .orderBy("gh_a", "gh_b"))
 
@@ -423,8 +424,7 @@ def q_circle_join(spark, sf_dir):
     cov = spark.createDataFrame([(c,) for c in cells], "cell string")
     pg = spatial_join(_pages(spark, sf_dir), cov,
                       precision=CIRCLE["precision"], how="left_semi")
-    d = haversine_m(F.lit(CIRCLE["lat"]), F.lit(CIRCLE["lon"]),
-                    F.col("lat"), F.col("lon"))
+    d = haversine_m(sql_double(CIRCLE["lat"]), sql_double(CIRCLE["lon"]), "lat", "lon")
     return (pg.withColumn("dist_m", MICRO.round(d))
             .filter(F.col("dist_m") <= CIRCLE["radius_m"])
             .select("url", "dist_m")
@@ -2367,8 +2367,8 @@ def oracle_sql() -> dict[str, str]:
                       for q, la, lo in KNN_QUERIES)
     knn_tq = ", ".join(f"('{q}', CAST({la!r} AS DOUBLE), CAST({lo!r} AS DOUBLE))"
                        for q, la, lo in KNN_TABLE_QUERIES)
-    hav = haversine_sql("q.qlat", "q.qlon", "p.lat", "p.lon")
-    hav_c = haversine_sql(repr(CIRCLE["lat"]), repr(CIRCLE["lon"]), "p.lat", "p.lon")
+    hav = haversine_sql("q.qlat", "q.qlon", "p.lat", "p.lon", DUCKDB)
+    hav_c = haversine_sql(repr(CIRCLE["lat"]), repr(CIRCLE["lon"]), "p.lat", "p.lon", DUCKDB)
 
     def distinct_cells_sql(precision: int) -> str:
         return (f"SELECT DISTINCT gh FROM ({pages_tagged_sql(precision, REP)})")
@@ -2466,7 +2466,7 @@ def oracle_sql() -> dict[str, str]:
             f"'^[0-9bcdefghjkmnpqrstuvwxyzBCDEFGHJKMNPQRSTUVWXYZ]{{1,12}}$') "
             f"AS valid FROM cand ORDER BY candidate, valid",
         "gh_distance_cells":
-            f"SELECT a.gh_a, b.gh_b, {MICRO.round_sql(haversine_sql('a.alat', 'a.alon', 'b.blat', 'b.blon'))} AS dist_m "
+            f"SELECT a.gh_a, b.gh_b, {MICRO.round_sql(haversine_sql('a.alat', 'a.alon', 'b.blat', 'b.blon', DUCKDB))} AS dist_m "
             f"FROM (SELECT gh AS gh_a, {center_lat_sql()} AS alat, "
             f"{center_lng_sql()} AS alon FROM ({dec2d})) a "
             f"CROSS JOIN (SELECT gh AS gh_b, {center_lat_sql()} AS blat, "
@@ -2542,7 +2542,7 @@ def oracle_sql() -> dict[str, str]:
             f"WITH pg AS (SELECT url, lat, lon FROM ({pages_sql(REP)})), "
             f"c(name, clat, clon) AS (VALUES {cities_vals}), "
             f"d AS (SELECT url, name, "
-            f"{haversine_sql('lat', 'lon', 'clat', 'clon')} AS dist "
+            f"{haversine_sql('lat', 'lon', 'clat', 'clon', DUCKDB)} AS dist "
             f"FROM pg CROSS JOIN c), "
             f"r AS (SELECT url, name, dist, row_number() OVER "
             f"(PARTITION BY url ORDER BY dist, name) AS rn FROM d) "
@@ -2922,7 +2922,7 @@ def oracle_sql() -> dict[str, str]:
             f"WITH pg AS (SELECT url, lat, lon FROM ({pages_sql(REP)})), "
             f"c(name, clat, clon) AS (VALUES {cities_vals}), "
             f"d AS (SELECT url, name, "
-            f"{haversine_sql('lat', 'lon', 'clat', 'clon')} AS dist "
+            f"{haversine_sql('lat', 'lon', 'clat', 'clon', DUCKDB)} AS dist "
             f"FROM pg CROSS JOIN c) "
             f"SELECT url, name AS site, {MICRO.round_sql('dist')} AS dist_m "
             f"FROM d QUALIFY row_number() OVER "

@@ -23,8 +23,9 @@ about 0.3 s, on a 4-core VM), and every cold start pays for it.
 
 ``with_geohash`` runs as *staged selects* (clamp/normalize, grid index,
 base-32 ``concat``) so each intermediate is an attribute reference,
-keeping the Catalyst expression tree small. The encode and geocode text is
-rendered once for both engines (``Dialect``); the DuckDB oracle nests it.
+keeping the Catalyst expression tree small. This text (and the Hilbert
+and tile text) is rendered once for both engines (``Dialect``); the DuckDB
+oracle nests the stages as subqueries.
 
 The cell functions (``gh_decode``, ``gh_bbox``, ``gh_neighbor(s)``) and
 ``operators/compress.py`` are rendered from one packed cell key
@@ -70,20 +71,26 @@ def sql_double(x: float) -> str:
 
 
 class Dialect(NamedTuple):
-    """The tokens Spark SQL and DuckDB spell differently in the encode
-    and geocode text; the rest of that text is common to both engines,
-    so the DuckDB oracle (functions/oracle.py) runs Spark's encode."""
+    """The tokens Spark SQL and DuckDB spell differently in the encode,
+    geocode, haversine, Hilbert and tile text; the rest of that text is
+    common to both engines, so the DuckDB oracle (functions/oracle.py)
+    runs Spark's text."""
     double: Callable[[float], str]        # a DOUBLE literal
     shiftright: Callable[[str, int], str]
     error: str                            # the function that raises
     hex_bigint: Callable[[str], str]      # a hex digest read as BIGINT
+    count_ge: Callable[[str, str], str]   # how many of the items are >= x
 
 
+# DuckDB reads a decimal literal as a DECIMAL, whose cast to DOUBLE can
+# round twice (a value of 17 digits is past 2^53); a string cast rounds once
 SPARK = Dialect(sql_double, lambda x, b: f"shiftright({x}, {b})", "raise_error",
-                lambda h: f"CAST(conv({h}, 16, 10) AS BIGINT)")
-DUCKDB = Dialect(lambda x: f"CAST({float(x)!r} AS DOUBLE)",
+                lambda h: f"CAST(conv({h}, 16, 10) AS BIGINT)",
+                lambda items, x: f"size(filter(array({items}), __b -> __b >= {x}))")
+DUCKDB = Dialect(lambda x: f"CAST('{float(x)!r}' AS DOUBLE)",
                  lambda x, b: f"({x} >> {b})", "error",
-                 lambda h: f"('0x' || {h})::BIGINT")
+                 lambda h: f"('0x' || {h})::BIGINT",
+                 lambda items, x: f"len(filter([{items}], __b -> __b >= {x}))")
 
 
 def _normalized_sql(lat_d: str, lon_d: str, d: Dialect) -> tuple[str, str]:
@@ -120,32 +127,39 @@ def _stream_bits(precision: int) -> list[tuple[bool, int]]:
     return [(j % 2 == 0, n_bits[j % 2 == 0] - 1 - j // 2) for j in range(total)]
 
 
-def _encode_sql(lat: str, lon: str, precision: int, d: Dialect,
-                ref: Callable[[str], str]) -> tuple:
-    """The three encode stages in dialect ``d``: (name, text) pairs of the
-    ``__gh_lat``/``__gh_lon`` and ``__gh_lat_i``/``__gh_lng_i`` temporaries,
-    then the cell: five stream bits a character, a 1-based ``substr`` of
-    the alphabet. ``ref`` renders a reference to an input or temporary."""
+def _grid_sql(lat: str, lon: str, lat_bits: int, lng_bits: int, d: Dialect,
+              ref: Callable[[str], str]) -> tuple:
+    """The encode's first two stages in dialect ``d``, (name, text) pairs:
+    the clamped and wrapped ``__gh_lat``/``__gh_lon``, their grid indices
+    ``__gh_lat_i``/``__gh_lng_i`` on 2^lat_bits x 2^lng_bits cells; then
+    the NULL guard on the inputs. ``ref`` renders a column reference."""
     lat_d, lon_d = (f"CAST({ref(c)} AS DOUBLE)" for c in (lat, lon))
     normalized = tuple(zip(("__gh_lat", "__gh_lon"), _normalized_sql(lat_d, lon_d, d)))
     indexed = (
-        ("__gh_lat_i", _grid_index_sql(ref("__gh_lat"), -90.0, 180.0,
-                                       5 * precision // 2, d)),
-        ("__gh_lng_i", _grid_index_sql(ref("__gh_lon"), -180.0, 360.0,
-                                       (5 * precision + 1) // 2, d)),
+        ("__gh_lat_i", _grid_index_sql(ref("__gh_lat"), -90.0, 180.0, lat_bits, d)),
+        ("__gh_lng_i", _grid_index_sql(ref("__gh_lon"), -180.0, 360.0, lng_bits, d)),
     )
+    # a NULL coordinate has no value. The guard sits on the inputs, not on
+    # the indices (least/greatest would skip a NULL): a filter or join
+    # on the value then pushes down as this condition alone, while a
+    # nullable index would inline every stage into the pushed filter
+    return normalized, indexed, f"{lat_d} IS NOT NULL AND {lon_d} IS NOT NULL"
+
+
+def _encode_sql(lat: str, lon: str, precision: int, d: Dialect,
+                ref: Callable[[str], str]) -> tuple:
+    """The three encode stages in dialect ``d``: ``_grid_sql``'s two,
+    then the cell: five stream bits a character, a 1-based ``substr`` of
+    the alphabet."""
+    normalized, indexed, guard = _grid_sql(lat, lon, 5 * precision // 2,
+                                           (5 * precision + 1) // 2, d, ref)
     terms = [f" + ({d.shiftright(ref('__gh_lng_i' if is_lon else '__gh_lat_i'), bit)}"
              f" & 1) * {16 >> j % 5}"
              for j, (is_lon, bit) in enumerate(_stream_bits(precision))]
     chars = [f"substr('{BASE32}', CAST(0{''.join(terms[c:c + 5])} + 1 AS INT), 1)"
              for c in range(0, len(terms), 5)]
-    # a NULL coordinate has no cell. The guard sits on the inputs, not on
-    # the indices (least/greatest would skip a NULL): a filter or join
-    # on the cell then pushes down as this condition alone, while a
-    # nullable index would inline every stage into the pushed filter
-    concat = "concat(" + ", ".join(chars) + ")"
     return (normalized, indexed,
-            f"CASE WHEN {lat_d} IS NOT NULL AND {lon_d} IS NOT NULL THEN {concat} END")
+            f"CASE WHEN {guard} THEN concat(" + ", ".join(chars) + ") END")
 
 
 @lru_cache(maxsize=256)
@@ -159,6 +173,16 @@ def exprs(stage) -> dict:
     return {name: F.expr(text) for name, text in stage}
 
 
+def with_stages(df: DataFrame, stages: tuple, out: str) -> DataFrame:
+    """Add ``out`` from rendered Spark SQL stages (``_grid_sql``'s two
+    temporary stages, then the value) as staged selects; the temporaries
+    are dropped and an existing ``out`` is replaced in place."""
+    normalized, indexed, value = stages
+    staged = df.withColumns(exprs(normalized)).withColumns(exprs(indexed))
+    temporaries = [name for name, _ in normalized + indexed]
+    return staged.withColumn(out, F.expr(value)).drop(*temporaries)
+
+
 def with_geohash(df: DataFrame, lat: str, lon: str, precision: int,
                  out: str = "gh") -> DataFrame:
     """Add a geohash column computed fully JVM-side (staged selects).
@@ -166,10 +190,7 @@ def with_geohash(df: DataFrame, lat: str, lon: str, precision: int,
     An existing ``out`` column is replaced in place (``withColumn``).
     """
     _check_precision(precision)
-    normalized, indexed, concat = _encode_stages(lat, lon, int(precision))
-    staged = df.withColumns(exprs(normalized)).withColumns(exprs(indexed))
-    temporaries = [name for name, _ in normalized + indexed]
-    return staged.withColumn(out, F.expr(concat)).drop(*temporaries)
+    return with_stages(df, _encode_stages(lat, lon, int(precision)), out)
 
 
 def with_geohash_key(df: DataFrame, lat: str, lon: str, precision: int,
@@ -289,11 +310,12 @@ def _neighbors_sql(g: str) -> str:
         _neighbor_sql(g, *_offset(d)) for d in DIRECTIONS) + ")"
 
 
-def _cell_column(render, gh: Column) -> Column:
-    """The cell function ``render`` (Spark SQL text of a cell expression)
-    applied to ``gh``. A column reference goes into the text, which runs
-    under whole-stage codegen, where Catalyst computes the key and grid
-    indices that the outputs share once per row. Any other expression is
+def _text_column(render, gh: Column) -> Column:
+    """The function ``render`` (Spark SQL text of an expression over one
+    input: a cell function, a tile index) applied to ``gh``. A column
+    reference goes into the text, which runs under whole-stage codegen,
+    where Catalyst computes the key and grid indices that the outputs
+    share once per row. Any other expression is
     bound to a lambda parameter, which Spark evaluates interpreted."""
     node = gh._jc.node()
     if node.getClass().getSimpleName() == "UnresolvedAttribute":
@@ -306,25 +328,25 @@ def _cell_column(render, gh: Column) -> Column:
 def gh_decode(gh: Column) -> Column:
     """Cell center -> struct<lat:double, lon:double>
     (src/Geohasher.cs:108-112)."""
-    return _cell_column(_decode_sql, gh)
+    return _text_column(_decode_sql, gh)
 
 
 def gh_bbox(gh: Column) -> Column:
     """Exact cell bounds -> struct<min_lat,min_lng,max_lat,max_lng>."""
-    return _cell_column(_bbox_sql, gh)
+    return _text_column(_bbox_sql, gh)
 
 
 def gh_neighbors(gh: Column) -> Column:
     """All 8 neighbors as array<string> in N,NE,E,SE,S,SW,W,NW order
     (src/Geohasher.cs:158-165)."""
-    return _cell_column(_neighbors_sql, gh)
+    return _text_column(_neighbors_sql, gh)
 
 
 def gh_neighbor(gh: Column, direction: str) -> Column:
     """Single-direction neighbor (src/Geohasher.cs:151-155). An unknown
     ``direction`` raises ValueError here, before any job runs."""
     d_lat, d_lng = _offset(direction)
-    return _cell_column(lambda g: _neighbor_sql(g, d_lat, d_lng), gh)
+    return _text_column(lambda g: _neighbor_sql(g, d_lat, d_lng), gh)
 
 
 def gh_parent(gh: Column) -> Column:
@@ -348,14 +370,20 @@ def gh_children(gh: Column) -> Column:
     return F.array(*[F.concat(gh, F.lit(c)) for c in BASE32])
 
 
-def haversine_m(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
-    """Great-circle distance in meters, native trig exprs
-    (src/RadiusHasher.cs:275-280) — stays inside whole-stage codegen."""
-    dlat = F.radians(lat2 - lat1) / 2
-    dlng = F.radians(lng2 - lng1) / 2
-    a = F.sin(dlat) * F.sin(dlat) + \
-        F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlng) * F.sin(dlng)
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
+def haversine_sql(lat1: str, lng1: str, lat2: str, lng2: str, d: Dialect) -> str:
+    """Great-circle metres (src/RadiusHasher.cs:275-280) in dialect ``d``
+    between DOUBLE operands: names, ``d.double`` literals or parenthesized
+    text. kernels/distance.py is the independent NumPy reference."""
+    dlat, dlng = (f"radians({b} - {a}) / 2" for a, b in ((lat1, lat2), (lng1, lng2)))
+    return (f"{d.double(2.0 * EARTH_RADIUS_M)} * asin(least({d.double(1.0)}, sqrt("
+            f"sin({dlat}) * sin({dlat}) + cos(radians({lat1})) * cos(radians({lat2})) "
+            f"* sin({dlng}) * sin({dlng}))))")
+
+
+def haversine_m(lat1: str, lng1: str, lat2: str, lng2: str) -> Column:
+    """``haversine_sql`` as a Spark column, from column names or Spark SQL
+    text; native trig, so it stays inside whole-stage codegen."""
+    return F.expr(haversine_sql(lat1, lng1, lat2, lng2, SPARK))
 
 
 def _geocode_sql(url: str, d: Dialect) -> tuple[str, str]:

@@ -2,9 +2,10 @@
 
 The correctness checks run each Spark query and its twin here on the
 same parquet, so cells, tiles and join rows must match bit for bit. The
-encode and the geocode are not copies: they are functions/native.py's
-text in its ``DUCKDB`` dialect. The NumPy kernel and the reference
-goldens are the independent reference both engines are tested against.
+encode, the geocode, the haversine and the Hilbert index are not copies:
+they are Spark's text in its ``DUCKDB`` dialect (functions/native.py,
+operators/layout.py). The NumPy kernel and the reference goldens are the
+independent reference both engines are tested against.
 """
 
 from __future__ import annotations
@@ -22,21 +23,28 @@ def geocode_lon_sql(url_expr: str = "url") -> str:
     return f"({_geocode_sql(url_expr, DUCKDB)[1]})"
 
 
-def tagged_select_sql(inner_sql: str, precision: int, lat: str = "lat",
-                      lon: str = "lon", out: str = "gh",
+def nested_select_sql(inner_sql: str, stages: tuple, out: str,
                       keep: str = "*") -> str:
-    """SELECT wrapping ``inner_sql`` (which must expose lat/lon columns)
-    that adds the geohash column ``out`` — with_geohash's stages nested
-    as subqueries. ``keep`` names the other output columns; the default
-    keeps every column of ``inner_sql`` and adds only ``out``."""
-    normalized, indexed, cell = _encode_sql(lat, lon, precision, DUCKDB, str)
+    """``native.with_stages`` in DuckDB: the rendered stages nested as
+    subqueries over ``inner_sql``. ``keep`` names the other output columns;
+    the default keeps every column of ``inner_sql`` and adds only ``out``."""
+    normalized, indexed, value = stages
     staged = inner_sql
     for stage in (normalized, indexed):
         cols = ", ".join(f"{text} AS {name}" for name, text in stage)
         staged = f"SELECT *, {cols} FROM ({staged})"
     if keep == "*":
         keep = f"* EXCLUDE ({', '.join(name for name, _ in normalized + indexed)})"
-    return f"SELECT {keep}, {cell} AS {out} FROM ({staged})"
+    return f"SELECT {keep}, {value} AS {out} FROM ({staged})"
+
+
+def tagged_select_sql(inner_sql: str, precision: int, lat: str = "lat",
+                      lon: str = "lon", out: str = "gh",
+                      keep: str = "*") -> str:
+    """SELECT wrapping ``inner_sql`` (which must expose lat/lon columns)
+    that adds the geohash column ``out`` — with_geohash in DuckDB."""
+    return nested_select_sql(inner_sql, _encode_sql(lat, lon, precision, DUCKDB, str),
+                             out, keep)
 
 
 def decoded_select_sql(inner_sql: str, precision: int, gh_col: str = "gh",
@@ -81,14 +89,6 @@ def center_lat_sql() -> str:
 
 def center_lng_sql() -> str:
     return "((__min_lng + __max_lng) * 0.5)"
-
-
-def haversine_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
-    """Great-circle meters — twin of functions.native.haversine_m."""
-    return (f"2.0 * 6371008.8 * asin(least(1.0, sqrt("
-            f"sin(radians({lat2} - {lat1}) / 2) * sin(radians({lat2} - {lat1}) / 2) "
-            f"+ cos(radians({lat1})) * cos(radians({lat2})) "
-            f"* sin(radians({lng2} - {lng1}) / 2) * sin(radians({lng2} - {lng1}) / 2))))")
 
 
 def pages_sql(replicate: int = 1) -> str:

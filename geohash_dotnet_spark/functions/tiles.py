@@ -7,17 +7,18 @@ like geohash but on the Web-Mercator projection).
 
 Two tile-row (y) implementations, same tiling:
 
-* ``tile_y`` — closed-form Mercator ``ln(tan/…)``: one codegen-friendly
-  expression, the production path at any zoom.
 * ``tile_y_portable`` — counts how many of the 2^z - 1 internal tile
   boundary latitudes (precomputed once, driver-side, as exact double
-  literals) lie at or above the point. Pure comparisons, so DuckDB
+  literals) lie at or above the point. Pure comparisons, rendered as
+  one text for Spark and DuckDB (``tile_y_portable_sql``), so DuckDB
   replays it bit-for-bit — ``ln`` differs by ≤1 ulp between Java and
   libm, which could flip a ``floor`` at a tile edge; a literal-table
-  comparison cannot. Used by the driver-verified key; the closed form is
-  asserted equal to it on the test corpora in pytest. The literal table
-  is O(2^z) — fine to z≈12; production at deeper zooms uses the closed
-  form (documented 1-ulp edge caveat).
+  comparison cannot. Every tiling operator uses it. The literal table,
+  and the comparisons per row, are O(2^z), so zooms above ``MAX_ZOOM``
+  are rejected.
+* ``tile_y`` — closed-form Mercator ``ln(tan/…)``, the reference
+  ``tile_y_portable`` is asserted equal to in pytest (documented 1-ulp
+  edge caveat).
 
 x is exact in both engines unconditionally: ``floor((lon+180)/360·2^z)``
 is +, /, · and floor — IEEE-defined, identical everywhere.
@@ -25,6 +26,9 @@ is +, /, · and floor — IEEE-defined, identical everywhere.
 Tie rule: a point exactly on an internal boundary latitude belongs to
 the tile BELOW it (count uses ``>=``), matching the canonical slippy
 ``floor`` at exactly-representable boundaries (e.g. lat=0).
+
+A NULL coordinate has no tile and a NaN raises the encode's error, in
+both engines, as in the geohash encode.
 """
 
 from __future__ import annotations
@@ -35,7 +39,24 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels.geohash import NAN_ERROR
+from .native import DUCKDB, SPARK, Dialect, _text_column
+
 MAX_MERCATOR_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.0511...
+# tile_y_portable compares 2^z - 1 literals per row in an interpreted
+# lambda. On 10k cached pages (4-core VM) building the x and y columns
+# took 0.4 s at z=12, 1.7 s at z=14 and 5.5 s at z=16, running them
+# 0.8, 1.9 and 6 s
+MAX_ZOOM = 12
+
+
+def check_zoom(z: int, least: int = 0) -> None:
+    """Raise ValueError unless ``least <= z <= MAX_ZOOM``."""
+    if not (least <= z <= MAX_ZOOM):
+        raise ValueError(
+            f"zoom must be in [{least}, {MAX_ZOOM}], got {z}: tile_y_portable "
+            f"compares 2^z - 1 boundary latitudes per row; for finer cells use "
+            f"the geohash encode (functions.native.with_geohash)")
 
 
 @lru_cache(maxsize=None)
@@ -48,16 +69,43 @@ def tile_lat_bounds(z: int) -> tuple[float, ...]:
         for k in range(n + 1))
 
 
+def _tile_sql(coord: str, value: str, d: Dialect) -> str:
+    """``value`` under the encode's rule: a NULL ``coord`` has no tile and
+    a NaN raises (``greatest``/``least`` would skip a NULL)."""
+    return (f"CASE WHEN isnan({coord}) THEN {d.error}('{NAN_ERROR}') "
+            f"WHEN {coord} IS NOT NULL THEN {value} END")
+
+
+def tile_x_sql(lon: str, z: int, d: Dialect = DUCKDB) -> str:
+    """Tile column from the longitude expression ``lon`` in dialect ``d``
+    — exact linear math, engine-portable."""
+    n, lon = 1 << z, f"({lon})"
+    raw = f"floor(({lon} + {d.double(180.0)}) / {d.double(360.0)} * {d.double(n)})"
+    return _tile_sql(lon, f"CAST(greatest(0, least({n - 1}, {raw})) AS BIGINT)", d)
+
+
+def tile_y_portable_sql(lat: str, z: int, d: Dialect = DUCKDB) -> str:
+    """Tile row of the latitude expression ``lat`` in dialect ``d``, by
+    counting the internal boundary latitudes at or above the point —
+    exact cross-engine (pure double comparisons against shared literals)."""
+    bounds, lat = ", ".join(map(d.double, tile_lat_bounds(z)[1:-1])), f"({lat})"
+    return _tile_sql(lat, f"CAST({d.count_ge(bounds, lat)} AS BIGINT)", d)
+
+
 def tile_x(lon: Column, z: int) -> Column:
-    """Tile column from longitude — exact linear math, engine-portable."""
-    n = 1 << z
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw)).cast("long")
+    """``tile_x_sql`` as a Spark column."""
+    return _text_column(lambda c: tile_x_sql(c, z, SPARK), lon)
+
+
+def tile_y_portable(lat: Column, z: int) -> Column:
+    """``tile_y_portable_sql`` as a Spark column."""
+    return _text_column(lambda c: tile_y_portable_sql(c, z, SPARK), lat)
 
 
 def tile_y(lat: Column, z: int) -> Column:
-    """Tile row via the closed-form Mercator projection (production path;
-    ln carries a ≤1-ulp cross-engine edge caveat — see module doc)."""
+    """Tile row via the closed-form Mercator projection (the reference
+    for tile_y_portable; ln carries a ≤1-ulp cross-engine edge caveat —
+    see module doc)."""
     n = 1 << z
     # clamp to the Mercator domain first: |lat| -> 90 makes (1 - sin)
     # a zero divisor (ANSI divide-by-zero); the poles live in the edge
@@ -73,23 +121,11 @@ def tile_y(lat: Column, z: int) -> Column:
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw)).cast("long")
 
 
-def tile_y_portable(lat: Column, z: int) -> Column:
-    """Tile row by counting boundary latitudes above the point — exact
-    cross-engine (pure double comparisons against shared literals)."""
-    bounds = tile_lat_bounds(z)[1:-1]  # internal boundaries only
-    arr = F.array(*[F.lit(b) for b in bounds])
-    return F.size(F.filter(arr, lambda b: b >= lat)).cast("long")
-
-
-def quadkey(x: Column, y: Column, z: int) -> Column:
+def quadkey_sql(x: str, y: str, z: int, d: Dialect = DUCKDB) -> str:
     """z/x/y -> the z-character base-4 quadkey (digit = y-bit·2 + x-bit,
-    most significant level first). Constant-unrolled integer bit math."""
-    digits = []
-    for i in range(z - 1, -1, -1):
-        d = (F.shiftright(x, i).bitwiseAND(F.lit(1))
-             + F.shiftright(y, i).bitwiseAND(F.lit(1)) * F.lit(2))
-        digits.append(d.cast("string"))
-    return F.concat(*digits)
+    most significant level first) in dialect ``d``; NULL if x or y is."""
+    return " || ".join(f"CAST({d.shiftright(x, i)} % 2 + {d.shiftright(y, i)} % 2 * 2 AS STRING)"
+                       for i in range(z - 1, -1, -1)) or "''"
 
 
 def quadkey_to_xy(qk: Column) -> tuple[Column, Column, Column]:
@@ -125,35 +161,11 @@ def tile_bounds(x: Column, y: Column, z: int) -> Column:
 
 
 def with_tiles(df: DataFrame, lat: str = "lat", lon: str = "lon",
-               z: int = 8, portable: bool = True) -> DataFrame:
-    """Add z, x, y, quadkey columns for each point row."""
-    ycol = tile_y_portable(F.col(lat), z) if portable \
-        else tile_y(F.col(lat), z)
+               z: int = 8) -> DataFrame:
+    """Add z, x, y, quadkey columns for each point row (x, y and quadkey
+    are NULL where a coordinate is)."""
+    check_zoom(z)
     out = (df.withColumn("z", F.lit(z).cast("long"))
            .withColumn("x", tile_x(F.col(lon), z))
-           .withColumn("y", ycol))
-    return out.withColumn("quadkey", quadkey(F.col("x"), F.col("y"), z))
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracle twins
-# ---------------------------------------------------------------------------
-
-def tile_x_sql(lon: str, z: int) -> str:
-    n = 1 << z
-    raw = f"floor((({lon}) + 180.0) / 360.0 * {float(n)!r})"
-    return f"CAST(greatest(0, least({n - 1}, {raw})) AS BIGINT)"
-
-
-def tile_y_portable_sql(lat: str, z: int) -> str:
-    bounds = tile_lat_bounds(z)[1:-1]
-    lits = ", ".join(repr(b) for b in bounds)
-    return (f"CAST(len(list_filter([{lits}], "
-            f"__b -> __b >= ({lat}))) AS BIGINT)")
-
-
-def quadkey_sql(x: str, y: str, z: int) -> str:
-    parts = [
-        f"CAST(((({x}) >> {i}) & 1) + 2 * ((({y}) >> {i}) & 1) AS VARCHAR)"
-        for i in range(z - 1, -1, -1)]
-    return " || ".join(parts)
+           .withColumn("y", tile_y_portable(F.col(lat), z)))
+    return out.withColumn("quadkey", F.expr(quadkey_sql("x", "y", z, SPARK)))

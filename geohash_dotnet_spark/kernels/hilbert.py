@@ -2,8 +2,9 @@
 
 The classic xy2d bit state machine (public-domain Wikipedia reference
 form) over whole arrays: ~10 NumPy ops per bit plane instead of a
-per-row loop. Exact int64 throughout — bit-identical to the DuckDB
-chained-subquery twin in operators/layout.py (value-checked in tests).
+per-row loop. Exact int64 throughout — the independent reference that
+operators/layout.py's one SQL text, run in Spark and in DuckDB, is
+value-checked against in tests.
 """
 
 from __future__ import annotations

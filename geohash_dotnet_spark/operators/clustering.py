@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tiles import (
+    check_zoom,
     tile_x,
     tile_x_sql,
-    tile_y,
     tile_y_portable,
     tile_y_portable_sql,
 )
@@ -43,21 +43,17 @@ __all__ = ["tile_density_clusters", "tile_density_clusters_sql"]
 
 def tile_density_clusters(df: DataFrame, lat: str = "lat",
                           lon: str = "lon", z: int = 8,
-                          min_count: int = 5,
-                          portable: bool = True) -> DataFrame:
+                          min_count: int = 5) -> DataFrame:
     """Cluster dense tiles into connected hotspot regions.
 
     Returns one row per DENSE tile: ``(z, x, y, n_points, cluster_id,
     cluster_size)`` — ``cluster_id`` the min packed tile id of the
     connected component (a dense tile with no dense neighbor is its own
     singleton cluster), ``cluster_size`` the component's tile count.
-
-    ``portable=True`` uses the boundary-literal tile row (bit-exact in
-    DuckDB); pass False for the closed-form Mercator production path.
+    Rows with a NULL coordinate have no tile: they group as x = y = NULL.
     """
+    check_zoom(z)
     n = 1 << z
-    ycol = tile_y_portable(F.col(lat), z) if portable \
-        else tile_y(F.col(lat), z)
     # localCheckpoint (not just persist): the label-propagation loop
     # re-embeds its inputs into each round's logical plan, so the
     # corpus-side lineage must be TRUNCATED here or the plan tree grows
@@ -65,7 +61,8 @@ def tile_density_clusters(df: DataFrame, lat: str = "lat",
     # (<= 4^z rows) — the same executor-loss trade dedup.py's loop
     # already takes every 8 rounds.
     dense = (
-        df.select(tile_x(F.col(lon), z).alias("x"), ycol.alias("y"))
+        df.select(tile_x(F.col(lon), z).alias("x"),
+                  tile_y_portable(F.col(lat), z).alias("y"))
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .filter(F.col("n_points") >= int(min_count))

@@ -133,8 +133,7 @@ def site_footprint(df: DataFrame, precision: int = 4, url: str = "url",
                 F.max("__lon").alias("max_lon"),
                 F.sum(F.col("__lat_u").cast("decimal(38,0)")).alias("__slat"),
                 F.sum(F.col("__lon_u").cast("decimal(38,0)")).alias("__slon")))
-    span = haversine_m(F.col("min_lat"), F.col("min_lon"),
-                       F.col("max_lat"), F.col("max_lon"))
+    span = haversine_m("min_lat", "min_lon", "max_lat", "max_lon")
     return (agg
             .withColumns({
                 "ctr_lat": MICRO.round(MICRO.real(
@@ -153,9 +152,9 @@ def site_footprint_sql(tagged_inner: str, url: str = "url",
     """DuckDB oracle twin of :func:`site_footprint`.  ``tagged_inner``
     must expose url, lat, lon and the geohash column ``gh`` at the
     operator's precision (functions.oracle.pages_tagged_sql)."""
-    from ..functions.oracle import haversine_sql
+    from ..functions.native import DUCKDB, haversine_sql
 
-    span = haversine_sql("min_lat", "min_lon", "max_lat", "max_lon")
+    span = haversine_sql("min_lat", "min_lon", "max_lat", "max_lon", DUCKDB)
     ctr_lat, ctr_lon = (MICRO.round_sql(MICRO.real_sql(
         f"CAST(__s{c} AS DOUBLE) / CAST(n_pages AS DOUBLE)"))
         for c in ("lat", "lon"))

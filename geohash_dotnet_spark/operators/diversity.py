@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exact import MICRO
-from ..functions.native import haversine_m, with_geohash
-from ..functions.oracle import haversine_sql
+from ..functions.native import DUCKDB, haversine_m, haversine_sql, sql_double, sql_name, with_geohash
 
 __all__ = ["tile_entropy", "tile_entropy_sql",
            "distance_bands", "distance_bands_sql",
@@ -75,8 +74,8 @@ def distance_bands(df: DataFrame, center_lat: float, center_lon: float,
     if band_m < 1 or n_bands < 1:
         raise ValueError(f"band_m/n_bands must be >= 1, got "
                          f"{band_m}/{n_bands}")
-    d = haversine_m(F.col(lat).cast("double"), F.col(lon).cast("double"),
-                    F.lit(float(center_lat)), F.lit(float(center_lon)))
+    d = haversine_m(f"CAST({sql_name(lat)} AS DOUBLE)", f"CAST({sql_name(lon)} AS DOUBLE)",
+                    sql_double(center_lat), sql_double(center_lon))
     fpd = MICRO.ticks(d)
     band = F.least(F.floor(fpd / F.lit(float(band_m * MICRO.scale))),
                    F.lit(int(n_bands)))
@@ -91,7 +90,7 @@ def distance_bands_sql(inner: str, center_lat: float, center_lon: float,
                        lat: str = "lat", lon: str = "lon") -> str:
     """DuckDB twin; ``inner`` must expose lat/lon/url."""
     d = haversine_sql(lat, lon, repr(float(center_lat)),
-                      repr(float(center_lon)))
+                      repr(float(center_lon)), DUCKDB)
     fpd = MICRO.ticks_sql(d)
     band = (f"CAST(least(floor({fpd} / {float(band_m * MICRO.scale)!r}), "
             f"{int(n_bands)}) AS INT)")

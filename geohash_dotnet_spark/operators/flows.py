@@ -250,9 +250,11 @@ def trip_stats(df: DataFrame, user: str = "user_id", ts: str = "ts",
     new_trip = F.when(
         prev_ep.isNull() | ((ep - prev_ep) > int(gap_s) * 1_000_000),
         1).otherwise(0)
-    from ..functions.native import haversine_m
-    leg = haversine_m(F.lag(lat).over(w), F.lag(lon).over(w),
-                      F.col(lat), F.col(lon))
+    from ..functions.native import haversine_m, sql_name
+    over = (f"OVER (PARTITION BY {sql_name(user)} ORDER BY "
+            + ", ".join(sql_name(c) for c in [ts, tiebreak] if c) + ")")
+    leg = haversine_m(f"lag({sql_name(lat)}) {over}", f"lag({sql_name(lon)}) {over}",
+                      sql_name(lat), sql_name(lon))
     leg_m = F.when(new_trip == 1, F.lit(0)).otherwise(
         METRE.ticks(leg)).cast("long")
     seg = (df.withColumn("__new", new_trip)
@@ -277,10 +279,10 @@ def trip_stats_sql(inner: str, user: str = "user_id", ts: str = "ts",
                    tiebreak: str | None = None) -> str:
     """DuckDB oracle twin of :func:`trip_stats` (haversine twin
     expression is bit-exact with the Spark native trig chain)."""
-    from ..functions.oracle import haversine_sql
+    from ..functions.native import DUCKDB, haversine_sql
     order = f"{ts}" + (f", {tiebreak}" if tiebreak else "")
     tb = f", {tiebreak}" if tiebreak else ""
-    hv = haversine_sql("plat", "plon", "lat", "lon")
+    hv = haversine_sql("plat", "plon", "lat", "lon", DUCKDB)
     return f"""
 WITH l AS (
   SELECT {user}, {ts}{tb}, lat, lon,

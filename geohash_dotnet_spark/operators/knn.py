@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..functions.exact import MICRO
-from ..functions.native import haversine_m, with_geohash
+from ..functions.native import haversine_m, sql_double, sql_name, with_geohash
 from ..kernels.circle import cover_circle
 from ..kernels.distance import precision_for_radius
 from .spatial_join import cell_join
@@ -105,8 +105,8 @@ def knn_join(spark: SparkSession, points_df: DataFrame, queries: pd.DataFrame,
                                             F.substring(gh_col, 1, p)),
                           cov, gh_col="__ghr")
                 .withColumn("dist_m",
-                            haversine_m(F.col("q_lat"), F.col("q_lon"),
-                                        F.col(lat), F.col(lon))))
+                            haversine_m("q_lat", "q_lon",
+                                        sql_name(lat), sql_name(lon))))
         w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc())
         topk = (cand.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k)
@@ -157,8 +157,8 @@ def nearest_assign(df: DataFrame, sites: list[tuple[str, float, float]],
     """
     cands = F.array(*[
         F.struct(
-            haversine_m(F.col(lat), F.col(lon),
-                        F.lit(float(slat)), F.lit(float(slon))).alias("d"),
+            haversine_m(sql_name(lat), sql_name(lon),
+                        sql_double(slat), sql_double(slon)).alias("d"),
             F.lit(name).alias("s"))
         for name, slat, slon in sites])
     best = F.array_min(cands)
@@ -199,8 +199,8 @@ def nearest_sites(df: DataFrame, sites: list[tuple[str, float, float]],
     k = min(int(k), len(sites))
     cands = F.array(*[
         F.struct(
-            haversine_m(F.col(lat), F.col(lon),
-                        F.lit(float(slat)), F.lit(float(slon))).alias("d"),
+            haversine_m(sql_name(lat), sql_name(lon),
+                        sql_double(slat), sql_double(slon)).alias("d"),
             F.lit(name).alias("s"))
         for name, slat, slon in sites])
     top = F.slice(F.array_sort(cands), 1, k)

@@ -14,9 +14,9 @@ geohash-prefix layout (DataBricks Z-ORDER / Delta liquid clustering
 rationale; here with the curve one better).
 
 Everything is exact integer bit arithmetic (the classic xy2d state
-machine), so the vectorized NumPy kernel behind the Arrow UDF and the
-DuckDB chained-subquery twin match bit-for-bit — cross-checked in
-tests.
+machine), rendered once as SQL text for Spark and its DuckDB twin, so
+both match the NumPy kernel (kernels/hilbert.py) bit for bit —
+cross-checked in tests.
 
 Scale notes: the index is a pure projection (zero shuffles, zero
 joins); the shard histogram below is one partial+final aggregation.
@@ -26,14 +26,16 @@ layout hook.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from ..functions.native import DUCKDB, _grid_index_sql, _normalized_sql
-from ..kernels.geohash import _grid_index, clamp_latitude, normalize_longitude
+from ..functions.native import (DUCKDB, SPARK, Dialect, _grid_sql, _text_column, sql_name,
+                                with_geohash, with_stages)
+from ..functions.oracle import nested_select_sql
+from ..kernels.geohash import _grid_index, clamp_latitude
 from ..kernels.hilbert import xy2d
 
 __all__ = ["with_hilbert", "hilbert_shards", "hilbert_select_sql",
@@ -42,44 +44,53 @@ __all__ = ["with_hilbert", "hilbert_shards", "hilbert_select_sql",
            "hilbert_range_predicate"]
 
 
+# xy2d (kernels/hilbert.py) as a 4-state machine on the raw grid bits:
+# state bit 0 = x and y swapped, bit 1 = both complemented. The 4-bit
+# entry at 4 * (4 * state + q), q = 2 * xbit + ybit, holds the bit
+# plane's Hilbert digit (entry >> 2) and the next state (entry & 3).
+_XY2D_STATES = 0x2C7B36DA95E08F41
+
+
+def _hilbert_sql(lat: str, lon: str, order: int, d: Dialect,
+                 ref: Callable[[str], str]) -> tuple:
+    """The Hilbert index in dialect ``d``: the encode's clamp, wrap and
+    grid index (``native._grid_sql``) on the 2^order x 2^order grid, then
+    one state-machine step per bit plane, MSB first, plus the encode's
+    NULL guard (a NaN raises the encode's error). Each step reads the
+    previous one once, so the text grows with order^2. ``%`` stands for
+    ``&`` (every operand is non-negative) as it needs no grouping
+    parentheses (see functions/native.py on their parse cost)."""
+    if not (1 <= order <= 16):
+        raise ValueError(f"order must be in [1, 16], got {order}")
+    normalized, indexed, guard = _grid_sql(lat, lon, order, order, d, ref)
+    entry, digits = None, []  # entry: the state table shifted to this plane's entry
+    for i in range(order - 1, -1, -1):
+        at = (f"{d.shiftright(ref('__gh_lng_i'), i)} % 2 * 8 + "
+              f"{d.shiftright(ref('__gh_lat_i'), i)} % 2 * 4")
+        if entry is not None:
+            at = f"{entry} % 4 * 16 + {at}"
+        entry = d.shiftright(str(_XY2D_STATES), at)
+        digits.append(f"{d.shiftright(entry, 2)} % 4 * {4 ** i}")
+    # the guard is an addend, not a branch around the digits: Catalyst
+    # shares the steps that the digits repeat only outside a branch
+    return normalized, indexed, " + ".join(digits) + f" + CASE WHEN {guard} THEN 0 END"
+
+
 def with_hilbert(df: DataFrame, lat: str = "lat", lon: str = "lon",
                  order: int = 8, out: str = "hd") -> DataFrame:
     """Add the Hilbert index ``out`` (long, in [0, 4^order)) of each
-    point on the 2^order x 2^order grid.
+    point on the 2^order x 2^order grid; a NULL coordinate gives NULL.
 
     Classic xy2d: walk bit-planes MSB-first, accumulate the quadrant
     digit, rotate/reflect the frame (Hilbert 1891; the bit formulation
-    follows the public-domain Wikipedia reference implementation).
+    follows the public-domain Wikipedia reference implementation), here
+    as JVM expressions (``_hilbert_sql``) in the encode's staged selects.
 
-    Runs the vectorized NumPy kernel (kernels/hilbert.py) behind an Arrow
-    pandas UDF: ~10 array ops per bit plane, exact int64, a Python task
-    per partition where the cell functions are JVM expressions (see below
-    for why). The DuckDB twin
-    (``hilbert_select_sql``) is the reference it is checked against.
-
-    Why not a staged per-iteration projection (the with_geohash
-    trick): each xy2d step references the previous x and y several
-    times, so when CollapseProject inlines the stages — and
-    PushDownPredicate ALWAYS substitutes filter predicates through
-    Projects — the tree grows ~5x per bit plane, ~5^order nodes: at
-    order 8 a ~400k-node predicate that OOMs the optimizer. The UDF is
-    one opaque expression, so every downstream reference to ``out``
-    stays linear.
+    A filter on ``out`` is pushed through the projection with the whole
+    index inlined, once per reference; filter a computed index behind a
+    generator, as :func:`hilbert_bbox_tiles` does.
     """
-    if not (1 <= order <= 16):
-        raise ValueError(f"order must be in [1, 16], got {order}")
-    n = 1 << order
-
-    @pandas_udf("long")
-    def _hd(la: pd.Series, lo: pd.Series) -> pd.Series:
-        yi = _grid_index(clamp_latitude(la.to_numpy(dtype=np.float64)),
-                         -90.0, 180.0 / n, n)
-        xi = _grid_index(normalize_longitude(lo.to_numpy(dtype=np.float64)),
-                         -180.0, 360.0 / n, n)
-        return pd.Series(xy2d(order, xi, yi))
-
-    return df.withColumn(out, _hd(F.col(lat).cast("double"),
-                                  F.col(lon).cast("double")))
+    return with_stages(df, _hilbert_sql(lat, lon, order, SPARK, sql_name), out)
 
 
 def hilbert_shards(df: DataFrame, lat: str = "lat", lon: str = "lon",
@@ -108,68 +119,24 @@ def hilbert_shards(df: DataFrame, lat: str = "lat", lon: str = "lon",
     shard = F.floor(F.col("__hd_s") * F.lit(n_shards) / F.lit(total))
     return (cells.groupBy(shard.cast("int").alias("shard"))
             .agg(F.sum("__n").alias("n_pages"),
-                 F.count(F.lit(1)).alias("n_cells")))
+                 F.count("__hd_s").alias("n_cells")))
 
 
 def hilbert_select_sql(inner_sql: str, order: int = 8, lat: str = "lat",
-                       lon: str = "lon", out: str = "hd",
-                       keep: str = "*") -> str:
-    """DuckDB twin of :func:`with_hilbert` — same xy2d bit state machine
-    unrolled into chained subqueries, over the encode's clamp, wrap and
-    grid index (functions/native.py; NaN raises the encode's error)."""
-    n = 1 << order
-    lat_n, lon_n = _normalized_sql(f"CAST({lat} AS DOUBLE)",
-                                   f"CAST({lon} AS DOUBLE)", DUCKDB)
-    s0 = f"SELECT {keep}, {lat_n} AS __hlat, {lon_n} AS __hlon FROM ({inner_sql})"
-    # every stage emits FRESH column names (suffix = bit plane) so the
-    # SELECT-*-chained subqueries never collide
-    y0, x0, d0 = f"__hy{order}", f"__hx{order}", f"__hd{order}"
-    s1 = (f"SELECT {keep}, "
-          f"{_grid_index_sql('__hlat', -90.0, 180.0, order, DUCKDB)} AS {y0}, "
-          f"{_grid_index_sql('__hlon', -180.0, 360.0, order, DUCKDB)} AS {x0}, "
-          f"CAST(0 AS BIGINT) AS {d0} FROM ({s0})")
-    cur, px, py, pd = s1, x0, y0, d0
-    for i in range(order - 1, -1, -1):
-        s = 1 << i
-        nx, ny, nd = f"__hx{i}", f"__hy{i}", f"__hd{i}"
-        rx = f"(({px} >> {i}) & 1)"
-        ry = f"(({py} >> {i}) & 1)"
-        fx = f"CASE WHEN {rx} = 1 THEN {n - 1} - {px} ELSE {px} END"
-        fy = f"CASE WHEN {rx} = 1 THEN {n - 1} - {py} ELSE {py} END"
-        cur = (f"SELECT {keep}, "
-               f"{pd} + {s * s} * CAST(xor(3 * {rx}, {ry}) AS BIGINT) "
-               f"AS {nd}, "
-               f"CASE WHEN {ry} = 0 THEN {fy} ELSE {px} END AS {nx}, "
-               f"CASE WHEN {ry} = 0 THEN {fx} ELSE {py} END AS {ny} "
-               f"FROM ({cur})")
-        px, py, pd = nx, ny, nd
-    # EXCLUDE (DuckDB syntax — this IS the DuckDB twin) strips the
-    # 3*(order+1)+2 working columns so the twin adds exactly one column
-    # like with_hilbert does
-    helpers = ["__hlat", "__hlon"] + [
-        f"__h{a}{i}" for i in range(order + 1) for a in ("x", "y", "d")]
-    return (f"SELECT * EXCLUDE ({', '.join(helpers)}), {pd} AS {out} "
-            f"FROM ({cur})")
+                       lon: str = "lon", out: str = "hd") -> str:
+    """DuckDB twin of :func:`with_hilbert`: the same text, nested."""
+    return nested_select_sql(inner_sql, _hilbert_sql(lat, lon, order, DUCKDB, str), out)
 
 
 def hilbert_shards_sql(inner_sql: str, order: int = 8, lat: str = "lat",
                        lon: str = "lon", n_shards: int = 64) -> str:
     """DuckDB twin of :func:`hilbert_shards`."""
     total = 4 ** order
-    hsql = hilbert_select_sql(inner_sql, order, lat, lon, out="hd",
-                              keep="*")
+    hsql = hilbert_select_sql(inner_sql, order, lat, lon)
     return (f"SELECT CAST(floor(hd * {n_shards} / {total}.0) AS INT) "
             f"AS shard, CAST(count(*) AS BIGINT) AS n_pages, "
             f"CAST(count(DISTINCT hd) AS BIGINT) AS n_cells "
             f"FROM ({hsql}) GROUP BY 1")
-
-
-def _xy2d_scalar(n: int, x: int, y: int) -> int:
-    """Driver-side scalar wrapper over the ONE xy2d implementation
-    (kernels/hilbert.py) — no separate scalar copy of the state machine."""
-    return int(xy2d(n.bit_length() - 1,
-                    np.asarray([x], dtype=np.int64),
-                    np.asarray([y], dtype=np.int64))[0])
 
 
 def hilbert_ranges_for_bbox(min_lat: float, min_lon: float,
@@ -238,7 +205,7 @@ def hilbert_ranges_for_bbox(min_lat: float, min_lon: float,
             inside = (qx >= xa and qx + s - 1 <= xb
                       and qy >= y0 and qy + s - 1 <= y1)
             if inside or s == 1 or len(out) + len(stack) >= max_ranges:
-                d = _xy2d_scalar(n, qx, qy)
+                d = int(xy2d(order, [qx], [qy])[0])
                 base = (d // (s * s)) * (s * s)
                 out.append((base, base + s * s - 1))
             else:
@@ -275,22 +242,16 @@ def hilbert_bbox_tiles(df: DataFrame, min_lat: float, min_lon: float,
     """
     ranges = hilbert_ranges_for_bbox(min_lat, min_lon, max_lat, max_lon,
                                      order)
-    hd = with_hilbert(df, lat, lon, order, out="__hd_q")
-    # membership via exists() over a LITERAL range array: exactly ONE
-    # reference to the computed index column. An OR-of-BETWEENs here
-    # would make CollapseProject inline the whole staged xy2d chain
-    # once per comparison (2x per range) — an exponential expression
-    # blowup that OOMs the optimizer. The BETWEEN form is for STORED
-    # index columns, where it pushes down (hilbert_range_predicate).
-    rarr = F.array(*[F.struct(F.lit(lo).alias("lo"), F.lit(hi).alias("hi"))
-                     for lo, hi in ranges])
-    refined = (hd.filter(F.exists(rarr, lambda r: (F.col("__hd_q") >= r.lo)
-                                  & (F.col("__hd_q") <= r.hi)))
+    # the index goes through a generator, so the range filter reads the
+    # generated column: a filter on a projected index is pushed down with
+    # the whole index inlined, once per range comparison
+    hd = (with_hilbert(df, lat, lon, order, out="__hd")
+          .select("*", F.explode(F.array("__hd")).alias("__hd_q")).drop("__hd"))
+    refined = (hd.filter(hilbert_range_predicate(F.col("__hd_q"), ranges))
                .filter((F.col(lat) >= F.lit(float(min_lat)))
                        & (F.col(lat) <= F.lit(float(max_lat)))
                        & (F.col(lon) >= F.lit(float(min_lon)))
                        & (F.col(lon) <= F.lit(float(max_lon)))))
-    from ..functions.native import with_geohash
     return (with_geohash(refined, lat, lon, precision, out="__tile")
             .groupBy(F.col("__tile").alias("tile"))
             .agg(F.count(F.lit(1)).alias("n_pages")))
@@ -313,13 +274,10 @@ def hilbert_bbox_tiles_sql(tagged_inner: str, min_lat: float,
 def hilbert_range_predicate(col: Column, ranges: list[tuple[int, int]]):
     """OR-of-BETWEENs over a STORED Hilbert index column — the form the
     parquet reader can push down for min/max row-group and file pruning
-    on a curve-sorted layout. Use only on materialized columns: on a
-    computed index the projection collapse duplicates the xy2d chain
-    per comparison (see hilbert_bbox_tiles)."""
+    on a curve-sorted layout. Use it on a stored or generated column: on
+    a projected index the filter pushdown inlines the whole index per
+    comparison (see hilbert_bbox_tiles)."""
     if not ranges:
         raise ValueError("ranges must be non-empty")
-    cond = None
-    for lo, hi in ranges:
-        c = col.between(F.lit(int(lo)), F.lit(int(hi)))
-        cond = c if cond is None else (cond | c)
-    return cond
+    return _text_column(lambda c: " OR ".join(
+        f"{c} BETWEEN {int(lo)} AND {int(hi)}" for lo, hi in ranges), col)

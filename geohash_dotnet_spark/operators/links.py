@@ -419,8 +419,7 @@ def link_locality(df: DataFrame, html: str = "html", url: str = "url",
     dst = df.select(F.col(url).alias("link"),
                     F.col(lat).alias("__dlat"),
                     F.col(lon).alias("__dlon"))
-    d = haversine_m(F.col("__slat"), F.col("__slon"),
-                    F.col("__dlat"), F.col("__dlon"))
+    d = haversine_m("__slat", "__slon", "__dlat", "__dlon")
     fpd = MICRO.ticks(d)
     band = F.least(F.floor(fpd / F.lit(float(band_m * MICRO.scale))),
                    F.lit(int(n_bands))).cast("int")
@@ -442,10 +441,10 @@ def link_locality_sql(pages_html_inner: str, pages_inner: str,
     source/target coordinates (the Spark side carries source coords
     through the explode instead — url -> (lat, lon) is functional, so
     the values agree), same fixed-point band and whole-metre mean."""
-    from ..functions.oracle import haversine_sql
+    from ..functions.native import DUCKDB, haversine_sql
 
     ex = extract_links_sql(pages_html_inner)
-    d = haversine_sql("p1.lat", "p1.lon", "p2.lat", "p2.lon")
+    d = haversine_sql("p1.lat", "p1.lon", "p2.lat", "p2.lon", DUCKDB)
     fpd = MICRO.ticks_sql(d)
     band = (f"CAST(least(floor({fpd} / {float(band_m * MICRO.scale)!r}), "
             f"{int(n_bands)}) AS INT)")

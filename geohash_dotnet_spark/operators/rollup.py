@@ -108,10 +108,9 @@ def tile_pyramid(df, lat: str = "lat", lon: str = "lon",
     -> (z int, quadkey string, n_pages long); zoom 0 is the one-row
     grand total with quadkey ''.
     """
-    from ..functions.tiles import with_tiles
+    from ..functions.tiles import check_zoom, with_tiles
 
-    if not (1 <= max_z <= 20):
-        raise ValueError(f"max_z must be in [1, 20], got {max_z}")
+    check_zoom(max_z, least=1)
     leaf = (with_tiles(df, lat, lon, z=max_z).groupBy("quadkey")
             .agg(F.count(F.lit(1)).alias("n")))
     zs = F.explode(F.sequence(F.lit(0), F.lit(max_z))).alias("z")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from geohash_dotnet_spark.functions.native import (gh_decode, gh_neighbors,
                                                    with_geohash)
 from geohash_dotnet_spark.operators import compress_cells, zonal_stats
+from geohash_dotnet_spark.operators.layout import with_hilbert
 from geohash_dotnet_spark.operators.text import with_quality
 from geohash_dotnet_spark.sources.pages import pages
 
@@ -54,6 +55,13 @@ def test_encode_build_round_trips_do_not_grow_with_precision(spark, pg):
               for p in (2, 12)}
     assert counts[2] == counts[12], counts
     assert counts[2] <= 64, counts
+
+
+def test_hilbert_build_round_trips_do_not_grow_with_order(spark, pg):
+    counts = {o: _count(spark, lambda o=o: with_hilbert(pg, order=o))
+              for o in (8, 16)}
+    assert counts[8] == counts[16], counts
+    assert counts[8] <= 64, counts
 
 
 def test_quality_build_round_trips_bounded(spark, pg):

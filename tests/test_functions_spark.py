@@ -18,9 +18,12 @@ from geohash_dotnet_spark.functions import (
     haversine_m,
     with_geohash,
 )
+from geohash_dotnet_spark.functions.native import DUCKDB, haversine_sql
 from geohash_dotnet_spark.functions.oracle import pages_tagged_sql, tagged_select_sql
 from geohash_dotnet_spark.kernels import geohash as GK
 from geohash_dotnet_spark.kernels import haversine_m as k_haversine
+from geohash_dotnet_spark.kernels.hilbert import xy2d
+from geohash_dotnet_spark.operators.layout import hilbert_select_sql, with_hilbert
 from geohash_dotnet_spark.operators.spatial_join import spatial_join, tag_pages
 from geohash_dotnet_spark.sources.pages import pages
 
@@ -121,12 +124,26 @@ def _duckdb_cells(pdf, p):
                    f"ORDER BY i").df().gh.values
 
 
+def _duckdb_hilbert(pdf, order):
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    return list(con.sql(f"SELECT hd FROM ({hilbert_select_sql('SELECT * FROM pts', order)}) "
+                        f"ORDER BY i").fetchnumpy()["hd"])
+
+
+def _kernel_hilbert(lat, lon, order):
+    n = 1 << order
+    return xy2d(order, GK._grid_index(GK.normalize_longitude(lon), -180.0, 360.0 / n, n),
+                GK._grid_index(GK.clamp_latitude(lat), -90.0, 180.0 / n, n))
+
+
 def test_encode_edge_longitudes_agree_in_three_engines(spark):
     """Every longitude and latitude cell edge at p1, and a sample at p5
     and p12, each with its two ulp neighbours (so the p1 edges give -180
     and 180, and ±90 with one ulp beyond each pole): the kernel, Spark
     and DuckDB all wrap in C# order (a remainder below zero gets 360,
-    rounding included), clamp alike and pick the same cell."""
+    rounding included), clamp alike and pick the same cell, and the
+    same Hilbert index at orders 1, 8 and 16."""
     import pandas as pd
 
     def with_ulps(edges):
@@ -149,11 +166,17 @@ def test_encode_edge_longitudes_agree_in_three_engines(spark):
     df = spark.createDataFrame(pdf)
     for p in (1, 5, 12):
         df = with_geohash(df, "lat", "lon", p, out=f"g{p}")
+    for order in (1, 8, 16):
+        df = with_hilbert(df, order=order, out=f"h{order}")
     rows = df.orderBy("i").collect()
     for p in (1, 5, 12):
         want = GK.encode(lat, lon, p)
         assert [r[f"g{p}"] for r in rows] == list(want)
         assert list(_duckdb_cells(pdf, p)) == list(want)
+    for order in (1, 8, 16):
+        want = list(_kernel_hilbert(lat, lon, order))
+        assert [r[f"h{order}"] for r in rows] == want, order
+        assert _duckdb_hilbert(pdf, order) == want, order
 
 
 def test_duckdb_twin_adds_only_the_cell_column():
@@ -193,6 +216,34 @@ def test_encode_null_gives_null_cell_and_nan_raises(spark):
             duckdb.sql(sql).fetchall()
 
 
+def test_hilbert_null_gives_null_and_nan_raises(spark):
+    """The encode's rule for the Hilbert index in both SQL engines: a
+    NULL coordinate has no index, NaN raises the kernel's error."""
+    import pandas as pd
+
+    rows = [(0, None, None), (1, 10.0, None), (2, None, 10.0), (3, 10.0, 10.0)]
+    df = spark.createDataFrame(rows, "i long, lat double, lon double")
+    pdf = pd.DataFrame(rows, columns=["i", "lat", "lon"])
+    for order in (1, 16):
+        want = [None] * 3 + list(_kernel_hilbert(np.array([10.0]), np.array([10.0]), order))
+        got = with_hilbert(df, order=order).orderBy("i").collect()
+        assert [r.hd for r in got] == want
+        duck = duckdb.connect()
+        duck.register("pts", pdf)
+        got = duck.sql(f"SELECT hd FROM ({hilbert_select_sql('SELECT * FROM pts', order)}) "
+                       f"ORDER BY i").fetchall()
+        assert [r[0] for r in got] == want
+    msg = "Coordinates must not be NaN."
+    for nan in ((float("nan"), 10.0), (10.0, float("nan"))):
+        bad = spark.createDataFrame([nan], "lat double, lon double")
+        with pytest.raises(Exception, match=msg):
+            with_hilbert(bad, order=8).collect()
+        sql = hilbert_select_sql(f"SELECT '{nan[0]}'::DOUBLE AS lat, "
+                                 f"'{nan[1]}'::DOUBLE AS lon", 8)
+        with pytest.raises(duckdb.Error, match=msg):
+            duckdb.sql(sql).fetchall()
+
+
 def test_udf_decode_bbox_neighbors(spark):
     gh = ["dr5reg", "s00000", "zzzzzz", "0", "u4png7x"]
     df = spark.createDataFrame([(g,) for g in gh], "gh string")
@@ -228,13 +279,21 @@ def test_gh_children_native(spark):
 
 
 def test_haversine_native_matches_kernel(spark):
+    """One haversine text, run by Spark and by DuckDB, against the NumPy
+    kernel (the engines' trig may differ in the last ulps)."""
+    import pandas as pd
+
     rng = np.random.default_rng(5)
     rows = [(float(a), float(b), float(c), float(d))
             for a, b, c, d in zip(rng.uniform(-90, 90, 500), rng.uniform(-180, 180, 500),
                                   rng.uniform(-90, 90, 500), rng.uniform(-180, 180, 500))]
     df = spark.createDataFrame(rows, "lat1 double, lon1 double, lat2 double, lon2 double")
     got = np.array([r.d for r in df.select(
-        haversine_m(F.col("lat1"), F.col("lon1"),
-                    F.col("lat2"), F.col("lon2")).alias("d")).collect()])
+        haversine_m("lat1", "lon1", "lat2", "lon2").alias("d")).collect()])
     want = k_haversine(*(np.array(c) for c in zip(*rows)))
     assert np.allclose(got, want, rtol=1e-12, atol=1e-6)
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame(rows, columns=["lat1", "lon1", "lat2", "lon2"]))
+    duck = con.sql(f"SELECT {haversine_sql('lat1', 'lon1', 'lat2', 'lon2', DUCKDB)} "
+                   f"FROM pts").fetchnumpy()
+    assert np.allclose(next(iter(duck.values())), want, rtol=1e-12, atol=1e-6)

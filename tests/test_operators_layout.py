@@ -93,16 +93,25 @@ def test_validation(spark):
         hilbert_shards(None, n_shards=0)
 
 
-def test_index_default_is_arrow_single_scan(spark):
-    """Default (arrow) path: the vectorized kernel rides one
-    ArrowEvalPython node — never per-row Python — over a single
-    scan."""
+def test_index_is_jvm_single_scan_and_filtered_once(spark):
+    """The index is JVM expressions over a single scan, with no Python
+    node; hilbert_bbox_tiles filters a generated copy of it, so its
+    filter holds no copy of the index (pushed through a projection, a
+    filter gets the whole index inlined once per range comparison)."""
+    from geohash_dotnet_spark.operators.layout import _XY2D_STATES, hilbert_bbox_tiles
+
     spark.catalog.clearCache()  # cached-pages substitution hides the scan
     out = hilbert_shards(pages(spark, SF), order=8, n_shards=64)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" in plan
+    assert "EvalPython" not in plan  # neither the Arrow nor the batch node
     assert plan.count("Scan parquet") == 1  # matches "FileScan parquet" too
+    q = hilbert_bbox_tiles(pages(spark, SF), 20.0, -130.0, 55.0, -60.0, order=16)
+    nodes = [line.lstrip("+-: ") for line in
+             q._jdf.queryExecution().optimizedPlan().toString().splitlines()]
+    with_index = [n for n in nodes if str(_XY2D_STATES) in n]
+    assert len(with_index) == 1 and with_index[0].startswith("Project"), with_index
+    filters = [n for n in nodes if n.startswith("Filter") and "__hd_q" in n]
+    assert filters and not any(str(_XY2D_STATES) in n for n in filters)
 
 
 def test_bbox_ranges_cover_exactly(spark):
@@ -262,15 +271,14 @@ def test_bbox_ranges_rejects_noncanonical_lons():
         hilbert_ranges_for_bbox(0.0, 0.0, 1.0, 190.0)
 
 
-def test_xy2d_scalar_delegates_to_kernel():
-    """The driver-side scalar wrapper returns the kernel xy2d values —
-    one state machine, not a third copy (exhaustive at order 4)."""
-    from geohash_dotnet_spark.operators.layout import _xy2d_scalar
+def test_kernel_xy2d_matches_reference():
+    """The NumPy kernel that the range decomposition and the SQL text are
+    checked against equals the pure-Python xy2d (exhaustive at order 4)."""
+    from geohash_dotnet_spark.kernels.hilbert import xy2d
 
     n = 16
-    for x in range(n):
-        for y in range(n):
-            assert _xy2d_scalar(n, x, y) == _xy2d(n, x, y)
+    x, y = zip(*[(x, y) for x in range(n) for y in range(n)])
+    assert list(xy2d(4, x, y)) == [_xy2d(n, a, b) for a, b in zip(x, y)]
 
 
 def test_hilbert_select_sql_twin_adds_exactly_one_column(spark):

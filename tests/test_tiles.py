@@ -66,12 +66,9 @@ def test_bbox_contains_assigned_point(pts):
 def test_prefix_containment(pts):
     # parent tile at z-1 = quadkey prefix of the z tile
     z = 8
-    t = T.with_tiles(pts, z=z).select(
-        F.col("quadkey").alias("qk8"),
-        T.quadkey(T.tile_x(F.col("lon"), z - 1),
-                  T.tile_y_portable(F.col("lat"), z - 1),
-                  z - 1).alias("qk7"))
-    bad = t.filter(F.substring("qk8", 1, z - 1) != F.col("qk7")).count()
+    qk8 = T.with_tiles(pts, z=z).select("lat", "lon", F.col("quadkey").alias("qk8"))
+    t = T.with_tiles(qk8, z=z - 1)
+    bad = t.filter(F.substring("qk8", 1, z - 1) != F.col("quadkey")).count()
     assert bad == 0
 
 
@@ -90,6 +87,82 @@ def test_duckdb_twins_bit_identical(pts):
     assert (d.x.values == pdf.x.values).all()
     assert (d.y.values == pdf.y.values).all()
     assert (d.quadkey.values == pdf.quadkey.values).all()
+
+
+def test_null_has_no_tile_and_nan_raises(spark):
+    """The encode's rule for tiles in both engines: a NULL coordinate
+    gives no x, y or quadkey (greatest/least would skip it and pick an
+    edge tile), a NaN raises the kernel's error."""
+    import pandas as pd
+
+    z = 3
+    rows = [(0, None, None), (1, 10.0, None), (2, None, 10.0), (3, 10.0, 10.0)]
+    x = int((10.0 + 180.0) / 360.0 * (1 << z))
+    y = sum(b >= 10.0 for b in T.tile_lat_bounds(z)[1:-1])
+    qk = "".join(str((x >> i & 1) + 2 * (y >> i & 1)) for i in range(z - 1, -1, -1))
+    want = [(None, None, None), (None, y, None), (x, None, None), (x, y, qk)]
+    df = spark.createDataFrame(rows, "i long, lat double, lon double")
+    got = T.with_tiles(df, z=z).orderBy("i").collect()
+    assert [(r.x, r.y, r.quadkey) for r in got] == want
+    con = duckdb.connect()
+    con.register("p", pd.DataFrame(rows, columns=["i", "lat", "lon"]))
+
+    def twin(src):
+        xs, ys = T.tile_x_sql("lon", z), T.tile_y_portable_sql("lat", z)
+        return con.sql(f"SELECT {xs} AS x, {ys} AS y, {T.quadkey_sql(xs, ys, z)} "
+                       f"FROM {src}")
+
+    assert twin("p ORDER BY i").fetchall() == want
+    msg = "Coordinates must not be NaN."
+    for nan in ((float("nan"), 10.0), (10.0, float("nan"))):
+        bad = spark.createDataFrame([nan], "lat double, lon double")
+        with pytest.raises(Exception, match=msg):
+            T.with_tiles(bad, z=z).collect()
+        with pytest.raises(duckdb.Error, match=msg):
+            twin(f"(SELECT '{nan[0]}'::DOUBLE AS lat, '{nan[1]}'::DOUBLE AS lon)").fetchall()
+
+
+def test_tile_edges_agree_in_both_engines(spark):
+    """Every tile edge at z=6 and z=12 with its two ulp neighbours: Spark
+    and DuckDB give the row and column that exact comparisons against
+    the boundary table and the IEEE column formula give."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    def with_ulps(edges):
+        return np.concatenate([edges, np.nextafter(edges, -np.inf),
+                               np.nextafter(edges, np.inf)])
+
+    for z in (6, 12):
+        n = 1 << z
+        lat = with_ulps(np.array(T.tile_lat_bounds(z)))
+        lon = np.resize(with_ulps(-180.0 + np.arange(n + 1) * (360.0 / n)), lat.size)
+        bounds = np.array(T.tile_lat_bounds(z)[1:-1])
+        want = [(min(max(math.floor((b + 180.0) / 360.0 * n), 0), n - 1),
+                 int((bounds >= a).sum())) for a, b in zip(lat, lon)]
+        pdf = pd.DataFrame({"i": np.arange(lat.size), "lat": lat, "lon": lon})
+        got = (spark.createDataFrame(pdf)
+               .select("i", T.tile_x(F.col("lon"), z).alias("x"),
+                       T.tile_y_portable(F.col("lat"), z).alias("y"))
+               .orderBy("i").collect())
+        assert [(r.x, r.y) for r in got] == want, z
+        con = duckdb.connect()
+        con.register("p", pdf)
+        assert con.sql(f"SELECT {T.tile_x_sql('lon', z)}, {T.tile_y_portable_sql('lat', z)} "
+                       f"FROM p ORDER BY i").fetchall() == want, z
+
+
+@pytest.mark.parametrize("z", [-1, T.MAX_ZOOM + 1, 64])
+def test_zoom_out_of_range_rejected(spark, z):
+    from geohash_dotnet_spark.operators import tile_density_clusters
+
+    df = spark.createDataFrame([(1.0, 2.0)], "lat double, lon double")
+    for build in (lambda: T.with_tiles(df, z=z),
+                  lambda: tile_density_clusters(df, z=z)):
+        with pytest.raises(ValueError, match=f"zoom must be in .*, got {z}"):
+            build()
 
 
 def test_tile_bounds_table_properties():
