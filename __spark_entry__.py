@@ -210,7 +210,7 @@ CIRCLE = dict(lat=40.7128, lon=-74.0060, radius_m=3_000_000.0, precision=2)
 KNN_QUERIES = [("q_berlin", 52.52, 13.405), ("q_sydney", -33.87, 151.21),
                ("q_lima", -12.05, -77.04)]
 KNN_K = 10
-# deterministic 96-query table: above knn_join's driver_cover_threshold
+# deterministic 96-query table: above knn's DRIVER_COVER_THRESHOLD
 # (64), so round-1 ring coverings are built on EXECUTORS via cover_circles
 # — the distributed path is under the driver's value gate, not just pytest
 KNN_TABLE_QUERIES = [(f"qt_{i:03d}",
@@ -443,7 +443,7 @@ def q_knn(spark, sf_dir):
 
 def q_knn_table(spark, sf_dir):
     """kNN over a query TABLE: executor-side ring coverings (96 queries
-    exceed driver_cover_threshold, so cover_circles builds every round-1
+    exceed knn.DRIVER_COVER_THRESHOLD, so cover_circles builds every round-1
     covering distributed)."""
     queries = pd.DataFrame(KNN_TABLE_QUERIES, columns=["query_id", "lat", "lon"])
     out = knn_join(spark, _pages(spark, sf_dir), queries, k=KNN_TABLE_K,
@@ -1162,9 +1162,8 @@ QK_Z = 6  # zoom for the quadkey driver key (64x64 world grid)
 def q_quadkey_tiles(spark, sf_dir):
     """Web-Mercator XYZ tile aggregation keyed by Bing-style quadkey —
     the second cell-index scheme next to geohash (north rule: "H3/S2-
-    style cell indexes"). Tile row uses the engine-portable boundary-
-    table form (functions/tiles.py) so the DuckDB twin is bit-exact;
-    the closed-form Mercator path is asserted equal in pytest."""
+    style cell indexes"). x and y are exact indices on the tile edges
+    (functions/tiles.py), so the DuckDB twin is bit-exact."""
     from geohash_dotnet_spark.functions.tiles import with_tiles
 
     t = with_tiles(_pages(spark, sf_dir), "lat", "lon", z=QK_Z)

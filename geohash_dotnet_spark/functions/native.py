@@ -79,18 +79,18 @@ class Dialect(NamedTuple):
     shiftright: Callable[[str, int], str]
     error: str                            # the function that raises
     hex_bigint: Callable[[str], str]      # a hex digest read as BIGINT
-    count_ge: Callable[[str, str], str]   # how many of the items are >= x
+    item: Callable[[str, str], str]       # item i (from 0) of the items
 
 
 # DuckDB reads a decimal literal as a DECIMAL, whose cast to DOUBLE can
 # round twice (a value of 17 digits is past 2^53); a string cast rounds once
 SPARK = Dialect(sql_double, lambda x, b: f"shiftright({x}, {b})", "raise_error",
                 lambda h: f"CAST(conv({h}, 16, 10) AS BIGINT)",
-                lambda items, x: f"size(filter(array({items}), __b -> __b >= {x}))")
+                lambda items, i: f"array({items})[{i}]")
 DUCKDB = Dialect(lambda x: f"CAST('{float(x)!r}' AS DOUBLE)",
                  lambda x, b: f"({x} >> {b})", "error",
                  lambda h: f"('0x' || {h})::BIGINT",
-                 lambda items, x: f"len(filter([{items}], __b -> __b >= {x}))")
+                 lambda items, i: f"[{items}][{i} + 1]")
 
 
 def _normalized_sql(lat_d: str, lon_d: str, d: Dialect) -> tuple[str, str]:
@@ -250,14 +250,19 @@ def cell_sql(key: str, length: str) -> str:
             f"'{_CONV32.upper()}', '{BASE32}'), 1, {length})")
 
 
+def deinterleave_sql(quads: str) -> tuple[str, str]:
+    """The low and the high bits of the base-4 digits ``quads``, each read
+    as a binary number: ``translate`` keeps one bit of each digit."""
+    return tuple(f"CAST(conv(translate({quads}, '0123', '{keep}'), 2, 10) AS BIGINT)"
+                 for keep in ("0101", "0011"))
+
+
 def _bounds_sql(g: str) -> tuple[str, str, str, str]:
     """(min_lat, min_lng, max_lat, max_lng): the kernel's dyadic
     ``bounding_box`` arithmetic, term for term, on the left-aligned
     30-bit grid indices. In the key's base-4 digits each digit is one
-    (lon, lat) bit pair; ``translate`` keeps one bit of each."""
-    quads = f"conv({cell_key_sql(g)}, 10, 4)"
-    lat, lng = (f"CAST(conv(translate({quads}, '0123', '{keep}'), 2, 10) AS BIGINT)"
-                for keep in ("0101", "0011"))
+    (lon, lat) bit pair."""
+    lat, lng = deinterleave_sql(f"conv({cell_key_sql(g)}, 10, 4)")
     min_lat = f"-90.0D + {lat} * {_LAT_UNIT}"
     min_lng = f"-180.0D + {lng} * {_LNG_UNIT}"
     return (min_lat, min_lng,

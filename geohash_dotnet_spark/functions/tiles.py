@@ -5,23 +5,20 @@ quadkey = the z-digit base-4 string whose digit i interleaves bit i of x
 and y, so parent/child containment is string-prefix containment, exactly
 like geohash but on the Web-Mercator projection).
 
-Two tile-row (y) implementations, same tiling:
+Both tile indices follow the geohash encode's discipline
+(``native._grid_index_sql``): an estimate, then one exact fix-up.
 
-* ``tile_y_portable`` — counts how many of the 2^z - 1 internal tile
-  boundary latitudes (precomputed once, driver-side, as exact double
-  literals) lie at or above the point. Pure comparisons, rendered as
-  one text for Spark and DuckDB (``tile_y_portable_sql``), so DuckDB
-  replays it bit-for-bit — ``ln`` differs by ≤1 ulp between Java and
-  libm, which could flip a ``floor`` at a tile edge; a literal-table
-  comparison cannot. Every tiling operator uses it. The literal table,
-  and the comparisons per row, are O(2^z), so zooms above ``MAX_ZOOM``
-  are rejected.
-* ``tile_y`` — closed-form Mercator ``ln(tan/…)``, the reference
-  ``tile_y_portable`` is asserted equal to in pytest (documented 1-ulp
-  edge caveat).
-
-x is exact in both engines unconditionally: ``floor((lon+180)/360·2^z)``
-is +, /, · and floor — IEEE-defined, identical everywhere.
+* x is the encode's grid index on 2^z columns of 360/2^z degrees from
+  -180: a floor-division estimate checked against the exact dyadic
+  column edges, so x is the column whose ``tile_bounds`` hold the point.
+* y counts the internal tile-row boundary latitudes (precomputed once,
+  driver-side, as exact double literals) that lie at or above the
+  point. The closed-form Mercator projection estimates the row edge
+  nearest the point; comparing the point with that one table entry
+  turns the estimate into the count exactly. ``ln`` and ``tan`` differ
+  by an ulp between Java and libm, which could flip a ``floor`` at a
+  tile edge; a comparison against shared literals cannot, so DuckDB
+  replays Spark's text bit for bit.
 
 Tie rule: a point exactly on an internal boundary latitude belongs to
 the tile BELOW it (count uses ``>=``), matching the canonical slippy
@@ -40,13 +37,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels.geohash import NAN_ERROR
-from .native import DUCKDB, SPARK, Dialect, _text_column
+from .native import DUCKDB, SPARK, Dialect, _grid_index_sql, _text_column, deinterleave_sql
 
 MAX_MERCATOR_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.0511...
-# tile_y_portable compares 2^z - 1 literals per row in an interpreted
-# lambda. On 10k cached pages (4-core VM) building the x and y columns
-# took 0.4 s at z=12, 1.7 s at z=14 and 5.5 s at z=16, running them
-# 0.8, 1.9 and 6 s
+# the tile-row text holds the boundary table, 2^z + 1 literals, and the
+# JVM parses it on every build: on 10k cached points (4-core VM) building
+# the x and y columns took 0.25 s at z=12, 0.6 s at z=14 and 2.3 s at
+# z=16, running them 0.15, 0.23 and 0.48 s
 MAX_ZOOM = 12
 
 
@@ -54,9 +51,9 @@ def check_zoom(z: int, least: int = 0) -> None:
     """Raise ValueError unless ``least <= z <= MAX_ZOOM``."""
     if not (least <= z <= MAX_ZOOM):
         raise ValueError(
-            f"zoom must be in [{least}, {MAX_ZOOM}], got {z}: tile_y_portable "
-            f"compares 2^z - 1 boundary latitudes per row; for finer cells use "
-            f"the geohash encode (functions.native.with_geohash)")
+            f"zoom must be in [{least}, {MAX_ZOOM}], got {z}: the tile-row "
+            f"text holds a table of the 2^z + 1 boundary latitudes; for finer "
+            f"cells use the geohash encode (functions.native.with_geohash)")
 
 
 @lru_cache(maxsize=None)
@@ -69,6 +66,12 @@ def tile_lat_bounds(z: int) -> tuple[float, ...]:
         for k in range(n + 1))
 
 
+@lru_cache(maxsize=None)
+def _lat_table_sql(z: int, d: Dialect) -> str:
+    """``tile_lat_bounds(z)`` as DOUBLE literals in dialect ``d``."""
+    return ", ".join(map(d.double, tile_lat_bounds(z)))
+
+
 def _tile_sql(coord: str, value: str, d: Dialect) -> str:
     """``value`` under the encode's rule: a NULL ``coord`` has no tile and
     a NaN raises (``greatest``/``least`` would skip a NULL)."""
@@ -77,19 +80,29 @@ def _tile_sql(coord: str, value: str, d: Dialect) -> str:
 
 
 def tile_x_sql(lon: str, z: int, d: Dialect = DUCKDB) -> str:
-    """Tile column from the longitude expression ``lon`` in dialect ``d``
-    — exact linear math, engine-portable."""
-    n, lon = 1 << z, f"({lon})"
-    raw = f"floor(({lon} + {d.double(180.0)}) / {d.double(360.0)} * {d.double(n)})"
-    return _tile_sql(lon, f"CAST(greatest(0, least({n - 1}, {raw})) AS BIGINT)", d)
+    """Tile column of the longitude expression ``lon`` in dialect ``d``:
+    the encode's exact grid index."""
+    lon = f"({lon})"
+    return _tile_sql(lon, _grid_index_sql(lon, -180.0, 360.0, z, d), d)
 
 
 def tile_y_portable_sql(lat: str, z: int, d: Dialect = DUCKDB) -> str:
-    """Tile row of the latitude expression ``lat`` in dialect ``d``, by
-    counting the internal boundary latitudes at or above the point —
-    exact cross-engine (pure double comparisons against shared literals)."""
-    bounds, lat = ", ".join(map(d.double, tile_lat_bounds(z)[1:-1])), f"({lat})"
-    return _tile_sql(lat, f"CAST({d.count_ge(bounds, lat)} AS BIGINT)", d)
+    """Tile row of the latitude expression ``lat`` in dialect ``d``: the
+    number of internal boundary latitudes at or above the point.
+
+    The estimate ``k`` is the row edge nearest the point by the closed-form
+    Mercator projection (of the latitude clamped to the Mercator domain),
+    clamped to a row. An error under half a row leaves ``k`` the point's
+    row or the one below it; with ``B`` the whole table (its ends are the
+    domain's edges), the point is in row ``k`` if ``B[k]`` is at or above
+    it and in row ``k - 1`` if not."""
+    n, lat, m = 1 << z, f"({lat})", d.double(MAX_MERCATOR_LAT)
+    merc = (f"ln(tan(radians(greatest(least({lat}, {m}), -{m})) * {d.double(0.5)} + "
+            f"{d.double(math.pi / 4)}))")
+    k = (f"least(greatest(CAST(floor({d.double(n / 2 + 0.5)} - {merc} * "
+         f"{d.double(n / (2 * math.pi))}) AS BIGINT), 0), {n - 1})")
+    below = f"CASE WHEN {d.item(_lat_table_sql(z, d), k)} < {lat} THEN 1 ELSE 0 END"
+    return _tile_sql(lat, f"greatest({k} - {below}, 0)", d)
 
 
 def tile_x(lon: Column, z: int) -> Column:
@@ -102,25 +115,6 @@ def tile_y_portable(lat: Column, z: int) -> Column:
     return _text_column(lambda c: tile_y_portable_sql(c, z, SPARK), lat)
 
 
-def tile_y(lat: Column, z: int) -> Column:
-    """Tile row via the closed-form Mercator projection (the reference
-    for tile_y_portable; ln carries a ≤1-ulp cross-engine edge caveat —
-    see module doc)."""
-    n = 1 << z
-    # clamp to the Mercator domain first: |lat| -> 90 makes (1 - sin)
-    # a zero divisor (ANSI divide-by-zero); the poles live in the edge
-    # tile rows anyway
-    lat = F.greatest(F.lit(-MAX_MERCATOR_LAT),
-                     F.least(F.lit(MAX_MERCATOR_LAT), lat))
-    lat_rad = F.radians(lat)
-    frac = (F.lit(1.0)
-            - F.log((F.lit(1.0) + F.sin(lat_rad))
-                    / (F.lit(1.0) - F.sin(lat_rad))) / F.lit(2.0 * math.pi)
-            ) / F.lit(2.0)
-    raw = F.floor(frac * F.lit(float(n)))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw)).cast("long")
-
-
 def quadkey_sql(x: str, y: str, z: int, d: Dialect = DUCKDB) -> str:
     """z/x/y -> the z-character base-4 quadkey (digit = y-bit·2 + x-bit,
     most significant level first) in dialect ``d``; NULL if x or y is."""
@@ -129,28 +123,22 @@ def quadkey_sql(x: str, y: str, z: int, d: Dialect = DUCKDB) -> str:
 
 
 def quadkey_to_xy(qk: Column) -> tuple[Column, Column, Column]:
-    """quadkey string -> (x, y, z) columns (z = length)."""
-    z = F.length(qk).cast("int")
-    idx = F.sequence(F.lit(1), z)
-    x = F.aggregate(
-        idx, F.lit(0).cast("long"),
-        lambda acc, i: (acc * 2 + (F.ascii(F.substr(qk, i, F.lit(1))) - 48)
-                        .bitwiseAND(F.lit(1)).cast("long")).cast("long"))
-    y = F.aggregate(
-        idx, F.lit(0).cast("long"),
-        lambda acc, i: (acc * 2
-                        + F.shiftright(F.ascii(F.substr(qk, i, F.lit(1)))
-                                       - 48, 1)
-                        .bitwiseAND(F.lit(1)).cast("long")).cast("long"))
-    return x, y, z.cast("long")
+    """quadkey string -> (x, y, z) columns (z = length): the low and the
+    high bits of its base-4 digits. A leading 0 digit makes the empty
+    quadkey tile (0, 0, 0); ``conv`` reads '' as NULL."""
+    def bits(c: str) -> tuple[str, str]:
+        return deinterleave_sql(f"concat('0', {c})")
+
+    return (_text_column(lambda c: bits(c)[0], qk), _text_column(lambda c: bits(c)[1], qk),
+            F.length(qk).cast("long"))
 
 
 def tile_bounds(x: Column, y: Column, z: int) -> Column:
     """struct(w, s, e, n) degree bbox of tile (x, y) at zoom z; the
-    north/south edges come from the same literal boundary table the
-    portable encoder uses, so bbox and assignment agree exactly."""
+    north/south edges come from the boundary table the tile row is
+    fixed up against, so bbox and assignment agree exactly."""
     n_tiles = 1 << z
-    lats = F.array(*[F.lit(b) for b in tile_lat_bounds(z)])
+    lats = F.expr(f"array({_lat_table_sql(z, SPARK)})")
     w = x.cast("double") / F.lit(float(n_tiles)) * F.lit(360.0) - F.lit(180.0)
     e = (x + 1).cast("double") / F.lit(float(n_tiles)) * F.lit(360.0) \
         - F.lit(180.0)

@@ -38,18 +38,21 @@ from ..kernels.circle import cover_circle
 from ..kernels.distance import precision_for_radius
 from .spatial_join import cell_join
 
+# above this many unsettled queries a round's coverings are built on
+# executors (cover_circles), not by the driver-side circle kernel
+DRIVER_COVER_THRESHOLD = 64
+
 
 def knn_join(spark: SparkSession, points_df: DataFrame, queries: pd.DataFrame,
              k: int, initial_radius_m: float = 2_000.0, max_rounds: int = 10,
              lat: str = "lat", lon: str = "lon", gh_col: str = "gh",
-             precision: int | None = None,
-             driver_cover_threshold: int = 64) -> DataFrame:
+             precision: int | None = None) -> DataFrame:
     """queries: pandas DataFrame (query_id, lat, lon). Returns a DataFrame
     (query_id, rank, dist_m, + point columns) with rank 1..k by distance.
 
     Covering placement: with few unsettled queries the ring coverings are
     built by the driver-side circle kernel (cheap, no extra job). Above
-    ``driver_cover_threshold`` unsettled queries, a round's coverings are
+    ``DRIVER_COVER_THRESHOLD`` unsettled queries, a round's coverings are
     built on EXECUTORS via :func:`cover_circles` — for a query *table*
     (thousands of rows) the per-query kernel calls would otherwise
     serialize on the driver and dominate the round. The covering is still
@@ -71,7 +74,7 @@ def knn_join(spark: SparkSession, points_df: DataFrame, queries: pd.DataFrame,
         p = precision or precision_for_radius(radius)
         p = max(min(p, p_fine), 2)
 
-        if len(remaining) > driver_cover_threshold:
+        if len(remaining) > DRIVER_COVER_THRESHOLD:
             # distributed coverings: one executor-side kernel call per
             # query (cover_circles mapInPandas), joined back to query
             # coords — no driver-side per-query loop

@@ -98,8 +98,8 @@ def tile_pyramid(df, lat: str = "lat", lon: str = "lon",
     analogue of :func:`time_rollup`; two Exchanges at any ``max_z``.
 
     Valid because quadkeys nest dyadically: the zoom-z quadkey is the
-    length-z prefix of the zoom-max_z quadkey (tile_x floors a scaled
-    longitude, so x_z = x_maxz >> (max_z - z); the portable y boundary
+    length-z prefix of the zoom-max_z quadkey (x is the exact index on
+    dyadic column edges, so x_z = x_maxz >> (max_z - z); the y boundary
     table at zoom z is a subset of zoom z+1's). The DuckDB twin
     verifies exactly that: it computes every zoom DIRECTLY from the
     raw rows with that zoom's own x/y/quadkey math, so prefix-rollup

@@ -16,8 +16,10 @@ Two scale regimes:
   pattern when the product needs "how many copies did we drop" rather
   than just the survivors.
 
-Fingerprint = md5(text) — same fingerprint as operators/dedup.exact_dedup,
-so batch backfill and streaming ingest agree on identity.
+Fingerprint = ``operators/text.with_fingerprint`` (md5 of the trimmed,
+lower-cased, whitespace-collapsed text), the one
+operators/dedup.exact_dedup uses, so batch backfill and streaming ingest
+agree on identity.
 """
 
 from __future__ import annotations
@@ -25,11 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def with_fingerprint(df: DataFrame, text_col: str = "text",
-                     out: str = "fingerprint") -> DataFrame:
-    """md5 content fingerprint (matches operators/dedup.py exact path)."""
-    return df.withColumn(out, F.md5(F.col(text_col)))
+from ..operators.text import with_fingerprint
 
 
 def streaming_dedup_within_watermark(spark: SparkSession, source_dir: str,

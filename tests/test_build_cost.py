@@ -1,8 +1,8 @@
 """Driver-side build cost: the hot-path builders hand each stage to the
 JVM as Spark SQL text, so building a query takes a handful of py4j round
-trips that does not grow with the geohash precision, the number of
-quality-score subexpressions, the cell functions' outputs or the steps
-of compress_cells and zonal membership."""
+trips that does not grow with the geohash precision, the tile zoom, the
+number of quality-score subexpressions, the cell functions' outputs or
+the steps of compress_cells and zonal membership."""
 
 import contextlib
 
@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from geohash_dotnet_spark.functions.native import (gh_decode, gh_neighbors,
                                                    with_geohash)
+from geohash_dotnet_spark.functions.tiles import tile_bounds, with_tiles
 from geohash_dotnet_spark.operators import compress_cells, zonal_stats
 from geohash_dotnet_spark.operators.layout import with_hilbert
 from geohash_dotnet_spark.operators.text import with_quality
@@ -62,6 +63,16 @@ def test_hilbert_build_round_trips_do_not_grow_with_order(spark, pg):
               for o in (8, 16)}
     assert counts[8] == counts[16], counts
     assert counts[8] <= 64, counts
+
+
+@pytest.mark.parametrize("build", [
+    lambda pg, z: with_tiles(pg, z=z),
+    lambda pg, z: tile_bounds(F.col("x"), F.col("y"), z)],
+    ids=["with_tiles", "tile_bounds"])
+def test_tile_build_round_trips_do_not_grow_with_zoom(spark, pg, build):
+    build(pg, 8)  # the first build also looks up the JVM functions it calls
+    counts = {z: _count(spark, lambda z=z: build(pg, z)) for z in (6, 12)}
+    assert counts[6] == counts[12], counts
 
 
 def test_quality_build_round_trips_bounded(spark, pg):

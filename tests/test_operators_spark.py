@@ -215,12 +215,12 @@ def test_knn_query_table_uses_distributed_covering(spark, sf_small,
 
     # the executor path re-imports the kernels module inside Python
     # workers, so this patch only intercepts DRIVER-side calls;
-    # threshold=0 forces the distributed path in EVERY round (with the
+    # threshold 0 forces the distributed path in EVERY round (with the
     # default threshold, late rounds with few unsettled queries would
     # legitimately drop back to the driver loop)
     monkeypatch.setattr(knn_mod, "cover_circle", _boom)
-    got = knn_join(spark, pg, queries, k=3, initial_radius_m=500_000,
-                   driver_cover_threshold=0).toPandas()
+    monkeypatch.setattr(knn_mod, "DRIVER_COVER_THRESHOLD", 0)
+    got = knn_join(spark, pg, queries, k=3, initial_radius_m=500_000).toPandas()
 
     pdf = pg.select("url", "lat", "lon").toPandas()
     from geohash_dotnet_spark.kernels import haversine_m as hm

@@ -5,13 +5,16 @@ identical text — exactly the duplicate structure a crawl re-fetch
 produces — so the batch distinct-fingerprint count is the ground truth.
 """
 
+from datetime import datetime
+
 from pyspark.sql import functions as F
 
+from geohash_dotnet_spark.operators import exact_dedup
+from geohash_dotnet_spark.operators.text import with_fingerprint
 from geohash_dotnet_spark.sources.pages import pages
 from geohash_dotnet_spark.streaming.dedup import (
     stateful_first_seen,
     streaming_dedup_within_watermark,
-    with_fingerprint,
 )
 from geohash_dotnet_spark.streaming.tiles import drain_updates
 
@@ -73,3 +76,27 @@ def test_stateful_first_seen_counts_dupes_across_restarts(spark, sf_small,
     for r in got2:
         assert r["dupes"] == 5          # 2 + 3 more copies
         assert r["new"] == 1            # still only the original first-seen
+
+
+def test_case_and_whitespace_variants_share_one_fingerprint(spark, tmp_path):
+    """Batch and streaming dedup agree on identity: two texts that differ
+    only in case and whitespace are one document in all three."""
+    rows = [("u1", datetime(2024, 1, 1), "Hello  World", "en", 1, 0, 0.0, 0.0),
+            ("u2", datetime(2024, 1, 1, 1), " hello\tworld ", "en", 2, 0, 0.0, 0.0)]
+    df = spark.createDataFrame(rows, SCHEMA)
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    assert exact_dedup(df).select("url").collect() == [("u1",)]
+
+    out = str(tmp_path / "wm")
+    (streaming_dedup_within_watermark(spark, src, SCHEMA).writeStream
+     .format("parquet").option("path", out)
+     .option("checkpointLocation", str(tmp_path / "wm_ckpt"))
+     .trigger(availableNow=True).start().awaitTermination())
+    assert spark.read.parquet(out).count() == 1
+
+    out = str(tmp_path / "first")
+    drain_updates(stateful_first_seen(spark, src, SCHEMA),
+                  str(tmp_path / "first_ckpt"), out)
+    got = spark.read.parquet(out).select("first_id", "n_new", "n_dupes_total")
+    assert [tuple(r) for r in got.collect()] == [("u1", 1, 1)]

@@ -1,13 +1,16 @@
 """Web-Mercator XYZ tiles / quadkeys (functions/tiles.py).
 
-Checks: portable (boundary-table) tile row == closed-form Mercator on
-real corpus points AND a deliberately adversarial latitude grid; quadkey
-encode/decode roundtrip; bbox containment agrees with assignment; DuckDB
-twins are bit-identical; prefix containment (the geohash-like property
-the scheme is chosen for).
+Checks: the tile row equals the NumPy count of boundary latitudes at
+or above the point on real corpus points, a deliberately adversarial
+latitude grid and every tile edge +-1 ulp, and the column is the exact
+floor there; quadkey encode/decode roundtrip; bbox containment agrees
+with assignment; DuckDB twins are bit-identical; prefix containment (the
+geohash-like property the scheme is chosen for).
 """
 
 import duckdb
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,22 +24,37 @@ def pts(spark, sf_small):
         .select("doc_id", "rep", "lat", "lon")
 
 
-def test_portable_equals_closed_form_on_corpus(pts):
+def _boundary_count(lat, z):
+    """How many internal boundary latitudes lie at or above each ``lat``."""
+    bounds = np.array(T.tile_lat_bounds(z)[1:-1])
+    return (bounds[None, :] >= np.asarray(lat)[:, None]).sum(axis=1).tolist()
+
+
+def _edge_points(z):
+    """Every tile row and column edge at zoom z with its two ulp
+    neighbours, as (lat, lon) columns of one frame."""
+    def with_ulps(edges):
+        return np.concatenate([edges, np.nextafter(edges, -np.inf),
+                               np.nextafter(edges, np.inf)])
+
+    n = 1 << z
+    lat = with_ulps(np.array(T.tile_lat_bounds(z)))
+    lon = np.resize(with_ulps(-180.0 + np.arange(n + 1) * (360.0 / n)), lat.size)
+    return pd.DataFrame({"i": np.arange(lat.size), "lat": lat, "lon": lon})
+
+
+def test_tile_row_equals_boundary_count_on_corpus(pts):
     for z in (4, 6, 8):
-        mism = pts.filter(
-            T.tile_y_portable(F.col("lat"), z)
-            != T.tile_y(F.col("lat"), z)).count()
-        assert mism == 0, f"z={z}"
+        got = T.with_tiles(pts, z=z).select("lat", "y").toPandas()
+        assert got.y.tolist() == _boundary_count(got.lat, z), f"z={z}"
 
 
-def test_portable_equals_closed_form_on_edge_grid(spark):
-    rows = [(i, -89.9 + i * 0.179) for i in range(1005)]
-    rows += [(2000, 0.0), (2001, 90.0), (2002, -90.0),
-             (2003, T.MAX_MERCATOR_LAT), (2004, -T.MAX_MERCATOR_LAT)]
-    df = spark.createDataFrame(rows, "id long, lat double")
-    mism = df.filter(T.tile_y_portable(F.col("lat"), 7)
-                     != T.tile_y(F.col("lat"), 7)).count()
-    assert mism == 0
+def test_tile_row_equals_boundary_count_on_edge_grid(spark):
+    lat = [-89.9 + i * 0.179 for i in range(1005)]
+    lat += [0.0, 90.0, -90.0, T.MAX_MERCATOR_LAT, -T.MAX_MERCATOR_LAT]
+    df = spark.createDataFrame([(i, a) for i, a in enumerate(lat)], "id long, lat double")
+    got = df.select("id", T.tile_y_portable(F.col("lat"), 7).alias("y")).orderBy("id")
+    assert [r.y for r in got.collect()] == _boundary_count(lat, 7)
 
 
 def test_quadkey_roundtrip(pts):
@@ -47,20 +65,33 @@ def test_quadkey_roundtrip(pts):
     assert bad == 0
 
 
-def test_bbox_contains_assigned_point(pts):
-    z = 6
-    t = T.with_tiles(pts, z=z).withColumn(
-        "bb", T.tile_bounds(F.col("x"), F.col("y"), z))
-    # tie rule: a boundary latitude belongs to the tile whose NORTH edge
-    # it is -> tile y owns (south, north]; the top row additionally owns
-    # lat > 85.05 and the bottom row lat < -85.05 (Mercator clamp)
-    n_tiles = 1 << z
-    viol = t.filter(~(
-        (F.col("lon") >= F.col("bb.w")) & (F.col("lon") < F.col("bb.e"))
-        & ((F.col("lat") <= F.col("bb.n")) | (F.col("y") == 0))
-        & ((F.col("lat") > F.col("bb.s")) | (F.col("y") == n_tiles - 1))
-    )).count()
-    assert viol == 0
+def test_quadkey_to_xy_on_literals(spark):
+    """The empty quadkey is tile (0, 0, 0); an expression (not a column
+    reference) reads the same as a column."""
+    df = spark.createDataFrame([("",), ("3",), ("0123",), ("21",)], "qk string")
+    for qk in (F.col("qk"), F.concat(F.col("qk"), F.lit(""))):
+        got = df.select(*T.quadkey_to_xy(qk)).collect()
+        assert [tuple(r) for r in got] == [(0, 0, 0), (1, 1, 1), (5, 3, 4), (1, 2, 2)]
+
+
+def test_bbox_contains_assigned_point(spark, pts):
+    for z in (6, 12):
+        edges = spark.createDataFrame(_edge_points(z)).select("lat", "lon")
+        t = T.with_tiles(pts.select("lat", "lon").unionByName(edges), z=z).withColumn(
+            "bb", T.tile_bounds(F.col("x"), F.col("y"), z))
+        # tie rule: a boundary latitude belongs to the tile whose NORTH
+        # edge it is -> tile y owns (south, north]; the top row
+        # additionally owns lat > 85.05 and the bottom row lat < -85.05
+        # (Mercator clamp). Column x owns [w, e); the first column
+        # additionally owns lon < -180 and the last lon >= 180 (clamp)
+        n_tiles = 1 << z
+        viol = t.filter(~(
+            ((F.col("lon") >= F.col("bb.w")) | (F.col("x") == 0))
+            & ((F.col("lon") < F.col("bb.e")) | (F.col("x") == n_tiles - 1))
+            & ((F.col("lat") <= F.col("bb.n")) | (F.col("y") == 0))
+            & ((F.col("lat") > F.col("bb.s")) | (F.col("y") == n_tiles - 1))
+        )).count()
+        assert viol == 0, z
 
 
 def test_prefix_containment(pts):
@@ -93,8 +124,6 @@ def test_null_has_no_tile_and_nan_raises(spark):
     """The encode's rule for tiles in both engines: a NULL coordinate
     gives no x, y or quadkey (greatest/least would skip it and pick an
     edge tile), a NaN raises the kernel's error."""
-    import pandas as pd
-
     z = 3
     rows = [(0, None, None), (1, 10.0, None), (2, None, 10.0), (3, 10.0, 10.0)]
     x = int((10.0 + 180.0) / 360.0 * (1 << z))
@@ -123,26 +152,16 @@ def test_null_has_no_tile_and_nan_raises(spark):
 
 
 def test_tile_edges_agree_in_both_engines(spark):
-    """Every tile edge at z=6 and z=12 with its two ulp neighbours: Spark
-    and DuckDB give the row and column that exact comparisons against
-    the boundary table and the IEEE column formula give."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    def with_ulps(edges):
-        return np.concatenate([edges, np.nextafter(edges, -np.inf),
-                               np.nextafter(edges, np.inf)])
-
-    for z in (6, 12):
+    """Every tile edge at z=1, 6, 8 and 12 with its two ulp neighbours:
+    Spark and DuckDB give the row that exact comparisons against the
+    boundary table give, and the column whose exact edges hold the
+    point."""
+    for z in (1, 6, 8, 12):
         n = 1 << z
-        lat = with_ulps(np.array(T.tile_lat_bounds(z)))
-        lon = np.resize(with_ulps(-180.0 + np.arange(n + 1) * (360.0 / n)), lat.size)
-        bounds = np.array(T.tile_lat_bounds(z)[1:-1])
-        want = [(min(max(math.floor((b + 180.0) / 360.0 * n), 0), n - 1),
-                 int((bounds >= a).sum())) for a, b in zip(lat, lon)]
-        pdf = pd.DataFrame({"i": np.arange(lat.size), "lat": lat, "lon": lon})
+        pdf = _edge_points(z)
+        west = -180.0 + np.arange(1, n) * (360.0 / n)
+        x = (west[None, :] <= pdf.lon.values[:, None]).sum(axis=1).tolist()
+        want = list(zip(x, _boundary_count(pdf.lat, z)))
         got = (spark.createDataFrame(pdf)
                .select("i", T.tile_x(F.col("lon"), z).alias("x"),
                        T.tile_y_portable(F.col("lat"), z).alias("y"))
